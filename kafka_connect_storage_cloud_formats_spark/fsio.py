@@ -223,6 +223,14 @@ class _HadoopFS:
         except Exception as e:
             self.last_error = e  # advisory only — a failed touch narrows the grace window
 
+    def _glob(self, pattern: str) -> list | None:
+        try:
+            statuses = self._fs.globStatus(self._jPath(pattern))
+        except Exception as e:
+            self.last_error = e
+            return None
+        return list(statuses) if statuses is not None else []
+
     def glob_names_mtimes(self, pattern: str) -> list[tuple[str, float]] | None:
         """(basename, mtime_seconds) for paths matching a glob pattern.
         ``[]`` means the listing ran and matched nothing; ``None`` means the
@@ -231,19 +239,22 @@ class _HadoopFS:
         see — must distinguish the two, or a failing filesystem silently
         disables them (the same unbounded-cache hazard as a swallowed
         sweep delete, one layer up)."""
-        out: list[tuple[str, float]] = []
-        try:
-            statuses = self._fs.globStatus(self._jPath(pattern))
-        except Exception as e:
-            self.last_error = e
-            return None
+        statuses = self._glob(pattern)
         if statuses is None:
-            return out
-        for st in statuses:
-            out.append(
-                (st.getPath().getName(), st.getModificationTime() / 1000.0)
-            )
-        return out
+            return None
+        return [
+            (st.getPath().getName(), st.getModificationTime() / 1000.0)
+            for st in statuses
+        ]
+
+    def glob_parent_names(self, pattern: str) -> list[str] | None:
+        """Name of the parent directory of every path matching a glob
+        pattern (``dir/*/_SUCCESS`` lists the committed subdirectories in
+        one call); ``[]``/``None`` as in :meth:`glob_names_mtimes`."""
+        statuses = self._glob(pattern)
+        if statuses is None:
+            return None
+        return [st.getPath().getParent().getName() for st in statuses]
 
     def list_files_recursive(self, p: str) -> list[tuple[str, int, int]]:
         """(path_relative_to_p, length_bytes, mtime_millis) for every FILE

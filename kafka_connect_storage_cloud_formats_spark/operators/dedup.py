@@ -92,28 +92,28 @@ ORDER BY keep_doc_id
 INCREMENT_MOD = 5
 
 
-def _exact_drop_sets(
-    batch: DataFrame, base_hashes: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """THE incremental exact-dedup drop rule — (vs_corpus, within) doc_id
-    sets for a batch's (doc_id, content_hash) rows against a corpus hash
-    set — shared by :func:`dedup_incremental` and the chained curation
-    disposition (round-12 review: one definition, the same doctrine as
-    :func:`_banded_drop_sets` for the near-dup tier — the representative
-    rule must not exist in two copies that could drift).
+def _exact_flags(batch: DataFrame, base_hashes: DataFrame) -> DataFrame:
+    """THE incremental exact-dedup drop rule, as a flag column: ``batch``'s
+    rows (doc_id, content_hash, …) plus ``exact`` —
 
-    ``vs_corpus``: batch docs whose hash the corpus already has.
-    ``within``: corpus-fresh batch docs that are NOT the smallest doc_id
-    of their hash group (the min-id representative survives)."""
-    vs_corpus = batch.join(base_hashes, "content_hash", "left_semi").select("doc_id")
-    fresh = batch.join(base_hashes, "content_hash", "left_anti")
-    w = Window.partitionBy("content_hash")
-    within = (
-        fresh.withColumn("min_id", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") != F.col("min_id"))
-        .select("doc_id")
+    - ``'exact_corpus'``: the corpus hash set ``base_hashes`` (DISTINCT
+      content_hash rows) already has the hash;
+    - ``'exact_within'``: the hash is corpus-fresh but a smaller batch
+      doc_id shares it (the min-id representative survives);
+    - NULL: the doc survives the exact tier.
+
+    One left join to the corpus hashes plus one per-hash window over the
+    batch. Shared by :func:`dedup_incremental`, the chained
+    :func:`_curation_disposition` and the streaming curation job, so the
+    representative rule has one definition."""
+    in_corpus = base_hashes.select("content_hash", F.lit(True).alias("__in_corpus"))
+    min_id = F.min("doc_id").over(Window.partitionBy("content_hash"))
+    exact = F.when(F.col("__in_corpus"), "exact_corpus").when(
+        F.col("doc_id") != min_id, "exact_within"
     )
-    return vs_corpus, within
+    return batch.join(in_corpus, "content_hash", "left").select(
+        *batch.columns, exact.alias("exact")
+    )
 
 
 def ensure_content_hashes(
@@ -160,37 +160,25 @@ def ensure_content_hashes(
 def dedup_incremental(
     spark: SparkSession, sf_dir: str, corpus_hashes: DataFrame | None = None
 ) -> DataFrame:
-    """INCREMENTAL exact dedup — the recurring curation job shape at
-    100 TB: a new crawl batch is deduplicated against the
-    already-published corpus (drop content the corpus already has) and
-    within itself (keep the smallest doc_id per new content), WITHOUT
-    ever re-scanning corpus text. Every other dedup tier here is
-    whole-corpus; real pipelines run those once, then this incrementally
-    per batch.
+    """INCREMENTAL exact dedup — the recurring curation job shape: a new
+    crawl batch is deduplicated against the already-published corpus (drop
+    content the corpus already has) and within itself (keep the smallest
+    doc_id per new content) by the :func:`_exact_flags` rule, without ever
+    re-scanning corpus text. Returns the per-language batch report —
+    n_batch / n_kept / n_dropped.
 
-    Scale shape: the corpus side is reduced to DISTINCT 32-BYTE binary
-    content hashes (``unhex(sha2)`` — half the bytes of the hex string
-    form; round-10 review) before the join — map-side partial
-    aggregation; at 100 TB this hash set is exactly what a production
-    pipeline maintains as a persisted table alongside the corpus, so the
-    recurring job's scan is hashes, not text. The batch anti-joins on
-    the hash (the shuffle carries 32 B keys) and the within-batch
-    collapse is a per-hash window over batch-sized data. The hash never
-    reaches the output (per-language counts only), so the key
-    representation is a pure internal choice — the oracle replays the
-    logic over its own hex strings (unhex is injective: identical
-    groups/anti-join either way). Returns the per-language batch report
-    — n_batch / n_kept / n_dropped — the numbers an incremental curation
-    run logs.
+    Scale shape: both sides read the published content-hash artifacts
+    (:func:`ensure_content_hashes` — ~50 B/doc; the corpus side filtered
+    to the corpus split, the batch side its own per-drop table). The
+    corpus side is reduced to DISTINCT 32-byte binary hashes before the
+    join, and the within-batch collapse is a per-hash window over
+    batch-sized data. The hash never reaches the output, so the oracle
+    replays the logic over its own hex strings (unhex is injective:
+    identical groups either way).
 
-    Round 12: both sides now read the PUBLISHED content-hash artifacts
-    (:func:`ensure_content_hashes` — corpus side filtered to the corpus
-    split, batch side its own per-drop table), so the recurring run
-    scans ~50 B/doc hash tables, never document text — the same
-    artifact posture as the near-dup tiers. ``corpus_hashes`` is the
-    explicit corpus-side hook (pass the MERGED generation,
-    ``published_df(spark, ensure_merged_corpus_hashes(...))``, so the
-    next drop is judged against the corpus as accepted so far); no
+    ``corpus_hashes`` is the explicit corpus-side hook (pass the MERGED
+    generation, ``published_df(spark, ensure_merged_corpus_hashes(...))``,
+    so the next drop is judged against the corpus as accepted so far); no
     modular filter is applied to an explicit table."""
     batch = ensure_content_hashes(spark, sf_dir, split="batch").select(
         "doc_id", "lang", "content_hash"
@@ -199,25 +187,15 @@ def dedup_incremental(
         corpus_hashes = ensure_content_hashes(spark, sf_dir).filter(
             F.col("doc_id") % INCREMENT_MOD != INCREMENT_MOD - 1
         )
-    base_hashes = corpus_hashes.select("content_hash").distinct()
-    vs_corpus, within = _exact_drop_sets(batch, base_hashes)
-    kept = batch.join(vs_corpus, "doc_id", "left_anti").join(
-        within, "doc_id", "left_anti"
-    )
-    n_kept = F.coalesce(F.col("n_kept"), F.lit(0)).cast("long")
+    flagged = _exact_flags(batch, corpus_hashes.select("content_hash").distinct())
     return (
-        batch.groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_batch"))
-        .join(
-            kept.groupBy("lang").agg(F.count(F.lit(1)).alias("n_kept")),
-            "lang",
-            "left",
+        flagged.groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_batch"),
+            F.sum(F.col("exact").isNull().cast("long")).alias("n_kept"),
         )
         .select(
-            "lang",
-            "n_batch",
-            n_kept.alias("n_kept"),
-            (F.col("n_batch") - n_kept).alias("n_dropped"),
+            "lang", "n_batch", "n_kept", (F.col("n_batch") - F.col("n_kept")).alias("n_dropped")
         )
         .orderBy("lang")
     )
@@ -959,51 +937,86 @@ def _minhash_sigs_from(docs: DataFrame, family: str | None = None) -> DataFrame:
 MINHASH_CHUNKS_PER_XX = 2
 
 
-def _sigs_from_shingles(sh: DataFrame, family: str | None = None) -> DataFrame:
-    """MinHash aggregation over a (doc_id, s) shingle stream. Separate from
-    the shingle derivation so the artifact build can feed the SHARED
-    materialized shingle stream (operators/shingles.py) straight into the
-    signature aggregate — one corpus scan serves both the Jaccard tier and
-    the signature build at 100 TB.
+def _minhash_layout(family: str) -> tuple[int, str, tuple[str, ...]]:
+    """THE MinHash indexing of a hash family as SQL templates, shared by the
+    aggregate and the array reduction so the two cannot drift:
+    ``(chunks, group_hash, chunk)``. ``group_hash.format(g=g, s=<shingle>)``
+    is group g's hash of a shingle; ``chunk[c].format(h=<group hash>)``
+    carves chunk c out of it. Component k is chunk ``k % chunks`` of group
+    ``k // chunks``, reduced by MIN over a document's distinct shingles.
 
-    ``family``: "md5" (default, oracle-reproducible hex chunks) or
-    "xxhash64" (production: JVM-native 64-bit hash, components are its
-    32-bit halves as longs — ~4 B shuffle keys, no hex-string round-trip).
-    """
-    family = family or hash_family()
-    # SQL-string expressions (one F.expr per column/aggregate): the
-    # Column-operator form was ~80 py4j round-trips of pure driver time
-    # per plan build (see _simhash_fp_table for the measured pattern)
+    "md5" (default, oracle-reproducible) carves 8-hex-char chunks;
+    "xxhash64" (production: JVM-native, no hex-string round-trip) carves
+    the 32-bit halves as longs."""
     if family == "xxhash64":
-        groups = (MINHASH_K + MINHASH_CHUNKS_PER_XX - 1) // MINHASH_CHUNKS_PER_XX
-        hashes = [
-            F.expr(f"xxhash64(concat('{g}:', s)) AS h{g}") for g in range(groups)
-        ]
-        chunk = (
-            "shiftrightunsigned(h{g}, 32)",  # high 32 bits
-            "(h{g} & 4294967295)",  # low 32 bits
+        return (
+            MINHASH_CHUNKS_PER_XX,
+            "xxhash64(concat('{g}:', {s}))",
+            ("shiftrightunsigned({h}, 32)", "({h} & 4294967295)"),
         )
-        aggs = [
+    return (
+        MINHASH_CHUNKS_PER_MD5,
+        "md5(concat('{g}:', {s}))",
+        tuple(
+            f"substring({{h}}, {c * 8 + 1}, 8)" for c in range(MINHASH_CHUNKS_PER_MD5)
+        ),
+    )
+
+
+def _sigs_from_shingles(sh: DataFrame, family: str | None = None) -> DataFrame:
+    """MinHash aggregation over a (doc_id, s) shingle stream — the
+    corpus-scale reduction: a map-side partial MIN then one shuffle, so the
+    hashing spreads over every task of the shingle stream. The artifact
+    build feeds it the SHARED materialized shingle stream
+    (operators/shingles.py), so one corpus scan serves both the Jaccard
+    tier and the signature build."""
+    chunks, group_hash, chunk = _minhash_layout(family or hash_family())
+    groups = -(-MINHASH_K // chunks)
+    # SQL-string expressions (one F.expr per column/aggregate): the
+    # Column-operator form was ~80 py4j round-trips of driver time per plan
+    # build
+    hashes = [
+        F.expr(group_hash.format(g=g, s="s") + f" AS h{g}") for g in range(groups)
+    ]
+    aggs = [
+        F.expr(f"min({chunk[k % chunks].format(h=f'h{k // chunks}')}) AS mh_{k:02d}")
+        for k in range(MINHASH_K)
+    ]
+    return sh.select("doc_id", *hashes).groupBy("doc_id").agg(*aggs)
+
+
+def _with_minhash_array(docs: DataFrame, family: str | None = None) -> DataFrame:
+    """``docs`` plus mh_00…mh_11 computed per row by the ARRAY form of the
+    MinHash reduction — ``array_min(transform(word_shingles(text), …))`` per
+    component: the same values as :func:`_sigs_from_shingles`, with no
+    explode, repartition or aggregate, so the whole signature is one map
+    stage. Right for batch-sized input (the streaming micro-batch); the
+    corpus paths keep the aggregate, whose map stage splits by shingle
+    rows rather than by documents. A document with no shingle (NULL text,
+    fewer than SHINGLE_N tokens) gets NULL components — the aggregate
+    form emits no row for it."""
+    chunks, group_hash, chunk = _minhash_layout(family or hash_family())
+    groups = -(-MINHASH_K // chunks)
+    sh = docs.select("*", word_shingles("text", SHINGLE_N).alias("__sh"))
+    # each group's hash array is its own column, so the hash runs once per
+    # shingle and group rather than once per component
+    hv = sh.select(
+        "*",
+        *[
+            F.expr(f"transform(__sh, s -> {group_hash.format(g=g, s='s')}) AS __h{g}")
+            for g in range(groups)
+        ],
+    )
+    return hv.select(
+        *docs.columns,
+        *[
             F.expr(
-                "min("
-                + chunk[k % MINHASH_CHUNKS_PER_XX].format(g=k // MINHASH_CHUNKS_PER_XX)
-                + f") AS mh_{k:02d}"
+                f"array_min(transform(__h{k // chunks}, h -> "
+                f"{chunk[k % chunks].format(h='h')})) AS mh_{k:02d}"
             )
             for k in range(MINHASH_K)
-        ]
-    else:
-        hashes = [
-            F.expr(f"md5(concat('{g}:', s)) AS h{g}") for g in range(MINHASH_GROUPS)
-        ]
-        aggs = [
-            F.expr(
-                f"min(substring(h{k // MINHASH_CHUNKS_PER_MD5}, "
-                f"{(k % MINHASH_CHUNKS_PER_MD5) * 8 + 1}, 8)) AS mh_{k:02d}"
-            )
-            for k in range(MINHASH_K)
-        ]
-    sh = sh.select("doc_id", *hashes)
-    return sh.groupBy("doc_id").agg(*aggs)
+        ],
+    )
 
 
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1460,27 +1473,24 @@ def _curation_disposition(
     each batch doc in exactly one stage (precedence = chain order). ONE
     definition feeds both the registered per-drop report
     (:func:`curation_drop_report`) and the accept step
-    (:func:`corpus_signature_merge` keeps stage='kept'), so the report's
-    n_kept and the merged generation's batch rows can never drift.
+    (:func:`ensure_curation_kept`), so the report's n_kept and the merged
+    generation's batch rows can never drift.
 
     Stage rules (each tier applies the corresponding standalone
     operator's rule to the previous tier's survivors):
-    - exact_corpus   — content hash already in the published corpus
-      (``dedup_incremental``'s vs-corpus rule).
-    - exact_within   — fresh hash, but a smaller-id batch doc shares it
-      (the exact tier's min-id representative survives).
+    - exact_corpus / exact_within — :func:`_exact_flags` (the rule
+      ``dedup_incremental`` runs);
     - neardup_corpus / neardup_within — :func:`_banded_drop_sets` over the
-      exact survivors' banded signatures (the SAME helper the standalone
-      ``neardup_incremental`` runs — shared drop rule by construction).
-    - kept           — accepted into the corpus.
+      exact survivors' banded signatures (the rule ``neardup_incremental``
+      runs);
+    - kept — accepted into the corpus (:func:`_with_stage` applies the
+      precedence).
 
-    Scale shape (round 12): the exact tier consumes the SAME published
-    content-hash artifacts as ``dedup_incremental`` (~50 B/doc — the
-    recurring chain never scans document text) and shuffles 32 B binary
-    hashes; the near-dup tier re-consumes the SAME per-drop
-    batch-signature artifact and published corpus-signature artifact as
-    ``neardup_incremental`` (zero additional corpus-scale compute — the
-    chaining itself is anti-joins over batch-sized doc_id sets).
+    Scale shape: the exact tier reads the same published content-hash
+    artifacts as ``dedup_incremental`` and shuffles 32 B binary hashes;
+    the near-dup tier reads the same per-drop batch-signature artifact and
+    published corpus-signature artifact as ``neardup_incremental``. The
+    chaining itself is batch-sized.
 
     ``corpus_hashes`` / ``corpus_sigs``: explicit corpus-side tables for
     the recurring job (pass the MERGED generations so the next drop is
@@ -1494,13 +1504,8 @@ def _curation_disposition(
         corpus_hashes = ensure_content_hashes(spark, sf_dir).filter(
             F.col("doc_id") % INCREMENT_MOD != INCREMENT_MOD - 1
         )
-    base_hashes = corpus_hashes.select("content_hash").distinct()
-    exact_corpus, exact_within = _exact_drop_sets(batch, base_hashes)
-    survivors = (
-        batch.join(exact_corpus, "doc_id", "left_anti")
-        .join(exact_within, "doc_id", "left_anti")
-        .select("doc_id")
-    )
+    flagged = _exact_flags(batch, corpus_hashes.select("content_hash").distinct())
+    survivors = flagged.filter(F.col("exact").isNull()).select("doc_id")
     batch_bands = _band_rows(_ensure_minhash_sigs(spark, sf_dir, split="batch")).join(
         survivors, "doc_id", "left_semi"
     )
@@ -1508,40 +1513,26 @@ def _curation_disposition(
         corpus_sigs = _ensure_minhash_sigs(spark, sf_dir).filter(
             F.col("doc_id") % INCREMENT_MOD != INCREMENT_MOD - 1
         )
-    corpus_bands = _band_rows(corpus_sigs)
-    nd_corpus, nd_within = _banded_drop_sets(batch_bands, corpus_bands)
-    return _disposition_from_drop_sets(
-        batch.select("doc_id", "lang"), exact_corpus, exact_within, nd_corpus, nd_within
-    )
+    nd_corpus, nd_within = _banded_drop_sets(batch_bands, _band_rows(corpus_sigs))
+    return _with_stage(flagged, nd_corpus, nd_within).select("doc_id", "lang", "stage")
 
 
-def _disposition_from_drop_sets(
-    batch_ids: DataFrame,
-    exact_corpus: DataFrame,
-    exact_within: DataFrame,
-    nd_corpus: DataFrame,
-    nd_within: DataFrame,
+def _with_stage(
+    flagged: DataFrame, nd_corpus: DataFrame, nd_within: DataFrame
 ) -> DataFrame:
-    """(doc_id, lang, stage) assembly from the four drop-set doc_id frames
-    — THE stage-precedence rule, shared by the batch chain and the
-    streaming curation job (round-12 third review: the mark/CASE chain
-    was byte-copied into streaming/curation.py against the module's own
-    one-definition doctrine)."""
-    mark = lambda df, name: df.withColumn(name, F.lit(1))  # noqa: E731
-    stage = (
-        F.when(F.col("ec").isNotNull(), "exact_corpus")
-        .when(F.col("ew").isNotNull(), "exact_within")
-        .when(F.col("nc").isNotNull(), "neardup_corpus")
-        .when(F.col("nw").isNotNull(), "neardup_within")
-        .otherwise("kept")
+    """THE stage-precedence rule: ``flagged`` (the :func:`_exact_flags`
+    output) with ``exact`` replaced by ``stage`` ∈ CURATION_STAGES — the
+    exact flag when set, else the near-dup mark, else 'kept'. The near-dup
+    marks are the two :func:`_banded_drop_sets` doc_id sets, disjoint by
+    construction (``within`` runs over the corpus survivors), so one left
+    join of their union marks each doc at most once. Shared by the batch
+    chain and the streaming curation job."""
+    marks = nd_corpus.select("doc_id", F.lit("neardup_corpus").alias("__nd")).unionByName(
+        nd_within.select("doc_id", F.lit("neardup_within").alias("__nd"))
     )
-    return (
-        batch_ids
-        .join(mark(exact_corpus, "ec"), "doc_id", "left")
-        .join(mark(exact_within, "ew"), "doc_id", "left")
-        .join(mark(nd_corpus, "nc"), "doc_id", "left")
-        .join(mark(nd_within, "nw"), "doc_id", "left")
-        .select("doc_id", "lang", stage.alias("stage"))
+    stage = F.coalesce(F.col("exact"), F.col("__nd"), F.lit("kept"))
+    return flagged.join(marks, "doc_id", "left").select(
+        *[c for c in flagged.columns if c != "exact"], stage.alias("stage")
     )
 
 

@@ -289,36 +289,68 @@ def test_simhash_packed_votes_match_python_reference(spark):
         assert got[i] == py_simhash(t), f"doc {i}: {t!r}"
 
 
-def test_minhash_signatures_match_python_reference(spark):
-    """Equivalence of the SQL-string signature table (hash family h{g} =
-    md5('g:'||shingle); component k = MIN over shingles of 8-hex-char
-    chunk k%4 of h{k//4}) against an independent Python implementation —
-    guards the group/chunk indexing and the distinct-shingle semantics
-    on synthetic docs (repeats, sub-n-token docs excluded upstream)."""
-    import hashlib
+def _sig_inputs():
     import random
-
-    from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
-        MINHASH_CHUNKS_PER_MD5,
-        MINHASH_K,
-        SHINGLE_N,
-        _minhash_sigs_from,
-    )
 
     rng = random.Random(7)
     vocab = [f"t{i}" for i in range(12)]
-    texts = [
+    return [
         "a b c",                    # exactly one shingle
         "x y x y x y x y",          # repeated shingles (distinct-ness matters)
         *(
             " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 40)))
             for _ in range(15)
         ),
+        None,                       # NULL text: no signature row
+        "",                         # fewer than 3 tokens: no signature row
+        "too short",
     ]
+
+
+def _sigs_by_reduction(docs, family, reduction):
+    """{doc_id: signature} from the aggregate (corpus-path) or the array
+    (micro-batch) MinHash reduction; a doc without a signature has no key."""
+    from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
+        MINHASH_K,
+        _minhash_sigs_from,
+        _with_minhash_array,
+    )
+
+    if reduction == "aggregate":
+        sigs = _minhash_sigs_from(docs, family=family)
+    else:
+        sigs = _with_minhash_array(docs, family=family).filter(
+            F.col("mh_00").isNotNull()
+        )
+    return {
+        r["doc_id"]: tuple(r[f"mh_{k:02d}"] for k in range(MINHASH_K))
+        for r in sigs.collect()
+    }
+
+
+def test_minhash_signatures_match_python_reference(spark):
+    """Both MinHash reductions — the shuffle aggregate of the corpus paths
+    and the per-row array form of the streaming micro-batch — against an
+    independent Python implementation of the md5 family (h{g} =
+    md5('g:'||shingle); component k = MIN over distinct shingles of
+    8-hex-char chunk k%4 of h{k//4}). Guards the group/chunk indexing both
+    forms take from ``_minhash_layout``, the distinct-shingle semantics, and
+    the no-signature rule for NULL and sub-3-token docs."""
+    import hashlib
+
+    from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
+        MINHASH_CHUNKS_PER_MD5,
+        MINHASH_K,
+        SHINGLE_N,
+    )
+
+    texts = _sig_inputs()
 
     def py_sigs(text):
         w = text.split(" ")
         shingles = {" ".join(w[i : i + SHINGLE_N]) for i in range(len(w) - SHINGLE_N + 1)}
+        if not shingles:
+            return None
         sig = []
         for k in range(MINHASH_K):
             g, chunk = k // MINHASH_CHUNKS_PER_MD5, k % MINHASH_CHUNKS_PER_MD5
@@ -330,18 +362,32 @@ def test_minhash_signatures_match_python_reference(spark):
             )
         return tuple(sig)
 
+    expected = {
+        i: sig
+        for i, t in enumerate(texts)
+        if t is not None and (sig := py_sigs(t)) is not None
+    }
+    assert len(expected) == len(texts) - 3
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    got = {
-        r["doc_id"]: tuple(r[f"mh_{k:02d}"] for k in range(MINHASH_K))
+    for reduction in ("aggregate", "array"):
         # md5-family Python reference — pin the family against an ambient
         # SPARK_GRAFT_HASH_FAMILY setting
-        for r in _minhash_sigs_from(docs, family="md5").collect()
-    }
-    assert len(got) == len(texts)
-    for i, t in enumerate(texts):
-        assert got[i] == py_sigs(t), f"doc {i}: {t!r}"
+        assert _sigs_by_reduction(docs, "md5", reduction) == expected, reduction
+
+
+def test_minhash_reductions_agree_under_xxhash64(spark):
+    """Under the production family there is no Python reference; the two
+    reductions must produce the same signature rows (and the same missing
+    rows for NULL and sub-3-token docs)."""
+    texts = _sig_inputs()
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    agg = _sigs_by_reduction(docs, "xxhash64", "aggregate")
+    assert len(agg) == len(texts) - 3
+    assert _sigs_by_reduction(docs, "xxhash64", "array") == agg
 
 
 # --------------------------------------------------------------- hash family

@@ -115,11 +115,31 @@ def test_foreachbatch_retry_is_idempotent(spark, tmp_path):
             sorted(map(tuple, cur.accepted_sigs().collect())),
         )
 
+    def part_bytes():
+        """{kind/b-partition: sorted part-file contents} — the commits sort
+        each file by its key, so a replay must rewrite the same bytes even
+        though the rows reach the write through shuffles."""
+        out = {}
+        for kind in ("report", "accepted_hashes", "accepted_sigs"):
+            for prefix, _, path in cur._list_parts(kind):
+                if prefix != "b":
+                    continue
+                out[f"{kind}/{os.path.basename(path)}"] = sorted(
+                    open(os.path.join(path, f), "rb").read()
+                    for f in os.listdir(path)
+                    if not f.startswith(("_", "."))
+                )
+        return out
+
     committed = snapshot()
+    committed_bytes = part_bytes()
+    assert len(committed_bytes) == 6
     cur.process_batch(b2, 1)  # the retry: replays against batch-0 state only
     assert snapshot() == committed
+    assert part_bytes() == committed_bytes
     cur.process_batch(b1, 0)  # an out-of-order replay of an older batch
     assert snapshot() == committed
+    assert part_bytes() == committed_bytes
 
 
 def test_streaming_curation_under_xxhash64_family(spark, tmp_path, monkeypatch):
@@ -312,10 +332,174 @@ def test_scheduled_fold_is_retry_safe(spark, tmp_path):
     assert _snapshot(cur) == committed
 
 
-# ---- streaming ANN serving segments (round 14) ------------------------------
-# Round-13 verdict "What's missing #1": a micro-batch's kept docs publish
-# an embedding serving segment via the batch tiers' own published-quantizer
-# assignment — the stage the always-on job previously couldn't run.
+def test_steady_state_batch_job_count(spark, tmp_path):
+    """A steady-state micro-batch (two committed batches before it, no
+    fold) runs as one checkpointed per-document table plus one classified
+    table and four commits; this bounds the Spark jobs it submits, so a
+    change that re-joins the drop sets again shows up here."""
+    sc = spark.sparkContext
+    cur = StreamingCuration(spark, str(tmp_path / "state"))
+    for i, b in enumerate((BATCH1, BATCH2)):
+        cur.process_batch(spark.createDataFrame(b, DOC_SCHEMA), i)
+    batch = spark.createDataFrame(BATCH3, DOC_SCHEMA)
+    group = "test_steady_state_batch_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        cur.process_batch(batch, 2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 20, len(jobs)
+
+
+# ---- the chain rule against a plain-Python reference ----------------------
+
+
+def _generated_drops(seed, n_drops=3, n_base=24):
+    """Drops with planted duplicates: fresh bases (30–60 random words over a
+    large vocabulary), exact copies of this drop's bases, exact copies and
+    one-word edits of earlier drops' bases, one-word edits of this drop's
+    bases (near duplicates within the drop), and docs with NULL text or
+    fewer than 3 tokens. Ids are shuffled within a drop, so a copy can
+    carry a smaller id than its original."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(5000)]
+    langs = ("en", "de", "fr")
+    earlier, drops, next_id = [], [], 1
+
+    def edit(text):
+        toks = text.split(" ")
+        toks[rng.randrange(len(toks))] = rng.choice(vocab)
+        return " ".join(toks)
+
+    for _ in range(n_drops):
+        bases = [
+            (" ".join(rng.choice(vocab) for _ in range(rng.randint(30, 60))), rng.choice(langs))
+            for _ in range(n_base)
+        ]
+        docs = list(bases)
+        docs += [rng.choice(bases) for _ in range(4)]
+        docs += [(edit(t), l) for t, l in rng.sample(bases, 4)]
+        if earlier:
+            docs += [rng.choice(earlier) for _ in range(4)]
+            docs += [(edit(t), l) for t, l in rng.sample(earlier, 4)]
+        docs += [(None, "en"), ("two words", "de"), ("", "fr")]
+        ids = list(range(next_id, next_id + len(docs)))
+        rng.shuffle(ids)
+        next_id += len(docs)
+        drops.append([(i, t, l) for i, (t, l) in zip(ids, docs)])
+        earlier += bases
+    return drops
+
+
+def _reference_chain(drops, sigs):
+    """The five-stage chain in plain Python, from collected signatures:
+    exact_corpus (hash accepted before) → exact_within (not the min id of
+    its hash among the drop's fresh docs) → neardup_corpus (≥1 equal
+    3-component band and ≥6/12 equal components with an accepted doc) →
+    neardup_within (the same test against a smaller-id fresh survivor) →
+    kept. Returns ({(batch, lang): stage counts}, accepted ids)."""
+    import hashlib
+
+    from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
+        LSH_BANDS,
+        LSH_ROWS,
+        MINHASH_K,
+    )
+
+    def strong(a, b):
+        band = any(
+            a[r * LSH_ROWS : (r + 1) * LSH_ROWS] == b[r * LSH_ROWS : (r + 1) * LSH_ROWS]
+            for r in range(LSH_BANDS)
+        )
+        return band and sum(x == y for x, y in zip(a, b)) * 2 >= MINHASH_K
+
+    acc_hashes, acc_sigs, accepted, report = set(), [], set(), {}
+    for batch_id, drop in enumerate(drops):
+        h = {
+            d: None if t is None else hashlib.sha256(t.encode()).digest()
+            for d, t, _ in drop
+        }
+        stage = {}
+        for d, _, _ in drop:
+            if h[d] is not None and h[d] in acc_hashes:
+                stage[d] = "exact_corpus"
+        fresh = [d for d, _, _ in drop if d not in stage]
+        for d in fresh:
+            if d != min(e for e in fresh if h[e] == h[d]):
+                stage[d] = "exact_within"
+        surv = sorted(d for d in fresh if d not in stage and d in sigs)
+        for d in surv:
+            if any(strong(sigs[d], s) for s in acc_sigs):
+                stage[d] = "neardup_corpus"
+        nd_fresh = [d for d in surv if d not in stage]
+        for d in nd_fresh:
+            if any(e < d and strong(sigs[d], sigs[e]) for e in nd_fresh):
+                stage[d] = "neardup_within"
+        for d, _, lang in drop:
+            s = stage.setdefault(d, "kept")
+            key = (batch_id, lang)
+            counts = report.setdefault(key, {"n_batch": 0})
+            counts["n_batch"] += 1
+            counts[f"n_{s}"] = counts.get(f"n_{s}", 0) + 1
+            if s == "kept":
+                accepted.add(d)
+                if h[d] is not None:
+                    acc_hashes.add(h[d])
+                if d in sigs:
+                    acc_sigs.append(sigs[d])
+    return report, accepted
+
+
+@pytest.mark.parametrize("family", ["md5", "xxhash64"])
+def test_chain_matches_python_reference_over_generated_drops(
+    spark, tmp_path, monkeypatch, family
+):
+    """Three generated drops with planted exact and near duplicates through
+    the streaming job, checked against :func:`_reference_chain` computed
+    from the aggregate-form signatures of the same docs: every report row
+    and the accepted ids of both state kinds."""
+    from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
+        CURATION_STAGES,
+        MINHASH_K,
+        _minhash_sigs_from,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_HASH_FAMILY", family)
+    drops = _generated_drops(seed=11)
+    all_docs = spark.createDataFrame([r for d in drops for r in d], DOC_SCHEMA)
+    sigs = {
+        r["doc_id"]: tuple(r[f"mh_{k:02d}"] for k in range(MINHASH_K))
+        for r in _minhash_sigs_from(all_docs, family=family).collect()
+    }
+    ref_report, ref_accepted = _reference_chain(drops, sigs)
+    for counts in ref_report.values():
+        for s in CURATION_STAGES:
+            counts.setdefault(f"n_{s}", 0)
+    # the fixture exercises every stage
+    for s in CURATION_STAGES:
+        assert sum(c[f"n_{s}"] for c in ref_report.values()) > 0, s
+
+    cur = StreamingCuration(spark, str(tmp_path / "state"))
+    for i, drop in enumerate(drops):
+        cur.process_batch(spark.createDataFrame(drop, DOC_SCHEMA), i)
+    got = {
+        (r["batch_id"], r["lang"]): {k: v for k, v in r.asDict().items() if k.startswith("n_")}
+        for r in cur.report().collect()
+    }
+    assert got == ref_report
+    assert {r["doc_id"] for r in cur.accepted_hashes().collect()} == ref_accepted
+    assert {r["doc_id"] for r in cur.accepted_sigs().collect()} == {
+        d for d in ref_accepted if d in sigs
+    }
+
+
+# ---- streaming ANN serving segments ------------------------------------------
+# A micro-batch's kept docs publish an embedding serving segment via the
+# batch tiers' own published-quantizer assignment.
 
 ANN_DOC_SCHEMA = "doc_id long, text string, lang string, embedding array<float>"
 

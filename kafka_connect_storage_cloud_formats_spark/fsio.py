@@ -2,9 +2,9 @@
 
 One thin wrapper shared by every layer that touches a filesystem from the
 driver — the artifact cache's publish/sweep protocol (``artifacts.py``),
-the parity sink's finalize (``sinks/orc_sink.py`` has its own older copy
-of the pattern), and, since round 8, the catalog's corpus fingerprint
-(``catalog.py``). Centralizing it here keeps the import graph acyclic:
+the parity sink's finalize (``sinks/orc_sink.py``), the streaming
+curation state (``streaming/curation.py``) and the catalog's corpus
+fingerprint (``catalog.py``). Centralizing it here keeps the import graph acyclic:
 ``artifacts`` imports ``catalog`` (for the fingerprint), and ``catalog``
 needs the FS wrapper for scheme'd corpus paths — so the wrapper lives
 below both.
@@ -30,9 +30,7 @@ class _HadoopFS:
     (False/exception) instead of raising: callers adjudicate races by
     observing the published ``_SUCCESS``. The underlying exception
     (EACCES/EROFS/…) is kept on ``last_error`` so failure diagnostics can
-    chain the real cause instead of just "rename accepted: False"
-    (round-7 ADVICE — the errno chain was explicitly load-bearing in the
-    pre-Hadoop implementation)."""
+    chain the real cause."""
 
     def __init__(self, spark: SparkSession, path: str):
         self._jPath = spark._jvm.org.apache.hadoop.fs.Path
@@ -81,6 +79,10 @@ class _HadoopFS:
             self.last_error = e
             return False
 
+    def mkdirs(self, p: str) -> bool:
+        """Create ``p`` and its missing parents; True when it exists after."""
+        return bool(self._fs.mkdirs(self._jPath(p)))
+
     def qualified(self, p: str) -> str:
         """Fully-qualified URI string for ``p`` on this filesystem
         (``/tmp/x`` → ``file:/tmp/x``) — the same normalization the Spark
@@ -89,29 +91,19 @@ class _HadoopFS:
 
     @staticmethod
     def _not_found(e: Exception) -> bool:
-        """True when a JVM exception IS a FileNotFoundException — checked
-        by exception CLASS along the Java cause chain, not by substring
-        over the stringified trace (round-12 infra audit: ``str(je)``
-        includes the full stack trace, so any wrapped fault whose TRACE
-        mentions FileNotFoundException — e.g. an HDFS RemoteException
-        whose message quotes one — would be misread as genuine absence
-        and trigger a spurious corpus-scale rebuild). Two widenings
-        (round-12 ADVICE — a too-STRICT classifier makes genuine absence
-        raise loudly out of ``_mtime_strict`` instead of returning None):
+        """True when a JVM exception IS a FileNotFoundException, checked by
+        exception class along the Java cause chain, never by substring over
+        the stringified trace (a wrapped fault whose trace merely mentions
+        one would read as absence and trigger a corpus-scale rebuild):
 
-        - each cause's class is checked up its SUPERCLASS chain, so an
-          FNFE *subclass* whose own name doesn't end in
-          ``FileNotFoundException`` still classifies as absence
-          (assignability to ``java.io.FileNotFoundException``, walked
-          instead of reflected — no target Class handle needed);
-        - a cause whose class name ends in ``RemoteException`` (the HDFS
-          RPC wrapper: original class only in ``getClassName()``/message,
-          cause typically null) is checked by ``getClassName()`` and by a
-          MESSAGE-level substring — message, never the stringified trace,
-          which was the round-12 hazard.
+        - each cause's class is checked up its superclass chain, so an FNFE
+          subclass still classifies as absence;
+        - a cause whose class name ends in ``RemoteException`` (the HDFS RPC
+          wrapper, original class only in ``getClassName()``/message) is
+          checked by ``getClassName()`` and by the head of its message.
 
-        Falls back to the substring-over-message heuristic only when no
-        Java exception object is attached (non-py4j wrappers)."""
+        Falls back to a substring over the message only when no Java
+        exception object is attached (non-py4j wrappers)."""
         je = getattr(e, "java_exception", None)
         if je is not None:
             try:
@@ -134,27 +126,17 @@ class _HadoopFS:
                             wrapped = ""  # not Hadoop's RemoteException shape
                         if wrapped.endswith("FileNotFoundException"):
                             return True
-                        # Message fallback ANCHORED to Hadoop's
-                        # RemoteException rendering '<class>: <msg>'
-                        # (round-13 ADVICE): a bare substring test
-                        # classified as absence any RPC failure whose
-                        # message merely QUOTED 'FileNotFoundException'
-                        # in a non-absence context (a lease/retry error
-                        # referencing a prior FNFE) — and the caller's
-                        # reaction to absence is a corpus-scale rebuild.
+                        # anchored to Hadoop's '<class>: <msg>' rendering:
+                        # a message that merely quotes an FNFE is not one
                         head = str(cause.getMessage() or "").split(":", 1)[0]
                         if head.strip().endswith("FileNotFoundException"):
                             return True
                     cause = cause.getCause()
                 return False
             except Exception:
-                # gateway hiccup mid-introspection: fall through to the
-                # message heuristic rather than misclassify as absent.
-                # getMessage() is ITSELF a py4j round-trip — if the
-                # gateway is what hiccuped, a second failure here must
-                # fail toward "not absence" (False, the loud-raise
-                # direction), not raise a new error out of an absence
-                # probe (round-12 ADVICE).
+                # gateway hiccup mid-introspection: try the message; if
+                # that round trip fails too, answer "not absence" (the
+                # loud-raise direction) rather than raise from a probe
                 try:
                     return "FileNotFoundException" in (str(je.getMessage() or ""))
                 except Exception:
@@ -180,12 +162,10 @@ class _HadoopFS:
         """Generation marker of a published artifact directory: ``None``
         when ``<dir>/_SUCCESS`` is absent, else the ``_SUCCESS`` mtime
         COMBINED with a digest of the recursive VISIBLE-file listing
-        (relative name, length, mtime per file). The mtime alone is the
-        cheap discriminator; the listing digest closes its granularity
-        hole (round-8 ADVICE): an external delete+rebuild completing
-        within the filesystem's timestamp granularity (1 s on some FSes)
-        leaves the mtime unchanged, but a rebuild's part files carry NEW
-        writer-UUID names, so the digest always moves. Liveness touches
+        (relative name, length, mtime per file). The listing digest closes
+        the mtime's granularity hole: a delete+rebuild within the
+        filesystem's timestamp granularity leaves the mtime unchanged, but
+        the rebuild's part files carry new writer-UUID names. Liveness touches
         refresh the DIRECTORY mtime only — ``listFiles`` returns files,
         never directories — so touches can't perturb the marker.
 
@@ -216,8 +196,8 @@ class _HadoopFS:
         return f"{mtime}|{listing_digest(entries, skip_hidden=True)}"
 
     def touch(self, p: str) -> None:
-        """Refresh mtime (liveness signal for the sweep grace window,
-        round-6 ADVICE: reads must extend the grace, not just writes)."""
+        """Refresh mtime (liveness signal for the sweep grace window: reads
+        must extend the grace, not just writes)."""
         try:
             self._fs.setTimes(self._jPath(p), int(time.time() * 1000), -1)
         except Exception as e:
@@ -247,14 +227,14 @@ class _HadoopFS:
             for st in statuses
         ]
 
-    def glob_parent_names(self, pattern: str) -> list[str] | None:
-        """Name of the parent directory of every path matching a glob
-        pattern (``dir/*/_SUCCESS`` lists the committed subdirectories in
-        one call); ``[]``/``None`` as in :meth:`glob_names_mtimes`."""
+    def glob_paths(self, pattern: str) -> list[str] | None:
+        """Full path of every match of a glob pattern (``dir/*/_SUCCESS``
+        lists committed subdirectories in one call); ``[]``/``None`` as in
+        :meth:`glob_names_mtimes`."""
         statuses = self._glob(pattern)
         if statuses is None:
             return None
-        return [st.getPath().getParent().getName() for st in statuses]
+        return [st.getPath().toString() for st in statuses]
 
     def list_files_recursive(self, p: str) -> list[tuple[str, int, int]]:
         """(path_relative_to_p, length_bytes, mtime_millis) for every FILE
@@ -284,9 +264,7 @@ def listing_digest(entries, skip_hidden: bool = False) -> str:
     file) — THE content-fingerprint hashing convention, shared by
     :meth:`_HadoopFS.generation` (``skip_hidden=True``: reader-visible
     files only, per Hadoop hidden-file semantics) and
-    ``catalog.path_fingerprint``'s remote branch (round-12 infra audit:
-    the loop existed as two hand-rolled copies that could silently
-    diverge)."""
+    ``catalog.path_fingerprint``'s remote branch."""
     import hashlib
 
     h = hashlib.md5()
@@ -299,10 +277,7 @@ def listing_digest(entries, skip_hidden: bool = False) -> str:
 
 def glob_escape(path: str) -> str:
     """Backslash-escape Hadoop glob metacharacters so a literal path can be
-    embedded as the prefix of a glob pattern (GlobPattern honors ``\\``).
-    Lives here, next to :meth:`_HadoopFS.glob_names_mtimes`, since the
-    round-12 infra audit: the artifact sweep previously imported it from
-    the ORC sink — a layering inversion."""
+    embedded as the prefix of a glob pattern (GlobPattern honors ``\\``)."""
     out = []
     for ch in path:
         if ch in r"\*?[]{}":

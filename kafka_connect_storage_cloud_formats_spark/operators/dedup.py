@@ -480,12 +480,9 @@ def dedup_repeated_ngrams(
         )
         .select("doc_id", "lang", _gram_key(F.col("gram"), family).alias("g"))
     )
-    # "occurs in ≥2 distinct documents" ⇔ min(doc_id) ≠ max(doc_id): the
-    # min/max pair is a plain map-side-combinable aggregate, where
-    # countDistinct planned as a two-level (g, doc_id) aggregate with an
-    # EXTRA full exchange of the gram-key stream — the widest shuffle in
-    # the chain (r15 optimization, guide §2.3/§2.4; decision set
-    # identical by construction, oracle text untouched).
+    # "occurs in ≥2 distinct documents" ⇔ min(doc_id) ≠ max(doc_id): a
+    # map-side-combinable aggregate, where countDistinct would add a full
+    # exchange of the gram-key stream.
     dup_keys = (
         grams.groupBy("g")
         .agg(F.min("doc_id").alias("d_min"), F.max("doc_id").alias("d_max"))
@@ -532,14 +529,12 @@ def _covered_positions(
     (:func:`_gram_key`); the emitted (doc_id, pos) pairs are
     family-independent (pinned in tests).
 
-    ``keep_first`` (round 14 — Lee et al. 2022 keep ONE copy of each
-    duplicated substring; the round-13 default removes every occurrence,
-    the boilerplate-scrub posture): each duplicated gram's CANONICAL
-    occurrence — the deterministic (min doc_id, then min start position)
-    tie-break — is exempted, so its positions stay uncovered unless some
-    OTHER gram's non-canonical occurrence overlaps them. One extra
-    map-side-combinable min-aggregate on the gram key plus one equi-join
-    against it; no new shuffle class."""
+    ``keep_first`` (Lee et al. 2022: keep ONE copy of each duplicated
+    substring; the default removes every occurrence, the boilerplate-
+    scrub posture) exempts each duplicated gram's canonical occurrence,
+    the (min doc_id, then min start position) one, so its positions stay
+    uncovered unless some OTHER gram's non-canonical occurrence overlaps
+    them. It costs one more window aggregate and filter, no new shuffle."""
     family = family or hash_family()
     grams = (
         spread(docs)
@@ -547,52 +542,31 @@ def _covered_positions(
             "doc_id", F.posexplode(word_ngrams("text", k)).alias("i", "gram")
         )
         .select("doc_id", "i", _gram_key(F.col("gram"), family).alias("g"))
-        # ONE gram exchange feeds the whole derivation (round 16, guide
-        # §2.4): the pre-r16 shape planned the dup-key aggregate and the
-        # occurrence probe as two separate subtrees, each re-running the
-        # posexplode + hash over all docs (two Generate nodes — the
-        # tokenize/hash pass was this family's dominant CPU; exchange
-        # reuse could not dedupe them because column pruning narrowed the
-        # aggregate branch). Repartitioning by g and computing the
-        # dup-key test as WINDOW functions below makes the explode run
-        # exactly once.
+        # ONE gram exchange feeds the whole derivation: repartitioning by
+        # g and computing the dup-key test as window functions below makes
+        # the posexplode + hash (this family's dominant CPU) run once.
         .repartition(F.col("g"))
     )
-    # min/max over a g-partitioned window replace the dup-key aggregate
-    # + semi join of earlier rounds (round 16): same min≠max test (⇔ ≥2
-    # distinct docs, the r15 countDistinct rewrite), evaluated on the one
-    # shared gram pass — no second explode, no join. keep_first's
-    # canonical occurrence (min (doc_id, i) — identical tie-break to the
-    # old per-g struct-min aggregate) rides the SAME window spec, so the
-    # exemption costs no extra pass either.
+    # min≠max over a g-partitioned window ⇔ the gram occurs in ≥2 distinct
+    # docs, evaluated on the one gram pass. keep_first's canonical
+    # occurrence (min (doc_id, i)) rides the same window spec.
     from pyspark.sql.window import Window as _W
 
     wg = _W.partitionBy("g")
-    occ = (
-        grams.withColumn("__dmin", F.min("doc_id").over(wg))
-        .withColumn("__dmax", F.max("doc_id").over(wg))
-        .filter(F.col("__dmin") != F.col("__dmax"))
+    occ = grams.withColumn("__dmin", F.min("doc_id").over(wg)).withColumn(
+        "__dmax", F.max("doc_id").over(wg)
     )
     if keep_first:
-        keep = F.min(F.struct(F.col("doc_id"), F.col("i"))).over(wg)
-        occ = (
-            grams.withColumn("__dmin", F.min("doc_id").over(wg))
-            .withColumn("__dmax", F.max("doc_id").over(wg))
-            .withColumn("__keep", keep)
-            .filter(F.col("__dmin") != F.col("__dmax"))
-            .filter(
-                (F.col("doc_id") != F.col("__keep.doc_id"))
-                | (F.col("i") != F.col("__keep.i"))
-            )
+        occ = occ.withColumn("__keep", F.min(F.struct(F.col("doc_id"), F.col("i"))).over(wg))
+    occ = occ.filter(F.col("__dmin") != F.col("__dmax"))
+    if keep_first:
+        occ = occ.filter(
+            (F.col("doc_id") != F.col("__keep.doc_id")) | (F.col("i") != F.col("__keep.i"))
         )
-    # repartition by doc_id BEFORE the distinct: hash-partitioning on
-    # doc_id alone satisfies the distinct aggregate's clustering
-    # requirement on (doc_id, pos) AND the doc-partitioned window /
-    # per-doc joins every consumer stacks on top — one exchange of the
-    # covered set where distinct-then-window paid two (r15 optimization,
-    # guide §2.4 "two operations keyed the same way can share one
-    # exchange"). No explicit partition count: AQE remains free to size
-    # it from runtime bytes.
+    # repartition by doc_id BEFORE the distinct: doc_id alone satisfies
+    # the distinct's clustering on (doc_id, pos) AND every consumer's
+    # doc-partitioned window or join, so the covered set is exchanged once.
+    # No explicit partition count: AQE sizes it from runtime bytes.
     return (
         occ.select(
             "doc_id",
@@ -606,14 +580,11 @@ def _covered_positions(
 def repeated_ngram_spans(
     spark: SparkSession, sf_dir: str, k: int = REPEAT_NGRAM_K
 ) -> DataFrame:
-    """Per-language MAXIMAL duplicated-span report (round 14 — Lee et
-    al. 2022's duplicated-run statistics; round-13 verdict "What's
-    missing #2": the fixed-k mass report cannot say how LONG duplicated
-    runs are): adjacent covered positions merge into maximal spans via
-    the gaps-and-islands grouping ``pos − row_number()`` over a window
-    PARTITIONED by doc_id (parallel by construction — the audit's
-    unpartitioned-window gate applies to this module too), then one
-    map-side-combinable per-language aggregate: (lang, n_spans,
+    """Per-language MAXIMAL duplicated-span report (Lee et al. 2022's
+    duplicated-run statistics: how LONG duplicated runs are): adjacent
+    covered positions merge into maximal spans via the gaps-and-islands
+    grouping ``pos − row_number()`` over a window partitioned by doc_id,
+    then one map-side-combinable per-language aggregate: (lang, n_spans,
     n_docs_with_span, span_tokens, max_span_len, avg_span_len).
 
     ``span_tokens`` equals the scrub report's ``n_tokens −
@@ -628,15 +599,10 @@ def repeated_ngram_spans(
         .groupBy("doc_id", "grp")
         .agg(F.count(F.lit(1)).alias("span_len"))
     )
-    # Per-doc pre-aggregation before the lang rollup (r15 optimization,
-    # guide §2.3 "aggregate before you shuffle"): spans leave the window
-    # stage already partitioned by doc_id, so the per-doc aggregate is
-    # exchange-free, the lang shuffle carries one row per doc instead of
-    # one per span, and the mixed distinct/non-distinct aggregate's
-    # Expand rewrite (double exchange) disappears — n_docs_with_span =
-    # COUNT of per-doc rows ⇔ the old countDistinct(doc_id), and every
-    # sum/max/count composes exactly (integer arithmetic, values
-    # identical; the avg division happens once per lang, as before).
+    # Per-doc pre-aggregation before the lang rollup: spans leave the
+    # window stage partitioned by doc_id, so it is exchange-free, the lang
+    # shuffle carries one row per doc, and n_docs_with_span is a plain
+    # COUNT of per-doc rows (no distinct-aggregate Expand).
     per_doc = spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans_doc"),
         F.sum("span_len").alias("span_tokens_doc"),
@@ -669,7 +635,7 @@ def scrub_repeated_ngrams_text(
     posture: a run appearing in ≥2 docs is boilerplate everywhere it
     appears); ``keep_first=True`` is Lee et al.'s keep-one-copy policy —
     each duplicated gram's canonical (min doc_id, min position)
-    occurrence survives (round 14; the exemption is per-GRAM, so a
+    occurrence survives (the exemption is per-GRAM, so a
     position kept by one gram can still be scrubbed by another gram's
     non-canonical overlap — the only composition that stays well-defined
     under overlapping spans, property-tested against a Python brute
@@ -693,11 +659,8 @@ def scrub_repeated_ngrams_text(
         ).alias("text")
     )
     # fully-scrubbed docs keep an empty-string row (a pipeline decides
-    # whether to drop empties — same posture as the quality gate), but a
-    # NULL-text document stays NULL (round-13 ADVICE, the module's
-    # standing NULL-propagation doctrine: collapsing NULL to '' would
-    # make an unscrubbed-but-absent document indistinguishable from a
-    # fully-scrubbed one)
+    # whether to drop empties), but a NULL-text document stays NULL, or
+    # an absent document would look fully scrubbed
     return (
         docs.select("doc_id", F.col("text").isNull().alias("__was_null"))
         .join(rebuilt, "doc_id", "left")
@@ -722,10 +685,10 @@ def scrub_repeated_ngrams(
     text rewriter, so the registered numbers always describe exactly
     what :func:`scrub_repeated_ngrams_text` would emit).
 
-    Scale shape: the same map-only gram build and combinable aggregates
-    as the mass report, plus one k-fan-out explode of duplicated
+    Scale shape: one gram pass and exchange, the dup-key test as a
+    g-partitioned window, one k-fan-out explode of duplicated
     occurrences and an anti-join on the compact (doc_id, pos) key —
-    linear end-to-end, no windows, no posting lists."""
+    linear end-to-end, no posting lists."""
     docs = load_table(spark, sf_dir, "documents")
     return _scrub_report(docs, k)
 
@@ -734,14 +697,12 @@ def scrub_repeated_ngrams_keepfirst(
     spark: SparkSession, sf_dir: str, k: int = REPEAT_NGRAM_K
 ) -> DataFrame:
     """The same pricing report under Lee et al. 2022's KEEP-ONE-COPY
-    policy (round 14): each duplicated gram's canonical (min doc_id,
-    min position) occurrence is exempt from scrubbing, so exactly one
-    copy of every duplicated run survives somewhere in the corpus —
-    registered alongside the remove-all row so the driver's hash gate
-    certifies BOTH deployment postures (and their delta: this row's
-    n_tokens_kept ≥ the remove-all row's by exactly the canonical
-    occurrences' uncovered mass). Same linear shape plus one combinable
-    min-aggregate on the gram key (:func:`_covered_positions`)."""
+    policy: each duplicated gram's canonical (min doc_id, min position)
+    occurrence is exempt from scrubbing, so exactly one copy of every
+    duplicated run survives somewhere in the corpus. Registered alongside
+    the remove-all row so both postures are certified (this row's
+    n_tokens_kept ≥ the remove-all row's). Same linear shape plus one
+    more window aggregate on the gram key (:func:`_covered_positions`)."""
     docs = load_table(spark, sf_dir, "documents")
     return _scrub_report(docs, k, keep_first=True)
 

@@ -46,6 +46,7 @@ from kafka_connect_storage_cloud_formats_spark.operators.similarity import SIMIL
 from kafka_connect_storage_cloud_formats_spark.operators.training_pipeline import TRAINING_PIPELINE_QUERIES
 from kafka_connect_storage_cloud_formats_spark.operators.text import TEXT_QUERIES
 from kafka_connect_storage_cloud_formats_spark.queries.relational import RELATIONAL_QUERIES
+from kafka_connect_storage_cloud_formats_spark.queries.window import registry_order
 from kafka_connect_storage_cloud_formats_spark.streaming.windows import STREAMING_WINDOW_QUERIES
 
 _ALL: dict = {
@@ -64,11 +65,8 @@ _ALL.update(RELATIONAL_QUERIES)
 _ALL.update(TEXT_QUERIES)
 _ALL.update(DEDUP_QUERIES)
 _ALL.update(SIMILARITY_QUERIES)
-# Trained-quantizer IVF serving tier (round 10): the label-quantizer
-# ivf_topk/ivf_topk_pruned/ivf_recall_at_10 entries above stay registered
-# as the DEGENERATE BASELINE (an untrained coarse quantizer — recall@10
-# 0.15 at nprobe=1); the ivf_kmeans_* family is the serving default a 100 TB
-# deployment should run (~2× recall at identical probe cost, SCALE.md).
+# The label-quantizer ivf_* rows above are the untrained baseline; the
+# ivf_kmeans_* family is the serving default (~2× recall, SCALE.md).
 _ALL.update(KMEANS_IVF_QUERIES)
 _ALL.update(PQ_QUERIES)
 _ALL.update(MULTIMODAL_QUERIES)
@@ -81,61 +79,30 @@ _ALL.update(SCALE_UTILS_QUERIES)
 
 # --- prepared-plan cache -----------------------------------------------
 # DataFrames are immutable logical plans, so a registered query's built
-# plan can be handed back to every caller, exactly as catalog.load_table
-# already does per table: the ~0.02-0.25 s of pure driver work a build
-# pays (py4j round trips per DataFrame op, artifact-memo checks, driver
-# collects of contract-bounded query matrices) is paid ONCE per
-# (session, corpus) instead of once per execution. This is the prepared-
-# statement shape a production endpoint uses — plan once, execute many —
-# and it is where ~6 s of the 91-query bench total lived (round-8 verdict
-# ask #1: the per-query fixed floor). Catalyst still plans the PHYSICAL
-# execution fresh per action, so AQE/runtime re-planning is untouched.
-#
-# Safety rails, mirroring the table cache (catalog._TABLE_CACHE):
-# - keyed by applicationId (a restarted session never sees plans bound to
-#   a dead JVM) and the realpath'd corpus identity;
+# plan is handed back to every caller, as catalog.load_table does per
+# table: the driver work of a build (py4j round trips, artifact-memo
+# checks, driver collects of bounded query matrices) is paid once per
+# (session, corpus). Catalyst still plans the physical execution per
+# action, so AQE is untouched. Safety rails, mirroring catalog._TABLE_CACHE:
+# - keyed by applicationId (no plans bound to a dead JVM) and the
+#   realpath'd corpus identity;
 # - revalidated per call by the stat-only corpus fingerprint, so a corpus
-#   REGENERATED at the same path rebuilds the plan, never serves stale;
-# - session timezone must be UTC on a hit (the same execution-time guard
-#   catalog._require_utc enforces on table-cache hits) — a foreign-zone
-#   session falls through to the builder, whose own guards raise loudly;
-# - queries with PER-CALL side effects (the scratch-dir roundtrips: each
-#   execution must physically re-write and re-read files, because the
-#   write IS the thing being measured/certified) are never memoized.
-#   Artifact builds (ensure_*) are not per-call effects: they are
-#   content-keyed and self-memoizing, so caching their consumers is safe.
-# - artifact delete+rebuild under an unchanged corpus: each cache entry
-#   records the artifact paths its builder consumed
-#   (artifacts.record_consumed_artifacts), and every HIT re-runs the
-#   throttled generation check on them (artifacts.revalidate_artifact —
-#   within the touch-throttle interval that is a dict lookup). A changed
-#   or vanished generation fires the invalidation listeners, this cache
-#   clears, and the call falls through to a rebuild — so the self-heal
-#   reaches fully-cached sessions too (round-10 ADVICE: previously the
-#   generation check lived only in ensure_artifact, which a hit skips
-#   entirely, leaving a cached plan on permanent FileNotFound). In the
-#   sub-interval window before detection the next action fails LOUDLY
-#   with FileNotFound — nothing stale is served.
-# - sweep-liveness note: since round 10 a cache hit refreshes each
-#   consumed artifact's liveness touch through revalidate_artifact's
-#   throttle (hits previously skipped ensure_artifact entirely), so a
-#   fully-cached session's artifacts stay inside the sweep grace window
-#   by the same mechanism as builder sessions. The stale-sibling sweep
-#   itself only runs when a NEW generation is published, which requires
-#   the corpus fingerprint to have moved — and a moved fingerprint is a
-#   cache MISS here (revalidated per call), so consumers of the old
-#   artifact stop being served from this cache at exactly the moment a
-#   sweep becomes possible. In-flight scans crossing a regeneration are
-#   protected by the sweep's grace window, same as before this cache
-#   existed.
+#   regenerated at the same path rebuilds the plan;
+# - a hit needs a UTC session; any other zone falls through to the
+#   builder, whose own guards raise;
+# - queries with per-call side effects (_SIDE_EFFECT_QUERIES) are never
+#   memoized; content-keyed artifact builds (ensure_*) are not per-call
+#   effects, so their consumers are cached;
+# - each entry records the artifact paths its build consumed, and every
+#   hit re-runs the throttled generation check on them
+#   (artifacts.revalidate_artifact), which also refreshes their liveness
+#   touch for the sweep. A changed or vanished generation clears this
+#   cache through the invalidation listeners and the call rebuilds; before
+#   detection an action fails loudly with FileNotFound, never stale.
 # key → (corpus fingerprint, built plan, artifact paths the build consumed)
 _PLAN_CACHE: dict[tuple[str, str, str], tuple[str, DataFrame, frozenset]] = {}
-# Serialize the cache's iterate-and-mutate shapes (round-12 infra audit —
-# the same hazard artifacts._MEMO_LOCK and catalog._TABLE_CACHE_LOCK
-# close): the dead-app eviction comprehension races a sibling thread's
-# insert, and _on_artifact_invalidated may clear() from any thread mid-
-# iteration. Keyed reads stay lock-free (a stale hit re-validates by
-# fingerprint + artifact generation).
+# Serializes the dead-app eviction and clear() against concurrent inserts;
+# keyed reads stay lock-free (a stale hit re-validates).
 import threading as _threading
 
 _PLAN_CACHE_LOCK = _threading.Lock()
@@ -170,27 +137,13 @@ _SIDE_EFFECT_QUERIES = frozenset(
         "json_roundtrip",
         "csv_roundtrip",
         "schema_evolution_roundtrip",
-        # Not side-effecting, but their DECLARED MEANING is "measure the
-        # live build": ivf_index_build force-rebuilds the index per call
-        # and neardup_clusters runs the live edge-collect + union-find at
-        # plan-build time. A memoized plan would skip exactly the work
-        # their bench rows exist to measure (verified: cached mins read
-        # 0.11 s / 0.40 s vs the honest 0.89 s / 1.48 s). Their CONSUMER
-        # paths (ivf_topk_pruned, training_corpus_stats via the label
-        # artifact) are the cached serving shape.
+        # Not side-effecting, but these rows exist to measure a live
+        # build (index builds, the neardup edge-collect + union-find, the
+        # incremental accept/upsert steps); a memoized plan would skip
+        # exactly that work. Their consumer rows are cached.
         "ivf_index_build",
         "neardup_clusters",
-        # round 10: the trained tier's build row — same declared meaning
-        # as ivf_index_build (a memoized plan would skip the measured
-        # rebuild); its consumer path (ivf_kmeans_topk_pruned) is the
-        # cached serving shape
         "ivf_kmeans_index_build",
-        # round 12: the accept/upsert steps of the incremental pipeline —
-        # these rows exist to measure the per-drop build (merged
-        # signature/fingerprint generations; cell-partitioned index
-        # segment), so a memoized plan would skip exactly the measured
-        # work. The serving-view probe (ivf_kmeans_topk_upserted) is the
-        # cached consumer path, like every other probe row.
         "corpus_hash_merge",
         "corpus_signature_merge",
         "corpus_fingerprint_merge",
@@ -207,46 +160,30 @@ def _prepared(name: str, fn):
         except Exception:
             utc = False
         if not utc:
-            # Non-UTC sessions bypass the cache: timezone-sensitive casts
-            # read the zone at EXECUTION time, and the builder's own
-            # guards (catalog._require_utc) are the authority on whether
-            # that is an error for this query.
+            # timezone-sensitive casts read the zone at execution time; the
+            # builder's own guards (catalog._require_utc) decide
             return fn(spark, sf_dir)
         canon = canon_path(sf_dir)
         ident = canon if is_remote(canon) else os.path.realpath(canon)
         key = (spark.sparkContext.applicationId, name, ident)
-        # Freshness contract: the WHOLE-corpus stat fingerprint re-runs
-        # per call, so a corpus regenerated at the same path is never
-        # served a stale plan — the deliberate trade is per-call listing
-        # cost (trivial locally; on an object-store corpus a deployment
-        # that cannot afford a recursive LIST per query should front this
-        # with its own change signal — the cache never weakens freshness
-        # to save the probe; round-12 infra audit, documented trade).
+        # The whole-corpus stat fingerprint re-runs per call: freshness
+        # over listing cost (an object-store deployment that cannot afford
+        # a recursive LIST per query should front this with its own signal).
         fp = path_fingerprint(sf_dir, spark)
         hit = _PLAN_CACHE.get(key)
-        # newSession() clones share the applicationId and therefore this
-        # cache — the same deliberate contract as catalog._TABLE_CACHE
-        # (whose cached table plans underlie every query here, so a
-        # per-session plan cache would still execute under the building
-        # session's state one layer down). That is safe for the same
-        # reason it is there: registered queries read no temp views, and
-        # the one execution-time-sensitive session conf (timezone) is
-        # re-guarded on every call — the UTC check above runs against the
-        # CALLER's session, and a non-UTC caller bypasses the cache into
-        # the builder's own guards. Clones with materially divergent SQL
-        # confs are outside the engine's contract (apply_session_confs
-        # exists to align them).
+        # newSession() clones share the applicationId and so this cache,
+        # as with catalog._TABLE_CACHE: registered queries read no temp
+        # views, and the one execution-time-sensitive conf (timezone) is
+        # checked above against the caller's session. Clones with other
+        # divergent SQL confs are outside the contract (apply_session_confs).
         if hit is not None and hit[0] == fp:
             from kafka_connect_storage_cloud_formats_spark.artifacts import (
                 revalidate_artifact,
             )
 
-            # Re-check every artifact this plan embeds (throttled — a dict
-            # lookup within the touch interval). Run ALL of them even after
-            # a failure: each check doubles as the artifact's liveness
-            # touch, and one stale member shouldn't stop the others' sweep
-            # protection. A failed check fires the invalidation listeners,
-            # which clear THIS cache — re-read instead of trusting `hit`.
+            # Re-check ALL embedded artifacts even after a failure (each
+            # check is also a liveness touch); a failed check clears this
+            # cache through the listeners, so re-read instead of trusting `hit`.
             live = all([revalidate_artifact(p, spark) for p in hit[2]])
             hit = _PLAN_CACHE.get(key)
             if live and hit is not None and hit[0] == fp:
@@ -275,311 +212,6 @@ _ALL = {
     for name, (fn, sql) in _ALL.items()
 }
 
-# The driver's correctness gate checks a positional window of the first 50
-# registry entries. Rotate each round so the least-evidenced queries lead:
-# (a) queries with only rows ≥2 rounds old, (b) queries whose
-# implementation changed this round (fresh rows certify the shipped code,
-# not a stale predecessor). The ordering below was prepared FOR the round
-# recorded here; once the driver writes CORRECTNESS_r{ROTATED_FOR_ROUND},
-# the window has served its purpose and the positional invariant is
-# expected to lapse until the next rotation (tests/test_registry.py keys
-# its window assertion off this constant).
-ROTATED_FOR_ROUND = 16
-
-# WINDOW-CAPACITY NOTE (round 15): 134 registered queries (the round-15
-# incremental-IVFPQ pair, residual-IVFPQ pair, residual×incremental pair
-# and drift-gated-merge rows join). The guarantee is ceil(N/50)=3-rounds max staleness via rotation,
-# every new query debuts in-window, and EVERY query is re-certified on
-# HEAD each round by the full-registry oracle run
-# (tools/check_correctness.py --repeat — a standing round gate). The 32
-# that slip to r16 (the exact N-100 cap at 134) are stable r13-green shapes
-# whose families stay richly in-window (see the list's own notes).
-_SLIPPED_TO_R15 = [
-    # (consumed by this rotation — the 27 r12-green queries lead the r15
-    # window below, closing their 3-round staleness bound)
-    "corpus_fingerprint_merge",
-    "events_sliding_1h",
-    "events_tumbling_15m",
-    "approx_profile",
-    "replay_dedup",
-    "video_frame_index",
-    "ivf_kmeans_topk_upserted",
-    "events_funnel",
-    "events_interval_join",
-    "audio_window_energy",
-    "orc_ingest_roundtrip",
-    "orc_partitioned_roundtrip",
-    "avro_roundtrip",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q9_product_type_profit",
-    "q13_order_count_distribution",
-    "q14_promo_revenue_share",
-    "q15_top_supplier",
-    "top_orders_per_customer",
-    "orders_rollup",
-    "customers_without_orders",
-    "doc_quality_deciles",
-    "media_catalog",
-    "salted_cohort_activity",
-]
-
-# The 34 r13-green queries that wait one more round (exact N-100 cap at
-# 134 registered; every one carries a CORRECTNESS_r13 row, inside the
-# 2-round evidence bound the slip contract requires). Families stay
-# richly in-window: the label-IVF quartet + LSH pair slip while the
-# trained-IVF serving family, the SQ8 pair, knn_bruteforce and the whole
-# round-15 PQ family are in-window; minhash/simhash building blocks slip
-# while neardup_incremental + the merge family are in-window; eight
-# TPC-H q-shapes slip while the 11 leading the window via the r15 slips
-# return; media/doc singles slip with their family siblings in-window.
-_SLIPPED_TO_R16 = [
-    # (+2 displaced by the residual-upserted pair's in-window debut:
-    # knn_bruteforce — its exact baseline is consumed by every in-window
-    # recall row's ground-truth artifact anyway — and image_decode_stats,
-    # whose media family is r14-green via video_scene_cuts)
-    "knn_bruteforce",
-    "image_decode_stats",
-    "ann_lsh_topk",
-    "ann_recall_at_10",
-    "dedup_fuzzy_prefix",
-    "distinct_parts_per_supplier",
-    "doc_bigram_novelty",
-    "doc_fingerprint",
-    "events_hourly_rollup",
-    "image_resize_thumbnail",
-    "ivf_centroids",
-    "ivf_index_build",
-    "ivf_recall_at_10",
-    "ivf_topk",
-    "ivf_topk_pruned",
-    "media_feature_extract",
-    "minhash_lsh_pairs",
-    "minhash_signatures",
-    "neardup_clusters",
-    "neardup_incremental_simhash",
-    "orders_price_moments",
-    "q11_important_parts",
-    "q12_priority_by_returnflag",
-    "q16_supplier_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q20_promotion_suppliers",
-    "q21_sole_late_supplier",
-    "q22_rich_inactive_customers",
-    "q4_priority_with_late_ship",
-    "q8_nation_market_share",
-    "scalar_function_gallery",
-    "simhash_near_pairs",
-    "stratified_sample",
-]
-
-_NEW_IN_R15 = [
-    # Never driver-evidenced — they MUST debut in-window:
-    # the compressed tier's incremental serving story (round-14 verdict
-    # "What's missing #1": drops PQ-encoded against the PUBLISHED
-    # corpus-split codebooks, probe over main ∪ code segment, BOTH
-    # trainings + both batch assignments replayed in one oracle chain),
-    "ivfpq_topk_upserted",
-    "ivfpq_recall_upserted",
-    # FAISS-style residual encoding (round-14 "What's missing #2":
-    # codebooks trained on x − coarse centroid, ADC adds the exact
-    # centroid term back; recall@10 0.47 → 0.52 at sf0.01, SCALE.md),
-    "ivfpq_residual_topk",
-    "ivfpq_residual_recall_at_10",
-    # and the drift-GATED accept chain (round-14 "What's missing #3":
-    # both gate postures — accept AND reject — certified in one
-    # exact-rational row over the full curation + drift replay).
-    "drift_gated_merge",
-    # ... and the residual × incremental COMPOSITION — the complete FAISS
-    # operating point for continuous ingest (split residual codebooks,
-    # drops residualized against their published cell then
-    # residual-encoded, centroid-term ADC over the code-segment union),
-    # closing the 2×2 serving matrix:
-    "ivfpq_residual_topk_upserted",
-    "ivfpq_residual_recall_upserted",
-]
-
-# Out-of-window transits, documented (every slot is claimed below; the
-# changed rows this round are all r14-green and re-certified by the
-# full-registry HEAD oracle runs at sf0.001 + sf0.01 --repeat):
-# 1. dedup_semantic: k is now the k∝N dial (kmeans_ivf.semantic_k_for —
-#    round-14 "What's wrong #1"); at every driver SF the dial resolves
-#    to KMEANS_K=16, so training, results and the oracle string are
-#    UNCHANGED — decision equality pinned in tests/test_kmeans_ivf.py::
-#    test_semantic_k_dial_rule_and_decision_equality, HEAD hash-match
-#    at sf0.001 and sf0.01 --repeat this round.
-# 2. drop_drift_report: the round-14 ADVICE zero-split guard (engine
-#    raise_error + oracle error() CTE). The oracle TEXT gains the totg
-#    guard CTE but emits identical values on every populated corpus
-#    (the guard is unreachable there); HEAD hash-match at sf0.001 and
-#    sf0.01 --repeat this round; the refusal itself is pinned in
-#    tests/test_profiling.py::test_drop_drift_report_refuses_empty_split.
-# 3. pq_topk / pq_recall_at_10 / ivfpq_topk / ivfpq_recall_at_10: the
-#    probe body now composes the shared helpers (_route_df/_build_lut/
-#    _lut_adc_rerank) the new upserted/residual rows serve from, and
-#    _pq_training_ctes/_ivfpq_probe_ctes gained src/labels/codes/residual
-#    parameters. All four ORACLE STRINGS verified BYTE-IDENTICAL against
-#    the pre-change module this session (importlib-load of git HEAD),
-#    and all four engine plans verified OPTIMIZED-PLAN-IDENTICAL
-#    (normalized #ids) against the pre-refactor module in one session —
-#    plus HEAD hash-green at sf0.001 + sf0.01 --repeat.
-# 4. train_pq's internal _training_corpus() hook (split/residual arms):
-#    at the registered defaults it selects exactly the pre-change
-#    corpus; params tokens unchanged, so the published artifacts are
-#    byte-compatible and no regeneration occurs.
-# 5. profiling._drift_buckets extraction: drop_drift_report now consumes
-#    the shared histogram core the gate row also uses — identical
-#    expressions, identical plan.
-
-_STALE_AFTER_R14 = [
-    # THE SLIP LIST LEADS (standing protocol): the 27 r12-green queries
-    # declared _SLIPPED_TO_R15 last round — 3 rounds stale at this debut,
-    # the ceil(N/50) bound's edge; nothing older remains.
-    *_SLIPPED_TO_R15,
-    # the five round-15 debuts:
-    *_NEW_IN_R15,
-    # r13-green fill (the stalest remaining evidence; their 32 r13-green
-    # siblings wait one more round in _SLIPPED_TO_R16): the four format
-    # roundtrips, the serving-grade recall + multi-segment probe of the
-    # trained-IVF family, the embedding/text dedup heavies, the
-    # second-drop replay + contamination pricing, the span-packing pair,
-    # the SQ8 pair + exact-kNN baseline, and the image decode row.
-    "parquet_roundtrip",
-    "json_roundtrip",
-    "csv_roundtrip",
-    "schema_evolution_roundtrip",
-    "ivf_kmeans_recall_nprobe4",
-    "ivf_kmeans_topk_upserted2",
-    "dedup_embedding_cosine",
-    "dedup_repeated_ngrams",
-    "scrub_repeated_ngrams",
-    "neardup_incremental",
-    "curation_second_drop_report",
-    "benchmark_contamination",
-    "pack_sequence_spans",
-    "packed_span_fill",
-    "sq8_topk",
-    "sq8_recall_at_10",
-]
-
-# ---- round-16 rotation -----------------------------------------------------
-# Window arithmetic at 134 queries: 84 stale rows (34 r13-green — the
-# ceil(N/50) staleness bound's edge, they MUST all debut — + 50 r14-green);
-# 50 window slots ⇒ exactly 34 slip to r17. The 16 r14-green rows taken
-# in-window are exactly (a) this round's CHANGED rows (the kmeans/pq probe
-# family rewritten onto driver-side routing + stored norms + the carried
-# assignment artifact; dedup_semantic rides the same artifact) and (b) the
-# r15-verdict item-#8 touched-but-unsampled rows (dedup_ngram_jaccard,
-# repeated_ngram_spans, scrub_repeated_ngrams_keepfirst,
-# training_corpus_stats — the r15 spread()/broadcast changes the driver
-# never sampled; q21/neardup_clusters/dedup_fuzzy_prefix are in the r13
-# block). The slipped 34 are all UNTOUCHED-this-round r14-green stable
-# shapes whose operator families stay richly in-window.
-_SLIPPED_TO_R17 = [
-    "q2_min_acctbal_supplier",
-    "orders_cube",
-    "events_pivot_hourly",
-    "q7_nation_trade_volume",
-    "q19_disjunctive_revenue",
-    "q10_returned_revenue",
-    "part_brand_type_setops",
-    "array_function_gallery",
-    "scrub_numeric_tokens",
-    "vocab_stats",
-    "doc_top_terms",
-    "text_quality_stats",
-    "lang_id_heuristic",
-    "token_count_bpe",
-    "benchmark_decontaminate",
-    "doc_repetition_stats",
-    "dedup_exact",
-    "dedup_incremental",
-    "dedup_canonical",
-    "curation_drop_report",
-    "corpus_hash_merge",
-    "corpus_signature_merge",
-    "simhash_fingerprints",
-    "video_scene_cuts",
-    "events_session_30m",
-    "drop_drift_report",
-    "corpus_split_stats",
-    "orders_column_profile",
-    "events_value_quantiles",
-    "events_latest_per_user",
-    "pack_training_sequences",
-    "packed_sequence_stats",
-    "clicks_asof_purchase",
-    "bucketed_segment_revenue",
-]
-
-_STALE_AFTER_R15 = [
-    # the 34 r13-green rows lead (3 rounds stale at this debut — the
-    # bound's edge; includes the r15-verdict item-#8 asks q21,
-    # neardup_clusters, dedup_fuzzy_prefix and this round's rewritten
-    # label-tier probe family ivf_topk/ivf_topk_pruned/ivf_recall_at_10)
-    "distinct_parts_per_supplier",
-    "events_hourly_rollup",
-    "q4_priority_with_late_ship",
-    "q16_supplier_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q21_sole_late_supplier",
-    "q22_rich_inactive_customers",
-    "scalar_function_gallery",
-    "q8_nation_market_share",
-    "q11_important_parts",
-    "q12_priority_by_returnflag",
-    "q20_promotion_suppliers",
-    "orders_price_moments",
-    "doc_fingerprint",
-    "doc_bigram_novelty",
-    "minhash_signatures",
-    "minhash_lsh_pairs",
-    "neardup_incremental_simhash",
-    "simhash_near_pairs",
-    "neardup_clusters",
-    "dedup_fuzzy_prefix",
-    "knn_bruteforce",
-    "ann_lsh_topk",
-    "ivf_centroids",
-    "ivf_topk",
-    "ivf_index_build",
-    "ivf_topk_pruned",
-    "ivf_recall_at_10",
-    "ann_recall_at_10",
-    "image_decode_stats",
-    "media_feature_extract",
-    "image_resize_thumbnail",
-    "stratified_sample",
-    # the 16 r14-green rows this round CHANGED or the r15 verdict asked
-    # sampled (see the rotation note above)
-    "ivf_kmeans_topk",
-    "ivf_kmeans_topk_pruned",
-    "ivf_kmeans_index_build",
-    "ivf_kmeans_recall_at_10",
-    "ivf_kmeans_index_upsert",
-    "ivf_kmeans_recall_upserted",
-    "dedup_semantic",
-    "ivf_kmeans_cell_stats",
-    "pq_topk",
-    "pq_recall_at_10",
-    "ivfpq_topk",
-    "ivfpq_recall_at_10",
-    "dedup_ngram_jaccard",
-    "repeated_ngram_spans",
-    "scrub_repeated_ngrams_keepfirst",
-    "training_corpus_stats",
-]
-
-_PRIORITY = _STALE_AFTER_R15
-
-
-# direct indexing: a misspelled rotation name must fail AT IMPORT (the
-# `if n in _ALL` guard silently dropped the typo'd query from its window
-# slot while the length assert still passed — round-12 infra audit)
-QUERIES: dict = {n: _ALL[n] for n in _PRIORITY}
-QUERIES.update({n: v for n, v in _ALL.items() if n not in QUERIES})
-assert len(QUERIES) == len(_ALL)
+# The driver's correctness gate checks the first 50 entries each round;
+# window.registry_order puts the queries that most need a fresh row first.
+QUERIES: dict = {n: _ALL[n] for n in registry_order(_ALL)}

@@ -26,10 +26,7 @@ Two sinks:
   driver-side rename pass over the manifest — O(#files), no data through the
   driver).
 
-Scale notes: on a real cluster ``write_orc_parity``'s rename pass is a
-metadata-only operation against the filesystem/S3 listing (one rename per
-output file, parallelizable); data movement is fully distributed. The hard
-cap of 11,000 rows/file in the reference (single VectorizedRowBatch,
+The hard cap of 11,000 rows/file in the reference (single VectorizedRowBatch,
 ``OrcRecordWriter.java:100``, flush disabled at 77-79) is a historical
 constant, deliberately NOT reproduced — ``flush_size`` may be any size.
 """
@@ -37,9 +34,13 @@ constant, deliberately NOT reproduced — ``flush_size`` may be any size.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from kafka_connect_storage_cloud_formats_spark.fsio import _fs_for
+from kafka_connect_storage_cloud_formats_spark.fsio import glob_escape as _glob_escape
 
 # Reference test-framework delimiters (FileUtils.java:7-8); '#' in filenames is
 # sanitized to '_' by the writer (OrcRecordWriter.java:50) so the effective
@@ -88,15 +89,6 @@ def write_orc_partitioned(
     writer.orc(path)
 
 
-def _glob_escape(path: str) -> str:
-    """One definition in fsio since round 12 (the artifact sweep used to
-    import the sink's copy — inverted layering)."""
-    from kafka_connect_storage_cloud_formats_spark.fsio import glob_escape
-
-    return glob_escape(path)
-
-
-
 def write_orc_parity(
     df: DataFrame,
     out_dir: str,
@@ -118,11 +110,10 @@ def write_orc_parity(
     - only the *value* columns land in the file (the Kafka key is dropped,
       SURVEY.md §1.3); offsets/topic/partition drive placement only.
 
-    Distributed strategy: compute ``start_offset = floor(offset/flush_size) *
-    flush_size`` as a column, write with ``partitionBy(topic, partition,
-    start_offset)`` + ``coalesce`` within groups so each group lands as one
-    file (repartition by the group key ⇒ one task per group ⇒ one file), then
-    rename each group directory's single part-file to the reference key.
+    Distributed strategy: one shuffle by (topic, partition, start_offset =
+    floor(offset/flush_size)·flush_size) so each group is written by one
+    task as one offset-sorted file under ``partitionBy``, then a driver-side
+    metadata-only rename of each group's part file to the reference key.
     """
     if value_cols is None:
         # Default = everything except the engine's envelope columns. NOTE
@@ -178,63 +169,37 @@ def write_orc_parity(
         spark_.conf.set("spark.sql.optimizer.plannedWrite.enabled", planned)
 
     # Metadata-only finalize through the Hadoop FileSystem API: ONE glob
-    # over the staged layout collapses the driver's ~40 py4j round-trips
-    # (a listStatus per directory level at 30 file groups) to a single
-    # gateway call; the filesystem-side work is unchanged — Hadoop's
-    # Globber still expands level by level, one listing per matched
-    # directory, on any scheme. Then one rename per output file, so the
-    # same O(#files) pass works on file://, hdfs:// and s3a:// (where
-    # rename is the object-store copy the committer already paid for the
-    # staged write; per-file finalize cost is a HEAD+COPY+DELETE, no row
-    # data).
-    spark = df.sparkSession
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path
-    fs = jpath(staged).getFileSystem(spark._jsc.hadoopConfiguration())
-
-    # The staged PREFIX must be glob-escaped: an out_dir containing glob
-    # metacharacters (e.g. ".../run[A]/out") would otherwise be
-    # interpreted as a pattern — matching nothing and silently skipping
-    # every rename (or throwing on unbalanced braces). Only the trailing
-    # wildcard segments are meant as a pattern.
-    pattern = jpath(
-        _glob_escape(staged)
-        + "/__topic=*/__partition=*/__start_offset=*/part-*"
-        + EXTENSION
+    # over the staged layout (a single gateway call; Hadoop's Globber still
+    # lists level by level), then one rename per output file, so the same
+    # O(#files) pass works on file://, hdfs:// and s3a:// (where a rename
+    # is a HEAD+COPY+DELETE, no row data). The staged PREFIX is
+    # glob-escaped: an out_dir like ".../run[A]/out" must not be read as a
+    # pattern, which would match nothing and skip every rename.
+    fs = _fs_for(staged, spark_)
+    parts = fs.glob_paths(
+        _glob_escape(staged) + "/__topic=*/__partition=*/__start_offset=*/part-*" + EXTENSION
     )
-    # Partition-dir names carry Spark's escapePathName encoding (%XX for
-    # '#', ':', '%', space, ...): parse them back through the inverse, or
-    # a topic like 'a#b' (written as __topic=a%23b) would produce file
-    # keys naming the ESCAPED string and the reference's '#'→'_'
-    # sanitation would never fire (round-9 review).
-    import re as _re
-
-    def _unescape_partition_value(v: str) -> str:
-        return _re.sub(
-            r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), v
-        )
-
-    groups: dict[tuple[str, int, int], list] = {}
-    for st in fs.globStatus(pattern) or []:
-        p = st.getPath()
-        off_dir, part_dir = p.getParent(), p.getParent().getParent()
-        topic_dir = part_dir.getParent()
+    if parts is None:
+        raise RuntimeError(f"parity finalize could not list {staged}") from fs.last_error
+    groups: dict[tuple[str, int, int], list[str]] = {}
+    for part in parts:
+        topic_dir, part_dir, off_dir = part.rsplit("/", 4)[1:4]
         key = (
-            _unescape_partition_value(topic_dir.getName().split("=", 1)[1]),
-            int(part_dir.getName().split("=", 1)[1]),
-            int(off_dir.getName().split("=", 1)[1]),
+            # partition dirs carry Spark's escapePathName encoding (%XX for
+            # '#', ':', '%', ...): a topic 'a#b' is staged as __topic=a%23b
+            unquote(topic_dir.split("=", 1)[1]),
+            int(part_dir.split("=", 1)[1]),
+            int(off_dir.split("=", 1)[1]),
         )
-        groups.setdefault(key, []).append(p)
+        groups.setdefault(key, []).append(part)
 
-    # Defense in depth against any residual glob-semantics mismatch: an
-    # empty match against a staged dir that DOES contain topic dirs means
-    # the pattern failed, not that there is no data — the unconditional
-    # staged-dir delete below would otherwise silently destroy the write.
+    # An empty match against a staged dir that DOES hold topic dirs means
+    # the pattern failed, not that there is no data: the staged-dir delete
+    # below would otherwise destroy the write. Checked by a plain listing,
+    # not a second glob.
     if not groups:
         leftovers = [
-            st.getPath().getName()
-            for st in fs.listStatus(jpath(staged))
-            if st.isDirectory() and st.getPath().getName().startswith("__topic=")
+            rel for rel, _, _ in fs.list_files_recursive(staged) if rel.startswith("__topic=")
         ]
         if leftovers:
             raise RuntimeError(
@@ -245,26 +210,25 @@ def write_orc_parity(
     written: list[str] = []
     made_parents: set[str] = set()
     dir_prefix = dir_prefix if dir_prefix is not None else ""
-    for (topic, partition, start_offset), parts in sorted(groups.items()):
+    for (topic, partition, start_offset), group in sorted(groups.items()):
         key = file_key_to_commit(
             topics_prefix, dir_prefix or topic, topic, partition, start_offset
         )
-        if len(parts) != 1:  # merge would break one-file parity; fail loudly
+        if len(group) != 1:  # merge would break one-file parity; fail loudly
             raise RuntimeError(
-                f"file group {key} produced {len(parts)} part files; expected 1"
+                f"file group {key} produced {len(group)} part files; expected 1"
             )
-        dest = jpath(out_dir + "/" + key)
-        parent = dest.getParent()
-        if parent is not None and str(parent) not in made_parents:
-            if not fs.exists(parent):
-                fs.mkdirs(parent)
-            made_parents.add(str(parent))
+        dest = out_dir + "/" + key
+        parent = dest.rsplit("/", 1)[0]
+        if parent not in made_parents:
+            fs.mkdirs(parent)
+            made_parents.add(parent)
         if fs.exists(dest):
-            fs.delete(dest, False)  # unconditional overwrite (OrcRecordWriter.java:91)
-        if not fs.rename(parts[0], dest):
-            raise RuntimeError(f"rename failed for {key}")
+            fs.delete(dest, recursive=False)  # unconditional overwrite (OrcRecordWriter.java:91)
+        if not fs.rename(group[0], dest):
+            raise RuntimeError(f"rename failed for {key}") from fs.last_error
         written.append(key)
-    fs.delete(jpath(staged), True)
+    fs.delete(staged)
     return sorted(written)
 
 

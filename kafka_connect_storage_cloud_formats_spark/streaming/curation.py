@@ -161,14 +161,14 @@ class StreamingCuration:
 
         root = os.path.join(self.state_dir, kind)
         fs = _fs_for(root, self.spark)
-        names = fs.glob_parent_names(os.path.join(root, "*", "_SUCCESS"))
-        if names is None:
+        paths = fs.glob_paths(os.path.join(root, "*", "_SUCCESS"))
+        if paths is None:
             raise RuntimeError(
                 f"curation state listing failed under {root}"
             ) from fs.last_error
         out = [
             (m.group(1), int(m.group(2)), os.path.join(root, name))
-            for name in names
+            for name in (p.rsplit("/", 2)[-2] for p in paths)
             if (m := _PART_RE.match(name)) is not None
         ]
         return sorted(out, key=lambda t: (t[1], t[0]))

@@ -718,3 +718,45 @@ def test_pack_sequence_spans_capacity_edges(spark, sf_dir):
     for r in big:
         assert r["seq_id"] == 0 and r["span_start"] == 0
         assert r["span_len"] == total_tokens[r["doc_id"]]
+
+
+def test_parity_finalize_refuses_to_delete_unmatched_staged_data(spark, tmp_path, monkeypatch):
+    """A finalize glob that matches nothing while staged topic dirs exist
+    must raise and leave the staged data in place."""
+    from kafka_connect_storage_cloud_formats_spark import fsio
+    from kafka_connect_storage_cloud_formats_spark.sinks.orc_sink import write_orc_parity
+
+    monkeypatch.setattr(fsio._HadoopFS, "glob_paths", lambda self, pattern: [])
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="refusing to delete staged data"):
+        write_orc_parity(make_records(spark, 7), out, flush_size=3)
+    assert any(n.startswith("__topic=") for n in os.listdir(os.path.join(out, "_staged")))
+
+
+def test_parity_finalize_requires_one_part_per_group(spark, tmp_path, monkeypatch):
+    """A file group staged as two part files cannot keep one-file parity:
+    the finalize raises instead of picking one."""
+    from kafka_connect_storage_cloud_formats_spark import fsio
+    from kafka_connect_storage_cloud_formats_spark.sinks.orc_sink import write_orc_parity
+
+    real = fsio._HadoopFS.glob_paths
+    monkeypatch.setattr(fsio._HadoopFS, "glob_paths", lambda self, p: 2 * real(self, p))
+    with pytest.raises(RuntimeError, match="produced 2 part files; expected 1"):
+        write_orc_parity(make_records(spark, 7), str(tmp_path / "out"), flush_size=3)
+
+
+def test_parity_finalize_rename_failure_chains_the_cause(spark, tmp_path, monkeypatch):
+    """A failed rename raises with the filesystem's error as its cause."""
+    from kafka_connect_storage_cloud_formats_spark import fsio
+    from kafka_connect_storage_cloud_formats_spark.sinks.orc_sink import write_orc_parity
+
+    cause = PermissionError(13, "injected EACCES")
+
+    def failing_rename(self, src, dst):
+        self.last_error = cause
+        return False
+
+    monkeypatch.setattr(fsio._HadoopFS, "rename", failing_rename)
+    with pytest.raises(RuntimeError, match="rename failed") as err:
+        write_orc_parity(make_records(spark, 7), str(tmp_path / "out"), flush_size=3)
+    assert err.value.__cause__ is cause

@@ -101,16 +101,12 @@ def test_unpartitioned_window_detector_classifies_renderings():
 
 
 def test_duplicated_arrow_kernel_detector_flags_r15_regression_shape():
-    """Round-16 (r15 verdict ask #7): the audit must fail any plan where
-    ONE Arrow kernel call is evaluated in TWO ArrowEvalPython nodes over
-    the SAME attributes — the guide-§4.4 double evaluation the `_once`
-    non-deterministic UDF variants prevent. The `_once` marker itself is
-    invisible in plan text, so the rule gates on the duplication it
-    exists to prevent. Red fixture: the COMMITTED r15 before-plan of
-    dedup_embedding_cosine, whose 6 ArrowEvalPython nodes carried every
-    kernel twice; green fixtures: the fixed r15 after-plan and a current
-    probe plan (same kernel over DIFFERENT attributes — join sides,
-    union branches — must never flag)."""
+    """The audit must fail any plan where ONE Arrow kernel call is
+    evaluated in TWO ArrowEvalPython nodes over the SAME attributes (the
+    guide-§4.4 double evaluation the `_once` UDF variants prevent), also
+    when the call's arguments nest another call. Red fixture: the
+    committed r15 before-plan of dedup_embedding_cosine; green fixtures:
+    its fixed after-plan and the same kernel over DIFFERENT attributes."""
     import os
 
     from tools.plan_audit import duplicated_arrow_kernels
@@ -140,6 +136,12 @@ def test_duplicated_arrow_kernel_detector_flags_r15_regression_shape():
         "ArrowEvalPython [dot_vec(a#1, b#2)#10], [pythonUDF0#21], 200\n"
     )
     assert duplicated_arrow_kernels(dup) == ["dot_vec(a#1, b#2)"]
+    # the same shape with a nested call in the arguments
+    nested = (
+        "ArrowEvalPython [dot_vec(coalesce(a#1, b#2))#9], [pythonUDF0#20], 200\n"
+        "ArrowEvalPython [dot_vec(coalesce(a#1, b#2))#10], [pythonUDF0#21], 200\n"
+    )
+    assert duplicated_arrow_kernels(nested) == ["dot_vec(coalesce(a#1, b#2))"]
 
 
 def test_q21_plan_is_lazy_and_transparent(spark, sf_dir):

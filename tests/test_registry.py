@@ -1,33 +1,11 @@
-"""Registry contract guards: the driver's correctness gate checks a
-positional window of the FIRST 50 registry entries, so evidence hygiene is
-an ordering invariant — enforce it mechanically."""
+"""Registry contract guards: the driver's correctness gate checks the
+first 50 registry entries, so the registry order decides which queries
+earn fresh evidence."""
 
-import glob
 import json
 import os
-import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _correctness_files() -> list:
-    return sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
-
-
-def _latest_driver_rows() -> set:
-    """Names with a driver correctness row in the most recent round."""
-    files = _correctness_files()
-    if not files:
-        return set()
-    return set(json.load(open(files[-1])))
-
-
-def _latest_round() -> int:
-    """Round number of the most recent driver correctness file (0 if none)."""
-    files = _correctness_files()
-    if not files:
-        return 0
-    return int(re.search(r"_r(\d+)\.json$", files[-1]).group(1))
 
 
 def test_every_query_has_fn_and_distinct_name():
@@ -39,92 +17,124 @@ def test_every_query_has_fn_and_distinct_name():
         assert sql is None or isinstance(sql, str), name
 
 
+def _replay(through: int, current: dict | None = None):
+    """(first 50 names, last green rounds, manifest, code fingerprints) of
+    the order computed from the evidence and manifest through round
+    ``through`` for the code of the next round (default: its manifest
+    entry), over the queries registered in r16."""
+    from kafka_connect_storage_cloud_formats_spark.queries import registry, window
+
+    manifest = window.load_manifest(REPO)
+    names = [n for n in registry._ALL if n in manifest[16]]
+    evidence = {r: rows for r, rows in window.load_evidence(REPO).items() if r <= through}
+    past = {r: fps for r, fps in manifest.items() if r <= through}
+    current = current or manifest[through + 1]
+    first = window.driver_order(names, evidence, past, current)[:50]
+    return first, window.last_green(evidence), past, current
+
+
 def test_unevidenced_queries_lead_the_driver_window():
-    """Any query without a driver row from the latest recorded round must
-    sit inside the first 50 registry entries, or it can never earn one.
+    """The registry is ordered by window.driver_order: never-evidenced
+    rows, then rows at the staleness bound, then rows changed since their
+    last green row (earliest change first), then oldest evidence, then
+    registration order. Without evidence the order is registration order."""
+    from kafka_connect_storage_cloud_formats_spark.queries import registry, window
 
-    This positional invariant is only satisfiable for the round the
-    ordering was rotated FOR (registry.ROTATED_FOR_ROUND): the moment the
-    driver records that round, the window has been consumed and queries
-    outside it legitimately carry only older rows — so the assertion is
-    scoped to rounds the current rotation still targets (the round-3
-    verdict's time-dependency fix)."""
-    import pytest
-
-    from kafka_connect_storage_cloud_formats_spark.queries.registry import (
-        QUERIES,
-        ROTATED_FOR_ROUND,
+    names = ["new", "fresh", "late_change", "early_change", "old", "stale"]
+    evidence = {
+        1: {"stale": True},
+        2: {"early_change": True, "late_change": True, "old": True, "fresh": False},
+        3: {"fresh": True},
+    }
+    manifest = {r: {n: "v2" for n in names} for r in (2, 3)}
+    manifest[3]["early_change"] = "v3"
+    current = {**manifest[3], "late_change": "v4"}
+    # latest round 3, ceil(6 / 2) = 3 rounds per pass: the bound is round 1
+    assert window.driver_order(names, evidence, manifest, current, window=2) == [
+        "new", "stale", "early_change", "late_change", "old", "fresh"
+    ]
+    assert window.driver_order(names, {}, manifest, current) == names
+    assert list(registry.QUERIES) == window.driver_order(
+        list(registry._ALL), window.load_evidence(REPO), window.load_manifest(REPO),
+        window.fingerprints(registry._ALL),
     )
 
-    latest = _latest_round()
-    # Forcing function: the rotation may lag the driver by at most one
-    # round (the round that consumed it). If CORRECTNESS_r{N+1} exists
-    # while ROTATED_FOR_ROUND is still N, a new round started without
-    # rotating the registry — the exact silent lapse this test exists to
-    # catch. Bump ROTATED_FOR_ROUND (and reorder _PRIORITY) each round.
-    assert latest <= ROTATED_FOR_ROUND, (
-        f"registry rotation is stale: latest driver round is r{latest} but "
-        f"ROTATED_FOR_ROUND={ROTATED_FOR_ROUND}; rotate _PRIORITY in "
-        "queries/registry.py for the new round"
-    )
-    if latest == ROTATED_FOR_ROUND:
-        pytest.skip(
-            f"window consumed: driver already recorded r{latest} for this "
-            "rotation; positional invariant legitimately lapsed (visible "
-            "skip, not silent pass)"
-        )
-    evidenced = _latest_driver_rows()
-    names = list(QUERIES)
-    window = set(names[:50])
-    outside = [n for n in names if n not in evidenced and n not in window]
-    # Round 11: 100+ registered queries no longer fit a 2×50-window
-    # ≤1-round-stale invariant. Overflow must be (a) EXPLICITLY declared
-    # (registry._SLIPPED_TO_R12-style list — a silent slip is the lapse
-    # this test exists to catch), (b) evidenced in the latest or previous
-    # round's window — which, with the slipped query then waiting one
-    # extra round, bounds its evidence gap at its r{N+1} debut to the
-    # ceil(N/50)-round bound registry.py documents (round-11 ADVICE: the
-    # earlier "≤2-rounds-stale" wording overstated what this enforces —
-    # a query slipped from a previous-round window is 3 rounds stale at
-    # debut), and (c) no larger than the window shortfall.
-    from kafka_connect_storage_cloud_formats_spark.queries import registry as _reg
 
-    declared = set(getattr(_reg, f"_SLIPPED_TO_R{ROTATED_FOR_ROUND + 1}", []))
-    assert set(outside) == declared, (
-        f"window overflow must exactly match the declared slip list: "
-        f"outside={sorted(outside)} declared={sorted(declared)}; reorder "
-        "_PRIORITY or fix the declaration in queries/registry.py"
+def test_driver_window_replays_round_16():
+    """Fed the evidence through r15 and the fingerprints of the r16 code,
+    the computed window holds every r13-green row (the staleness bound),
+    fills the rest with changed rows, and matches the hand-rotated r16
+    window in at least 49 of its 50 names."""
+    from kafka_connect_storage_cloud_formats_spark.queries import window
+
+    first, green, past, current = _replay(15)
+    bound = {n for n in green if green[n] == 13}
+    assert len(bound) == 34 and bound <= set(first)
+    for n in set(first) - bound:
+        assert window.change_round(n, green[n], past, current) is not None, n
+    assert len(set(first) & set(json.load(open(os.path.join(REPO, "CORRECTNESS_r16.json"))))) >= 49
+
+
+def test_driver_window_replays_round_17():
+    """Fed the evidence through r16 and the current code, the window holds
+    every r14-green row and the 12 rows that changed in r16 without a
+    driver sample, ahead of rows changed later."""
+    from kafka_connect_storage_cloud_formats_spark.queries import registry, window
+
+    first, green, _, _ = _replay(16, window.fingerprints(registry._ALL))
+    assert {n for n in green if green[n] == 14} <= set(first)
+    changed_in_r16 = {
+        "ivf_kmeans_topk_upserted", "ivf_kmeans_topk_upserted2", "ivf_kmeans_recall_nprobe4",
+        "ivfpq_topk_upserted", "ivfpq_recall_upserted", "ivfpq_residual_topk",
+        "ivfpq_residual_recall_at_10", "ivfpq_residual_topk_upserted",
+        "ivfpq_residual_recall_upserted", "sq8_topk", "sq8_recall_at_10", "scrub_repeated_ngrams",
+    }
+    assert changed_in_r16 <= set(first), sorted(changed_in_r16 - set(first))
+
+
+def test_query_fingerprints_ignore_hash_seed():
+    """Fingerprints are the same in processes with different string-hash
+    seeds (the manifest is compared across processes)."""
+    import subprocess
+    import sys
+
+    from kafka_connect_storage_cloud_formats_spark.queries import registry
+
+    code = (
+        "import json; from kafka_connect_storage_cloud_formats_spark.queries import registry, window; "
+        "print(json.dumps(window.fingerprints(registry._ALL)))"
     )
-    # (c) the slip list is no larger than arithmetic requires: N queries
-    # minus two windows' capacity. A larger declared list would silently
-    # weaken the staleness bound the round protocol documents.
-    assert len(declared) <= max(0, len(names) - 100), (
-        f"{len(declared)} slipped queries declared but the window shortfall "
-        f"is only {max(0, len(names) - 100)} (N={len(names)})"
+    runs = [
+        json.loads(subprocess.run(
+            [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, check=True,
+            env={**os.environ, "PYTHONHASHSEED": seed},
+        ).stdout.strip().splitlines()[-1])
+        for seed in ("1", "2")
+    ]
+    assert len(runs[0]) == len(registry.QUERIES) and runs[0] == runs[1]
+
+
+def test_fingerprint_manifest_covers_every_last_green_round():
+    """A query's change is detected against the code of its last green
+    round, so that round must have a manifest entry."""
+    from kafka_connect_storage_cloud_formats_spark.queries import window
+
+    recorded = set(window.load_manifest(REPO))
+    missing = sorted(set(window.last_green(window.load_evidence(REPO)).values()) - recorded)
+    assert not missing, (
+        f"FINGERPRINTS.json has no entry for round(s) {missing}; record the code the driver "
+        "ran with: python3 kafka_connect_storage_cloud_formats_spark/queries/window.py "
+        "<round> [<checkout of that round>]"
     )
-    recent_rows: set = set()
-    for f in _correctness_files():
-        if any(
-            f.endswith(f"_r{r:02d}.json") or f.endswith(f"_r{r}.json")
-            for r in (latest, latest - 1)
-        ):
-            recent_rows |= set(json.load(open(f)))
-    for n in outside:
-        assert n in recent_rows, (
-            f"slipped query {n} lacks a r{latest}/r{latest - 1} row — "
-            "slipping it would exceed the declared staleness bound"
-        )
 
 
 def test_no_query_lacks_driver_evidence_in_every_round():
-    """Time-stable companion to the window check: every registered query
-    must have a driver row in SOME recorded round, except queries new in
-    the current rotation (which must sit inside the window to earn one)."""
+    """Every registered query must have a driver row in SOME recorded
+    round, or sit inside the window to earn one."""
+    from kafka_connect_storage_cloud_formats_spark.queries import window
     from kafka_connect_storage_cloud_formats_spark.queries.registry import QUERIES
 
-    union_evidence: set = set()
-    for f in _correctness_files():
-        union_evidence |= set(json.load(open(f)))
+    union_evidence = {n for rows in window.load_evidence(REPO).values() for n in rows}
     if not union_evidence:
         return
     names = list(QUERIES)

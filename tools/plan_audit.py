@@ -44,26 +44,16 @@ SF_DIR = _ARGS[0] if _ARGS else "/root/testdata/sf0.01"
 # Operators whose spec is an intentional bounded cross product (documented in
 # their docstrings); everything else must be equi-join only.
 ALLOWED_NESTED = {
-    # knn_bruteforce no longer appears here: its mapInPandas formulation
-    # (query matrix as a captured constant, per-batch exact top-k) has no
-    # nested-loop join at all.
-    # Round 16: the whole ivf*/ivf_kmeans* TOPK family left this set —
-    # _ivf_probe now routes query→cell DRIVER-SIDE (the pq._route_df
-    # shape), so the Q×k centroid crossJoin no longer exists in any probe
-    # plan; the survivors below are exactly the 1-row recall-ratio
-    # crosses of the shared _recall_vs_truth evaluation.
+    # exactly the 1-row recall-ratio crosses of the shared
+    # _recall_vs_truth evaluation; every probe plan is equi-join only
     "ann_recall_at_10",  # 1-row recall-ratio cross + composed baselines
     "sq8_recall_at_10",  # same 1-row recall-ratio cross for the int8 tier
     "ivf_recall_at_10",  # same 1-row recall-ratio cross
     "ivf_kmeans_recall_at_10",
     "ivf_kmeans_recall_nprobe4",  # same 1-row cross, nprobe=4
     "ivf_kmeans_recall_upserted",
-    # round 14: the PQ tiers' recall rows — the standard 1-row
-    # recall-ratio cross (pq_topk/ivfpq_topk are equi-join only, like sq8)
     "pq_recall_at_10",
     "ivfpq_recall_at_10",
-    # round 15: the incremental/residual IVFPQ recall rows — same 1-row
-    # recall-ratio cross (their probes stay equi-join only)
     "ivfpq_recall_upserted",
     "ivfpq_residual_recall_at_10",
     "ivfpq_residual_recall_upserted",
@@ -77,10 +67,8 @@ ALLOWED_SCALAR_CROSS = {
     "q22_rich_inactive_customers",  # avg(c_acctbal) threshold
     "q11_important_parts",  # avg(part_value) threshold
     "doc_quality_deciles",  # 9 percentile_disc boundaries, 1 row
-    "drop_drift_report",  # the two split totals, 1 row (round 14)
-    # round 15: the gated accept row — 2 posture rows × 1-row exact-
-    # rational drift terms × 1-row merged-count aggregate, all bounded
-    "drift_gated_merge",
+    "drop_drift_report",  # the two split totals, 1 row
+    "drift_gated_merge",  # 2 posture rows × 1-row drift terms × 1-row count
 }
 
 # Queries whose plan legitimately embeds a pre-materialized block
@@ -92,20 +80,10 @@ ALLOWED_SCALAR_CROSS = {
 # bug (KNOWN_ISSUES r4 #1, fixed r5): a hidden job at plan-build time
 # that also blinds this audit to the pre-checkpoint subtree.
 ALLOWED_CHECKPOINT = {
-    # round 6: dedup_ngram_jaccard and benchmark_contamination left this
-    # set — their corpus-scale shingle streams now ride the content-keyed
-    # parquet artifact (operators/shingles.py), so their plans scan a file
-    # source instead of embedding checkpoint blocks.
-    # round 7: simhash_near_pairs, ann_lsh_topk, dedup_embedding_cosine
-    # and (by composition) ann_recall_at_10 left this set — the simhash
-    # fingerprint table and the hyperplane signature table now ride
-    # content-keyed parquet artifacts (_ensure_simhash_fps,
-    # _ensure_hyperplane_sigs); the surviving entries are iterative loop
-    # state, which is checkpoint-inherent.
+    # corpus-scale intermediates ride content-keyed parquet artifacts;
+    # only iterative loop state is checkpoint-inherent
     "neardup_clusters",  # CC edge/label tables (iterative: inherent)
     "training_corpus_stats",  # composes the CC labels above
-    # round 6: doc_bigram_novelty also left — its occurrence stream rides
-    # the ngram_occ parquet artifact now (operators/shingles.py)
 }
 
 
@@ -113,9 +91,9 @@ def unpartitioned_windows(plan: str) -> int:
     """Count Window operators with NO partition spec — the
     move-everything-to-one-partition shape ("No Partition Defined for
     Window operation"): the whole input serializes through a single task,
-    the one plan class that cannot survive a 100× scale-up (round-13
-    verdict "What's wrong #1"). NO whitelist — a global layout that needs
-    a running total has the two-pass prefix-sum alternative
+    the one plan class that cannot survive a 100× scale-up. NO whitelist —
+    a global layout that needs a running total has the two-pass prefix-sum
+    alternative
     (operators/training_pipeline._with_token_end).
 
     Detection: a ``Window`` plan line renders its argument lists as
@@ -149,20 +127,35 @@ def unpartitioned_windows(plan: str) -> int:
     return n
 
 
+_RESULT_ID = re.compile(r"#\d")
+
+
+def _result_id_calls(text: str) -> set[str]:
+    """Every ``fn(args)`` in ``text`` that is followed by a ``#id``, its
+    arguments scanned to the balanced closing paren."""
+    calls, opens = set(), []
+    for m in re.finditer(r"\w+\(|[()]", text):
+        if m.group(0) != ")":
+            opens.append(m.start() if m.group(0) != "(" else None)
+        elif opens:
+            start = opens.pop()
+            if start is not None and _RESULT_ID.match(text, m.end()):
+                calls.add(text[start: m.end()])
+    return calls
+
+
 def duplicated_arrow_kernels(plan: str) -> list[str]:
     """Detect the guide-§4.4 failure mode: ONE Arrow kernel call evaluated
     in TWO (or more) ArrowEvalPython nodes with identical arguments —
     what happens when a filter on a UDF-derived column is pushed below
-    the projection and the optimizer re-evaluates the kernel per branch
-    (r15 fixed this with the `_once` non-deterministic variants; this
-    rule makes the fix DURABLE — a future call site that loses the
-    protection reintroduces the duplicated node and fails the audit,
-    which is the round-15 verdict's ask #7 in its mechanically-checkable
-    form: the `_once` marker itself is invisible in plan text, the
-    duplication it prevents is not).
+    the projection and the optimizer re-evaluates the kernel per branch.
+    The `_once` non-deterministic UDF variants prevent it; the marker is
+    invisible in plan text, the duplication it prevents is not.
 
     Detection: collect every ``fn(args)#id`` expression inside
-    ArrowEvalPython argument lists, strip ONLY the trailing result id
+    ArrowEvalPython argument lists, with the arguments scanned to their
+    balanced closing paren so nested calls count
+    (``dot_vec(coalesce(a#1, b#2))#9``), strip ONLY the trailing result id
     (``fn(a#3, b#7)#12`` → ``fn(a#3, b#7)``), and flag any call appearing
     in more than one node. Argument expr ids are deliberately KEPT: the
     same kernel over DIFFERENT inputs (two join sides, union branches —
@@ -182,17 +175,13 @@ def duplicated_arrow_kernels(plan: str) -> list[str]:
                 pending = None  # re-printed node (reused subtree): skip
                 continue
             seen_node_lines.add(stripped)
-            calls = {
-                m.group(0)
-                for m in re.finditer(r"\w+\([^()]*\)(?=#\d+)", stripped)
-            }
+            calls = _result_id_calls(stripped)
             node_calls.append(calls)
             # simple rendering carries args on the node line; formatted
             # puts them on the following "Arguments:" line
             pending = calls if not calls else None
         elif pending is not None and stripped.startswith("Arguments:"):
-            for m in re.finditer(r"\w+\([^()]*\)(?=#\d+)", stripped):
-                pending.add(m.group(0))
+            pending |= _result_id_calls(stripped)
             pending = None
     seen: dict[str, int] = {}
     dups: list[str] = []
@@ -226,13 +215,13 @@ def audit(name: str, df) -> tuple[list[str], dict]:
     if "BatchEvalPython" in plan:
         problems.append("BatchEvalPython(row-at-a-time UDF)")
     # No whitelist: a window with no partition spec serializes its whole
-    # input through one task (round-13 verdict "What's wrong #1").
+    # input through one task.
     n_upw = unpartitioned_windows(plan)
     if n_upw:
         problems.append(f"UnpartitionedWindow(x{n_upw} single-task global window)")
     # No whitelist: the same Arrow kernel over the same attributes in two
     # ArrowEvalPython nodes is the guide-§4.4 double evaluation (a lost
-    # `_once` protection — round-15 verdict ask #7).
+    # `_once` protection).
     dup_kernels = duplicated_arrow_kernels(plan)
     if dup_kernels:
         problems.append(f"DuplicatedArrowKernel({','.join(dup_kernels)})")
@@ -271,12 +260,11 @@ def main() -> int:
     all_stats: dict = {}
     for name, fn in entry_mod.queries().items():
         try:
-            # Driver-time column (round-8 verdict ask #1 follow-through):
-            # wall-clock of the fn() call itself — pure driver work (py4j
-            # plan construction, artifact-memo checks, bounded collects;
-            # no action). First call per process = the cache-MISS build a
-            # fresh session pays once; with the registry's prepared-plan
-            # cache, later calls in the same process cost ~1-3 ms.
+            # Driver-time column: wall-clock of the fn() call itself —
+            # pure driver work (py4j plan construction, artifact-memo
+            # checks, bounded collects; no action). The first call per
+            # process is the cache-MISS build a fresh session pays once;
+            # with the prepared-plan cache later calls cost ~1-3 ms.
             t0 = time.perf_counter()
             df = fn(spark, SF_DIR)
             build_s = round(time.perf_counter() - t0, 3)

@@ -69,6 +69,13 @@ def _ensure_worker_import_path() -> None:
         )
 
 
+def _default_driver_memory(phys_bytes: int) -> str:
+    """The driver heap when ``SPARK_DRIVER_MEMORY`` is unset: half of the
+    host's physical memory, capped at 48g. A fixed 48g let a local driver
+    JVM grow until a 16 GB host's kernel killed it mid-run."""
+    return f"{min(phys_bytes // 2 // 2**20, 48 * 1024)}m"
+
+
 def get_spark(app_name: str = "kafka_connect_storage_cloud_formats_spark") -> SparkSession:
     """Create (or reuse) the engine's SparkSession.
 
@@ -87,7 +94,11 @@ def get_spark(app_name: str = "kafka_connect_storage_cloud_formats_spark") -> Sp
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or _default_driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         # bucketed tables (operators/scale_utils.py) need a warehouse; keep

@@ -3,36 +3,37 @@
 The Structured-Streaming form of the recurring curation pipeline the batch
 operators implement (operators/dedup.py). Per micro-batch, one map-only
 pass builds the batch's per-document table — (doc_id, lang, content_hash,
-mh_00…mh_11[, embedding]) — and checkpoints it. The chained exact →
-near-dup rules then add their decisions to that table as columns, judged
-against the job's OWN corpus state: the content-hash and MinHash-signature
-rows of everything it has ACCEPTED so far. The classified table is
-checkpointed, and every commit is a projection of it: the
-per-language report (a ``groupBy``), and the accepted docs' hash,
-signature and (with the ANN stage on) serving-segment rows. The drop rules
-are the batch operators' own helpers (``_exact_flags``,
-``_banded_drop_sets``, ``_with_stage``, ``_band_rows``), and the
-signatures use the same MinHash layout as the batch tiers
-(``_with_minhash_array``), so the stream composes one-definition rules and
-cannot drift from the oracle-gated batch tiers.
+mh_00…mh_11[, embedding]). The chained exact → near-dup rules add their
+decision to it as a ``stage`` column, judged against the job's OWN corpus
+state: the kept rows of every earlier micro-batch. With the ANN stage on,
+the kept rows also get their published-quantizer cell (``label``) and PQ
+codes (``codes``). The drop rules are the batch operators' own helpers
+(``_exact_flags``, ``_banded_drop_sets``, ``_with_stage``,
+``_band_rows``), and the signatures use the same MinHash layout as the
+batch tiers (``_with_minhash_array``), so the stream cannot drift from the
+oracle-gated batch tiers.
 
-Exactly-once: ``foreachBatch`` is at-least-once under retry, so every
-write is a DETERMINISTIC OVERWRITE keyed by ``batch_id`` — state partition
-``accepted_hashes/b{batch_id:010d}`` (and the other kinds) and report
-partition ``report/b{batch_id:010d}`` are rewritten byte-identically on a
-replay. Each commit is one file, sorted by its key (doc_id; lang for the
-report), because the classified table's row order follows shuffles.
-Determinism also requires that a replayed batch classifies against exactly
-the state its first run saw, so the corpus view inside ``process_batch``
-reads only partitions with id < batch_id, never the batch's own
-previously-committed partition. Retries, out-of-order replays and full
-re-runs over the same checkpoint are all no-ops (pinned in
-tests/test_streaming_curation.py).
+State: the classified table IS the state. A micro-batch commits it once,
+as ``batches/b{batch_id:010d}``: one parquet file sorted by ``doc_id``
+with columns (batch_id, doc_id, lang, content_hash, mh_00…mh_11, stage
+[, embedding, label, codes]). Every reader is a column-pruned projection
+of that one kind — the report a ``groupBy(batch_id, lang)``, the accepted
+hashes, signatures and serving segments its kept rows.
 
-At scale this is the shape of a continuous ingestion pipeline: corpus
-state is ~(50 + 100) B/doc of hash + signature rows (never document text),
+Exactly-once: ``foreachBatch`` is at-least-once under retry, so the commit
+is a DETERMINISTIC OVERWRITE keyed by ``batch_id``, rewritten
+byte-identically on a replay (the sort fixes the row order the shuffles
+leave open). A replayed batch must also classify against exactly the state
+its first run saw, so the corpus view inside ``process_batch`` reads only
+partitions with id < batch_id, never the batch's own earlier commit.
+Retries, out-of-order replays and full re-runs over the same checkpoint
+are all no-ops (pinned in tests/test_streaming_curation.py).
+
+At scale this is the shape of a continuous ingestion pipeline: state is
+~(50 + 100) B per document seen of hash + signature columns (never
+document text; the dropped rows stay, since the report counts them), and
 each micro-batch pays batch-sized hashing plus banded equi-joins against
-that state, and the state grows only by accepted content.
+the kept rows of that state.
 """
 
 from __future__ import annotations
@@ -43,6 +44,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_connect_storage_cloud_formats_spark.fsio import _fs_for, glob_escape
 from kafka_connect_storage_cloud_formats_spark.functions.text_functions import (
     hash_family,
 )
@@ -56,29 +58,20 @@ from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
     _with_stage,
 )
 
-_HASH_SCHEMA = "doc_id long, lang string, content_hash binary"
-
-# Streaming ANN serving segment rows: a micro-batch's kept docs' embeddings
-# assigned against the PUBLISHED corpus-split quantizer (the batch tiers'
-# assign-without-retrain pass), so a streaming drop is servable without a
-# batch job. Same element type as the embeddings table.
-_ANN_SCHEMA = "doc_id long, embedding array<float>, label long"
-
-# Streaming PQ-CODE segment rows: the same kept docs, PQ-encoded against
-# the PUBLISHED corpus-split codebooks (operators/pq._assign_pq —
-# encode-without-retrain) alongside their coarse cell, so the compressed
-# serving path sees a streaming drop too.
-_PQ_SCHEMA = "doc_id long, codes array<long>, label long"
-
 _MH_COLS = [f"mh_{k:02d}" for k in range(MINHASH_K)]
 
 
-def _sig_schema(family: str) -> str:
-    """The signature-row schema is FAMILY-DEPENDENT (md5 → hex-string
-    components, xxhash64 → 32-bit-half longs — the same reason
-    _ensure_minhash_sigs keys its artifact params on the family)."""
+def _table_schema(family: str) -> str:
+    """The committed table's schema. The signature type is
+    FAMILY-DEPENDENT (md5 → hex-string components, xxhash64 → 32-bit-half
+    longs). The ANN columns are always declared, so partitions committed
+    without the ANN stage read them as NULL."""
     t = "string" if family == "md5" else "long"
-    return "doc_id long, " + ", ".join(f"mh_{k:02d} {t}" for k in range(MINHASH_K))
+    return (
+        "batch_id long, doc_id long, lang string, content_hash binary, "
+        + "".join(f"{c} {t}, " for c in _MH_COLS)
+        + "stage string, embedding array<float>, label long, codes array<long>"
+    )
 
 
 # report contract: batch id + lang + total + one count per chain stage
@@ -86,9 +79,11 @@ def _sig_schema(family: str) -> str:
 REPORT_COLUMNS = ("batch_id", "lang", "n_batch") + tuple(
     f"n_{s}" for s in CURATION_STAGES
 )
-_REPORT_SCHEMA = "batch_id long, lang string, n_batch long, " + ", ".join(
-    f"n_{s} long" for s in CURATION_STAGES
-)
+
+# The one state kind, and the per-kind directories of the earlier layout,
+# which a state dir must not hold (see StreamingCuration).
+_KIND = "batches"
+_OLD_KINDS = ("report", "accepted_hashes", "accepted_sigs", "ann_segments", "pq_segments")
 
 # State partition names: exactly a prefix letter + 10 digits. ``b`` = one
 # micro-batch's deterministic-overwrite commit (id = batch_id); ``f`` = a
@@ -99,20 +94,19 @@ _PART_RE = re.compile(r"^([bf])(\d{10})$")
 
 
 class StreamingCuration:
-    """The ``foreachBatch`` callback object. ``state_dir`` holds the
-    accepted-state partitions and the report log; pass
-    ``process_batch`` to ``foreachBatch``.
+    """The ``foreachBatch`` callback object; pass ``process_batch`` to
+    ``foreachBatch``. ``state_dir`` holds the committed tables.
 
-    The state namespace is FAMILY-KEYED (``state_dir/<family>/...``):
-    the near-dup decisions and the signature row types are
+    The state namespace is FAMILY-KEYED (``state_dir/<family>/batches/``):
+    the near-dup decisions and the signature types are
     hash-family-dependent, so a job resumed under a different
-    ``SPARK_GRAFT_HASH_FAMILY`` must see a fresh namespace, never a
-    blend of incompatible decisions (the same never-share rule as the
-    batch tiers' family-keyed artifact params). Long-running jobs fold
-    their many small per-batch partitions into one generation on the
-    re-index/merge schedule via :meth:`fold_state`, exactly the batch
-    tiers' merged-generation posture; each per-batch commit is coalesced
-    to one file per kind."""
+    ``SPARK_GRAFT_HASH_FAMILY`` sees a fresh namespace, never a blend of
+    incompatible decisions. A namespace holding the earlier per-kind
+    layout (``report/``, ``accepted_hashes/``, …) is refused with a
+    ``ValueError``: read as ``batches/`` it would be an empty corpus, and
+    the job would re-accept every duplicate. Long-running jobs fold their
+    many small per-batch partitions into one generation on the
+    re-index/merge schedule via :meth:`fold_state`."""
 
     def __init__(
         self,
@@ -124,44 +118,44 @@ class StreamingCuration:
         self.spark = spark
         self.family = hash_family()
         self.state_dir = os.path.join(state_dir, self.family)
+        old = _fs_for(self.state_dir, spark).glob_paths(
+            f"{glob_escape(self.state_dir)}/{{{','.join(_OLD_KINDS)}}}"
+        )
+        if old:
+            raise ValueError(
+                f"curation state dir {self.state_dir} holds the per-kind layout "
+                f"({', '.join(sorted(os.path.basename(p) for p in old))}), "
+                f"which this job cannot read; use a new state dir"
+            )
         # ``ann_sf_dir`` enables the per-drop ANN SEGMENT stage: batches
-        # must then carry an ``embedding`` column; each micro-batch's KEPT
-        # docs are assigned against the published corpus-split quantizer
-        # of this corpus (kmeans_ivf.assign_to_published_quantizer — no
-        # retrain) and committed as an ``ann_segments/b{batch_id}``
-        # serving segment, folded on the same ``fold_every`` schedule as
-        # the hash/signature state. Replay-deterministic like every other
-        # commit: the quantizer is a published content-keyed artifact and
-        # the kept set is a pure function of strictly-earlier state.
+        # must then carry an ``embedding`` column, and each micro-batch's
+        # KEPT docs are assigned against the published corpus-split
+        # quantizer and PQ codebooks of this corpus (no retrain).
+        # Replay-deterministic like the rest of the commit: the quantizer
+        # is a published content-keyed artifact and the kept set is a pure
+        # function of strictly-earlier state.
         self.ann_sf_dir = ann_sf_dir
         # ``fold_every=N`` runs :meth:`fold_state` at the top of every
-        # N-th batch — the re-index/merge schedule wired into the job
-        # itself, so a continuous deployment never accumulates unbounded
-        # per-batch partitions without anyone remembering to call the
-        # maintenance job. Retry-safe: a fold's CONTENT is a pure
-        # function of its id (state ≤ id), so the fold a replayed batch
-        # triggers — even one covering a later id than the first
-        # attempt's, because the batch's own partitions are now
-        # committed — serves every ``before`` view identically (pinned
-        # in tests).
+        # N-th batch, so a continuous deployment never accumulates
+        # unbounded per-batch partitions. Retry-safe: a fold's CONTENT is
+        # a pure function of its id (state ≤ id), so the fold a replayed
+        # batch triggers — even one covering a later id than the first
+        # attempt's — serves every ``before`` view identically.
         self.fold_every = fold_every
 
     # ---- state access ----------------------------------------------------
-    def _list_parts(self, kind: str) -> list[tuple[str, int, str]]:
-        """All COMMITTED state partitions of ``kind`` as sorted
-        (prefix, id, path) triples — ``b`` per-batch commits and ``f``
-        fold generations — from one ``<kind>/*/_SUCCESS`` listing.
-        Committed ⇔ ``_SUCCESS`` present: Spark writes the marker LAST and
-        a replay's overwrite deletes it FIRST, so a partition caught
-        mid-rewrite counts as uncommitted instead of serving a
-        half-written directory. Entries not matching the exact
-        letter+10-digits shape are ignored. A failed LISTING raises —
-        absence-as-empty is only safe when the listing itself succeeded."""
-        from kafka_connect_storage_cloud_formats_spark.fsio import _fs_for
-
-        root = os.path.join(self.state_dir, kind)
+    def _list_parts(self) -> list[tuple[str, int, str]]:
+        """All COMMITTED state partitions as sorted (prefix, id, path)
+        triples — ``b`` per-batch commits and ``f`` fold generations —
+        from one ``batches/*/_SUCCESS`` listing. Committed ⇔ ``_SUCCESS``
+        present: Spark writes the marker LAST and a replay's overwrite
+        deletes it FIRST, so a partition caught mid-rewrite counts as
+        uncommitted. Entries not matching the exact letter+10-digits shape
+        are ignored. A failed LISTING raises — absence-as-empty is only
+        safe when the listing itself succeeded."""
+        root = os.path.join(self.state_dir, _KIND)
         fs = _fs_for(root, self.spark)
-        paths = fs.glob_paths(os.path.join(root, "*", "_SUCCESS"))
+        paths = fs.glob_paths(os.path.join(glob_escape(root), "*", "_SUCCESS"))
         if paths is None:
             raise RuntimeError(
                 f"curation state listing failed under {root}"
@@ -173,22 +167,19 @@ class StreamingCuration:
         ]
         return sorted(out, key=lambda t: (t[1], t[0]))
 
-    def _state_parts(self, kind: str, before: int | None = None) -> list[str]:
-        """EFFECTIVE state partition paths of ``kind``, optionally
-        restricted to batch ids < ``before`` (the corpus view a replaying
-        batch must see). Fold-aware selection: the newest eligible fold
-        (id < before) covers every batch id ≤ its own, so the view is
-        that fold plus the per-batch partitions ABOVE it — per-batch (or
-        older-fold) partitions at ids a newer fold covers are ignored
-        even when still present, which is what makes the fold's
-        write-then-cleanup crash-safe (fold committed + covered ``b``
-        partitions not yet deleted must not double-count). Replay
+    def _state_parts(self, before: int | None = None) -> list[str]:
+        """EFFECTIVE state partition paths, optionally restricted to batch
+        ids < ``before`` (the corpus view a replaying batch must see).
+        Fold-aware: the newest eligible fold (id < before) covers every
+        batch id ≤ its own, so the view is that fold plus the per-batch
+        partitions ABOVE it — partitions at ids a newer fold covers are
+        ignored even when still present, which is what makes the fold's
+        write-then-cleanup crash-safe (a committed fold whose covered
+        ``b`` partitions are not yet deleted never double-counts). Replay
         coverage is guaranteed by :meth:`fold_state`'s invariant — folds
         never include the newest committed batch, the only one the
-        checkpoint can replay — so for every replayable ``before`` the
-        eligible fold plus surviving ``b`` partitions reconstruct the
-        exact pre-batch state."""
-        parts = self._list_parts(kind)
+        checkpoint can replay."""
+        parts = self._list_parts()
         fold_ids = [i for p, i, _ in parts if p == "f" and (before is None or i < before)]
         floor = max(fold_ids) if fold_ids else -1
         return [
@@ -200,43 +191,60 @@ class StreamingCuration:
             )
         ]
 
-    def _accepted(
-        self, kind: str, schema: str, before: int | None = None
-    ) -> DataFrame:
-        """Union of committed batch partitions of ``kind``; an empty typed
-        frame when none are committed (or none precede ``before``)."""
-        parts = self._state_parts(kind, before)
+    def _table(self, before: int | None = None) -> DataFrame:
+        """The committed rows of every effective partition (batch ids <
+        ``before`` when given), read with the declared schema; an empty
+        typed frame when none are committed."""
+        schema = _table_schema(self.family)
+        parts = self._state_parts(before)
         if not parts:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*parts)
+        return self.spark.read.schema(schema).parquet(*map(glob_escape, parts))
+
+    def _kept(self, before: int | None = None) -> DataFrame:
+        return self._table(before).filter(F.col("stage") == "kept")
 
     def accepted_hashes(self, before: int | None = None) -> DataFrame:
-        return self._accepted("accepted_hashes", _HASH_SCHEMA, before)
+        """(doc_id, lang, content_hash) of every accepted doc."""
+        return self._kept(before).select("doc_id", "lang", "content_hash")
 
     def accepted_sigs(self, before: int | None = None) -> DataFrame:
-        return self._accepted("accepted_sigs", _sig_schema(self.family), before)
+        """(doc_id, mh_00…mh_11) of every accepted doc with a signature."""
+        return self._kept(before).filter(F.col("mh_00").isNotNull()).select(
+            "doc_id", *_MH_COLS
+        )
 
     def report(self) -> DataFrame:
-        parts = self._state_parts("report")
-        if not parts:
-            return self.spark.createDataFrame([], _REPORT_SCHEMA)
-        return self.spark.read.schema(_REPORT_SCHEMA).parquet(*parts)
+        """One row per (batch_id, lang): the batch size and one count per
+        chain stage (``REPORT_COLUMNS``); the stage counts sum to
+        ``n_batch``."""
+        counts = [
+            F.sum((F.col("stage") == s).cast("long")).alias(f"n_{s}")
+            for s in CURATION_STAGES
+        ]
+        return self._table().groupBy("batch_id", "lang").agg(
+            F.count(F.lit(1)).alias("n_batch"), *counts
+        )
 
     def ann_segments(self, before: int | None = None) -> DataFrame:
         """The job's streaming ANN serving rows — (doc_id, embedding,
-        label) of every accepted doc, labeled by the published quantizer
-        at accept time. Probe-able by the standard machinery after the
-        vec_id rename; between re-trainings a deployment unions these
-        with the main index exactly like the batch segments
-        (kmeans_ivf.kmeans_ivf_serving_view)."""
-        return self._accepted("ann_segments", _ANN_SCHEMA, before)
+        label) of every doc accepted with the ANN stage on, labeled by the
+        published quantizer at accept time. Probe-able by the standard
+        machinery after the vec_id rename; between re-trainings a
+        deployment unions these with the main index exactly like the batch
+        segments (kmeans_ivf.kmeans_ivf_serving_view)."""
+        return self._kept(before).filter(F.col("label").isNotNull()).select(
+            "doc_id", "embedding", "label"
+        )
 
     def pq_segments(self, before: int | None = None) -> DataFrame:
         """The job's streaming COMPRESSED serving rows — (doc_id, codes,
-        label) of every accepted doc, encoded against the published
-        corpus-split PQ codebooks and labeled by the published
-        corpus-split quantizer at accept time."""
-        return self._accepted("pq_segments", _PQ_SCHEMA, before)
+        label) of every doc accepted with the ANN stage on, encoded
+        against the published corpus-split PQ codebooks and labeled by the
+        published corpus-split quantizer at accept time."""
+        return self._kept(before).filter(F.col("label").isNotNull()).select(
+            "doc_id", "codes", "label"
+        )
 
     def pq_serving_view(self) -> DataFrame:
         """THE compressed serving view of an ann-enabled job: the main
@@ -303,49 +311,30 @@ class StreamingCuration:
         )
 
     # ---- state compaction --------------------------------------------------
-    def _kinds(self) -> tuple[tuple[str, str], ...]:
-        # ann_segments folds unconditionally: a job resumed WITHOUT the
-        # ann stage still compacts segments an earlier ann-enabled run
-        # committed (an empty/missing kind is a no-op fold).
-        return (
-            ("accepted_hashes", _HASH_SCHEMA),
-            ("accepted_sigs", _sig_schema(self.family)),
-            ("report", _REPORT_SCHEMA),
-            ("ann_segments", _ANN_SCHEMA),
-            ("pq_segments", _PQ_SCHEMA),
-        )
+    def fold_state(self) -> int | None:
+        """Fold the accumulated per-batch partitions into ONE generation
+        partition, run on the re-index/merge schedule like the batch
+        tiers' merged generations and ``compact_kmeans_ivf_segments``:
+        without it, at 10k micro-batches the per-batch corpus view is a
+        10k-directory listing and a 10k-file union. After a fold the view
+        is O(1 + batches-since-fold) directories.
 
-    def fold_state(self) -> dict[str, int | None]:
-        """Fold the accumulated per-batch state partitions into ONE
-        generation partition per kind, run on the re-index/merge schedule
-        like the batch tiers' merged generations and
-        ``compact_kmeans_ivf_segments``: without it, at 10k micro-batches
-        the per-batch corpus view is a 10k-directory listing and a
-        10k-file union. After a fold the per-batch view is
-        O(1 + batches-since-fold) directories.
-
-        Doctrine (mirrors ``compact_kmeans_ivf_segments``): NO
-        recomputation — the fold is a union of already-committed rows,
+        NO recomputation — the fold is a union of already-committed rows,
         never a re-classification; deterministic overwrite at
-        ``f{max_folded_id:010d}``; ``_SUCCESS``-gated (an uncommitted
-        fold is invisible). Crash-safety is READ-side: a committed fold
-        makes every covered partition ignored by ``_state_parts`` even
-        before the cleanup deletes land, so fold → crash → re-fold never
-        double-counts and re-running a fold is a no-op (pinned in
-        tests/test_streaming_curation.py).
+        ``f{max_folded_id:010d}``; ``_SUCCESS``-gated (an uncommitted fold
+        is invisible). Crash-safety is READ-side: a committed fold makes
+        every covered partition ignored by ``_state_parts`` even before
+        the cleanup deletes land, so fold → crash → re-fold never
+        double-counts and re-running a fold is a no-op.
 
         Replay invariant: the NEWEST committed per-batch partition is
         never folded — its batch is the only one the checkpoint can still
-        replay (batches commit sequentially: batch N+1 only runs after
-        N's checkpoint commit), and a replay of batch N must reconstruct
-        state strictly before N, which a fold containing N would
-        contaminate. Every older id folds; superseded folds fold into the
-        new one. Returns {kind: new fold id (or the surviving previous
-        fold id, or None when the kind has no foldable state)}."""
-        return {kind: self._fold_kind(kind, schema) for kind, schema in self._kinds()}
-
-    def _fold_kind(self, kind: str, schema: str) -> int | None:
-        parts = self._list_parts(kind)
+        replay, and a replay of batch N must reconstruct state strictly
+        before N, which a fold containing N would contaminate. Every older
+        id folds; a superseded fold folds into the new one. Returns the
+        new fold id, or the surviving previous fold id, or None when
+        nothing is foldable."""
+        parts = self._list_parts()
         b_ids = [i for p, i, _ in parts if p == "b"]
         fold_ids = [i for p, i, _ in parts if p == "f"]
         prev_fold = max(fold_ids) if fold_ids else None
@@ -360,25 +349,22 @@ class StreamingCuration:
                 # nothing new, but a prior fold's interrupted cleanup may
                 # have left covered (reader-ignored) partitions behind —
                 # reclaim them so the no-op path still converges the layout
-                self._reclaim(kind, parts, prev_fold)
+                self._reclaim(parts, prev_fold)
             return prev_fold
         new_id = max(foldable)
         # the effective view at before=new_id+1 IS the fold's content:
         # previous fold (covers ≤ prev_fold) + b partitions in range
-        src = self._accepted(kind, schema, before=new_id + 1)
-        dst = os.path.join(self.state_dir, kind, f"f{new_id:010d}")
-        src.coalesce(1).write.mode("overwrite").parquet(dst)
-        self._reclaim(kind, parts, new_id)
+        dst = os.path.join(self.state_dir, _KIND, f"f{new_id:010d}")
+        self._table(before=new_id + 1).coalesce(1).write.mode("overwrite").parquet(dst)
+        self._reclaim(parts, new_id)
         return new_id
 
-    def _reclaim(self, kind: str, parts, fold_id: int) -> None:
+    def _reclaim(self, parts, fold_id: int) -> None:
         """Delete partitions a committed fold covers (everything at
         id ≤ fold_id except the fold itself). Readers already ignore
         them — deletes are pure space reclamation and re-runnable; a
         failure leaves redundant-but-ignored directories for next time."""
-        from kafka_connect_storage_cloud_formats_spark.fsio import _fs_for
-
-        fs = _fs_for(os.path.join(self.state_dir, kind), self.spark)
+        fs = _fs_for(os.path.join(self.state_dir, _KIND), self.spark)
         for prefix, i, path in parts:
             if i <= fold_id and not (prefix == "f" and i == fold_id):
                 fs.delete(path, recursive=True)
@@ -387,23 +373,24 @@ class StreamingCuration:
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Classify one micro-batch (columns: doc_id, text, lang, plus
         embedding with the ANN stage on) against the accepted state and
-        commit the per-language report and the kept docs' state rows — all
-        deterministic overwrites keyed by ``batch_id``.
+        commit it as ``batches/b{batch_id:010d}``.
 
         1. One map-only pass reads the source once and builds the
            per-document table (doc_id, lang, content_hash, mh_00…mh_11
            [, embedding]), checkpointed. A doc with no shingle (NULL text,
-           fewer than 3 tokens) has NULL signature components: it keeps its
-           hash row and gets no signature row.
+           fewer than 3 tokens) has NULL signature components, so it never
+           enters the signature views.
         2. ``_exact_flags`` flags it against the distinct accepted hashes
            (checkpointed: the near-dup tier reads the flags in several
            places, which would otherwise each replay the state scan and
            the window); the unflagged docs with a signature are banded
            against the accepted signatures (``_banded_drop_sets``);
            ``_with_stage`` joins the near-dup marks back as the ``stage``
-           column. The classified table is checkpointed.
-        3. The report is a ``groupBy`` of it; the hash, signature and
-           segment commits are projections of its kept rows."""
+           column.
+        3. With the ANN stage on, the kept rows are assigned and encoded
+           (:meth:`_with_serving_columns`).
+        4. The classified table is written once, one file sorted by
+           ``doc_id``; that write is the batch's only commit."""
         if self.fold_every and batch_id > 0 and batch_id % self.fold_every == 0:
             self.fold_state()  # the scheduled maintenance fold (see __init__)
         cols = ["doc_id", "lang", "text"]
@@ -432,46 +419,31 @@ class StreamingCuration:
             _band_rows(survivors, self.family),
             _band_rows(self.accepted_sigs(before=batch_id), self.family),
         )
-        classified = _with_stage(flagged, nd_corpus, nd_within).localCheckpoint(
-            eager=True
-        )
-        counts = [
-            F.sum((F.col("stage") == s).cast("long")).alias(f"n_{s}")
-            for s in CURATION_STAGES
+        classified = _with_stage(flagged, nd_corpus, nd_within)
+        out = [
+            F.lit(batch_id).cast("long").alias("batch_id"),
+            "doc_id", "lang", "content_hash", *_MH_COLS, "stage",
         ]
-        report = classified.groupBy("lang").agg(
-            F.count(F.lit(1)).alias("n_batch"), *counts
-        ).select(F.lit(batch_id).cast("long").alias("batch_id"), *REPORT_COLUMNS[1:])
-        kept = classified.filter(F.col("stage") == "kept")
-        part = f"b{batch_id:010d}"
-        self._commit(report, "report", part, "lang")
-        self._commit(
-            kept.select("doc_id", "lang", "content_hash"), "accepted_hashes", part
-        )
-        self._commit(
-            kept.filter(F.col("mh_00").isNotNull()).select("doc_id", *_MH_COLS),
-            "accepted_sigs",
-            part,
-        )
         if self.ann_sf_dir is not None:
-            self._commit_ann_segment(kept.select("doc_id", "embedding"), part)
+            classified = self._with_serving_columns(classified)
+            out += ["embedding", "label", "codes"]
+        (
+            classified.select(*out)
+            .coalesce(1)
+            .sortWithinPartitions("doc_id")  # replays rewrite identical bytes
+            .write.mode("overwrite")
+            .parquet(os.path.join(self.state_dir, _KIND, f"b{batch_id:010d}"))
+        )
 
-    def _commit(self, df: DataFrame, kind: str, part: str, key: str = "doc_id") -> str:
-        """Write one state partition as ONE file sorted by ``key`` (a
-        micro-batch's outputs are batch-sized; the sort makes a replay's
-        rewrite byte-identical whatever order the shuffles delivered)."""
-        path = os.path.join(self.state_dir, kind, part)
-        df.coalesce(1).sortWithinPartitions(key).write.mode("overwrite").parquet(path)
-        return path
-
-    def _commit_ann_segment(self, kept: DataFrame, part: str) -> None:
-        """Assign the batch's KEPT (doc_id, embedding) rows against the
-        published corpus-split quantizer and commit the (doc_id,
-        embedding, label) serving segment, then its PQ-code twin. The
-        assignment is the batch tiers' own
-        ``assign_to_published_quantizer`` and the encode their own
-        ``_assign_pq``, so a streaming drop lands in exactly the cells and
-        codes a batch drop would."""
+    def _with_serving_columns(self, classified: DataFrame) -> DataFrame:
+        """``classified`` plus ``label`` and ``codes`` for its kept rows
+        (NULL on the others): the kept (doc_id, embedding) rows assigned
+        against the published corpus-split quantizer and PQ-encoded
+        against the published corpus-split codebooks, in one map-only pass
+        each, then joined back by doc_id. The assignment is the batch
+        tiers' own ``assign_to_published_quantizer`` and the encode their
+        own ``_assign_pq``, so a streaming drop lands in exactly the cells
+        and codes a batch drop would."""
         from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
             assign_to_published_quantizer,
         )
@@ -481,34 +453,27 @@ class StreamingCuration:
             train_pq,
         )
 
-        # carry_embedding echoes the vector through the assignment pass
-        # (bit-identical), so the segment needs no join to re-attach it
-        seg = assign_to_published_quantizer(
+        # carry_embedding echoes the vector through the assignment pass, so
+        # the encode reads it without a join
+        cells = assign_to_published_quantizer(
             self.spark,
             self.ann_sf_dir,
-            kept.withColumnRenamed("doc_id", "vec_id"),
+            classified.filter(F.col("stage") == "kept").select(
+                F.col("doc_id").alias("vec_id"), "embedding"
+            ),
             carry_embedding=True,
-        ).select(
-            F.col("vec_id").alias("doc_id"),
-            "embedding",
-            F.col("cluster").cast("long").alias("label"),
         )
-        seg_path = self._commit(seg, "ann_segments", part)
         _, cents = train_pq(self.spark, self.ann_sf_dir, split="corpus")
-        CB = _collect_pq_matrices(cents)
-        # encode FROM the segment just committed (a micro-batch-sized
-        # file): one map-only _assign_pq pass carrying the cell through
-        committed = self.spark.read.parquet(seg_path).select(
-            F.col("doc_id").alias("vec_id"),
-            "embedding",
-            F.col("label").alias("cluster"),
+        coded = _assign_pq(cells, _collect_pq_matrices(cents), carry_cluster=True)
+        return classified.join(
+            coded.select(
+                F.col("vec_id").alias("doc_id"),
+                F.col("cluster").cast("long").alias("label"),
+                "codes",
+            ),
+            "doc_id",
+            "left",
         )
-        pq_seg = _assign_pq(committed, CB, carry_cluster=True).select(
-            F.col("vec_id").alias("doc_id"),
-            "codes",
-            F.col("cluster").alias("label"),
-        )
-        self._commit(pq_seg, "pq_segments", part)
 
 
 def run_curation_stream(

@@ -34,6 +34,14 @@ def test_worker_import_path_preserves_existing_entries(monkeypatch):
     assert "/some/other/lib" in parts
 
 
+def test_default_driver_memory_is_half_the_host_capped_at_48g():
+    gib = 2**30
+    assert session_mod._default_driver_memory(16 * gib) == "8192m"
+    assert session_mod._default_driver_memory(15 * gib + 12345) == "7680m"
+    assert session_mod._default_driver_memory(96 * gib) == "49152m"
+    assert session_mod._default_driver_memory(512 * gib) == "49152m"
+
+
 def test_pandas_udf_query_from_foreign_cwd(tmp_path):
     """End-to-end: a mapInPandas registry query run by a fresh driver process
 

@@ -116,30 +116,53 @@ def test_foreachbatch_retry_is_idempotent(spark, tmp_path):
         )
 
     def part_bytes():
-        """{kind/b-partition: sorted part-file contents} — the commits sort
-        each file by its key, so a replay must rewrite the same bytes even
+        """{b-partition: sorted part-file contents} — the commit sorts its
+        file by doc_id, so a replay must rewrite the same bytes even
         though the rows reach the write through shuffles."""
-        out = {}
-        for kind in ("report", "accepted_hashes", "accepted_sigs"):
-            for prefix, _, path in cur._list_parts(kind):
-                if prefix != "b":
-                    continue
-                out[f"{kind}/{os.path.basename(path)}"] = sorted(
-                    open(os.path.join(path, f), "rb").read()
-                    for f in os.listdir(path)
-                    if not f.startswith(("_", "."))
-                )
-        return out
+        return {
+            os.path.basename(path): sorted(
+                open(os.path.join(path, f), "rb").read()
+                for f in os.listdir(path)
+                if not f.startswith(("_", "."))
+            )
+            for prefix, _, path in cur._list_parts()
+            if prefix == "b"
+        }
 
     committed = snapshot()
     committed_bytes = part_bytes()
-    assert len(committed_bytes) == 6
+    assert sorted(committed_bytes) == ["b0000000000", "b0000000001"]
     cur.process_batch(b2, 1)  # the retry: replays against batch-0 state only
     assert snapshot() == committed
     assert part_bytes() == committed_bytes
     cur.process_batch(b1, 0)  # an out-of-order replay of an older batch
     assert snapshot() == committed
     assert part_bytes() == committed_bytes
+
+
+def test_state_dir_with_glob_metacharacters_sees_its_commits(spark, tmp_path):
+    """A state dir whose path holds glob metacharacters lists and reads its
+    own committed partitions: batch 1's doc 11 duplicates batch 0's
+    accepted doc 1, so it must count as exact_corpus."""
+    cur = StreamingCuration(spark, str(tmp_path / "st[1]"))
+    cur.process_batch(spark.createDataFrame(BATCH1, DOC_SCHEMA), 0)
+    cur.process_batch(spark.createDataFrame(BATCH2, DOC_SCHEMA), 1)
+    rep = {(r["batch_id"], r["lang"]): r for r in cur.report().collect()}
+    assert rep[(1, "en")]["n_exact_corpus"] == 1
+    assert sorted(r["doc_id"] for r in cur.accepted_hashes().collect()) == [1, 3, 5, 13]
+
+
+def test_state_dir_with_per_kind_layout_is_refused(spark, tmp_path):
+    """A state dir holding the earlier per-kind layout (report/,
+    accepted_hashes/, …) is refused by name: read as batches/ it would be
+    an empty corpus, and the job would re-accept every duplicate."""
+    state = str(tmp_path / "state")
+    cur = StreamingCuration(spark, state)
+    cur.process_batch(spark.createDataFrame(BATCH1, DOC_SCHEMA), 0)
+    os.makedirs(os.path.join(cur.state_dir, "accepted_hashes", "b0000000000"))
+    with pytest.raises(ValueError, match=r"accepted_hashes") as err:
+        StreamingCuration(spark, state)
+    assert cur.state_dir in str(err.value)
 
 
 def test_streaming_curation_under_xxhash64_family(spark, tmp_path, monkeypatch):
@@ -195,19 +218,12 @@ def test_fold_state_preserves_content_and_refold_is_noop(spark, tmp_path):
         cur.process_batch(spark.createDataFrame(b, DOC_SCHEMA), i)
     before = _snapshot(cur)
     folded = cur.fold_state()
-    assert folded == {
-        "accepted_hashes": 1,
-        "accepted_sigs": 1,
-        "report": 1,
-        "ann_segments": None,  # kind folds unconditionally; empty here
-        "pq_segments": None,  # same (round 15 — no ann stage in this job)
-    }
+    assert folded == 1
     assert _snapshot(cur) == before
     assert cur.fold_state() == folded  # re-fold: nothing new → no-op
     assert _snapshot(cur) == before
     # layout: exactly one fold generation + the unfolded newest batch
-    for kind in _KINDS:
-        assert [(p, i) for p, i, _ in cur._list_parts(kind)] == [("f", 1), ("b", 2)]
+    assert [(p, i) for p, i, _ in cur._list_parts()] == [("f", 1), ("b", 2)]
 
 
 def test_folded_state_serves_next_batch_identically(spark, tmp_path):
@@ -242,20 +258,19 @@ def test_fold_crash_before_cleanup_never_double_counts(spark, tmp_path):
         cur.process_batch(spark.createDataFrame(b, DOC_SCHEMA), i)
     before = _snapshot(cur)
     saved = []  # the partitions the fold will cover, snapshotted pre-fold
-    for n, kind in enumerate(_KINDS):
-        for prefix, i, path in cur._list_parts(kind):
-            if prefix == "b" and i <= 1:
-                keep = str(tmp_path / f"save_{n}_{i}")
-                shutil.copytree(path, keep)
-                saved.append((path, keep))
-    assert cur.fold_state()["report"] == 1
+    for prefix, i, path in cur._list_parts():
+        if prefix == "b" and i <= 1:
+            keep = str(tmp_path / f"save_{i}")
+            shutil.copytree(path, keep)
+            saved.append((path, keep))
+    assert len(saved) == 2
+    assert cur.fold_state() == 1
     for path, keep in saved:  # the "crash": cleanup deletes never landed
         shutil.copytree(keep, path)
     assert _snapshot(cur) == before  # fold wins; leftovers are ignored
-    assert cur.fold_state()["report"] == 1  # re-fold reclaims, still no-op
+    assert cur.fold_state() == 1  # re-fold reclaims, still no-op
     assert _snapshot(cur) == before
-    for kind in _KINDS:
-        assert [(p, i) for p, i, _ in cur._list_parts(kind)] == [("f", 1), ("b", 2)]
+    assert [(p, i) for p, i, _ in cur._list_parts()] == [("f", 1), ("b", 2)]
 
 
 def test_replay_of_newest_batch_after_fold_is_idempotent(spark, tmp_path):
@@ -281,7 +296,7 @@ def test_foreign_entries_under_state_dir_are_ignored(spark, tmp_path):
 
     cur = StreamingCuration(spark, str(tmp_path / "state"))
     cur.process_batch(spark.createDataFrame(BATCH1, DOC_SCHEMA), 0)
-    root = os.path.join(cur.state_dir, "accepted_hashes")
+    root = os.path.join(cur.state_dir, "batches")
     os.makedirs(os.path.join(root, "b0000000000.bak"))  # dir, bad shape
     with open(os.path.join(root, "backup"), "w") as f:  # plain file
         f.write("junk")
@@ -305,7 +320,7 @@ def test_scheduled_fold_every_matches_unfolded_twin(spark, tmp_path):
     assert _snapshot(folding) == _snapshot(plain)
     # batch 2 triggered the fold (covers batches < newest committed at
     # that moment, i.e. batch 0), so a fold generation exists
-    parts = folding._list_parts("accepted_hashes")
+    parts = folding._list_parts()
     assert ("f", 0) in [(p, i) for p, i, _ in parts]
 
 
@@ -334,9 +349,10 @@ def test_scheduled_fold_is_retry_safe(spark, tmp_path):
 
 def test_steady_state_batch_job_count(spark, tmp_path):
     """A steady-state micro-batch (two committed batches before it, no
-    fold) runs as one checkpointed per-document table plus one classified
-    table and four commits; this bounds the Spark jobs it submits, so a
-    change that re-joins the drop sets again shows up here."""
+    fold) runs as one checkpointed per-document table, one checkpointed
+    exact-flag table and one committed classified table; this bounds the
+    Spark jobs it submits, so a change that adds a commit or re-joins the
+    drop sets shows up here."""
     sc = spark.sparkContext
     cur = StreamingCuration(spark, str(tmp_path / "state"))
     for i, b in enumerate((BATCH1, BATCH2)):
@@ -350,7 +366,7 @@ def test_steady_state_batch_job_count(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 20, len(jobs)
+    assert 0 < len(jobs) <= 13, len(jobs)
 
 
 # ---- the chain rule against a plain-Python reference ----------------------
@@ -686,14 +702,13 @@ def test_streaming_pq_fold_and_replay_invariants(spark, tmp_path, sf_dir):
         (r["doc_id"], tuple(r["codes"]), r["label"])
         for r in cur.pq_segments().collect()
     )
-    ids = cur.fold_state()
-    assert ids["pq_segments"] == 0  # batch 1 is newest → only batch 0 folds
+    assert cur.fold_state() == 0  # batch 1 is newest → only batch 0 folds
     now = sorted(
         (r["doc_id"], tuple(r["codes"]), r["label"])
         for r in cur.pq_segments().collect()
     )
     assert now == before
-    assert cur.fold_state()["pq_segments"] == 0  # refold no-op
+    assert cur.fold_state() == 0  # refold no-op
     b2 = spark.createDataFrame(
         [(d, t, l, _emb(d)) for d, t, l in BATCH2], ANN_DOC_SCHEMA
     )
@@ -715,10 +730,9 @@ def test_streaming_ann_fold_and_replay_invariants(spark, tmp_path, sf_dir):
     folded state."""
     cur, state, ckpt, src = _drive_ann(spark, tmp_path, sf_dir, subdir="annfold")
     before = sorted(map(tuple, cur.ann_segments().collect()))
-    ids = cur.fold_state()
-    assert ids["ann_segments"] == 0  # batch 1 is newest → only batch 0 folds
+    assert cur.fold_state() == 0  # batch 1 is newest → only batch 0 folds
     assert sorted(map(tuple, cur.ann_segments().collect())) == before
-    assert cur.fold_state()["ann_segments"] == 0  # refold no-op
+    assert cur.fold_state() == 0  # refold no-op
     # replay of the newest batch against the folded state
     b2 = spark.createDataFrame(
         [(d, t, l, _emb(d)) for d, t, l in BATCH2], ANN_DOC_SCHEMA

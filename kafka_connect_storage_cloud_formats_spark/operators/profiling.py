@@ -399,19 +399,17 @@ DRIFT_N_BUCKETS = 10  # buckets 0..9; the last is open-ended (90+ tokens)
 
 def _drift_buckets(spark: SparkSession, sf_dir: str):
     """The drift histogram's shared core: (per_bucket, totals) of the
-    token-length distribution split drop-vs-corpus — one definition
-    consumed by the report row (:func:`drop_drift_report`) and the gate
-    (:func:`drift_gated_merge`), so the two can never measure different
-    distributions (round 15)."""
-    from kafka_connect_storage_cloud_formats_spark.operators.dedup import INCREMENT_MOD
+    token-length distribution split drop-vs-corpus, consumed by both the
+    report row (:func:`drop_drift_report`) and the gate
+    (:func:`drift_gated_merge`), so the two measure one distribution."""
+    from kafka_connect_storage_cloud_formats_spark.operators.dedup import _in_batch
 
     docs = load_table(spark, sf_dir, "documents")
     n_toks = F.size(F.split("text", " "))
     bucket = F.least(
         F.floor(n_toks / F.lit(DRIFT_BUCKET_W)), F.lit(DRIFT_N_BUCKETS - 1)
     ).cast("long")
-    is_drop = (F.col("doc_id") % INCREMENT_MOD) == INCREMENT_MOD - 1
-    tagged = docs.select(bucket.alias("bucket"), is_drop.alias("is_drop"))
+    tagged = docs.select(bucket.alias("bucket"), _in_batch().alias("is_drop"))
     per_bucket = tagged.groupBy("bucket").agg(
         F.sum(F.when(F.col("is_drop"), 1).otherwise(0)).alias("n_drop"),
         F.sum(F.when(~F.col("is_drop"), 1).otherwise(0)).alias("n_corpus"),
@@ -559,14 +557,13 @@ def _drift_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ensure_drift_gated_merge(
     spark: SparkSession, sf_dir: str, max_tvd_bp: int = DRIFT_TVD_BP_PRODUCTION
 ) -> str:
-    """THE gated accept step: refuse the drop — raise, publish NOTHING —
+    """The gated accept step: refuse the drop (raise, publish nothing)
     when its token-length TVD against the corpus exceeds ``max_tvd_bp``;
-    otherwise return the merged content-hash generation
-    (dedup.ensure_merged_corpus_hashes — the standard accept step, which
-    the chained dedup disposition already prices). The comparison is
-    exact (arbitrary-precision Python ints over the 1-row bounded terms
-    collect), so the gate can never flip on a float ulp at any corpus
-    size."""
+    otherwise return the path of the merged content-hash generation that
+    the accept step publishes (``dedup.ensure_merged_corpus(...,
+    "content_hashes")``). The comparison is exact, in Python ints over the
+    one collected row of bounded terms, so the gate never flips on a
+    float ulp at any corpus size."""
     row = _drift_terms(spark, sf_dir).collect()[0]
     gap, td, tc = int(row["gap_sum"]), int(row["t_drop"]), int(row["t_corpus"])
     if td <= 0:
@@ -579,11 +576,9 @@ def ensure_drift_gated_merge(
             f"the {max_tvd_bp} bp gate — the drop's content DISTRIBUTION has "
             "shifted; this is not a dedup question (inspect drop_drift_report)"
         )
-    from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
-        ensure_merged_corpus_hashes,
-    )
+    from kafka_connect_storage_cloud_formats_spark.operators.dedup import ensure_merged_corpus
 
-    return ensure_merged_corpus_hashes(spark, sf_dir)
+    return ensure_merged_corpus(spark, sf_dir, "content_hashes")
 
 
 def drift_gated_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -609,17 +604,15 @@ def drift_gated_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
-        INCREMENT_MOD,
-        ensure_merged_corpus_hashes,
+        _in_batch,
+        ensure_merged_corpus,
     )
 
     terms = _drift_terms(spark, sf_dir)
-    merged = spark.read.parquet(ensure_merged_corpus_hashes(spark, sf_dir))
+    merged = spark.read.parquet(ensure_merged_corpus(spark, sf_dir, "content_hashes"))
     mcounts = merged.agg(
         F.count(F.lit(1)).alias("n_published_total"),
-        F.sum(
-            F.when(F.col("doc_id") % INCREMENT_MOD == INCREMENT_MOD - 1, 1).otherwise(0)
-        ).alias("n_batch_kept"),
+        F.sum(F.when(_in_batch(), 1).otherwise(0)).alias("n_batch_kept"),
     )
     # Arrow local relation (plain-list createDataFrame plans as ExistingRDD)
     postures = spark.createDataFrame(

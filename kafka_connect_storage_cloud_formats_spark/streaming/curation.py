@@ -50,15 +50,13 @@ from kafka_connect_storage_cloud_formats_spark.functions.text_functions import (
 )
 from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
     CURATION_STAGES,
-    MINHASH_K,
+    _MH_COLS,
     _band_rows,
     _banded_drop_sets,
     _exact_flags,
     _with_minhash_array,
     _with_stage,
 )
-
-_MH_COLS = [f"mh_{k:02d}" for k in range(MINHASH_K)]
 
 
 def _table_schema(family: str) -> str:

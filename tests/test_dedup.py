@@ -857,6 +857,90 @@ def test_neardup_incremental_dropped_doc_does_not_suppress_fresh(spark, tmp_path
     )
 
 
+def test_simhash_incremental_dropped_doc_does_not_suppress_fresh(spark):
+    """The SimHash tier's within-batch suppression also runs among
+    corpus survivors only. Hand-made fingerprints (hi = 0): corpus doc 0
+    has lo C = 0, batch doc 4 has A = 0b000111 and batch doc 9 has
+    B = 0b110111, so Hamming(A, C) = 3, Hamming(B, A) = 2 and
+    Hamming(B, C) = 5. A is dropped against the corpus; B is a near-dup of
+    A only, so it is kept."""
+    from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
+        _SIMHASH_KEY,
+        _SIMHASH_NEAR,
+        _banded_drop_sets,
+        _simhash_candidate_keys,
+    )
+
+    schema = "doc_id long, simhash_hi long, simhash_lo long"
+    corpus = spark.createDataFrame([(0, 0, 0)], schema)
+    batch = spark.createDataFrame([(4, 0, 0b000111), (9, 0, 0b110111)], schema)
+    vs_corpus, within = _banded_drop_sets(
+        _simhash_candidate_keys(batch),
+        _simhash_candidate_keys(corpus),
+        _SIMHASH_KEY,
+        _SIMHASH_NEAR,
+    )
+    assert {r.doc_id for r in vs_corpus.collect()} == {4}
+    assert {r.doc_id for r in within.collect()} == set()
+
+
+def test_accept_step_artifact_names_are_pinned(spark, tmp_path, monkeypatch):
+    """The three merge rows build the corpus, batch, merged and
+    curation_kept artifacts under fixed ``engine_<kind>_<params>_``
+    names in both hash families, so a change to the accept step cannot
+    orphan published generations."""
+    import os
+    import re
+
+    from kafka_connect_storage_cloud_formats_spark.artifacts import ARTIFACT_ROOT_ENV
+    from kafka_connect_storage_cloud_formats_spark.functions.text_functions import (
+        HASH_FAMILY_ENV,
+    )
+    from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
+        corpus_fingerprint_merge,
+        corpus_hash_merge,
+        corpus_signature_merge,
+    )
+
+    rows = [
+        (0, "alpha beta gamma delta epsilon zeta", "en"),
+        (1, "completely different corpus sentence here", "en"),
+        (4, "alpha beta gamma delta epsilon zeta", "en"),
+        (9, "fresh unique batch content tokens", "en"),
+        (14, "fresh unique batch content tokens", "en"),
+        (19, "nouvelle phrase unique en lot", "fr"),
+    ]
+    sf = str(tmp_path / "sf")
+    spark.createDataFrame(rows, "doc_id long, text string, lang string").write.parquet(
+        f"{sf}/documents.parquet"
+    )
+    kinds = ("content_hashes_", "minhash_sigs_", "simhash_fp_", "curation_kept_")
+    mrg = "mrg5k12b4r3n3j50"
+    for family, x in (("md5", ""), ("xxhash64", "xxxhash64")):
+        root = tmp_path / f"artifacts_{family}"
+        monkeypatch.setenv(ARTIFACT_ROOT_ENV, str(root))
+        monkeypatch.setenv(HASH_FAMILY_ENV, family)
+        for merge in (corpus_hash_merge, corpus_signature_merge, corpus_fingerprint_merge):
+            merge(spark, sf).collect()
+        built = {
+            m.group(1)
+            for m in map(re.compile(r"engine_(.+)_sf-[0-9a-f]{6}_").match, os.listdir(root))
+            if m and m.group(1).startswith(kinds)
+        }
+        assert built == {
+            "content_hashes_sha256",
+            "content_hashes_sha256incr5b",
+            f"content_hashes_sha256{mrg}{x}",
+            f"minhash_sigs_k12n3{x}",
+            f"minhash_sigs_k12n3incr5b{x}",
+            f"minhash_sigs_{mrg}{x}",
+            f"simhash_fp_b64l20{x}",
+            f"simhash_fp_b64l20incr5b{x}",
+            f"simhash_fp_b64l20{mrg}{x}",
+            f"curation_kept_{mrg}{x}",
+        }, family
+
+
 def test_curation_chain_semantics(spark, tmp_path):
     """Chained disposition on a crafted split exercising every stage:
     exact duplicates die in the exact tier (and never reach the near-dup
@@ -940,7 +1024,7 @@ def test_corpus_signature_merge_inventory_and_rerun(spark, tmp_path):
     from kafka_connect_storage_cloud_formats_spark.artifacts import published_df
     from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
         corpus_signature_merge,
-        ensure_merged_corpus_sigs,
+        ensure_merged_corpus,
         neardup_incremental,
     )
 
@@ -962,7 +1046,7 @@ def test_corpus_signature_merge_inventory_and_rerun(spark, tmp_path):
     assert inv["batch"]["min_doc_id"] == 9 and inv["batch"]["max_doc_id"] == 19
     # re-submit the same drop against the merged generation: every batch
     # doc now near-dups accepted corpus content → nothing kept
-    merged = published_df(spark, ensure_merged_corpus_sigs(spark, sf))
+    merged = published_df(spark, ensure_merged_corpus(spark, sf, "minhash_sigs"))
     rerun = {
         r["lang"]: (r["n_batch"], r["n_dropped_corpus"], r["n_kept"])
         for r in neardup_incremental(spark, sf, corpus_sigs=merged).collect()
@@ -981,10 +1065,10 @@ def test_corpus_signature_merge_kept_docs_dropped_on_rerun(spark, sf_dir):
         _banded_drop_sets,
         _curation_disposition,
         _ensure_minhash_sigs,
-        ensure_merged_corpus_sigs,
+        ensure_merged_corpus,
     )
 
-    path = ensure_merged_corpus_sigs(spark, sf_dir, force=True)
+    path = ensure_merged_corpus(spark, sf_dir, "minhash_sigs", force=True)
     merged_bands = _band_rows(published_df(spark, path))
     batch_bands = _band_rows(_ensure_minhash_sigs(spark, sf_dir, split="batch"))
     vs_corpus, _ = _banded_drop_sets(batch_bands, merged_bands)
@@ -1006,7 +1090,7 @@ def test_corpus_fingerprint_merge_inventory_and_rerun(spark, tmp_path):
     from kafka_connect_storage_cloud_formats_spark.artifacts import published_df
     from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
         corpus_fingerprint_merge,
-        ensure_merged_corpus_fps,
+        ensure_merged_corpus,
         neardup_incremental_simhash,
     )
 
@@ -1026,7 +1110,7 @@ def test_corpus_fingerprint_merge_inventory_and_rerun(spark, tmp_path):
     assert inv["corpus"]["n_docs"] == 2 and inv["corpus"]["n_distinct_fps"] == 2
     assert inv["batch"]["n_docs"] == 2
     assert inv["batch"]["min_doc_id"] == 9 and inv["batch"]["max_doc_id"] == 19
-    merged = published_df(spark, ensure_merged_corpus_fps(spark, sf))
+    merged = published_df(spark, ensure_merged_corpus(spark, sf, "simhash_fp"))
     rerun = {
         r["lang"]: (r["n_batch"], r["n_dropped_corpus"], r["n_kept"])
         for r in neardup_incremental_simhash(spark, sf, corpus_fps=merged).collect()
@@ -1046,8 +1130,7 @@ def test_corpus_hash_merge_and_full_chain_rerun(spark, tmp_path):
     from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
         corpus_hash_merge,
         curation_drop_report,
-        ensure_merged_corpus_hashes,
-        ensure_merged_corpus_sigs,
+        ensure_merged_corpus,
     )
 
     rows = [
@@ -1069,8 +1152,8 @@ def test_corpus_hash_merge_and_full_chain_rerun(spark, tmp_path):
     assert inv["corpus"]["n_docs"] == 2 and inv["corpus"]["n_distinct_hashes"] == 2
     assert inv["batch"]["n_docs"] == 3  # the kept set: 14, 24, 34
     assert inv["batch"]["min_doc_id"] == 14 and inv["batch"]["max_doc_id"] == 34
-    merged_h = published_df(spark, ensure_merged_corpus_hashes(spark, sf))
-    merged_s = published_df(spark, ensure_merged_corpus_sigs(spark, sf))
+    merged_h = published_df(spark, ensure_merged_corpus(spark, sf, "content_hashes"))
+    merged_s = published_df(spark, ensure_merged_corpus(spark, sf, "minhash_sigs"))
     rerun = {
         r["lang"]: r.asDict()
         for r in curation_drop_report(
@@ -1096,8 +1179,7 @@ def test_two_drop_lifecycle_via_merged_generations(spark, tmp_path):
     from kafka_connect_storage_cloud_formats_spark.artifacts import published_df
     from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
         curation_drop_report,
-        ensure_merged_corpus_hashes,
-        ensure_merged_corpus_sigs,
+        ensure_merged_corpus,
     )
 
     corpus = [
@@ -1113,8 +1195,8 @@ def test_two_drop_lifecycle_via_merged_generations(spark, tmp_path):
     spark.createDataFrame(corpus + drop1, "doc_id long, text string, lang string").write.parquet(
         f"{sf_a}/documents.parquet"
     )
-    merged_h = published_df(spark, ensure_merged_corpus_hashes(spark, sf_a))
-    merged_s = published_df(spark, ensure_merged_corpus_sigs(spark, sf_a))
+    merged_h = published_df(spark, ensure_merged_corpus(spark, sf_a, "content_hashes"))
+    merged_s = published_df(spark, ensure_merged_corpus(spark, sf_a, "minhash_sigs"))
     # drop 2 (corpus B: same corpus rows, NEW batch rows — the next crawl)
     drop2 = [
         (14, "fresh unique batch content tokens", "en"),   # dup of drop-1 ACCEPTED 9 → exact_corpus

@@ -308,7 +308,7 @@ def test_ensure_drift_gated_merge_refuses_and_publishes(spark, sf_dir):
     import pytest
 
     from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
-        ensure_merged_corpus_hashes,
+        ensure_merged_corpus,
     )
     from kafka_connect_storage_cloud_formats_spark.operators.profiling import (
         DRIFT_TVD_BP_STRICT,
@@ -318,4 +318,4 @@ def test_ensure_drift_gated_merge_refuses_and_publishes(spark, sf_dir):
     with pytest.raises(ValueError, match="drop refused"):
         ensure_drift_gated_merge(spark, sf_dir, max_tvd_bp=DRIFT_TVD_BP_STRICT)
     path = ensure_drift_gated_merge(spark, sf_dir)
-    assert path == ensure_merged_corpus_hashes(spark, sf_dir)
+    assert path == ensure_merged_corpus(spark, sf_dir, "content_hashes")

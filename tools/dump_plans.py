@@ -1,17 +1,22 @@
 #!/usr/bin/env python3
-"""Dump ``explain('formatted')`` for named registered queries to files.
+"""Dump the plans of named registered queries to files.
 
 Usage: python3 tools/dump_plans.py <out_dir> <suffix> q1 [q2 ...]
 
-Writes ``<out_dir>/<query>_<suffix>.txt`` per query — the round's
-before/after plan evidence (the judge reads these instead of running
-Spark). Plans are built at sf0.1 (the bench SF) unless SPARK_GRAFT_SF_DIR
-overrides.
+Writes, per query, ``<out_dir>/<query>_<suffix>.txt`` (``explain('formatted')``)
+and ``<out_dir>/<query>_<suffix>.opt.txt`` (the optimized logical plan with
+every ``#<id>`` expression id replaced by ``#N``). Two dumps with the same
+suffix in different directories compare optimized plans with
+
+    diff -r -x '*_<suffix>.txt' <dir_a> <dir_b>
+
+Plans are built at sf0.1 (the bench SF) unless SPARK_GRAFT_SF_DIR overrides.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -38,6 +43,9 @@ def main() -> int:
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
+        opt = df._jdf.queryExecution().optimizedPlan().toString()
+        with open(os.path.join(out_dir, f"{name}_{suffix}.opt.txt"), "w") as f:
+            f.write(re.sub(r"#\d+", "#N", opt))
         print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
     return 0
 

@@ -111,12 +111,13 @@ def require_nonzero_norms(n: np.ndarray, what: str) -> np.ndarray:
     engines (Spark ANSI raises / non-ANSI NaN; DuckDB NULL) — on the
     ranking tiers that silently breaks the oracle hash gate, so the
     contract refuses loudly and uniformly instead. Used by
-    ``l2_norm_vec`` (every ``_with_norm`` corpus side) and the kNN
-    kernel's own norm computations; the IVF probe's pure-JVM subtrees
-    enforce the same contract with a ``raise_error`` branch
-    (similarity._ivf_probe — Python guards are barred from the DPP
-    subtree). The k-means TRAINER deliberately tolerates zero vectors
-    (norm-1 update, deterministic all-tie assignment)."""
+    ``l2_norm_vec`` (every ``_with_norm`` corpus side, the cell-index
+    builds included), the kNN kernel's own norm computations and the
+    routing kernel (similarity._route); a probe that reads an
+    index-STORED norm enforces the same contract in pure JVM with a
+    ``raise_error`` branch (similarity._stored_norm_guard). The k-means
+    TRAINER deliberately tolerates zero vectors (norm-1 update,
+    deterministic all-tie assignment)."""
     if (n == 0.0).any():
         raise ValueError(
             f"{int((n == 0.0).sum())} zero-norm {what}: cosine similarity "

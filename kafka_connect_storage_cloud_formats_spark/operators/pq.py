@@ -51,20 +51,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from kafka_connect_storage_cloud_formats_spark.operators.similarity import (
     DIM,
-    QUERY_MOD,
     RERANK_CANDIDATES,
-    TOP_K,
+    _candidates_then_exact_rerank,
     _collect_query_matrix,
-    _dot,
     _load,
+    _per_query_topk,
     _recall_vs_truth,
+    _route,
     _sql_base,
+    _sql_bf,
     _sql_dot,
-    _with_norm,
+    _sql_ranked,
+    _sql_recall,
+    _sql_rerank,
+    _sql_topk,
 )
 
 PQ_M = 8  # subspaces
@@ -77,7 +80,18 @@ PQ_ITERS = 3
 # imported via kmeans_ivf so the families' notion of "the batch" cannot
 # fork.
 from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (  # noqa: E402
+    KMEANS_ITERS,
+    KMEANS_K,
+    SERVING_NPROBE,
     UPSERT_MOD,
+    _collect_centroid_matrix,
+    _kmeans_training_ctes,
+    _sql_assigned,
+    _sql_cents,
+    _upserted_serving_ctes,
+    assign_to_published_quantizer,
+    kmeans_params_token,
+    train_kmeans_quantizer,
 )
 
 
@@ -90,7 +104,7 @@ def pq_params_token(
 ) -> str:
     """THE PQ-generation params token (one definition, same doctrine as
     kmeans_params_token). "l2la" = euclidean metric + Left-Associated
-    distance accumulation. ``split="corpus"`` (round 15) marks codebooks
+    distance accumulation. ``split="corpus"`` marks codebooks
     trained on the corpus side of the incremental drop split only — the
     published-at-indexing-time generation later drops are encoded
     against; ``residual=True`` marks codebooks trained on COARSE-CELL
@@ -99,12 +113,6 @@ def pq_params_token(
     relative to that exact quantizer generation (a retuned coarse
     quantizer changes every residual, so the artifacts must never be
     shared across coarse generations)."""
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        KMEANS_ITERS,
-        KMEANS_K,
-        kmeans_params_token,
-    )
-
     return (
         f"m{m}k{ksub}i{iters}d{DIM}l2la"
         + ("" if split is None else f"-corp{UPSERT_MOD}")
@@ -283,11 +291,6 @@ def _residualize(
     the residual spends the 8-byte code budget on the part that actually
     distinguishes cell-mates instead of re-encoding the coarse direction
     PQ_M times."""
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        _collect_centroid_matrix,
-        train_kmeans_quantizer,
-    )
-
     assignment, cent_long = train_kmeans_quantizer(spark, sf_dir, split=split)
     labels, M = _collect_centroid_matrix(cent_long)
     return _residualize_with(vectors, assignment, labels, M)
@@ -394,11 +397,10 @@ def pq_topk(spark: SparkSession, sf_dir: str, query_ids=None) -> DataFrame:
     gathers the reconstructed corpus block from the codebooks and
     accumulates the ADC scores per dimension left-associated — the same
     chain as the oracle's ``_sql_dot(q, reconstruction)`` — then emits
-    its per-batch top-RERANK_CANDIDATES per query; a global window keeps
-    the overall top-C; only C·Q rows join back to the float vectors for
-    the exact cosine re-rank."""
+    its per-batch top-RERANK_CANDIDATES per query; the shared
+    :func:`~.similarity._candidates_then_exact_rerank` keeps the overall
+    top-C and re-ranks only those C·Q rows against the float vectors."""
     import numpy as np
-    import pandas as pd
 
     base = _load(spark, sf_dir).select("vec_id", "embedding")
     q_ids, Qm = _collect_query_matrix(base, query_ids)
@@ -425,64 +427,12 @@ def pq_topk(spark: SparkSession, sf_dir: str, query_ids=None) -> DataFrame:
             adc = np.zeros((len(q_ids), C.shape[0]), dtype=np.float64)
             for d in range(DIM):  # left-associated per (query, vector)
                 adc += Qm[:, d : d + 1] * R[None, :, d]
-            out_q, out_n, out_c = [], [], []
-            for qi in range(len(q_ids)):
-                mask = ids != q_ids[qi]
-                nb_ids, nb_adc = ids[mask], adc[qi][mask]
-                order = np.lexsort((nb_ids, -nb_adc))[:RERANK_CANDIDATES]
-                out_q.append(np.full(len(order), q_ids[qi], dtype=np.int64))
-                out_n.append(nb_ids[order])
-                out_c.append(nb_adc[order])
-            yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "approx_cos": np.concatenate(out_c),
-                }
-            )
+            yield _per_query_topk(q_ids, ids, adc, RERANK_CANDIDATES, "approx_cos")
 
     scored = codes.mapInPandas(
         score_batches, "q_id long, neighbor_id long, approx_cos double"
     )
     return _candidates_then_exact_rerank(spark, sf_dir, scored, q_ids, Qm)
-
-
-def _candidates_then_exact_rerank(
-    spark: SparkSession, sf_dir: str, scored: DataFrame, q_ids, Qm
-) -> DataFrame:
-    """The shared serving tail of every ADC pre-ranker (pq_topk full-scan,
-    ivfpq_topk cell-pruned): global top-RERANK_CANDIDATES per query over
-    the approx scores, then the exact cosine re-rank on C·Q rows only —
-    one definition, the sq8_topk shape. The query side comes from the
-    ALREADY-COLLECTED matrix (round 16 —
-    :func:`~.similarity._local_query_vectors`: no second corpus scan /
-    Arrow norm pass / broadcast-build job for bytes the driver holds)."""
-    from kafka_connect_storage_cloud_formats_spark.operators.similarity import (
-        _local_query_vectors,
-    )
-
-    wc = Window.partitionBy("q_id").orderBy(F.desc("approx_cos"), F.asc("neighbor_id"))
-    cand = (
-        scored.withColumn("crank", F.row_number().over(wc))
-        .filter(F.col("crank") <= RERANK_CANDIDATES)
-        .select("q_id", "neighbor_id")
-    )
-    qv = _local_query_vectors(spark, q_ids, Qm)
-    cv = _with_norm(_load(spark, sf_dir)).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("norm").alias("n_norm"),
-    )
-    cosine = _dot("q_emb", "n_emb") / (F.col("q_norm") * F.col("n_norm"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.join(F.broadcast(qv), "q_id")
-        .join(cv, "neighbor_id")
-        .select("q_id", "neighbor_id", cosine.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("q_id", "rank")
-    )
 
 
 def pq_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -492,46 +442,22 @@ def pq_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_vs_truth(spark, sf_dir, pq_topk(spark, sf_dir))
 
 
-def _route_df(spark: SparkSession, q_ids, Qm, labels, M, nprobe: int, with_qc: bool = False) -> DataFrame:
-    """The query→cell ROUTING table (q_id, label[, qc]) — top-``nprobe``
-    trained cells per query by the left-associated cosine chain with ties
-    to the lowest cell (exactly the coarse oracle's ``kassign``), shared
-    by every composed IVF×PQ probe. ``with_qc=True`` (the residual path)
-    also carries the RAW dot(q, centroid) per routed pair — the
-    coarse-reconstruction term residual ADC adds back (same accumulation,
-    before the norm division that routing applies).
-
-    Arrow-backed local relation (a plain-list createDataFrame plans as an
-    ExistingRDD scan, which the plan audit rightly rejects): Q·nprobe
-    rows — metadata-scale by the query-matrix contract — and broadcasts
-    into the member join."""
-    import numpy as np
+def _route_df(
+    spark: SparkSession, q_ids, Qm, labels, M, nprobe: int, with_qc: bool = False
+) -> DataFrame:
+    """The IVFPQ probes' routing table (q_id, label[, qc]) from the shared
+    routing kernel (:func:`~.similarity._route`); ``with_qc=True`` (the
+    residual path) also carries the raw dot(q, centroid) per routed pair —
+    the coarse-reconstruction term residual ADC adds back. An Arrow-backed
+    local relation of Q·nprobe rows that broadcasts into the member join
+    (a plain-list createDataFrame plans as an ExistingRDD scan, which the
+    plan audit rejects)."""
     import pandas as pd
 
-    from kafka_connect_storage_cloud_formats_spark.functions.vectors import _seq_dot
-
-    if nprobe < 1:
-        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    qn = np.sqrt(_seq_dot(Qm, Qm))
-    cn = np.sqrt(_seq_dot(M, M))
-    if not (qn > 0.0).all() or not (cn > 0.0).all():
-        raise ValueError("zero-norm query or centroid: cosine routing is undefined")
-    raw = np.zeros((len(q_ids), M.shape[0]), dtype=np.float64)
-    for d in range(Qm.shape[1]):  # left-associated, the kassign chain
-        raw += Qm[:, d : d + 1] * M[None, :, d]
-    scores = raw / (qn[:, None] * cn[None, :])
-    route_q, route_l, route_qc = [], [], []
-    for qi in range(len(q_ids)):
-        order = np.lexsort((labels, -scores[qi]))[:nprobe]
-        route_q.extend(int(q_ids[qi]) for _ in order)
-        route_l.extend(int(labels[c]) for c in order)
-        route_qc.extend(float(raw[qi, c]) for c in order)
-    data = {
-        "q_id": np.array(route_q, dtype=np.int64),
-        "label": np.array(route_l, dtype=np.int64),
-    }
+    qi, ci, qc, _ = _route(q_ids, Qm, labels, M, nprobe)
+    data = {"q_id": q_ids[qi], "label": labels[ci]}
     if with_qc:
-        data["qc"] = np.array(route_qc, dtype=np.float64)
+        data["qc"] = qc
     return spark.createDataFrame(pd.DataFrame(data))
 
 
@@ -607,8 +533,8 @@ def _lut_adc_rerank(
 def _collect_probe_inputs(spark: SparkSession, sf_dir: str, split=None, residual=False):
     """The composed probes' driver-side inputs — (q_ids, Qm) query matrix,
     (assignment, labels, M) coarse structures, (codes_df, CB) codebooks —
-    with the two INDEPENDENT lanes overlapped from a 2-thread pool (guide
-    §2.6, round 16): the query-matrix scan shares nothing with the
+    with the two INDEPENDENT lanes overlapped from a 2-thread pool: the
+    query-matrix scan shares nothing with the
     published-structure reads, so running them sequentially paid two
     job-rounds of latency for one. The coarse→PQ lane stays sequential
     inside ONE worker deliberately: train_pq consumes the coarse
@@ -616,11 +542,6 @@ def _collect_probe_inputs(spark: SparkSession, sf_dir: str, split=None, residual
     cache would train it twice (correct — ensure_artifact publishes
     atomically — but wasted work)."""
     from concurrent.futures import ThreadPoolExecutor
-
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        _collect_centroid_matrix,
-        train_kmeans_quantizer,
-    )
 
     base = _load(spark, sf_dir).select("vec_id", "embedding")
 
@@ -659,15 +580,10 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str, nprobe: int | None = None) -> D
     …) + …)`` chains, so the whole composed path (BOTH trainings +
     routing + LUT ADC + re-rank) replays in one oracle WITH-chain.
 
-    Round 15: the body is the composition of the shared probe helpers
-    (``_route_df`` / ``_build_lut`` / ``_lut_adc_rerank``) the upserted
-    and residual variants also serve from — verified plan-identical to
-    the round-14 inline form (same op sequence: Arrow local routing
-    relation → member equi-join → one Arrow ADC pass → shared re-rank)."""
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        SERVING_NPROBE,
-    )
-
+    The body composes the shared probe helpers (``_route_df`` /
+    ``_build_lut`` / ``_lut_adc_rerank``) the upserted and residual
+    variants also serve from: Arrow local routing relation → member
+    equi-join → one Arrow ADC pass → shared re-rank."""
     if nprobe is None:
         nprobe = SERVING_NPROBE
     q_ids, Qm, assignment, labels, M, codes_df, CB = _collect_probe_inputs(
@@ -727,11 +643,6 @@ def build_pq_upsert_segment(
         artifact_path,
         ensure_artifact,
     )
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        _collect_centroid_matrix,
-        assign_to_published_quantizer,
-        train_kmeans_quantizer,
-    )
 
     path = artifact_path(
         "pq_upsert",
@@ -749,8 +660,8 @@ def build_pq_upsert_segment(
         )
         _, cents = train_pq(spark, sf_dir, split="corpus", residual=residual)
         CB = _collect_pq_matrices(cents)
-        # the whole encode is MAP-ONLY (r15 optimization, guide §2.1):
-        # the coarse assignment carries the embedding through, the
+        # the whole encode is MAP-ONLY: the coarse assignment carries
+        # the embedding through, the
         # residualization consumes it pre-joined and carries the cluster,
         # and the PQ encoder echoes the cluster out — no vec_id joins to
         # re-attach anything (each was broadcast locally but two
@@ -785,9 +696,6 @@ def _ivfpq_serving_members(
     serving layer performs per accepted drop, same as the IVF tier's
     ``kmeans_ivf_serving_view``."""
     from kafka_connect_storage_cloud_formats_spark.artifacts import published_df
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        train_kmeans_quantizer,
-    )
 
     assignment, _ = train_kmeans_quantizer(spark, sf_dir, split="corpus")
     codes_df, _ = train_pq(spark, sf_dir, split="corpus", residual=residual)
@@ -816,12 +724,8 @@ def ivfpq_topk_upserted(
     at full fidelity of the published structures. Oracle: corpus-split
     coarse training + corpus-split PQ training + batch coarse assignment
     + batch PQ encode + both unions + LUT ADC + exact re-rank in ONE
-    WITH-chain (``_ivfpq_upserted_topk_sql``); pinned bit-equal to the
+    WITH-chain (``_ivfpq_sql``); pinned bit-equal to the
     full-width scan at nprobe=k in tests (routing prunes nothing there)."""
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        SERVING_NPROBE,
-    )
-
     if nprobe is None:
         nprobe = SERVING_NPROBE
     q_ids, Qm, _assignment, labels, M, _codes, CB = _collect_probe_inputs(
@@ -867,10 +771,6 @@ def ivfpq_residual_topk(
     toward the uncompressed-IVF band (measured in SCALE.md). Oracle:
     coarse training + residual derivation + residual PQ training +
     routing + centroid-term ADC + exact re-rank in one WITH-chain."""
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        SERVING_NPROBE,
-    )
-
     if nprobe is None:
         nprobe = SERVING_NPROBE
     q_ids, Qm, assignment, labels, M, codes_df, CB = _collect_probe_inputs(
@@ -909,10 +809,6 @@ def ivfpq_residual_topk_upserted(
     training + batch coarse assignment + batch residualization + batch
     residual encode + both unions + centroid-term LUT ADC + exact
     re-rank in ONE WITH-chain."""
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        SERVING_NPROBE,
-    )
-
     if nprobe is None:
         nprobe = SERVING_NPROBE
     q_ids, Qm, _assignment, labels, M, _codes, CB = _collect_probe_inputs(
@@ -1010,8 +906,8 @@ p{s}u{it} AS (
 
 
 def _pq_probe_ctes(fi: int) -> str:
-    """Reconstruction + ADC + candidate + exact-re-rank chain over the
-    replayed training (the shared tail shape of the SQ8 oracle)."""
+    """Reconstruction + ADC + the shared re-rank chain over the replayed
+    training; ends in the ``pranked`` CTE."""
     recon_joins = "\n  ".join(
         f"JOIN p{s}cl{fi} c{s} ON c{s}.vec_id = c0.vec_id\n  JOIN p{s}ua a{s} ON a{s}.label = c{s}.code"
         if s > 0
@@ -1027,57 +923,26 @@ papprox AS (
   SELECT q.vec_id AS q_id, r.vec_id AS neighbor_id,
          {_sql_dot('q.embedding', 'r.remb')} AS approx_cos
   FROM q JOIN recon r ON r.vec_id <> q.vec_id),
-pcand AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q_id
-                              ORDER BY approx_cos DESC, neighbor_id) AS crank
-    FROM papprox) r WHERE crank <= {RERANK_CANDIDATES}),
-prescored AS (
-  SELECT pcand.q_id, pcand.neighbor_id,
-         {_sql_dot('qv.embedding', 'cv.embedding')} / (qv.norm * cv.norm) AS cosine
-  FROM pcand
-  JOIN base qv ON qv.vec_id = pcand.q_id
-  JOIN base cv ON cv.vec_id = pcand.neighbor_id),
-pranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM prescored)"""
+{_sql_rerank('p', 'papprox')},
+{_sql_ranked('pranked', 'prescored')}"""
 
 
-def _pq_topk_sql() -> str:
+def _pq_sql(recall: bool = False) -> str:
+    """The full-scan PQ oracles: training replay + probe, then the top-k
+    SELECT or, ``recall=True``, the ground truth and the recall tail."""
     train, fi = _pq_training_ctes()
-    return f"""
+    if not recall:
+        return f"""
 WITH {_sql_base()},
 {train},
 {_pq_probe_ctes(fi)}
-SELECT q_id, neighbor_id, cosine, rank FROM pranked WHERE rank <= {TOP_K}
-ORDER BY q_id, rank
-"""
-
-
-def _pq_recall_sql() -> str:
-    train, fi = _pq_training_ctes()
+{_sql_topk('pranked')}"""
     return f"""
 WITH {_sql_base()},
-bf_scored AS (
-  SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         {_sql_dot('q.embedding', 'c.embedding')} / (q.norm * c.norm) AS cosine
-  FROM q JOIN base c ON c.vec_id <> q.vec_id),
-bf AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM bf_scored) r WHERE rank <= {TOP_K}),
+{_sql_bf()},
 {train},
 {_pq_probe_ctes(fi)},
-pq AS (SELECT q_id, neighbor_id FROM pranked WHERE rank <= {TOP_K}),
-h AS (SELECT COUNT(*) AS hits FROM bf JOIN pq USING (q_id, neighbor_id)),
-tot AS (SELECT COUNT(DISTINCT q_id) AS n_queries, COUNT(*) AS possible FROM bf)
-SELECT n_queries, hits, possible,
-       CAST(hits AS DOUBLE) / CAST(possible AS DOUBLE) AS recall
-FROM tot, h
-"""
+{_sql_recall('pq', 'SELECT q_id, neighbor_id FROM pranked')}"""
 
 
 def _ivfpq_probe_ctes(
@@ -1088,23 +953,21 @@ def _ivfpq_probe_ctes(
     codes_rel: str | None = None,
     residual: bool = False,
 ) -> str:
-    """Coarse routing + cell-pruned LUT-ADC + exact re-rank over BOTH
-    replayed trainings. The ADC is the nested left-associated chain
-    ``(0.0 + (0.0 + 8 terms) + … )`` — term-for-term the engine's
-    per-subspace LUT accumulation.
+    """Coarse routing + cell-pruned LUT-ADC + the shared re-rank chain
+    over BOTH replayed trainings; ends in the ``ipranked`` CTE. The ADC is
+    the nested left-associated chain ``(0.0 + (0.0 + 8 terms) + … )`` —
+    term-for-term the engine's per-subspace LUT accumulation.
 
     ``labels_rel`` names the relation supplying the stored corpus's cell
     labels (column ``cluster``; default the coarse replay's final
     assignment) and ``codes_rel`` the per-subspace code relation as a
     ``{s}``-format template (columns ``vec_id, code``; default the PQ
     replay's final assignment) — the upserted serving oracle passes the
-    ``serving_labels`` union and the ``sc{s}`` main ∪ batch-code unions
-    (round 15). ``residual=True`` starts each candidate's ADC chain from
-    the routed pair's exact dot(q, coarse centroid) — the ``rqc`` CTE,
-    mirroring the qc column the engine's routing table carries — instead
-    of 0.0 (the FAISS residual reconstruction: q·(c + r̂) = q·c + Σ_s
-    LUT_s). Defaults emit text byte-identical to the pre-parameter code,
-    so the registered ivfpq_topk/recall strings are unchanged."""
+    ``serving_labels`` union and the ``sc{s}`` main ∪ batch-code unions.
+    ``residual=True`` starts each candidate's ADC chain from the routed
+    pair's exact dot(q, coarse centroid) — the ``rqc`` CTE, mirroring the
+    qc column the engine's routing table carries — instead of 0.0 (the
+    FAISS residual reconstruction: q·(c + r̂) = q·c + Σ_s LUT_s)."""
     labels = labels_rel if labels_rel is not None else f"cl{kfi}"
     codes_fmt = codes_rel if codes_rel is not None else f"p{{s}}cl{pfi}"
     sub_chains = []
@@ -1139,22 +1002,12 @@ def _ivfpq_probe_ctes(
         if residual
         else ""
     )
-    return f"""ikcents AS (
-  SELECT label AS c_label, list(centroid ORDER BY dim) AS c_emb FROM u{kfi} GROUP BY label),
-ikcents2 AS (
-  SELECT c_label, c_emb,
-         CASE WHEN cn0 > 0 THEN cn0
-              ELSE error('zero-norm centroid: cosine similarity is undefined') END AS c_norm
-  FROM (SELECT c_label, c_emb, sqrt({_sql_dot('c_emb', 'c_emb')}) AS cn0 FROM ikcents) k),
+    return f"""{_sql_cents('ik', kfi)},
 ikassign AS (
   SELECT q.vec_id AS q_id, c_label,
          {_sql_dot('q.embedding', 'c_emb')} / (q.norm * c_norm) AS ccos
   FROM q, ikcents2),
-ikassigned AS (
-  SELECT q_id, c_label FROM (
-    SELECT q_id, c_label,
-           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY ccos DESC, c_label) AS rn
-    FROM ikassign) r WHERE rn <= {nprobe}),
+{_sql_assigned('ik', nprobe)},
 {rqc_cte}ivfcand AS (
   SELECT {cand_cols} FROM ikassigned a
   JOIN {labels} c ON c.cluster = a.c_label AND c.vec_id <> a.q_id),
@@ -1163,93 +1016,8 @@ ipadc AS (
   FROM ivfcand ic{rqc_join}
   JOIN base q ON q.vec_id = ic.q_id
   {code_joins}),
-ipcand AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q_id
-                              ORDER BY approx_cos DESC, neighbor_id) AS crank
-    FROM ipadc) r WHERE crank <= {RERANK_CANDIDATES}),
-iprescored AS (
-  SELECT ipcand.q_id, ipcand.neighbor_id,
-         {_sql_dot('qv.embedding', 'cv.embedding')} / (qv.norm * cv.norm) AS cosine
-  FROM ipcand
-  JOIN base qv ON qv.vec_id = ipcand.q_id
-  JOIN base cv ON cv.vec_id = ipcand.neighbor_id),
-ipranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM iprescored)"""
-
-
-def _ivfpq_topk_sql(nprobe: int) -> str:
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        _kmeans_training_ctes,
-    )
-
-    ktrain, kfi = _kmeans_training_ctes()
-    ptrain, pfi = _pq_training_ctes()
-    return f"""
-WITH {_sql_base()},
-{ktrain},
-{ptrain},
-{_ivfpq_probe_ctes(kfi, pfi, nprobe)}
-SELECT q_id, neighbor_id, cosine, rank FROM ipranked WHERE rank <= {TOP_K}
-ORDER BY q_id, rank
-"""
-
-
-def _ivfpq_recall_sql(nprobe: int) -> str:
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        _kmeans_training_ctes,
-    )
-
-    ktrain, kfi = _kmeans_training_ctes()
-    ptrain, pfi = _pq_training_ctes()
-    return f"""
-WITH {_sql_base()},
-bf_scored AS (
-  SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         {_sql_dot('q.embedding', 'c.embedding')} / (q.norm * c.norm) AS cosine
-  FROM q JOIN base c ON c.vec_id <> q.vec_id),
-bf AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM bf_scored) r WHERE rank <= {TOP_K}),
-{ktrain},
-{ptrain},
-{_ivfpq_probe_ctes(kfi, pfi, nprobe)},
-ipq AS (SELECT q_id, neighbor_id FROM ipranked WHERE rank <= {TOP_K}),
-h AS (SELECT COUNT(*) AS hits FROM bf JOIN ipq USING (q_id, neighbor_id)),
-tot AS (SELECT COUNT(DISTINCT q_id) AS n_queries, COUNT(*) AS possible FROM bf)
-SELECT n_queries, hits, possible,
-       CAST(hits AS DOUBLE) / CAST(possible AS DOUBLE) AS recall
-FROM tot, h
-"""
-
-
-def _bf_and_recall_tail(probe_alias: str) -> tuple[str, str]:
-    """The brute-force ground-truth prologue and the recall-cross tail
-    shared by every PQ-family recall oracle (one definition — the same
-    rule as kmeans_ivf._bf_topk_ctes/_recall_cross_sql). Emits text
-    byte-identical to the inline blocks the round-14 strings carry."""
-    bf = f"""bf_scored AS (
-  SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         {_sql_dot('q.embedding', 'c.embedding')} / (q.norm * c.norm) AS cosine
-  FROM q JOIN base c ON c.vec_id <> q.vec_id),
-bf AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM bf_scored) r WHERE rank <= {TOP_K})"""
-    tail = f"""{probe_alias} AS (SELECT q_id, neighbor_id FROM ipranked WHERE rank <= {TOP_K}),
-h AS (SELECT COUNT(*) AS hits FROM bf JOIN {probe_alias} USING (q_id, neighbor_id)),
-tot AS (SELECT COUNT(DISTINCT q_id) AS n_queries, COUNT(*) AS possible FROM bf)
-SELECT n_queries, hits, possible,
-       CAST(hits AS DOUBLE) / CAST(possible AS DOUBLE) AS recall
-FROM tot, h
-"""
-    return bf, tail
+{_sql_rerank('ip', 'ipadc')},
+{_sql_ranked('ipranked', 'iprescored')}"""
 
 
 def _pq_batch_encode_ctes(pfi: int, src: str = "embeddings", filtered: bool = True) -> str:
@@ -1285,49 +1053,6 @@ sc{s} AS (
   SELECT vec_id, code FROM bq{s}cl)"""
         )
     return ",\n".join(parts)
-
-
-def _ivfpq_upserted_topk_sql(nprobe: int) -> str:
-    """The upserted compressed serving path in ONE WITH-chain: corpus-
-    split coarse training + batch coarse assignment + serving-label union
-    (the shared kmeans_ivf prologue), corpus-split PQ training + batch PQ
-    encode + serving-code unions, then the standard cell-pruned LUT-ADC
-    probe over both unions — certifying end-to-end that a probe against
-    (main codes ∪ per-drop code segment) serves exactly what the
-    replayed deployment would."""
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        _upserted_serving_ctes,
-    )
-
-    serving, kfi = _upserted_serving_ctes()
-    ptrain, pfi = _pq_training_ctes(src="emb_corpus")
-    return f"""
-WITH {_sql_base()},
-{serving},
-{ptrain},
-{_pq_batch_encode_ctes(pfi)},
-{_ivfpq_probe_ctes(kfi, pfi, nprobe, labels_rel="serving_labels", codes_rel="sc{s}")}
-SELECT q_id, neighbor_id, cosine, rank FROM ipranked WHERE rank <= {TOP_K}
-ORDER BY q_id, rank
-"""
-
-
-def _ivfpq_upserted_recall_sql(nprobe: int) -> str:
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        _upserted_serving_ctes,
-    )
-
-    serving, kfi = _upserted_serving_ctes()
-    ptrain, pfi = _pq_training_ctes(src="emb_corpus")
-    bf, tail = _bf_and_recall_tail("ipqu")
-    return f"""
-WITH {_sql_base()},
-{bf},
-{serving},
-{ptrain},
-{_pq_batch_encode_ctes(pfi)},
-{_ivfpq_probe_ctes(kfi, pfi, nprobe, labels_rel="serving_labels", codes_rel="sc{s}")},
-{tail}"""
 
 
 def _resid_cte(kfi: int, src: str = "embeddings") -> str:
@@ -1369,107 +1094,53 @@ def _bresid_cte(kfi: int) -> str:
   GROUP BY e.vec_id)"""
 
 
-def _ivfpq_residual_topk_sql(nprobe: int) -> str:
-    """The residual-encoded IVFPQ path in one WITH-chain: whole-corpus
-    coarse training → residual derivation → residual PQ training →
-    routing with the exact centroid term (``rqc``) → centroid-term ADC →
-    exact re-rank."""
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        _kmeans_training_ctes,
-    )
-
-    ktrain, kfi = _kmeans_training_ctes()
-    ptrain, pfi = _pq_training_ctes(src="resid")
+def _ivfpq_sql(
+    nprobe: int, upserted: bool = False, residual: bool = False, recall: str | None = None
+) -> str:
+    """The composed IVFPQ oracles in one WITH-chain each, for the 2×2
+    serving matrix (raw/residual × whole-corpus/upserted): the coarse
+    replay — whole-corpus training, or ``upserted=True`` the corpus-split
+    serving prologue (training + batch assignment + label union) — then,
+    ``residual=True``, the training residuals; the PQ training replay;
+    for ``upserted`` the batch encode (of the batch residuals when
+    ``residual``) and the serving-code unions; then the cell-pruned
+    LUT-ADC probe. Ends with the top-k SELECT or, given a ``recall``
+    alias, the ground truth and the recall tail."""
+    coarse, kfi = _upserted_serving_ctes() if upserted else _kmeans_training_ctes()
+    src = "emb_corpus" if upserted else "embeddings"
+    parts = [coarse] + ([_resid_cte(kfi, src=src)] if residual else [])
+    ptrain, pfi = _pq_training_ctes(src="resid" if residual else src)
+    parts.append(ptrain)
+    if upserted and residual:
+        parts += [_bresid_cte(kfi), _pq_batch_encode_ctes(pfi, src="bresid", filtered=False)]
+    elif upserted:
+        parts.append(_pq_batch_encode_ctes(pfi))
+    serving = {"labels_rel": "serving_labels", "codes_rel": "sc{s}"} if upserted else {}
+    parts.append(_ivfpq_probe_ctes(kfi, pfi, nprobe, residual=residual, **serving))
+    ctes = ",\n".join(parts)
+    if recall is None:
+        return f"""
+WITH {_sql_base()},
+{ctes}
+{_sql_topk('ipranked')}"""
     return f"""
 WITH {_sql_base()},
-{ktrain},
-{_resid_cte(kfi)},
-{ptrain},
-{_ivfpq_probe_ctes(kfi, pfi, nprobe, residual=True)}
-SELECT q_id, neighbor_id, cosine, rank FROM ipranked WHERE rank <= {TOP_K}
-ORDER BY q_id, rank
-"""
+{_sql_bf()},
+{ctes},
+{_sql_recall(recall, 'SELECT q_id, neighbor_id FROM ipranked')}"""
 
 
-def _ivfpq_residual_recall_sql(nprobe: int) -> str:
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        _kmeans_training_ctes,
-    )
-
-    ktrain, kfi = _kmeans_training_ctes()
-    ptrain, pfi = _pq_training_ctes(src="resid")
-    bf, tail = _bf_and_recall_tail("ipqr")
-    return f"""
-WITH {_sql_base()},
-{bf},
-{ktrain},
-{_resid_cte(kfi)},
-{ptrain},
-{_ivfpq_probe_ctes(kfi, pfi, nprobe, residual=True)},
-{tail}"""
-
-
-def _ivfpq_residual_upserted_ctes(nprobe: int) -> str:
-    """The residual-upserted serving path's full replay (everything after
-    base/q, through ``ipranked``): split coarse training + batch
-    assignment + serving-label union (the shared kmeans_ivf prologue),
-    split-corpus residuals + residual PQ training, batch residualization
-    + batch residual encode + serving-code unions, then the
-    centroid-term LUT-ADC probe over both unions — shared by the topk
-    and recall builders."""
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        _upserted_serving_ctes,
-    )
-
-    serving, kfi = _upserted_serving_ctes()
-    ptrain, pfi = _pq_training_ctes(src="resid")
-    return f"""{serving},
-{_resid_cte(kfi, src="emb_corpus")},
-{ptrain},
-{_bresid_cte(kfi)},
-{_pq_batch_encode_ctes(pfi, src="bresid", filtered=False)},
-{_ivfpq_probe_ctes(kfi, pfi, nprobe, labels_rel="serving_labels", codes_rel="sc{s}", residual=True)}"""
-
-
-def _ivfpq_residual_upserted_topk_sql(nprobe: int) -> str:
-    return f"""
-WITH {_sql_base()},
-{_ivfpq_residual_upserted_ctes(nprobe)}
-SELECT q_id, neighbor_id, cosine, rank FROM ipranked WHERE rank <= {TOP_K}
-ORDER BY q_id, rank
-"""
-
-
-def _ivfpq_residual_upserted_recall_sql(nprobe: int) -> str:
-    bf, tail = _bf_and_recall_tail("ipqru")
-    return f"""
-WITH {_sql_base()},
-{bf},
-{_ivfpq_residual_upserted_ctes(nprobe)},
-{tail}"""
-
-
-PQ_TOPK_SQL = _pq_topk_sql()
-PQ_RECALL_SQL = _pq_recall_sql()
-
-
-def _serving_nprobe() -> int:
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        SERVING_NPROBE,
-    )
-
-    return SERVING_NPROBE
-
-
-IVFPQ_TOPK_SQL = _ivfpq_topk_sql(_serving_nprobe())
-IVFPQ_RECALL_SQL = _ivfpq_recall_sql(_serving_nprobe())
-IVFPQ_UPSERTED_TOPK_SQL = _ivfpq_upserted_topk_sql(_serving_nprobe())
-IVFPQ_UPSERTED_RECALL_SQL = _ivfpq_upserted_recall_sql(_serving_nprobe())
-IVFPQ_RESIDUAL_TOPK_SQL = _ivfpq_residual_topk_sql(_serving_nprobe())
-IVFPQ_RESIDUAL_RECALL_SQL = _ivfpq_residual_recall_sql(_serving_nprobe())
-IVFPQ_RESIDUAL_UPSERTED_TOPK_SQL = _ivfpq_residual_upserted_topk_sql(_serving_nprobe())
-IVFPQ_RESIDUAL_UPSERTED_RECALL_SQL = _ivfpq_residual_upserted_recall_sql(
-    _serving_nprobe()
+PQ_TOPK_SQL = _pq_sql()
+PQ_RECALL_SQL = _pq_sql(recall=True)
+IVFPQ_TOPK_SQL = _ivfpq_sql(SERVING_NPROBE)
+IVFPQ_RECALL_SQL = _ivfpq_sql(SERVING_NPROBE, recall="ipq")
+IVFPQ_UPSERTED_TOPK_SQL = _ivfpq_sql(SERVING_NPROBE, upserted=True)
+IVFPQ_UPSERTED_RECALL_SQL = _ivfpq_sql(SERVING_NPROBE, upserted=True, recall="ipqu")
+IVFPQ_RESIDUAL_TOPK_SQL = _ivfpq_sql(SERVING_NPROBE, residual=True)
+IVFPQ_RESIDUAL_RECALL_SQL = _ivfpq_sql(SERVING_NPROBE, residual=True, recall="ipqr")
+IVFPQ_RESIDUAL_UPSERTED_TOPK_SQL = _ivfpq_sql(SERVING_NPROBE, upserted=True, residual=True)
+IVFPQ_RESIDUAL_UPSERTED_RECALL_SQL = _ivfpq_sql(
+    SERVING_NPROBE, upserted=True, residual=True, recall="ipqru"
 )
 
 PQ_QUERIES = {

@@ -14,23 +14,33 @@ Three tiers, mirroring a production vector-search stack:
   index), computed with decimal-exact per-dimension sums so the oracle
   hash-matches bit-for-bit regardless of aggregation order.
 
+Every vector tier — these and those of operators/kmeans_ivf.py and
+operators/pq.py — composes one serving core kept in this module, one
+definition per decision: query→cell routing (:func:`_route`), the per-batch top-k of the
+``mapInPandas`` scorers (:func:`_per_query_topk`), the candidates→exact
+re-rank tail (:func:`_candidates_then_exact_rerank`), the final top-k
+(:func:`_top_k`), the cell-index layout (:func:`_write_cells`,
+:func:`_stored_cells`, :func:`_cell_inventory`), and the oracle blocks
+(:func:`_sql_bf`, :func:`_sql_recall`, :func:`_sql_ranked`, …).
+
 Bit-exactness strategy (shared with the DuckDB oracle): every floating
 chain is float→double casts (exact), products, and a LEFT-ASSOCIATED sum
 starting at 0.0 — both engines execute the same IEEE ops in the same order,
 so doubles match to the last ulp. Spark's ``F.aggregate`` fold and an
 explicit ``0.0 + t1 + ... + tN`` SQL chain have identical association.
 
-Corpus contract (enforced loudly, round-10 review): embeddings must be
-non-NULL, fixed-dimension, and NON-ZERO-NORM — cosine is undefined on a
-zero vector and the engines' division renderings diverge (Spark ANSI
-raises / non-ANSI NaN; DuckDB NULL), so a zero vector would break the
-oracle hash gate silently instead of answering. The NULL/ragged guards
-live in ``functions.vectors._stack64``; the zero-norm guard in
-``l2_norm_vec`` (every ``_with_norm`` tier) and in the kNN kernel's own
-norm computations. The k-means TRAINER (operators/kmeans_ivf.py) is the
-deliberate exception: training tolerates zero vectors deterministically
-(norm-1 update, all-tie assignment) — only its serving PROBE requires
-this contract.
+Corpus contract: embeddings must be non-NULL, fixed-dimension, and
+NON-ZERO-NORM — cosine is undefined on a zero vector and the engines'
+division renderings diverge (Spark ANSI raises / non-ANSI NaN; DuckDB
+NULL), so a zero vector would break the oracle hash gate silently instead
+of answering. The NULL/ragged guards live in
+``functions.vectors._stack64``; the zero-norm guard in ``l2_norm_vec``
+(every ``_with_norm`` side, including the cell-index builds), in
+:func:`_stored_norm_guard` (every stored-norm read) and in the kernels'
+own norm computations. The k-means TRAINER (operators/kmeans_ivf.py) is
+the deliberate exception: training tolerates zero vectors
+deterministically (norm-1 update, all-tie assignment) — only its serving
+PROBE requires this contract.
 
 Reference parity note: the reference repo (kafka-connect-storage-cloud-
 formats) has no similarity surface at all — these operators are the
@@ -129,9 +139,8 @@ def _collect_query_matrix(base: DataFrame, query_ids=None):
 
 def _local_query_vectors(spark: SparkSession, q_ids, Qm) -> DataFrame:
     """(q_id, q_emb, q_norm) as an Arrow local relation built from the
-    ALREADY-COLLECTED query matrix — the exact-re-rank's query side
-    without a second corpus scan + Arrow norm pass + broadcast-build job
-    (round 16, guide §2.4/§5: the bytes are in hand on the driver; Q is
+    already-collected query matrix — the exact re-rank's query side
+    without a second corpus scan, norm pass or broadcast-build job (Q is
     bounded by the MAX_QUERIES contract). Bit-identity: ``Qm`` is an
     exact float64 widening of the stored float32 embeddings, so
     ``astype(float32)`` round-trips the stored vector bit-for-bit, and
@@ -158,57 +167,52 @@ def _local_query_vectors(spark: SparkSession, q_ids, Qm) -> DataFrame:
     )
 
 
-def _dot(a: str, b: str):
+def _dot(a: str, b: str, once: bool = False):
     """Arrow-vectorized left-associated double dot product.
 
     Per-dimension accumulation inside the Pandas UDF reproduces the
     oracle's explicit ``0.0 + t1 + ... + tN`` chain bit-for-bit (see
-    functions/vectors.py). Fully-unrolled JVM expressions were tried first:
-    they exceed Janino method limits, and their compile time (not run time)
-    dominated and varied with codegen-cache hits.
+    functions/vectors.py). Fully-unrolled JVM expressions exceed Janino
+    method limits, and their compile time dominated and varied with
+    codegen-cache hits.
+
+    ``once=True`` is the single-evaluation form (``dot_vec_once``) for
+    sites whose downstream FILTER references the cosine: the optimizer
+    would otherwise push the filter below the projection and evaluate the
+    kernel twice per candidate pair. Bit-identical results.
     """
-    from kafka_connect_storage_cloud_formats_spark.functions.vectors import dot_vec
+    from kafka_connect_storage_cloud_formats_spark.functions.vectors import (
+        dot_vec,
+        dot_vec_once,
+    )
 
-    return dot_vec(F.col(a), F.col(b))
-
-
-def _with_norm(df: DataFrame) -> DataFrame:
-    from kafka_connect_storage_cloud_formats_spark.functions.vectors import l2_norm_vec
-
-    return df.withColumn("norm", l2_norm_vec(F.col("embedding")))
+    return (dot_vec_once if once else dot_vec)(F.col(a), F.col(b))
 
 
-def _dot_once(a: str, b: str):
-    """``_dot`` under the single-evaluation contract (guide §4.4): for
-    sites whose downstream FILTER references the cosine — the optimizer
-    would otherwise push the filter below the projection and evaluate
-    the Arrow kernel twice per candidate pair. Bit-identical results."""
-    from kafka_connect_storage_cloud_formats_spark.functions.vectors import dot_vec_once
+def _with_norm(df: DataFrame, once: bool = False) -> DataFrame:
+    """``df`` plus its embedding's L2 ``norm`` (``l2_norm_vec``, which
+    refuses a zero norm). ``once=True`` is the single-evaluation form
+    (``l2_norm_vec_once``) for corpus sides consumed by a cosine-threshold
+    filter, whose inferred ``isnotnull(norm)`` would otherwise re-evaluate
+    the kernel over the whole side. Only for sites with no later
+    row-reducing filter of their own: non-determinism blocks pushdown
+    through the projection, so a ``% QUERY_MOD`` subset filter applied
+    after it would no longer reach the scan."""
+    from kafka_connect_storage_cloud_formats_spark.functions.vectors import (
+        l2_norm_vec,
+        l2_norm_vec_once,
+    )
 
-    return dot_vec_once(F.col(a), F.col(b))
-
-
-def _with_norm_once(df: DataFrame) -> DataFrame:
-    """``_with_norm`` under the single-evaluation contract (guide §4.4):
-    for corpus sides consumed by a cosine-threshold filter, whose
-    inferred ``isnotnull(norm)`` would otherwise re-evaluate the norm
-    kernel over the whole side. ONLY for sites with no later
-    row-reducing filter of their own (non-determinism blocks pushdown
-    through the projection — a ``% QUERY_MOD`` subset filter applied
-    after this would no longer reach the scan)."""
-    from kafka_connect_storage_cloud_formats_spark.functions.vectors import l2_norm_vec_once
-
-    return df.withColumn("norm", l2_norm_vec_once(F.col("embedding")))
+    norm = l2_norm_vec_once if once else l2_norm_vec
+    return df.withColumn("norm", norm(F.col("embedding")))
 
 
 def _stored_norm_guard():
     """The zero-norm corpus-contract refusal applied to an index-STORED
-    ``norm`` column (round 16 — the kmeans index/segment artifacts carry
-    the vector's L2 norm, so probes read it instead of re-running a
-    corpus-wide Arrow norm pass per query). Pure JVM: no-op on every
-    valid row, ``raise_error`` on a zero norm — the same loud wording as
-    ``l2_norm_vec``'s guard, at the same place in the dataflow (the
-    probe's corpus side)."""
+    ``norm`` column, so probes read the norm instead of re-running an
+    Arrow norm pass. Pure JVM: no-op on every valid row, ``raise_error``
+    on a zero norm — the same loud wording as ``l2_norm_vec``'s guard, at
+    the same place in the dataflow (the probe's corpus side)."""
     return F.when(F.col("norm") > 0.0, F.col("norm")).otherwise(
         F.raise_error(
             F.lit(
@@ -221,11 +225,8 @@ def _stored_norm_guard():
 
 def _collect_centroid_matrix(cent_long: DataFrame):
     """(label, dim, centroid) long table → (labels int64[k], matrix
-    float64[k, d]); k is bounded by construction (one row per trained
-    cluster per dim). Lived in operators/kmeans_ivf.py through round 15;
-    moved here in round 16 so the shared :func:`_ivf_probe` can route
-    driver-side (kmeans_ivf imports FROM this module, so the reverse
-    import would be circular — kmeans_ivf re-exports it unchanged)."""
+    float64[k, d]), labels ascending; k is bounded by construction (one
+    row per trained cluster per dim). kmeans_ivf re-exports it."""
     import numpy as np
 
     rows = cent_long.collect()
@@ -239,6 +240,136 @@ def _collect_centroid_matrix(cent_long: DataFrame):
     return labels, M
 
 
+# ---------------------------------------------------------------- serving core
+def _route(q_ids, Qm, labels, M, nprobe: int):
+    """THE query→cell routing kernel: each query's top-``nprobe`` cells by
+    cosine, ties to the lowest label (all cells when ``nprobe`` > k).
+    Returns (qi, ci, qc, qn): per routed pair, the query's row in ``Qm``,
+    the cell's row in ``M``, the raw dot(q, c), and the query's norm.
+
+    The score is the left-associated ``raw += Q[:,d]·M[:,d]`` chain from
+    0.0 divided by |q|·|c| — term-for-term the oracles' ``assign`` CTEs —
+    and a zero-norm query or centroid is refused loudly (no NaN ever
+    reaches the sort)."""
+    import numpy as np
+
+    from kafka_connect_storage_cloud_formats_spark.functions.vectors import (
+        _seq_dot,
+        require_nonzero_norms,
+    )
+
+    if nprobe < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+    qn = require_nonzero_norms(np.sqrt(_seq_dot(Qm, Qm)), "query vector(s)")
+    cn = require_nonzero_norms(np.sqrt(_seq_dot(M, M)), "centroid(s)")
+    raw = np.zeros((len(q_ids), M.shape[0]), dtype=np.float64)
+    for d in range(Qm.shape[1]):
+        raw += Qm[:, d : d + 1] * M[None, :, d]
+    scores = raw / (qn[:, None] * cn[None, :])
+    # lexsort's last key is primary: score desc (an exact sign flip), label asc
+    cells = [np.lexsort((labels, -scores[i]))[:nprobe] for i in range(len(q_ids))]
+    qi = np.repeat(np.arange(len(q_ids)), [len(c) for c in cells])
+    ci = np.concatenate(cells)
+    return qi, ci, raw[qi, ci], qn[qi]
+
+
+def _per_query_topk(q_ids, ids, scores, k: int, col: str):
+    """One Arrow batch's exact top-``k`` neighbours per query by (score
+    desc, neighbor_id asc), self-matches excluded, as a (q_id,
+    neighbor_id, ``col``) frame. The ordering is the global window's, so
+    truncating per batch never drops a global winner."""
+    import numpy as np
+    import pandas as pd
+
+    out_q, out_n, out_c = [], [], []
+    for qi in range(len(q_ids)):
+        mask = ids != q_ids[qi]
+        nb_ids, nb = ids[mask], scores[qi][mask]
+        order = np.lexsort((nb_ids, -nb))[:k]
+        out_q.append(np.full(len(order), q_ids[qi], dtype=np.int64))
+        out_n.append(nb_ids[order])
+        out_c.append(nb[order])
+    return pd.DataFrame(
+        {
+            "q_id": np.concatenate(out_q),
+            "neighbor_id": np.concatenate(out_n),
+            col: np.concatenate(out_c),
+        }
+    )
+
+
+def _top_k(scored: DataFrame) -> DataFrame:
+    """THE final ranking: the top TOP_K (q_id, neighbor_id, cosine) rows
+    per query by (cosine desc, neighbor_id asc), with their ``rank``,
+    ordered by (q_id, rank)."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+        .orderBy("q_id", "rank")
+    )
+
+
+def _candidates_then_exact_rerank(
+    spark: SparkSession, sf_dir: str, scored: DataFrame, q_ids, Qm
+) -> DataFrame:
+    """THE serving tail of every approximate pre-ranker (SQ8, PQ, IVFPQ):
+    the global top-RERANK_CANDIDATES per query over the ``approx_cos``
+    scores, then the exact cosine re-rank on those C·Q rows only. The
+    query side is the already-collected matrix
+    (:func:`_local_query_vectors`)."""
+    wc = Window.partitionBy("q_id").orderBy(F.desc("approx_cos"), F.asc("neighbor_id"))
+    cand = (
+        scored.withColumn("crank", F.row_number().over(wc))
+        .filter(F.col("crank") <= RERANK_CANDIDATES)
+        .select("q_id", "neighbor_id")
+    )
+    qv = _local_query_vectors(spark, q_ids, Qm)
+    cv = _with_norm(_load(spark, sf_dir)).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("n_emb"),
+        F.col("norm").alias("n_norm"),
+    )
+    cosine = _dot("q_emb", "n_emb") / (F.col("q_norm") * F.col("n_norm"))
+    return _top_k(
+        cand.join(F.broadcast(qv), "q_id")
+        .join(cv, "neighbor_id")
+        .select("q_id", "neighbor_id", cosine.alias("cosine"))
+    )
+
+
+def _write_cells(df: DataFrame, tmp: str, label: str = "label") -> None:
+    """THE cell-index layout: (vec_id, embedding, norm) parquet partitioned
+    by the cell ``label`` — written by the label index, the k-means index,
+    its upsert segments and its compactions, so every probe reads one
+    layout and a cell probe is a static partition filter."""
+    cells = df.select("vec_id", "embedding", "norm", F.col(label).alias("label"))
+    cells.write.partitionBy("label").parquet(tmp)
+
+
+def _stored_cells(df: DataFrame, label: str = "label") -> DataFrame:
+    """A norm-carrying cell table as a probe's corpus side — (vec_id,
+    embedding, label, norm) with the zero-norm refusal on the stored
+    norm."""
+    return df.select(
+        "vec_id",
+        "embedding",
+        F.col(label).cast("long").alias("label"),
+        _stored_norm_guard().alias("norm"),
+    )
+
+
+def _cell_inventory(spark: SparkSession, path: str, count: str = "n_vectors") -> DataFrame:
+    """Per-cell row counts read back from a written cell index — the
+    build rows' proof of the write, the cell layout and the read path."""
+    return (
+        spark.read.parquet(path)
+        .groupBy(F.col("label").cast("long").alias("label"))
+        .agg(F.count(F.lit(1)).alias(count))
+        .orderBy("label")
+    )
+
+
 def _sql_dot(a: str, b: str) -> str:
     terms = " + ".join(
         f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(1, DIM + 1)
@@ -248,13 +379,9 @@ def _sql_dot(a: str, b: str) -> str:
 
 def _sql_base() -> str:
     """Shared oracle base: corpus + norms + the query subset. The norm
-    carries the engine's zero-norm refusal MIRRORED as an ``error()``
-    branch (round-11, extending the round-10 ADVICE closure beyond the
-    kmeans probe): the engine side refuses zero-norm embeddings loudly
-    (l2_norm_vec / the probe's driver-side routing guard), so the oracle
-    must fail the same way on
-    degenerate geometry instead of silently ranking NULL cosines — a
-    no-op on every shipped corpus (all norms positive)."""
+    mirrors the engine's zero-norm refusal as an ``error()`` branch, so
+    the oracle fails the same way on degenerate geometry instead of
+    silently ranking NULL cosines — a no-op on every shipped corpus."""
     return f"""
 base AS (SELECT vec_id, embedding, label,
                 CASE WHEN n0 > 0 THEN n0
@@ -264,6 +391,79 @@ base AS (SELECT vec_id, embedding, label,
                FROM embeddings) b0),
 q AS (SELECT * FROM base WHERE vec_id % {QUERY_MOD} = 0)
 """
+
+
+def _sql_top(src: str) -> str:
+    """(q_id, neighbor_id, rank) of ``src``'s cosines, ranked per query —
+    the body of a top-k CTE before its ``WHERE rank <= …``."""
+    return f"""
+  SELECT q_id, neighbor_id FROM (
+    SELECT q_id, neighbor_id,
+           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
+    FROM {src}) r"""
+
+
+def _sql_bf() -> str:
+    """THE brute-force ground truth of every recall oracle: ``bf`` = the
+    exact top-k (q_id, neighbor_id) of each query over ``base``."""
+    return f"""bf_scored AS (
+  SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
+         {_sql_dot('q.embedding', 'c.embedding')} / (q.norm * c.norm) AS cosine
+  FROM q JOIN base c ON c.vec_id <> q.vec_id),
+bf AS ({_sql_top('bf_scored')} WHERE rank <= {TOP_K})"""
+
+
+def _sql_recall(alias: str, ranked: str) -> str:
+    """THE recall tail: ``alias`` = the top-k rows of the ``ranked``
+    relation (a SELECT of q_id, neighbor_id carrying a ``rank``), then
+    (n_queries, hits, possible, recall) against ``bf``."""
+    return f"""{alias} AS ({ranked} WHERE rank <= {TOP_K}),
+h AS (SELECT COUNT(*) AS hits FROM bf JOIN {alias} USING (q_id, neighbor_id)),
+tot AS (SELECT COUNT(DISTINCT q_id) AS n_queries, COUNT(*) AS possible FROM bf)
+SELECT n_queries, hits, possible,
+       CAST(hits AS DOUBLE) / CAST(possible AS DOUBLE) AS recall
+FROM tot, h
+"""
+
+
+def _sql_ranked(name: str, src: str) -> str:
+    """CTE ``name``: ``src``'s (q_id, neighbor_id, cosine) with the final
+    ranking's ``rank``."""
+    return f"""{name} AS (
+  SELECT q_id, neighbor_id, cosine,
+         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
+  FROM {src})"""
+
+
+def _sql_topk(ranked: str) -> str:
+    """The final SELECT of every top-k oracle over a ``_sql_ranked`` CTE."""
+    return f"""SELECT q_id, neighbor_id, cosine, rank FROM {ranked} WHERE rank <= {TOP_K}
+ORDER BY q_id, rank
+"""
+
+
+def _sql_exact_scored(name: str, cand: str) -> str:
+    """CTE ``name``: the exact cosine of each (q_id, neighbor_id) pair of
+    the candidate CTE ``cand``."""
+    return f"""{name} AS (
+  SELECT {cand}.q_id, {cand}.neighbor_id,
+         {_sql_dot('qv.embedding', 'cv.embedding')} / (qv.norm * cv.norm) AS cosine
+  FROM {cand}
+  JOIN base qv ON qv.vec_id = {cand}.q_id
+  JOIN base cv ON cv.vec_id = {cand}.neighbor_id)"""
+
+
+def _sql_rerank(p: str, approx: str) -> str:
+    """The re-rank chain of every pre-ranking oracle: ``{p}cand`` = the
+    top-RERANK_CANDIDATES of ``approx``'s ``approx_cos`` per query, then
+    ``{p}rescored`` = their exact cosines."""
+    return f"""{p}cand AS (
+  SELECT q_id, neighbor_id FROM (
+    SELECT q_id, neighbor_id,
+           ROW_NUMBER() OVER (PARTITION BY q_id
+                              ORDER BY approx_cos DESC, neighbor_id) AS crank
+    FROM {approx}) r WHERE crank <= {RERANK_CANDIDATES}),
+{_sql_exact_scored(p + 'rescored', p + 'cand')}"""
 
 
 # ------------------------------------------------------------ brute-force kNN
@@ -280,25 +480,21 @@ def knn_bruteforce(
     Arrow batch computes the full Q×B cosine block with per-dimension
     left-associated accumulation (bit-identical to the oracle's
     ``0.0 + t1 + … + tN`` chain) and emits only its per-batch exact top-k
-    per query, so the shuffle into the global ranking window carries
-    O(tasks·Q·k) rows — never the O(Q·N) pair stream, and the corpus
-    vectors never cross the Python boundary more than once.
+    per query (:func:`_per_query_topk`), so the shuffle into the global
+    ranking window carries O(tasks·Q·k) rows — never the O(Q·N) pair
+    stream, and the corpus vectors never cross the Python boundary more
+    than once.
     """
     import numpy as np
-    import pandas as pd
 
-    from kafka_connect_storage_cloud_formats_spark.functions.vectors import _seq_dot, _stack64
-
-    base = _load(spark, sf_dir).select("vec_id", "embedding")
-    q_ids, Qm = _collect_query_matrix(base, query_ids)
-    # zero-norm contract enforced by the shared guard (one definition —
-    # functions.vectors.require_nonzero_norms): this tier computes norms
-    # in its own kernel rather than through l2_norm_vec, so it applies
-    # the guard at both of its norm sites
     from kafka_connect_storage_cloud_formats_spark.functions.vectors import (
+        _seq_dot,
+        _stack64,
         require_nonzero_norms,
     )
 
+    base = _load(spark, sf_dir).select("vec_id", "embedding")
+    q_ids, Qm = _collect_query_matrix(base, query_ids)
     q_norm = require_nonzero_norms(np.sqrt(_seq_dot(Qm, Qm)), "query vector(s)")
 
     def score_batches(batches):
@@ -316,30 +512,10 @@ def knn_bruteforce(
             for i in range(E.shape[1]):
                 acc += Qm[:, i : i + 1] * E[None, :, i]
             cos = acc / (q_norm[:, None] * n_norm[None, :])
-            out_q, out_n, out_c = [], [], []
-            for qi in range(len(q_ids)):
-                mask = ids != q_ids[qi]
-                nb_ids, nb_cos = ids[mask], cos[qi][mask]
-                # exact per-batch top-k (cosine desc, neighbor_id asc):
-                # monotone under the global window's identical ordering
-                order = np.lexsort((nb_ids, -nb_cos))[:TOP_K]
-                out_q.append(np.full(len(order), q_ids[qi], dtype=np.int64))
-                out_n.append(nb_ids[order])
-                out_c.append(nb_cos[order])
-            yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cosine": np.concatenate(out_c),
-                }
-            )
+            yield _per_query_topk(q_ids, ids, cos, TOP_K, "cosine")
 
-    scored = base.mapInPandas(score_batches, "q_id long, neighbor_id long, cosine double")
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("q_id", "rank")
+    return _top_k(
+        base.mapInPandas(score_batches, "q_id long, neighbor_id long, cosine double")
     )
 
 
@@ -349,13 +525,8 @@ scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
          {_sql_dot('q.embedding', 'c.embedding')} / (q.norm * c.norm) AS cosine
   FROM q JOIN base c ON c.vec_id <> q.vec_id),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT q_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {TOP_K}
-ORDER BY q_id, rank
-"""
+{_sql_ranked('ranked', 'scored')}
+{_sql_topk('ranked')}"""
 
 
 # ------------------------------------------------------- hyperplane LSH ANN
@@ -484,47 +655,39 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm").alias("n_norm"),
     )
     cosine = _dot("q_emb", "n_emb") / (F.col("q_norm") * F.col("n_norm"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
+    return _top_k(
         cand.join(qv, "q_id")
         .join(cv, "neighbor_id")
         .select("q_id", "neighbor_id", cosine.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("q_id", "rank")
     )
 
 
-def _ann_sql() -> str:
-    band_rows = ", ".join(str(b) for b in range(LSH_N_BANDS))
-    mask = 2**LSH_BAND_BITS - 1
-    return f"""
-WITH {_sql_base()},
-sig AS (SELECT vec_id, {_sql_signature()} AS sig FROM base),
+def _sql_bands() -> str:
+    """``sig``/``bands``: every corpus vector's hyperplane signature and
+    its (band_id, band_val) rows."""
+    return f"""sig AS (SELECT vec_id, {_sql_signature()} AS sig FROM base),
 bands AS (
-  SELECT vec_id, b.band_id, (sig >> (band_id * {LSH_BAND_BITS})) & {mask} AS band_val
-  FROM sig, (SELECT UNNEST([{band_rows}]) AS band_id) b),
+  SELECT vec_id, b.band_id, (sig >> (band_id * {LSH_BAND_BITS})) & {2**LSH_BAND_BITS - 1} AS band_val
+  FROM sig, (SELECT UNNEST([{', '.join(str(b) for b in range(LSH_N_BANDS))}]) AS band_id) b)"""
+
+
+def _sql_lsh(scored: str) -> str:
+    """The LSH probe: bands → the query bands ``qb`` → the band-sharing
+    ``cand`` pairs → their exact cosines as CTE ``scored``."""
+    return f"""{_sql_bands()},
 qb AS (SELECT vec_id AS q_id, band_id, band_val FROM bands WHERE vec_id % {QUERY_MOD} = 0),
 cand AS (
   SELECT DISTINCT qb.q_id, c.vec_id AS neighbor_id
   FROM qb JOIN bands c USING (band_id, band_val)
   WHERE c.vec_id <> qb.q_id),
-scored AS (
-  SELECT cand.q_id, cand.neighbor_id,
-         {_sql_dot('qv.embedding', 'cv.embedding')} / (qv.norm * cv.norm) AS cosine
-  FROM cand
-  JOIN base qv ON qv.vec_id = cand.q_id
-  JOIN base cv ON cv.vec_id = cand.neighbor_id),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT q_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {TOP_K}
-ORDER BY q_id, rank
-"""
+{_sql_exact_scored(scored, 'cand')}"""
 
 
-ANN_LSH_SQL = _ann_sql()
+ANN_LSH_SQL = f"""
+WITH {_sql_base()},
+{_sql_lsh('scored')},
+{_sql_ranked('ranked', 'scored')}
+{_sql_topk('ranked')}"""
 
 
 # ---------------------------------------------------------------- IVF coarse
@@ -589,7 +752,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int = 1) -> DataFrame:
 
     Scale shape: the centroid table is tiny (n_labels rows) and collected
     driver-side; the query→cell routing happens on the driver over the
-    bounded query matrix (see :func:`_ivf_probe`, round 16), so the bucket
+    bounded query matrix (see :func:`_ivf_probe`), so the bucket
     restriction turns the O(Q·N) scan into O(Q·nprobe·N/n_labels) through
     a PLAN-TIME ``label IN (…)`` filter; the corpus-scale re-rank keeps
     the Arrow path.
@@ -610,50 +773,24 @@ def _ivf_probe(
     corpus: DataFrame,
     nprobe: int = 1,
 ) -> DataFrame:
-    """THE IVF probe, shared by ``ivf_topk`` (live-derived centroids +
-    live corpus) and ``ivf_topk_pruned`` (materialized centroid parquet +
-    label-partitioned index): both registry entries assert the same
-    oracle, so the assignment tie-break / nprobe / re-rank logic must
-    not exist in two copies that can drift. ``cent_long`` is the coarse
-    quantizer in long (label, dim, centroid) form; ``corpus`` carries
-    (vec_id, embedding, norm, label). ``nprobe`` widens the assignment to
-    the top-N centroids per query (same ordering/tie-break as the final
-    ranking: ccos desc, label asc); the downstream bucket join and global
-    top-k are nprobe-blind.
+    """THE IVF probe of the label and k-means tiers: ``cent_long`` is the
+    coarse quantizer in long (label, dim, centroid) form; ``corpus``
+    carries (vec_id, embedding, norm, label). Each query routes to its
+    top-``nprobe`` cells (:func:`_route`), then the exact cosine top-k
+    over those cells' members (:func:`_top_k`).
 
-    Round 16 (guide §2.4 — remove shuffles outright): the query→cell
-    ASSIGNMENT now routes DRIVER-SIDE, the ``pq._route_df`` shape the
-    IVFPQ family has served from since round 15. Both routing inputs are
-    metadata-scale by standing contracts — centroids are k×d
-    (:func:`_collect_centroid_matrix`, the same k-bounded collect
-    ``assign_to_published_quantizer`` already rides) and the query side
-    is the Q ≤ MAX_QUERIES matrix (:func:`_collect_query_matrix`'s
-    LIMIT-capped collect, the knn/sq8/pq/ivfpq tiers' shared posture) —
-    and the routing math is the identical left-associated chain
-    (``raw += Q[:,d]·M[:,d]`` from 0.0, score = raw/(|q|·|c|), ties to
-    the lowest cell), so the routed pairs are bit-equal to the old
-    distributed window's. What the plan loses: the centroid
-    groupBy+broadcast subtree, the Q×k crossJoin, and the q_id window
-    exchange — 2-3 sequential AQE job rounds per probe row. What it
-    gains: the routed cell set is now a PLAN-TIME literal, so the bucket
-    restriction is a STATIC ``label IN (…)`` partition filter on the
-    index scan (strictly earlier than the old dynamic pruning — no
-    pruning subquery on the probe's critical path at all)."""
+    Both routing inputs are metadata-scale — the k×d centroid matrix and
+    the Q ≤ MAX_QUERIES query matrix — so routing runs on the driver and
+    the routed cell set is a PLAN-TIME literal: on a materialized index
+    the bucket restriction is a static ``label IN (…)`` partition filter,
+    with no pruning subquery on the probe's critical path."""
     import numpy as np
     import pandas as pd
 
-    from kafka_connect_storage_cloud_formats_spark.functions.vectors import (
-        _seq_dot,
-        require_nonzero_norms,
-    )
-
-    if nprobe < 1:
-        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
     # the two routing inputs are INDEPENDENT collect jobs (centroid table
     # vs query subset scan) — overlap them from a 2-thread pool so the
-    # probe pays one job-round of latency, not two (guide §2.6; job
-    # descriptions are thread-local, artifact recording handles
-    # frame-less threads — artifacts.py cross-thread fallback)
+    # probe pays one job-round of latency, not two (job descriptions are
+    # thread-local; artifact recording handles frame-less threads)
     from concurrent.futures import ThreadPoolExecutor
 
     base = _load(spark, sf_dir).select("vec_id", "embedding")
@@ -662,63 +799,41 @@ def _ivf_probe(
         fut_q = pool.submit(_collect_query_matrix, base)
         labels, M = fut_c.result()
         q_ids, Qm = fut_q.result()
-    q_norm = require_nonzero_norms(np.sqrt(_seq_dot(Qm, Qm)), "query vector(s)")
-    c_norm = require_nonzero_norms(np.sqrt(_seq_dot(M, M)), "centroid(s)")
-    raw = np.zeros((len(q_ids), M.shape[0]), dtype=np.float64)
-    for d in range(Qm.shape[1]):  # left-associated — the oracle's assign chain
-        raw += Qm[:, d : d + 1] * M[None, :, d]
-    scores = raw / (q_norm[:, None] * c_norm[None, :])
-    route_q, route_l, route_e, route_n = [], [], [], []
-    for qi in range(len(q_ids)):
-        # ccos desc, label asc — lexsort's last key is primary; -score is
-        # an exact IEEE sign flip (no NaNs: zero norms raised above)
-        order = np.lexsort((labels, -scores[qi]))[:nprobe]
-        for c in order:
-            route_q.append(int(q_ids[qi]))
-            route_l.append(int(labels[c]))
-            # float64→float32 round-trips exactly (Qm is an exact widening
-            # of the stored float32 embedding), so q_emb is the stored
-            # vector bit-for-bit and the re-rank kernel sees what the old
-            # distributed q-side scan fed it
-            route_e.append(Qm[qi].astype(np.float32))
-            route_n.append(float(q_norm[qi]))
+    qi, ci, _, qn = _route(q_ids, Qm, labels, M, nprobe)
+    # float64→float32 round-trips exactly (Qm is an exact widening of the
+    # stored float32 embedding), so q_emb is the stored vector bit-for-bit
     assigned = spark.createDataFrame(
         pd.DataFrame(
             {
-                "q_id": np.array(route_q, dtype=np.int64),
-                "c_label": np.array(route_l, dtype=np.int64),
-                "q_emb": route_e,
-                "q_norm": np.array(route_n, dtype=np.float64),
+                "q_id": q_ids[qi],
+                "c_label": labels[ci],
+                "q_emb": [Qm[i].astype(np.float32) for i in qi],
+                "q_norm": qn,
             }
         ),
         schema="q_id long, c_label long, q_emb array<float>, q_norm double",
     )
-    probed = sorted(set(route_l))
     cosine = _dot("q_emb", "embedding") / (F.col("q_norm") * F.col("norm"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     # The label filter is result-neutral (the equi-join admits routed
     # cells only) but plan-load-bearing: on the materialized index it is
-    # a static partition filter — the probe scans assigned cells only,
-    # with no DPP subquery. The routed side itself is a Q·nprobe-row
-    # Arrow local relation; the planner broadcasts it off its own exact
-    # size estimate (no hint needed — bounded by the MAX_QUERIES
-    # contract, same doctrine as _route_df's member join).
-    return (
-        corpus.filter(F.col("label").isin(probed))
+    # a static partition filter. The routed side is a Q·nprobe-row Arrow
+    # local relation; the planner broadcasts it off its own exact size
+    # estimate (bounded by the MAX_QUERIES contract).
+    return _top_k(
+        corpus.filter(F.col("label").isin(sorted(set(labels[ci].tolist()))))
         .join(
             assigned,
             (F.col("label") == F.col("c_label")) & (F.col("vec_id") != F.col("q_id")),
         )
         .select("q_id", F.col("vec_id").alias("neighbor_id"), cosine.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("q_id", "rank")
     )
 
 
-IVF_TOPK_SQL = f"""
-WITH {_sql_base()},
-pos AS (
+def _sql_label_probe(scored: str) -> str:
+    """The label-quantizer probe: decimal-exact label centroids → each
+    query's nearest centroid (``assigned``) → the exact cosines of its
+    cell's members as CTE ``scored``."""
+    return f"""pos AS (
   SELECT label, i - 1 AS dim, embedding[i] AS val
   FROM embeddings, UNNEST(range(1, {DIM + 1})) AS t(i)),
 cent_long AS (
@@ -743,52 +858,48 @@ assigned AS (
     SELECT q_id, c_label,
            ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY ccos DESC, c_label) AS rn
     FROM assign) r WHERE rn = 1),
-scored AS (
+{scored} AS (
   SELECT a.q_id, c.vec_id AS neighbor_id,
          {_sql_dot('qv.embedding', 'c.embedding')} / (qv.norm * c.norm) AS cosine
   FROM assigned a
   JOIN base qv ON qv.vec_id = a.q_id
-  JOIN base c ON c.label = a.c_label AND c.vec_id <> a.q_id),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT q_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {TOP_K}
-ORDER BY q_id, rank
-"""
+  JOIN base c ON c.label = a.c_label AND c.vec_id <> a.q_id)"""
+
+
+IVF_TOPK_SQL = f"""
+WITH {_sql_base()},
+{_sql_label_probe('scored')},
+{_sql_ranked('ranked', 'scored')}
+{_sql_topk('ranked')}"""
 
 
 def build_ivf_index(
     spark: SparkSession, sf_dir: str, out_dir: str | None = None, force: bool = False
 ) -> str:
-    """Materialize the IVF index: the corpus written to parquet PARTITIONED
-    BY the coarse-quantizer bucket (here the label column, which is what
-    ``ivf_topk`` probes). At 100 TB this is the index-build job; probes then
-    touch only assigned buckets via partition pruning. Returns the path.
+    """Materialize the label-quantizer IVF index in the shared cell layout
+    (:func:`_write_cells`): (vec_id, embedding, norm) partitioned by the
+    label column ``ivf_topk`` probes, with the norm computed by
+    ``l2_norm_vec`` — so a zero-norm corpus is refused here, at build
+    time. Returns the path.
 
-    The index is TWO artifacts: the bucket-partitioned corpus AND the
+    The index is TWO artifacts: the cell-partitioned corpus AND the
     centroid table (`<out_dir>_centroids`) — a probe reads the tiny
-    centroid parquet instead of re-aggregating the full corpus for the
-    coarse quantizer (the serving split of every IVF system: train/build
-    once, probe cheap).
+    centroid parquet instead of re-aggregating the full corpus.
 
     The default path is CONTENT-KEYED (sf basename + a fingerprint of the
-    embeddings parquet, see artifacts.py): the build is a once-per-corpus
-    setup cost shared by every probe in every session, a regenerated corpus
-    can never silently hit a stale index, and publication is an atomic
-    rename so concurrent builders/readers never observe partial state.
-    ``force=True`` re-runs the build (the ``ivf_index_build`` registry
-    entry benches exactly that) without ever un-publishing the index."""
+    embeddings parquet, see artifacts.py) and its params token names the
+    layout version, so a regenerated corpus or an older layout can never
+    be served; publication is an atomic rename. ``force=True`` re-runs the
+    build (the ``ivf_index_build`` row benches exactly that) without ever
+    un-publishing the index."""
     from kafka_connect_storage_cloud_formats_spark.artifacts import artifact_path, ensure_artifact
 
     if out_dir is None:
-        # params token = derivation version + vector dim: bump "v1" if the
-        # index layout or centroid math ever changes, so a retuned build
-        # can't silently serve the previous scheme's artifact.
-        out_dir = artifact_path("ivf_index", sf_dir, "embeddings", params=f"v1d{DIM}", spark=spark)
+        # "n": the index stores the vector norm (the k-means index convention)
+        out_dir = artifact_path("ivf_index", sf_dir, "embeddings", params=f"v1d{DIM}n", spark=spark)
     ensure_artifact(
         out_dir,
-        lambda tmp: _load(spark, sf_dir).write.partitionBy("label").parquet(tmp),
+        lambda tmp: _write_cells(_with_norm(_load(spark, sf_dir)), tmp),
         spark=spark,
         force=force,
     )
@@ -803,17 +914,10 @@ def build_ivf_index(
 
 def ivf_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF index-build job as a first-class registered step: (re)writes
-    the label-partitioned parquet index, then returns the per-bucket
-    inventory read back FROM the index files (proving the write, bucket
-    layout, and read path). Benching this entry measures the honest build
-    cost; ``ivf_topk_pruned`` then measures the probe alone."""
-    path = build_ivf_index(spark, sf_dir, force=True)
-    return (
-        spark.read.parquet(path)
-        .groupBy(F.col("label").cast("long").alias("label"))
-        .agg(F.count(F.lit(1)).alias("n_vectors"))
-        .orderBy("label")
-    )
+    the label-partitioned index, then returns the per-bucket inventory
+    read back FROM the index files. Benching this entry measures the
+    honest build cost; ``ivf_topk_pruned`` then measures the probe alone."""
+    return _cell_inventory(spark, build_ivf_index(spark, sf_dir, force=True))
 
 
 IVF_INDEX_BUILD_SQL = """
@@ -823,32 +927,23 @@ FROM embeddings GROUP BY label ORDER BY label
 
 
 def ivf_topk_pruned(spark: SparkSession, sf_dir: str, nprobe: int = 1) -> DataFrame:
-    """IVF search against the *materialized* index (nprobe=1): queries are
-    routed driver-side to their nearest centroids (round 16 — see
-    :func:`_ivf_probe`), so the label-partitioned parquet written by
-    :func:`build_ivf_index` is scanned under a STATIC ``label IN (…)``
-    partition filter — assigned buckets only, known at plan time
-    (strictly earlier than the dynamic partition pruning the pre-r16
-    probe relied on; asserted in tests/test_similarity.py). Results are
-    identical to :func:`ivf_topk` (same oracle SQL): the index changes
-    the access path, never the answer.
+    """IVF search against the *materialized* index: the shared
+    :func:`_ivf_probe` over the centroid table and the stored cells of
+    :func:`build_ivf_index`, so the index scan carries a STATIC
+    ``label IN (…)`` partition filter and reads stored norms (the only
+    Python stage left is the re-rank dot). Results are identical to
+    :func:`ivf_topk` (same oracle SQL): the index changes the access path,
+    never the answer.
     """
     from kafka_connect_storage_cloud_formats_spark.artifacts import published_df
 
     index_path = build_ivf_index(spark, sf_dir)
-    stored = _with_norm(
-        published_df(spark, index_path).select(
-            "vec_id", "embedding", F.col("label").cast("long").alias("label")
-        )
-    )
-    # Coarse quantizer read from the materialized centroid table (doubles
-    # round-trip parquet exactly) — the probe never re-aggregates the
-    # corpus; both index artifacts come from the same build. Since round
-    # 16 the routing is driver-side (see _ivf_probe), so the index scan is
-    # pruned by a STATIC label IN (…) partition filter — no pruning
-    # subquery on the probe's critical path at all.
     return _ivf_probe(
-        spark, sf_dir, published_df(spark, index_path + "_centroids"), stored, nprobe=nprobe
+        spark,
+        sf_dir,
+        published_df(spark, index_path + "_centroids"),
+        _stored_cells(published_df(spark, index_path)),
+        nprobe=nprobe,
     )
 
 
@@ -936,14 +1031,12 @@ def sq8_topk(spark: SparkSession, sf_dir: str, query_ids=None) -> DataFrame:
     :func:`knn_bruteforce` — ``_collect_query_matrix``); each Arrow
     batch computes the integer dot block (np.matmul on int64 — exact,
     order-independent), emits its per-batch top-RERANK_CANDIDATES per
-    query; a global window keeps the overall top-C; only those C·Q rows
-    join back to the full float vectors for the exact cosine re-rank. At
-    100 TB the pre-ranking scan reads ~1/4 the bytes of the float path —
-    literally, since late round 8 (see :func:`_ensure_sq8_codes`) — and
-    the expensive exact math touches only C·Q rows.
+    query; the shared :func:`_candidates_then_exact_rerank` keeps the
+    overall top-C and re-ranks only those C·Q rows against the full float
+    vectors. At 100 TB the pre-ranking scan reads ~1/4 the bytes of the
+    float path (see :func:`_ensure_sq8_codes`).
     """
     import numpy as np
-    import pandas as pd
 
     base = _load(spark, sf_dir).select("vec_id", "embedding")
     q_ids, Qm = _collect_query_matrix(base, query_ids)
@@ -962,64 +1055,39 @@ def sq8_topk(spark: SparkSession, sf_dir: str, query_ids=None) -> DataFrame:
                 np.sqrt(Qn.astype(np.float64))[:, None]
                 * np.sqrt(En.astype(np.float64))[None, :]
             )
-            out_q, out_n, out_c = [], [], []
-            for qi in range(len(q_ids)):
-                mask = ids != q_ids[qi]
-                nb_ids, nb_cos = ids[mask], acos[qi][mask]
-                order = np.lexsort((nb_ids, -nb_cos))[:RERANK_CANDIDATES]
-                out_q.append(np.full(len(order), q_ids[qi], dtype=np.int64))
-                out_n.append(nb_ids[order])
-                out_c.append(nb_cos[order])
-            yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "approx_cos": np.concatenate(out_c),
-                }
-            )
+            yield _per_query_topk(q_ids, ids, acos, RERANK_CANDIDATES, "approx_cos")
 
     scored = codes.mapInPandas(
         score_batches, "q_id long, neighbor_id long, approx_cos double"
     )
-    wc = Window.partitionBy("q_id").orderBy(F.desc("approx_cos"), F.asc("neighbor_id"))
-    cand = (
-        scored.withColumn("crank", F.row_number().over(wc))
-        .filter(F.col("crank") <= RERANK_CANDIDATES)
-        .select("q_id", "neighbor_id")
-    )
-    # qv from the ALREADY-COLLECTED query matrix (round 16 — the pre-r16
-    # form re-scanned the corpus for the same Q rows and paid an Arrow
-    # norm pass + a broadcast-build job for bytes the driver already
-    # held; see _local_query_vectors for the bit-identity argument)
-    qv = _local_query_vectors(spark, q_ids, Qm)
-    cv = _with_norm(_load(spark, sf_dir)).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("norm").alias("n_norm"),
-    )
-    cosine = _dot("q_emb", "n_emb") / (F.col("q_norm") * F.col("n_norm"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.join(F.broadcast(qv), "q_id")
-        .join(cv, "neighbor_id")
-        .select("q_id", "neighbor_id", cosine.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("q_id", "rank")
-    )
+    return _candidates_then_exact_rerank(spark, sf_dir, scored, q_ids, Qm)
 
 
-def _sq8_sql() -> str:
-    idot = " + ".join(f"qa.q[{i}] * cb.q[{i}]" for i in range(1, DIM + 1))
-    return f"""
-WITH {_sql_base()},
-quant AS (
+_SQL_SQ8_QUANT = """quant AS (
   SELECT vec_id, embedding, norm,
          CASE WHEN s = 0 THEN 1.0 ELSE s END AS s
   FROM (SELECT vec_id, embedding, norm,
                list_max(list_transform(embedding,
                         x -> abs(CAST(x AS DOUBLE)))) AS s
-        FROM base) t),
+        FROM base) t)"""
+
+
+def _sql_sq8_rerank() -> str:
+    """The int8 pre-ranking ``approx`` over the ``cn`` code table, then
+    the shared re-rank chain (``cand``/``rescored``)."""
+    idot = " + ".join(f"qa.q[{i}] * cb.q[{i}]" for i in range(1, DIM + 1))
+    return f"""approx AS (
+  SELECT qa.vec_id AS q_id, cb.vec_id AS neighbor_id,
+         CAST(({idot}) AS DOUBLE)
+           / (sqrt(CAST(qa.qn AS DOUBLE)) * sqrt(CAST(cb.qn AS DOUBLE))) AS approx_cos
+  FROM cn qa JOIN cn cb ON cb.vec_id <> qa.vec_id
+  WHERE qa.vec_id % {QUERY_MOD} = 0),
+{_sql_rerank('', 'approx')}"""
+
+
+SQ8_TOPK_SQL = f"""
+WITH {_sql_base()},
+{_SQL_SQ8_QUANT},
 codes AS (
   SELECT vec_id, embedding, norm,
          list_transform(embedding,
@@ -1029,34 +1097,9 @@ cn AS (
   SELECT vec_id, embedding, norm, q,
          CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
   FROM codes),
-approx AS (
-  SELECT qa.vec_id AS q_id, cb.vec_id AS neighbor_id,
-         CAST(({idot}) AS DOUBLE)
-           / (sqrt(CAST(qa.qn AS DOUBLE)) * sqrt(CAST(cb.qn AS DOUBLE))) AS approx_cos
-  FROM cn qa JOIN cn cb ON cb.vec_id <> qa.vec_id
-  WHERE qa.vec_id % {QUERY_MOD} = 0),
-cand AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q_id
-                              ORDER BY approx_cos DESC, neighbor_id) AS crank
-    FROM approx) r WHERE crank <= {RERANK_CANDIDATES}),
-rescored AS (
-  SELECT cand.q_id, cand.neighbor_id,
-         {_sql_dot('qv.embedding', 'cv.embedding')} / (qv.norm * cv.norm) AS cosine
-  FROM cand
-  JOIN base qv ON qv.vec_id = cand.q_id
-  JOIN base cv ON cv.vec_id = cand.neighbor_id),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM rescored)
-SELECT q_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {TOP_K}
-ORDER BY q_id, rank
-"""
-
-
-SQ8_TOPK_SQL = _sq8_sql()
+{_sql_sq8_rerank()},
+{_sql_ranked('ranked', 'rescored')}
+{_sql_topk('ranked')}"""
 
 
 # The synthetic corpus has no true vector dups (max pairwise cosine ≈ 0.51);
@@ -1081,7 +1124,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threshold filter below otherwise duplicates every Arrow kernel —
     # this plan paid l2_norm_vec 4x (2x per side) and dot_vec 2x
     # (r15 optimization; plans/r15/dedup_embedding_cosine_{before,after}).
-    base = _with_norm_once(_load(spark, sf_dir))
+    base = _with_norm(_load(spark, sf_dir), once=True)
     # Both self-join sides consume the band rows, exploded from the
     # corpus-keyed signature artifact (the signature UDF runs once per
     # corpus content, not per execution). The streamed (a) side spreads —
@@ -1120,7 +1163,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = base.select(
         F.col("vec_id").alias("d2"), F.col("embedding").alias("e2"), F.col("norm").alias("n2")
     )
-    cosine = _dot_once("e1", "e2") / (F.col("n1") * F.col("n2"))
+    cosine = _dot("e1", "e2", once=True) / (F.col("n1") * F.col("n2"))
     return (
         cand.join(v1, "d1")
         .join(v2, "d2")
@@ -1133,10 +1176,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DEDUP_EMBEDDING_SQL = f"""
 WITH {_sql_base()},
-sig AS (SELECT vec_id, {_sql_signature()} AS sig FROM base),
-bands AS (
-  SELECT vec_id, b.band_id, (sig >> (band_id * {LSH_BAND_BITS})) & {2**LSH_BAND_BITS - 1} AS band_val
-  FROM sig, (SELECT UNNEST([{', '.join(str(b) for b in range(LSH_N_BANDS))}]) AS band_id) b),
+{_sql_bands()},
 cand AS (
   SELECT DISTINCT a.vec_id AS d1, b.vec_id AS d2
   FROM bands a JOIN bands b USING (band_id, band_val)
@@ -1225,49 +1265,11 @@ def ann_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_vs_truth(spark, sf_dir, ann_lsh_topk(spark, sf_dir))
 
 
-def _ann_recall_sql() -> str:
-    band_rows = ", ".join(str(b) for b in range(LSH_N_BANDS))
-    mask = 2**LSH_BAND_BITS - 1
-    return f"""
+ANN_RECALL_SQL = f"""
 WITH {_sql_base()},
-bf_scored AS (
-  SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         {_sql_dot('q.embedding', 'c.embedding')} / (q.norm * c.norm) AS cosine
-  FROM q JOIN base c ON c.vec_id <> q.vec_id),
-bf AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM bf_scored) r WHERE rank <= {TOP_K}),
-sig AS (SELECT vec_id, {_sql_signature()} AS sig FROM base),
-bands AS (
-  SELECT vec_id, b.band_id, (sig >> (band_id * {LSH_BAND_BITS})) & {mask} AS band_val
-  FROM sig, (SELECT UNNEST([{band_rows}]) AS band_id) b),
-qb AS (SELECT vec_id AS q_id, band_id, band_val FROM bands WHERE vec_id % {QUERY_MOD} = 0),
-cand AS (
-  SELECT DISTINCT qb.q_id, c.vec_id AS neighbor_id
-  FROM qb JOIN bands c USING (band_id, band_val)
-  WHERE c.vec_id <> qb.q_id),
-ann_scored AS (
-  SELECT cand.q_id, cand.neighbor_id,
-         {_sql_dot('qv.embedding', 'cv.embedding')} / (qv.norm * cv.norm) AS cosine
-  FROM cand
-  JOIN base qv ON qv.vec_id = cand.q_id
-  JOIN base cv ON cv.vec_id = cand.neighbor_id),
-ann AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM ann_scored) r WHERE rank <= {TOP_K}),
-h AS (SELECT COUNT(*) AS hits FROM bf JOIN ann USING (q_id, neighbor_id)),
-tot AS (SELECT COUNT(DISTINCT q_id) AS n_queries, COUNT(*) AS possible FROM bf)
-SELECT n_queries, hits, possible,
-       CAST(hits AS DOUBLE) / CAST(possible AS DOUBLE) AS recall
-FROM tot, h
-"""
-
-
-ANN_RECALL_SQL = _ann_recall_sql()
+{_sql_bf()},
+{_sql_lsh('ann_scored')},
+{_sql_recall('ann', _sql_top('ann_scored'))}"""
 
 
 def sq8_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1278,26 +1280,10 @@ def sq8_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_vs_truth(spark, sf_dir, sq8_topk(spark, sf_dir))
 
 
-def _sq8_recall_sql() -> str:
-    idot = " + ".join(f"qa.q[{i}] * cb.q[{i}]" for i in range(1, DIM + 1))
-    return f"""
+SQ8_RECALL_SQL = f"""
 WITH {_sql_base()},
-bf_scored AS (
-  SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         {_sql_dot('q.embedding', 'c.embedding')} / (q.norm * c.norm) AS cosine
-  FROM q JOIN base c ON c.vec_id <> q.vec_id),
-bf AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM bf_scored) r WHERE rank <= {TOP_K}),
-quant AS (
-  SELECT vec_id, embedding, norm,
-         CASE WHEN s = 0 THEN 1.0 ELSE s END AS s
-  FROM (SELECT vec_id, embedding, norm,
-               list_max(list_transform(embedding,
-                        x -> abs(CAST(x AS DOUBLE)))) AS s
-        FROM base) t),
+{_sql_bf()},
+{_SQL_SQ8_QUANT},
 codes AS (
   SELECT vec_id,
          list_transform(embedding,
@@ -1307,38 +1293,8 @@ cn AS (
   SELECT vec_id, q,
          CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qn
   FROM codes),
-approx AS (
-  SELECT qa.vec_id AS q_id, cb.vec_id AS neighbor_id,
-         CAST(({idot}) AS DOUBLE)
-           / (sqrt(CAST(qa.qn AS DOUBLE)) * sqrt(CAST(cb.qn AS DOUBLE))) AS approx_cos
-  FROM cn qa JOIN cn cb ON cb.vec_id <> qa.vec_id
-  WHERE qa.vec_id % {QUERY_MOD} = 0),
-cand AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q_id
-                              ORDER BY approx_cos DESC, neighbor_id) AS crank
-    FROM approx) r WHERE crank <= {RERANK_CANDIDATES}),
-rescored AS (
-  SELECT cand.q_id, cand.neighbor_id,
-         {_sql_dot('qv.embedding', 'cv.embedding')} / (qv.norm * cv.norm) AS cosine
-  FROM cand
-  JOIN base qv ON qv.vec_id = cand.q_id
-  JOIN base cv ON cv.vec_id = cand.neighbor_id),
-sq AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM rescored) r WHERE rank <= {TOP_K}),
-h AS (SELECT COUNT(*) AS hits FROM bf JOIN sq USING (q_id, neighbor_id)),
-tot AS (SELECT COUNT(DISTINCT q_id) AS n_queries, COUNT(*) AS possible FROM bf)
-SELECT n_queries, hits, possible,
-       CAST(hits AS DOUBLE) / CAST(possible AS DOUBLE) AS recall
-FROM tot, h
-"""
-
-
-SQ8_RECALL_SQL = _sq8_recall_sql()
+{_sql_sq8_rerank()},
+{_sql_recall('sq', _sql_top('rescored'))}"""
 
 
 def ivf_recall_at_10(spark: SparkSession, sf_dir: str, nprobe: int = 1) -> DataFrame:
@@ -1368,63 +1324,11 @@ def ivf_recall_at_10(spark: SparkSession, sf_dir: str, nprobe: int = 1) -> DataF
     )
 
 
-def _ivf_recall_sql() -> str:
-    return f"""
+IVF_RECALL_SQL = f"""
 WITH {_sql_base()},
-bf_scored AS (
-  SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         {_sql_dot('q.embedding', 'c.embedding')} / (q.norm * c.norm) AS cosine
-  FROM q JOIN base c ON c.vec_id <> q.vec_id),
-bf AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM bf_scored) r WHERE rank <= {TOP_K}),
-pos AS (
-  SELECT label, i - 1 AS dim, embedding[i] AS val
-  FROM embeddings, UNNEST(range(1, {DIM + 1})) AS t(i)),
-cent_long AS (
-  SELECT label, dim,
-         CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE) * 1e15) AS DECIMAL(38,0))) AS DOUBLE)
-           / 1e15 / CAST(COUNT(*) AS DOUBLE) AS centroid
-  FROM pos GROUP BY label, dim),
-cents AS (
-  SELECT label AS c_label, list(centroid ORDER BY dim) AS c_emb
-  FROM cent_long GROUP BY label),
-cents2 AS (
-  SELECT c_label, c_emb,
-         CASE WHEN cn0 > 0 THEN cn0
-              ELSE error('zero-norm centroid: cosine similarity is undefined') END AS c_norm
-  FROM (SELECT c_label, c_emb, sqrt({_sql_dot('c_emb', 'c_emb')}) AS cn0 FROM cents) c0),
-assign AS (
-  SELECT q.vec_id AS q_id, c_label,
-         {_sql_dot('q.embedding', 'c_emb')} / (q.norm * c_norm) AS ccos
-  FROM q, cents2),
-assigned AS (
-  SELECT q_id, c_label FROM (
-    SELECT q_id, c_label,
-           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY ccos DESC, c_label) AS rn
-    FROM assign) r WHERE rn = 1),
-ivf_scored AS (
-  SELECT a.q_id, c.vec_id AS neighbor_id,
-         {_sql_dot('qv.embedding', 'c.embedding')} / (qv.norm * c.norm) AS cosine
-  FROM assigned a
-  JOIN base qv ON qv.vec_id = a.q_id
-  JOIN base c ON c.label = a.c_label AND c.vec_id <> a.q_id),
-ivf AS (
-  SELECT q_id, neighbor_id FROM (
-    SELECT q_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank
-    FROM ivf_scored) r WHERE rank <= {TOP_K}),
-h AS (SELECT COUNT(*) AS hits FROM bf JOIN ivf USING (q_id, neighbor_id)),
-tot AS (SELECT COUNT(DISTINCT q_id) AS n_queries, COUNT(*) AS possible FROM bf)
-SELECT n_queries, hits, possible,
-       CAST(hits AS DOUBLE) / CAST(possible AS DOUBLE) AS recall
-FROM tot, h
-"""
-
-
-IVF_RECALL_SQL = _ivf_recall_sql()
+{_sql_bf()},
+{_sql_label_probe('ivf_scored')},
+{_sql_recall('ivf', _sql_top('ivf_scored'))}"""
 
 
 SIMILARITY_QUERIES = {

@@ -250,8 +250,9 @@ class StreamingCuration:
         job's accepted streaming code segments, one (vec_id, label,
         codes) row per vector — exactly the shape
         ``pq._ivfpq_serving_members`` builds for batch drops, so the
-        shared LUT-ADC probe (``pq._route_df``/``_build_lut``/
-        ``_lut_adc_rerank`` with the published split structures) runs
+        shared LUT-ADC probe (the routing kernel ``similarity._route``
+        through ``pq._route_df``, then ``pq._build_lut``/
+        ``pq._lut_adc_rerank`` with the published split structures) runs
         unchanged over a streaming deployment (pinned twin-job-equal to
         the batch-encoded union in tests)."""
         if self.ann_sf_dir is None:
@@ -283,12 +284,14 @@ class StreamingCuration:
     def ann_serving_view(self) -> DataFrame:
         """THE serving view of an ann-enabled job: the main corpus-split
         index ∪ this job's accepted streaming segments, one (vec_id,
-        embedding, label) row per vector — the same union
-        ``kmeans_ivf_serving_view`` builds for batch drops, so the
-        standard probe (`similarity._ivf_probe` with the published
-        corpus-split centroids) runs unchanged. Metadata-only: a union
-        over the published index files and the job's state partitions
-        (pinned bit-equal to the hand-built union in tests)."""
+        embedding, label) row per vector — the rows of the union
+        ``kmeans_ivf_serving_view`` builds for batch drops, without its
+        stored ``norm`` (the state keeps no norm column), so the standard
+        probe (``similarity._ivf_probe`` with the published corpus-split
+        centroids, over ``similarity._with_norm`` of this view) runs
+        unchanged. Metadata-only: a union over the published index files
+        and the job's state partitions (pinned bit-equal to the hand-built
+        union in tests)."""
         if self.ann_sf_dir is None:
             raise ValueError(
                 "ann_serving_view requires StreamingCuration(ann_sf_dir=...)"

@@ -85,15 +85,18 @@ def test_ivf_pruned_matches_logical_and_prunes_partitions(spark, sf_dir):
     assert "dynamicpruning" not in plan.lower(), (
         "static routing must not leave a DPP subquery on the probe path"
     )
-    # Exactly two Python stages remain — the corpus-side norm and the
-    # final cosine re-rank — and neither sits before the pruned scan.
+    # Exactly one Python stage remains — the final cosine re-rank: the
+    # index stores the norm, so no corpus-side norm pass runs at probe time.
     # Count DISTINCT nodes: reused exchanges print the same node twice.
     py_nodes = {
         line.strip() for line in plan.splitlines() if "ArrowEvalPython" in line
     }
-    assert len(py_nodes) <= 2, (
-        "probe must carry no Python stages beyond norm + re-rank:\n" + plan
+    assert len(py_nodes) <= 1, (
+        "probe must carry no Python stage beyond the re-rank:\n" + plan
     )
+    from kafka_connect_storage_cloud_formats_spark.operators.similarity import build_ivf_index
+
+    assert "norm" in spark.read.parquet(build_ivf_index(spark, sf_dir)).columns
 
 
 def test_sq8_recall_vs_bruteforce(spark, sf_dir):
@@ -395,3 +398,103 @@ def test_oracle_mirrors_zero_norm_refusal(tmp_path):
     for sql in (KNN_BRUTEFORCE_SQL, IVF_TOPK_SQL, KMEANS_TOPK_SQL):
         with pytest.raises(Exception, match="zero-norm"):
             con.execute(sql).fetchall()
+
+
+def test_route_breaks_exact_cosine_ties_to_the_lowest_cell():
+    """The one routing kernel: score desc, and an exact cosine tie goes
+    to the lowest cell label (not the lowest matrix row)."""
+    import numpy as np
+
+    from kafka_connect_storage_cloud_formats_spark.operators.similarity import _route
+
+    e = np.eye(64)
+    # e0+e1 and e0-e1 both sit at cosine 1/√2 from e0: the raw dots are
+    # exactly 1.0 and the norms exactly √2, so the scores tie bit-for-bit
+    M = np.stack([e[0] + e[1], e[0] - e[1], e[0], e[2]])
+    labels = np.array([7, 3, 9, 1], dtype=np.int64)
+    qi, ci, qc, qn = _route(np.array([0]), e[[0]], labels, M, nprobe=3)
+    assert labels[ci].tolist() == [9, 3, 7]
+    assert qi.tolist() == [0, 0, 0]
+    assert qc.tolist() == [1.0, 1.0, 1.0] and qn.tolist() == [1.0] * 3
+    qi, ci, _, _ = _route(np.array([0]), e[[0]], labels[:2], M[:2], nprobe=1)
+    assert labels[:2][ci].tolist() == [3]
+
+
+def test_route_with_nprobe_above_k_routes_to_every_cell():
+    import numpy as np
+
+    from kafka_connect_storage_cloud_formats_spark.operators.similarity import _route
+
+    e = np.eye(64)
+    M = np.stack([e[0], e[1], e[2]])
+    labels = np.array([0, 1, 2], dtype=np.int64)
+    qi, ci, _, _ = _route(np.array([0, 50]), e[[1, 2]], labels, M, nprobe=5)
+    assert qi.tolist() == [0, 0, 0, 1, 1, 1]
+    assert labels[ci].tolist() == [1, 0, 2, 2, 0, 1]
+
+
+def test_route_refuses_a_zero_norm_centroid():
+    import numpy as np
+    import pytest
+
+    from kafka_connect_storage_cloud_formats_spark.operators.similarity import _route
+
+    e = np.eye(64)
+    M = np.stack([e[0], np.zeros(64)])
+    with pytest.raises(ValueError, match="zero-norm"):
+        _route(np.array([0]), e[[0]], np.array([0, 1]), M, nprobe=1)
+    with pytest.raises(ValueError, match="zero-norm"):
+        _route(np.array([0]), np.zeros((1, 64)), np.array([0]), M[:1], nprobe=1)
+
+
+def test_ivf_probe_and_ivfpq_route_agree_on_routed_pairs(spark, tmp_path):
+    """Both serving families route through the one kernel: on crafted
+    geometry (exact ties included) the (q_id, cell) pairs the IVF probe
+    serves from equal the IVFPQ routing table's (q_id, label) pairs. Each
+    cell holds exactly one member, so the probe's top-k per query IS the
+    members of its routed cells."""
+    import numpy as np
+
+    from kafka_connect_storage_cloud_formats_spark.operators.pq import _route_df
+    from kafka_connect_storage_cloud_formats_spark.operators.similarity import (
+        _collect_centroid_matrix,
+        _collect_query_matrix,
+        _ivf_probe,
+        _load,
+        _with_norm,
+    )
+
+    e = np.eye(64)
+    cents = {2: e[0] + e[1], 5: e[0] - e[1], 9: e[2], 11: -e[0]}
+    queries = {0: e[0], 50: e[0] + 0.5 * e[2], 100: e[2] - e[0], 150: e[1] + e[3]}
+    members = {1: (2, e[0] + e[1]), 3: (5, e[0] - e[1]), 5: (9, e[2]), 7: (11, -e[0])}
+    rows = [(q, v.tolist(), 0) for q, v in queries.items()]
+    rows += [(m, v.tolist(), c) for m, (c, v) in members.items()]
+    sf = str(tmp_path / "sf")
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>, label long").write.parquet(
+        f"{sf}/embeddings.parquet"
+    )
+    cent_long = spark.createDataFrame(
+        [(l, d, float(v[d])) for l, v in cents.items() for d in range(64)],
+        "label long, dim long, centroid double",
+    )
+    corpus = _with_norm(
+        spark.createDataFrame(
+            [(m, v.tolist(), c) for m, (c, v) in members.items()],
+            "vec_id long, embedding array<float>, label long",
+        )
+    )
+    cell_of = {m: c for m, (c, _) in members.items()}
+    probed = {
+        (r["q_id"], cell_of[r["neighbor_id"]])
+        for r in _ivf_probe(spark, sf, cent_long, corpus, nprobe=2).collect()
+    }
+    q_ids, Qm = _collect_query_matrix(_load(spark, sf).select("vec_id", "embedding"))
+    labels, M = _collect_centroid_matrix(cent_long)
+    routed = {
+        (r["q_id"], r["label"])
+        for r in _route_df(spark, q_ids, Qm, labels, M, 2).collect()
+    }
+    assert probed == routed == {
+        (0, 2), (0, 5), (50, 2), (50, 5), (100, 9), (100, 11), (150, 2), (150, 9)
+    }

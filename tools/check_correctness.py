@@ -4,6 +4,8 @@
 Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` on DuckDB over the same parquet tables, then compares
 row count, schema (column names), and an order-insensitive value hash.
+Each ``ok``/``FAIL`` line ends with the Spark seconds and the DuckDB
+oracle seconds of that row.
 
 Usage: python3 tools/check_correctness.py [sf_dir] [query_name ...]
 """
@@ -99,26 +101,28 @@ def main() -> int:
                 sdf2 = fn(spark, SF_DIR)  # prepared-plan cache hit
                 srows2 = [tuple(r) for r in sdf2.collect()]
                 if value_hash(srows, scols) != value_hash(srows2, sdf2.columns):
-                    print(f"FAIL  {name}: repeat execution hash-diverged")
+                    print(f"FAIL  {name}: repeat execution hash-diverged [{time.time() - t0:.1f}s, oracle -]")
                     failures += 1
                     continue
         except Exception as e:
-            print(f"FAIL  {name}: spark error: {e}")
+            print(f"FAIL  {name}: spark error: {e} [{time.time() - t0:.1f}s, oracle -]")
             failures += 1
             continue
         spark_secs = time.time() - t0
         if name not in oracles:
             print(f"weak  {name}: rows={len(srows)} (no oracle; rows-only) [{spark_secs:.1f}s]")
             continue
+        t0 = time.time()
         try:
             rel = con.sql(oracles[name])
             ocols = [d[0] for d in rel.description]
             otypes = [str(t) for t in rel.types]
             orows = rel.fetchall()
         except Exception as e:
-            print(f"FAIL  {name}: duckdb error: {e}")
+            print(f"FAIL  {name}: duckdb error: {e} [{spark_secs:.1f}s, oracle {time.time() - t0:.1f}s]")
             failures += 1
             continue
+        secs = f"[{spark_secs:.1f}s, oracle {time.time() - t0:.1f}s]"
         problems = []
         # Driver-environment hazard: DuckDB HUGEINT (e.g. SUM over an integer
         # type) renders as float64 under a pandas/arrow fetch ("123.0" vs
@@ -155,10 +159,10 @@ def main() -> int:
                 for line in sorted(oset - sset)[:2]:
                     problems.append(f"  duck-only:  {line[:160]}")
         if problems:
-            print(f"FAIL  {name}: " + "; ".join(problems))
+            print(f"FAIL  {name}: " + "; ".join(problems) + f" {secs}")
             failures += 1
         else:
-            print(f"ok    {name}: rows={len(srows)} hash-match [{spark_secs:.1f}s]")
+            print(f"ok    {name}: rows={len(srows)} hash-match {secs}")
     print("RESULT:", "FAIL" if failures else "PASS", f"({failures} failures)")
     return 1 if failures else 0
 

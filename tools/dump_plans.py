@@ -3,10 +3,12 @@
 
 Usage: python3 tools/dump_plans.py <out_dir> <suffix> q1 [q2 ...]
 
-Writes, per query, ``<out_dir>/<query>_<suffix>.txt`` (``explain('formatted')``)
-and ``<out_dir>/<query>_<suffix>.opt.txt`` (the optimized logical plan with
-every ``#<id>`` expression id replaced by ``#N``). Two dumps with the same
-suffix in different directories compare optimized plans with
+Writes, per query, ``<out_dir>/<query>_<suffix>.txt`` (``explain('formatted')``),
+``<out_dir>/<query>_<suffix>.opt.txt`` (the optimized logical plan with
+every ``#<id>`` expression id replaced by ``#N``) and
+``<out_dir>/<query>.oracle.sql`` (the registered oracle SQL, byte for
+byte; absent for a row without an oracle). Two dumps with the same suffix
+in different directories compare optimized plans and oracle text with
 
     diff -r -x '*_<suffix>.txt' <dir_a> <dir_b>
 
@@ -32,6 +34,7 @@ def main() -> int:
 
     spark = get_spark("dump_plans")
     queries = entry_mod.queries()
+    oracles = entry_mod.oracle_sql()
     for name in names:
         if name not in queries:
             print(f"!! unknown query {name}", file=sys.stderr)
@@ -46,6 +49,9 @@ def main() -> int:
         opt = df._jdf.queryExecution().optimizedPlan().toString()
         with open(os.path.join(out_dir, f"{name}_{suffix}.opt.txt"), "w") as f:
             f.write(re.sub(r"#\d+", "#N", opt))
+        if oracles.get(name) is not None:
+            with open(os.path.join(out_dir, f"{name}.oracle.sql"), "w") as f:
+                f.write(oracles[name])
         print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
     return 0
 

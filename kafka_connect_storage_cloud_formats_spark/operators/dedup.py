@@ -115,27 +115,29 @@ def _split_params(split: str | None) -> str:
     return f"incr{INCREMENT_MOD}b" if split == "batch" else ""
 
 
-def _exact_flags(batch: DataFrame, base_hashes: DataFrame) -> DataFrame:
-    """THE incremental exact-dedup drop rule, as a flag column: ``batch``'s
-    rows (doc_id, content_hash, …) plus ``exact`` —
-
-    - ``'exact_corpus'``: the corpus hash set ``base_hashes`` (DISTINCT
-      content_hash rows) already has the hash;
-    - ``'exact_within'``: the hash is corpus-fresh but a smaller batch
-      doc_id shares it (the min-id representative survives);
-    - NULL: the doc survives the exact tier.
-
-    One left join to the corpus hashes plus one per-hash window over the
-    batch. Shared by :func:`dedup_incremental`, the chained
-    :func:`_curation_disposition` and the streaming curation job, so the
-    representative rule has one definition."""
-    in_corpus = base_hashes.select("content_hash", F.lit(True).alias("__in_corpus"))
+def _exact_stage(in_corpus: Column) -> Column:
+    """THE exact tier's decision as a column: ``'exact_corpus'`` where
+    ``in_corpus``; else ``'exact_within'`` where a smaller batch doc_id
+    shares the content_hash (the min-id representative survives); else
+    NULL. Docs that share a hash share ``in_corpus``, so the window may
+    run over the whole batch."""
     min_id = F.min("doc_id").over(Window.partitionBy("content_hash"))
-    exact = F.when(F.col("__in_corpus"), "exact_corpus").when(
+    return F.when(in_corpus, "exact_corpus").when(
         F.col("doc_id") != min_id, "exact_within"
     )
+
+
+def _exact_flags(batch: DataFrame, base_hashes: DataFrame) -> DataFrame:
+    """THE incremental exact-dedup drop rule of :func:`dedup_incremental`,
+    as a flag column: ``batch``'s rows (doc_id, content_hash, …) plus
+    ``exact``, the :func:`_exact_stage` of membership in the corpus hash
+    set ``base_hashes`` (DISTINCT content_hash rows). One left join to the
+    corpus hashes plus one per-hash window over the batch; the chained
+    curation rule (:func:`_judge`, :func:`_staged`) shares the min-id
+    rule through :func:`_exact_stage`."""
+    in_corpus = base_hashes.select("content_hash", F.lit(True).alias("__in_corpus"))
     return batch.join(in_corpus, "content_hash", "left").select(
-        *batch.columns, exact.alias("exact")
+        *batch.columns, _exact_stage(F.col("__in_corpus")).alias("exact")
     )
 
 
@@ -1079,36 +1081,63 @@ def _minhash_pairs_unsorted(
     return _pairs_from_sigs(sig, family=family)
 
 
+def _band_hash(cols: list[str], family: str) -> str:
+    """THE band-hash expression over SQL columns ``cols``: xxhash64 takes
+    them directly, md5 hashes their '|'-joined strings."""
+    if family == "xxhash64":
+        return f"xxhash64({', '.join(cols)})"
+    return f"md5(concat_ws('|', {', '.join(cols)}))"
+
+
+def _band_structs(family: str) -> list[str]:
+    """SQL ``struct(band_id, band_hash)`` of each MinHash band."""
+    return [
+        f"struct({b} AS band_id, "
+        f"{_band_hash(_MH_COLS[b * LSH_ROWS : (b + 1) * LSH_ROWS], family)} AS band_hash)"
+        for b in range(LSH_BANDS)
+    ]
+
+
+_SIG_ARRAY = f"array({', '.join(_MH_COLS)}) AS sig"
+
+
 def _band_rows(sig: DataFrame, family: str | None = None) -> DataFrame:
     """(doc_id, sig array, band_id, band_hash) rows from a signature table —
     THE banding derivation, shared by the whole-corpus self-join pair tier
     and the incremental batch-vs-corpus tier (one definition: the band
     layout IS the candidate contract, so two copies could silently band
     differently). Family-agnostic: the band-hash expression differs
-    (xxhash64 takes the components directly, no string concat), everything
-    downstream compares components by equality."""
-    family = family or hash_family()
-    # SQL-string expressions (a handful of F.expr calls instead of ~100
-    # py4j round-trips building the array/struct/when trees — ~0.4 s of
-    # driver time per plan build, measured; same pattern as
-    # _simhash_fp_table)
-    comps = [f"mh_{k:02d}" for k in range(MINHASH_K)]
-
-    def band_hash(b: int) -> str:
-        cols = ", ".join(comps[b * LSH_ROWS : (b + 1) * LSH_ROWS])
-        if family == "xxhash64":
-            return f"xxhash64({cols})"
-        return f"md5(concat_ws('|', {cols}))"
-
-    band_structs = ", ".join(
-        f"struct({b} AS band_id, {band_hash(b)} AS band_hash)"
-        for b in range(LSH_BANDS)
-    )
+    (:func:`_band_hash`), everything downstream compares components by
+    equality. SQL-string expressions: a handful of F.expr calls instead of
+    ~100 py4j round-trips building the array/struct trees."""
+    structs = ", ".join(_band_structs(family or hash_family()))
     return sig.select(
         F.col("doc_id"),
-        F.expr(f"array({', '.join(comps)}) AS sig"),
-        F.expr(f"explode(array({band_structs})) AS bb"),
+        F.expr(_SIG_ARRAY),
+        F.expr(f"explode(array({structs})) AS bb"),
     ).select("doc_id", "sig", "bb.band_id", "bb.band_hash")
+
+
+def _exact_key(family: str) -> str:
+    """SQL ``struct(band_id, band_hash)`` of the exact tier's candidate key:
+    band −1, the band hash of ``content_hash`` (NULL for a NULL hash, so
+    NULL text never joins a corpus row)."""
+    h = _band_hash(["content_hash"], family)
+    return f"struct(-1 AS band_id, nvl2(content_hash, {h}, NULL) AS band_hash)"
+
+
+def _doc_keys(docs: DataFrame, family: str | None = None) -> DataFrame:
+    """A per-document table (doc_id, content_hash, mh_00…mh_11, …) as
+    candidate-key rows: every column of ``docs`` plus ``sig``, ``band_id``
+    and ``band_hash``, from one explode per document. Every doc has the
+    exact key (:func:`_exact_key`); a doc with a signature also has the
+    MinHash bands of :func:`_band_rows`. The per-micro-batch helpers
+    here take SQL strings: each Column built in Python is a handful of
+    py4j calls."""
+    family = family or hash_family()
+    keys = ", ".join([_exact_key(family), *_band_structs(family)])
+    n = f"IF(mh_00 IS NULL, 1, {LSH_BANDS + 1})"
+    return docs.selectExpr("*", _SIG_ARRAY, f"inline(slice(array({keys}), 1, {n}))")
 
 
 # matching-component count between two banded rows' full signatures —
@@ -1270,14 +1299,22 @@ def _banded_drop_sets(
         .distinct()
     )
     fresh = batch_keys.join(vs_corpus, "doc_id", "left_anti")
-    within = (
+    return vs_corpus, _banded_within(fresh, same_key, strong)
+
+
+def _banded_within(
+    fresh: DataFrame, same_key: str = _BAND_KEY, strong: str = _SIG_STRONG
+) -> DataFrame:
+    """The within half of :func:`_banded_drop_sets`: the doc_ids of
+    ``fresh``'s candidate-key rows with a strong candidate pair to a
+    smaller-id doc of ``fresh``."""
+    return (
         fresh.alias("a")
         .join(fresh.alias("b"), F.expr(f"{same_key} AND a.doc_id < b.doc_id"))
         .filter(F.expr(strong))
         .select(F.col("b.doc_id").alias("doc_id"))
         .distinct()
     )
-    return vs_corpus, within
 
 
 def neardup_incremental(
@@ -1366,6 +1403,55 @@ CURATION_STAGES = (
 )
 
 
+def _judge(batch_keys: DataFrame, corpus_keys: DataFrame) -> DataFrame:
+    """THE batch-vs-corpus judge of the chained curation rule over
+    candidate-key rows (:func:`_doc_keys`): one left join of the batch's
+    rows to the corpus's (band_id, band_hash, sig, content_hash) rows on
+    the band key, then one groupBy(doc_id). A band −1 hit counts when the
+    full content_hash matches; a band 0–3 hit when the signatures match
+    strongly (``_SIG_STRONG``). One row per batch doc: its columns (taken
+    from any of its key rows, which all carry them) plus the never-NULL
+    flags ``__in_corpus`` (exact) and ``__nd_corpus`` (near-dup)."""
+    keys = ("doc_id", "sig", "band_id", "band_hash")
+    carried = ", ".join(f"a.{c}" for c in batch_keys.columns if c not in keys)
+    corpus = corpus_keys.select("band_id", "band_hash", "sig", "content_hash")
+    return (
+        batch_keys.alias("a")
+        .join(corpus.alias("b"), F.expr(_BAND_KEY), "left")
+        .groupBy("a.doc_id")
+        .agg(
+            F.expr(f"first(struct({carried})) AS __doc"),
+            F.expr(
+                "bool_or(a.band_id < 0 AND coalesce(a.content_hash = b.content_hash, false))"
+                " AS __in_corpus"
+            ),
+            F.expr(f"bool_or(a.band_id >= 0 AND {_SIG_STRONG}) AS __nd_corpus"),
+        )
+        .selectExpr("doc_id", "__doc.*", "__in_corpus", "__nd_corpus")
+    )
+
+
+def _staged(judged: DataFrame, family: str | None = None) -> DataFrame:
+    """THE chained curation rule's batch-only tail: ``judged`` (a
+    :func:`_judge` output with mh_00…mh_11) with its flags replaced by
+    ``stage`` ∈ CURATION_STAGES, chain order as precedence: exact_corpus
+    (the exact flag), exact_within (:func:`_exact_stage`), neardup_corpus
+    (the near-dup flag), neardup_within (:func:`_banded_within` over the
+    bands of the docs still fresh), kept."""
+    flagged = judged.select("*", _exact_stage(F.col("__in_corpus")).alias("__exact"))
+    fresh = flagged.filter("__exact IS NULL AND NOT __nd_corpus AND mh_00 IS NOT NULL")
+    within = _banded_within(_band_rows(fresh, family))
+    stage = (
+        "coalesce(__exact, IF(__nd_corpus, 'neardup_corpus', NULL),"
+        " IF(__nd_within, 'neardup_within', NULL), 'kept') AS stage"
+    )
+    return (
+        flagged.join(within.selectExpr("doc_id", "true AS __nd_within"), "doc_id", "left")
+        .selectExpr("*", stage)
+        .drop("__in_corpus", "__nd_corpus", "__exact", "__nd_within")
+    )
+
+
 def _curation_disposition(
     spark: SparkSession,
     sf_dir: str,
@@ -1374,54 +1460,32 @@ def _curation_disposition(
 ) -> DataFrame:
     """Per-document disposition of the batch split across the chained
     tiers: (doc_id, lang, stage), each batch doc in exactly one stage of
-    CURATION_STAGES, with chain order as precedence (:func:`_with_stage`).
-    It feeds both the report (:func:`curation_drop_report`) and the
-    accept decision (:func:`ensure_curation_kept`).
+    CURATION_STAGES, by the streaming job's rule (:func:`_judge`, then
+    :func:`_staged`). It feeds both the report
+    (:func:`curation_drop_report`) and the accept decision
+    (:func:`ensure_curation_kept`).
 
-    - exact_corpus / exact_within: :func:`_exact_flags`, the rule of
-      ``dedup_incremental``;
-    - neardup_corpus / neardup_within: :func:`_banded_drop_sets` over the
-      exact survivors' bands, the rule of ``neardup_incremental``;
-    - kept: the rest.
-
-    Both tiers read the same published artifacts as their standalone
-    tiers; the chaining is batch-sized. ``corpus_hashes`` and
-    ``corpus_sigs`` are the explicit corpus sides (the merged
-    generations, for a later drop); no split filter is applied to
-    them."""
-    batch = ensure_content_hashes(spark, sf_dir, split="batch").select(
-        "doc_id", "lang", "content_hash"
+    The batch table is the batch split's content hashes left-joined to
+    its signatures. The corpus key rows are the union of the hash side's
+    exact keys and the signature side's bands, so no corpus-sized join is
+    added. Both read the same published artifacts as the standalone
+    tiers. ``corpus_hashes`` and ``corpus_sigs`` are the explicit corpus
+    sides (the merged generations, for a later drop); no split filter is
+    applied to them."""
+    batch = (
+        ensure_content_hashes(spark, sf_dir, split="batch")
+        .select("doc_id", "lang", "content_hash")
+        .join(_ensure_minhash_sigs(spark, sf_dir, split="batch"), "doc_id", "left")
     )
     if corpus_hashes is None:
         corpus_hashes = _split(ensure_content_hashes(spark, sf_dir), "corpus")
-    flagged = _exact_flags(batch, corpus_hashes.select("content_hash").distinct())
-    survivors = flagged.filter(F.col("exact").isNull()).select("doc_id")
-    batch_bands = _band_rows(_ensure_minhash_sigs(spark, sf_dir, split="batch")).join(
-        survivors, "doc_id", "left_semi"
-    )
     if corpus_sigs is None:
         corpus_sigs = _split(_ensure_minhash_sigs(spark, sf_dir), "corpus")
-    nd_corpus, nd_within = _banded_drop_sets(batch_bands, _band_rows(corpus_sigs))
-    return _with_stage(flagged, nd_corpus, nd_within).select("doc_id", "lang", "stage")
-
-
-def _with_stage(
-    flagged: DataFrame, nd_corpus: DataFrame, nd_within: DataFrame
-) -> DataFrame:
-    """THE stage-precedence rule: ``flagged`` (the :func:`_exact_flags`
-    output) with ``exact`` replaced by ``stage`` ∈ CURATION_STAGES — the
-    exact flag when set, else the near-dup mark, else 'kept'. The near-dup
-    marks are the two :func:`_banded_drop_sets` doc_id sets, disjoint by
-    construction (``within`` runs over the corpus survivors), so one left
-    join of their union marks each doc at most once. Shared by the batch
-    chain and the streaming curation job."""
-    marks = nd_corpus.select("doc_id", F.lit("neardup_corpus").alias("__nd")).unionByName(
-        nd_within.select("doc_id", F.lit("neardup_within").alias("__nd"))
-    )
-    stage = F.coalesce(F.col("exact"), F.col("__nd"), F.lit("kept"))
-    return flagged.join(marks, "doc_id", "left").select(
-        *[c for c in flagged.columns if c != "exact"], stage.alias("stage")
-    )
+    exact_keys = corpus_hashes.select(
+        "content_hash", F.expr(_exact_key(hash_family())).alias("__k")
+    ).select("__k.band_id", "__k.band_hash", "content_hash")
+    corpus_keys = exact_keys.unionByName(_band_rows(corpus_sigs), allowMissingColumns=True)
+    return _staged(_judge(_doc_keys(batch), corpus_keys)).select("doc_id", "lang", "stage")
 
 
 def curation_drop_report(

@@ -1,22 +1,24 @@
 """Streaming curation: each micro-batch of crawled documents IS a drop.
 
 The Structured-Streaming form of the recurring curation pipeline the batch
-operators implement (operators/dedup.py). Per micro-batch, one map-only
-pass builds the batch's per-document table — (doc_id, lang, content_hash,
-mh_00…mh_11[, embedding]). The chained exact → near-dup rules add their
-decision to it as a ``stage`` column, judged against the job's OWN corpus
-state: the kept rows of every earlier micro-batch. With the ANN stage on,
-the kept rows also get their published-quantizer cell (``label``) and PQ
-codes (``codes``). The drop rules are the batch operators' own helpers
-(``_exact_flags``, ``_banded_drop_sets``, ``_with_stage``,
-``_band_rows``), and the signatures use the same MinHash layout as the
-batch tiers (``_with_minhash_array``), so the stream cannot drift from the
+operators implement (operators/dedup.py). A micro-batch builds its
+per-document table (doc_id, lang, content_hash, mh_00…mh_11[, embedding])
+in one map-only pass and classifies it by the chained exact → near-dup
+rule against the job's OWN corpus state, the kept rows of every earlier
+micro-batch, adding the decision as a ``stage`` column. With the ANN stage
+on, the kept rows also get their published-quantizer cell (``label``) and
+PQ codes (``codes``). The rule is the batch operators' own: ``_doc_keys``
+gives each document its candidate keys (the exact key and the MinHash
+bands), ``_judge`` joins them to the corpus's once, and ``_staged`` adds
+the within-batch tiers. The signatures use the batch tiers' MinHash
+layout (``_with_minhash_array``), so the stream cannot drift from the
 oracle-gated batch tiers.
 
 State: the classified table IS the state. A micro-batch commits it once,
 as ``batches/b{batch_id:010d}``: one parquet file sorted by ``doc_id``
 with columns (batch_id, doc_id, lang, content_hash, mh_00…mh_11, stage
-[, embedding, label, codes]). Every reader is a column-pruned projection
+[, embedding, label, codes]); a dropped row keeps only batch_id, doc_id,
+lang and stage, the rest NULL. Every reader is a column-pruned projection
 of that one kind — the report a ``groupBy(batch_id, lang)``, the accepted
 hashes, signatures and serving segments its kept rows.
 
@@ -30,10 +32,10 @@ Retries, out-of-order replays and full re-runs over the same checkpoint
 are all no-ops (pinned in tests/test_streaming_curation.py).
 
 At scale this is the shape of a continuous ingestion pipeline: state is
-~(50 + 100) B per document seen of hash + signature columns (never
+~(50 + 100) B per accepted document of hash + signature columns (never
 document text; the dropped rows stay, since the report counts them), and
-each micro-batch pays batch-sized hashing plus banded equi-joins against
-the kept rows of that state.
+each micro-batch pays batch-sized hashing plus one banded equi-join
+against the kept rows of that state.
 """
 
 from __future__ import annotations
@@ -51,11 +53,10 @@ from kafka_connect_storage_cloud_formats_spark.functions.text_functions import (
 from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
     CURATION_STAGES,
     _MH_COLS,
-    _band_rows,
-    _banded_drop_sets,
-    _exact_flags,
+    _doc_keys,
+    _judge,
+    _staged,
     _with_minhash_array,
-    _with_stage,
 )
 
 
@@ -200,7 +201,7 @@ class StreamingCuration:
         return self.spark.read.schema(schema).parquet(*map(glob_escape, parts))
 
     def _kept(self, before: int | None = None) -> DataFrame:
-        return self._table(before).filter(F.col("stage") == "kept")
+        return self._table(before).filter("stage = 'kept'")
 
     def accepted_hashes(self, before: int | None = None) -> DataFrame:
         """(doc_id, lang, content_hash) of every accepted doc."""
@@ -374,24 +375,20 @@ class StreamingCuration:
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Classify one micro-batch (columns: doc_id, text, lang, plus
         embedding with the ANN stage on) against the accepted state and
-        commit it as ``batches/b{batch_id:010d}``.
+        commit it as ``batches/b{batch_id:010d}``. Two queries:
 
-        1. One map-only pass reads the source once and builds the
-           per-document table (doc_id, lang, content_hash, mh_00…mh_11
-           [, embedding]), checkpointed. A doc with no shingle (NULL text,
-           fewer than 3 tokens) has NULL signature components, so it never
-           enters the signature views.
-        2. ``_exact_flags`` flags it against the distinct accepted hashes
-           (checkpointed: the near-dup tier reads the flags in several
-           places, which would otherwise each replay the state scan and
-           the window); the unflagged docs with a signature are banded
-           against the accepted signatures (``_banded_drop_sets``);
-           ``_with_stage`` joins the near-dup marks back as the ``stage``
-           column.
-        3. With the ANN stage on, the kept rows are assigned and encoded
-           (:meth:`_with_serving_columns`).
-        4. The classified table is written once, one file sorted by
-           ``doc_id``; that write is the batch's only commit."""
+        1. The source map pass builds the per-document table (a doc with
+           no shingle — NULL text, fewer than 3 tokens — has NULL
+           signature components) and ``_judge`` flags it against the kept
+           rows of one listing and one scan of the state: one left join
+           of the candidate keys (``_doc_keys``), one groupBy(doc_id).
+           The result is checkpointed.
+        2. The batch-only tail: ``_staged`` adds the ``stage`` column (the
+           min-id rule for exact_within, the within-batch near-dup pass
+           over the survivors); with the ANN stage on, the kept rows are
+           assigned and encoded (:meth:`_with_serving_columns`); the table
+           is written once, one file sorted by ``doc_id``, which is the
+           batch's only commit."""
         if self.fold_every and batch_id > 0 and batch_id % self.fold_every == 0:
             self.fold_state()  # the scheduled maintenance fold (see __init__)
         cols = ["doc_id", "lang", "text"]
@@ -402,34 +399,28 @@ class StreamingCuration:
                     "column on the stream (array<float>)"
                 )
             cols.append("embedding")
-        table = (
-            _with_minhash_array(batch_df.select(*cols), self.family)
-            .withColumn("content_hash", F.unhex(F.sha2(F.col("text"), 256)))
-            .drop("text")
-            .localCheckpoint(eager=True)  # cuts the stream lineage
-        )
+        table = _with_minhash_array(batch_df.select(*cols), self.family).withColumn(
+            "content_hash", F.unhex(F.sha2(F.col("text"), 256))
+        ).drop("text")
         # corpus view = strictly-earlier batches (replay determinism: a
         # retried batch must never see its own prior commit as corpus)
-        flagged = _exact_flags(
-            table, self.accepted_hashes(before=batch_id).select("content_hash").distinct()
-        ).localCheckpoint(eager=True)
-        survivors = flagged.filter(
-            F.col("exact").isNull() & F.col("mh_00").isNotNull()
-        ).select("doc_id", *_MH_COLS)
-        nd_corpus, nd_within = _banded_drop_sets(
-            _band_rows(survivors, self.family),
-            _band_rows(self.accepted_sigs(before=batch_id), self.family),
-        )
-        classified = _with_stage(flagged, nd_corpus, nd_within)
+        judged = _judge(
+            _doc_keys(table, self.family),
+            _doc_keys(self._kept(before=batch_id), self.family),
+        ).localCheckpoint(eager=True)  # cuts the stream lineage
+        classified = _staged(judged, self.family)
+        # a dropped row keeps only what the report reads; SQL strings, as
+        # each Column built in Python is a handful of py4j calls
+        kept_only = "IF(stage = 'kept', {0}, NULL) AS {0}".format
         out = [
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            "doc_id", "lang", "content_hash", *_MH_COLS, "stage",
+            f"CAST({batch_id} AS BIGINT) AS batch_id", "doc_id", "lang",
+            *map(kept_only, ["content_hash", *_MH_COLS]), "stage",
         ]
         if self.ann_sf_dir is not None:
             classified = self._with_serving_columns(classified)
-            out += ["embedding", "label", "codes"]
+            out += [kept_only("embedding"), "label", "codes"]
         (
-            classified.select(*out)
+            classified.selectExpr(*out)
             .coalesce(1)
             .sortWithinPartitions("doc_id")  # replays rewrite identical bytes
             .write.mode("overwrite")

@@ -14,6 +14,9 @@ SF01_DIR = "/root/testdata/sf0.01"
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+    # a fixed heap, not half of the host: the suite stays well inside it,
+    # and a session sized by the host can crowd out its neighbours
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
     s = get_spark("tests")
     yield s
 

@@ -1015,6 +1015,86 @@ def test_curation_disposition_partitions_batch_and_reconciles_exact_tier(spark, 
         assert rep[lang]["n_exact_corpus"] + rep[lang]["n_exact_within"] == n_dropped
 
 
+def _doc_table(spark, rows):
+    """The streaming job's per-document table of (doc_id, text, lang)
+    rows: (doc_id, lang, mh_00…mh_11, content_hash)."""
+    from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
+        _with_minhash_array,
+    )
+
+    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    return (
+        _with_minhash_array(docs)
+        .withColumn("content_hash", F.unhex(F.sha2(F.col("text"), 256)))
+        .drop("text")
+    )
+
+
+def test_doc_keys_give_every_doc_its_exact_key_and_bands_only_with_a_signature(spark):
+    """Each doc has the band −1 exact key; only a doc with a signature has
+    the four MinHash bands. NULL text and 2-token text keep the exact key
+    (NULL text with a NULL key hash) and get no band rows."""
+    from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
+        LSH_BANDS,
+        _doc_keys,
+    )
+
+    rows = [
+        (1, "alpha beta gamma delta epsilon zeta", "en"),
+        (2, None, "en"),
+        (3, "two words", "de"),
+    ]
+    keys = _doc_keys(_doc_table(spark, rows)).collect()
+    bands = {}
+    for r in keys:
+        bands.setdefault(r["doc_id"], []).append(r["band_id"])
+    assert {d: sorted(b) for d, b in bands.items()} == {
+        1: [-1, *range(LSH_BANDS)],
+        2: [-1],
+        3: [-1],
+    }
+    exact = {r["doc_id"]: r["band_hash"] for r in keys if r["band_id"] == -1}
+    assert exact[2] is None and exact[1] is not None and exact[3] is not None
+
+
+def test_judge_counts_an_exact_key_hit_only_on_equal_content_hash(spark):
+    """A corpus key row with the batch doc's band −1 hash but another
+    content_hash is not an exact hit; with the same content_hash it is."""
+    from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
+        _doc_keys,
+        _judge,
+    )
+
+    batch = _doc_keys(_doc_table(spark, [(1, "two words", "en")]))
+    own = batch.filter("band_id = -1").select("band_id", "band_hash", "sig", "content_hash")
+    collided = own.withColumn("content_hash", F.unhex(F.sha2(F.lit("other"), 256)))
+    for corpus, hit in ((collided, False), (own, True)):
+        (row,) = _judge(batch, corpus).collect()
+        assert (row["__in_corpus"], row["__nd_corpus"]) == (hit, False)
+
+
+def test_judge_exact_and_band_hit_ends_exact_corpus(spark):
+    """A batch doc equal to a corpus doc hits both its exact key and its
+    bands; the chain puts it in exact_corpus, and the same text plus one
+    word in neardup_corpus."""
+    from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
+        _doc_keys,
+        _judge,
+        _staged,
+    )
+
+    text = "one two three four five six seven eight"
+    corpus = _doc_keys(_doc_table(spark, [(1, text, "en")]))
+    batch = _doc_keys(_doc_table(spark, [(5, text, "en"), (6, text + " nine", "en")]))
+    judged = _judge(batch, corpus)
+    flags = {r["doc_id"]: (r["__in_corpus"], r["__nd_corpus"]) for r in judged.collect()}
+    assert flags == {5: (True, True), 6: (False, True)}
+    assert {r["doc_id"]: r["stage"] for r in _staged(judged).collect()} == {
+        5: "exact_corpus",
+        6: "neardup_corpus",
+    }
+
+
 def test_corpus_signature_merge_inventory_and_rerun(spark, tmp_path):
     """Accept-step end-to-end on a crafted split: the merged generation
     holds the corpus split's signatures plus exactly the kept batch docs'

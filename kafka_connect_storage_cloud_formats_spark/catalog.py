@@ -291,12 +291,3 @@ def spread(df: DataFrame) -> DataFrame:
         return df
     return df.repartition(cores)
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view; returns name → DataFrame."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

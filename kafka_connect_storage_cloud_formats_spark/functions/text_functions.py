@@ -86,13 +86,6 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     return F.array_distinct(word_ngrams(text, n))
 
 
-def md5_perm(col: Column, perm: int) -> Column:
-    """Deterministic hash-family member: md5 of ``"{perm}:" || value`` as a
-    hex string. MinHash over lexicographic MIN of these is a valid min-wise
-    hash family and is reproducible in any SQL engine with md5()."""
-    return F.md5(F.concat(F.lit(f"{perm}:"), col))
-
-
 def md5_long(col: Column, bits: int = 32) -> Column:
     """First ``bits`` bits of md5 as a non-negative long (hex → decimal).
 

@@ -14,17 +14,17 @@ and idempotence across retries.
 
 from __future__ import annotations
 
+import hashlib
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from kafka_connect_storage_cloud_formats_spark.schema import validate_engine_schema
-from kafka_connect_storage_cloud_formats_spark.sinks.orc_sink import (
-    read_orc,
-    write_orc_parity,
-    write_orc_partitioned,
-)
+from kafka_connect_storage_cloud_formats_spark.sinks import formats
+from kafka_connect_storage_cloud_formats_spark.sinks.orc_sink import write_orc_parity
 
 ENVELOPE_COLS = ("key", "topic", "partition", "offset")
 
@@ -52,10 +52,15 @@ class IngestPipeline:
 
     def run_batch(self, records: DataFrame) -> list[str] | None:
         """Process one batch of enveloped records (the reference's
-        ``S3SinkTask.put``). Returns written file keys in parity mode."""
-        # ONE cast projection (coerce_stream) serves batch and streaming —
-        # an inline copy here could drift (round-9 review); __post_init__
-        # already validated the schema (dataclass mutation is unsupported).
+        ``S3SinkTask.put``). Returns written file keys in parity mode.
+
+        Native layout: each batch lands in its own ``batch=<id>`` subdir,
+        ``id`` a hash of the batch's per-(topic, partition) offset ranges
+        (Kafka batch identity), and overwrites only that subdir. Re-running
+        a batch is idempotent; successive batches accumulate. The id costs
+        one metadata-scale aggregation, so ``records`` is persisted across
+        that action and the write, and must be a deterministic plan.
+        """
         value_names = [f.name for f in self.value_schema.fields]
         coerced = coerce_stream(records, self.value_schema)
         if self.parity_naming:
@@ -67,53 +72,18 @@ class IngestPipeline:
                 self.out_dir,
                 flush_size=self.flush_size,
                 topics_prefix=self.topics_prefix,
-                value_cols=[f.name for f in self.value_schema.fields],
+                value_cols=value_names,
             )
         keep = [c for c in self.partition_cols if c in records.columns]
         df = coerced.select(*keep, *value_names)
-        # Per-poll semantics without data loss: a bare mode="overwrite" at
-        # out_dir would TRUNCATE every earlier batch on the second put().
-        # Instead each batch lands in a deterministic batch=<id> subdir
-        # (id = hash of the batch's per-(topic,partition) offset ranges —
-        # Kafka batch identity) and overwrites only itself: re-running the
-        # same batch is idempotent (the reference's deterministic-name
-        # recovery, directory-granular), successive batches accumulate.
-        # Costs one metadata-scale agg job per batch.
-        #
-        # DETERMINISTIC-INPUT REQUIREMENT: the tag aggregation evaluates
-        # `records` once here and the write evaluates it again below. A
-        # non-deterministic input plan (sampling, rand()-stamped ids)
-        # could tag one materialization and write another, landing a
-        # replay under a different batch=<id> (duplicates instead of an
-        # idempotent overwrite). Kafka-envelope batches are deterministic
-        # (offsets are data); a caller feeding a non-deterministic plan
-        # must localCheckpoint/persist it before put().
         if "offset" not in records.columns:
-            # Without offsets there is no batch identity: the overwrite
-            # would land at out_dir itself and TRUNCATE every earlier
-            # batch's batch=<id> subdir on the second put() — silent data
-            # loss (round-9 review). run_batch's input contract is the
-            # Kafka envelope; a plain one-shot write wants
-            # write_orc_partitioned directly.
+            # without offsets there is no batch identity: the overwrite
+            # would land at out_dir and truncate every earlier batch
             raise ValueError(
                 "run_batch requires enveloped records (an 'offset' column "
                 "— with_kafka_envelope); for a plain one-shot write use "
-                "sinks.orc_sink.write_orc_partitioned"
+                "sinks.formats.write_partitioned"
             )
-        import hashlib
-
-        from pyspark.sql import functions as F
-
-        # The tag aggregation and the write are TWO actions over `records`:
-        # unpersisted, the input plan (typically the envelope source with
-        # its per-partition offset window) executes twice per put(). Persist
-        # for exactly the span of the two actions — the tag agg populates
-        # the cache while it scans, the write reads from it (r15
-        # optimization, guide §1.6/§5.2: don't recompute a subtree two
-        # actions share). MEMORY_AND_DISK (the default) spills rather than
-        # OOMs on an oversized batch; this also hardens the deterministic-
-        # input requirement above — both actions now see ONE
-        # materialization by construction.
         records = records.persist()
         try:
             id_cols = [c for c in ("topic", "partition") if c in records.columns]
@@ -125,10 +95,11 @@ class IngestPipeline:
             tag = hashlib.md5(
                 repr(sorted(tuple(r) for r in ranges)).encode()
             ).hexdigest()[:12]
-            batch_dir = f"{self.out_dir}/batch={tag}"
-            write_orc_partitioned(
+            formats.write_partitioned(
                 df,
-                batch_dir,
+                f"{self.out_dir}/batch={tag}",
+                fmt="orc",
+                compression="zstd",  # Spark's ORC default, as this layout has always written
                 partition_cols=tuple(keep),
                 max_records_per_file=self.flush_size,
             )
@@ -136,18 +107,16 @@ class IngestPipeline:
             records.unpersist()
         return None
 
-    def run_stream(self, records: DataFrame, checkpoint: str):
-        """Streaming variant: exactly-once via checkpoint + file-sink commit
-        log (``_spark_metadata``) — the Spark-native replacement for the
+    def run_stream(self, records: DataFrame, checkpoint: str) -> StreamingQuery:
+        """The engine's stream → ORC sink: starts an ``availableNow`` query
+        and returns it. Exactly-once via the checkpoint and the file sink's
+        ``_spark_metadata`` commit log, the Spark-native form of the
         reference's deterministic-name-overwrite recovery
-        (``DataWriterOrcTest.java:102-124``)."""
+        (``DataWriterOrcTest.java:102-124``). Writes the native layout:
+        value columns only, ``partitionBy`` the partition columns present,
+        at most ``flush_size`` rows per file."""
         if self.parity_naming:
-            # The file-sink streaming path cannot produce the reference's
-            # offset-named one-file-per-flush layout (that finalize is a
-            # batch rename pass); silently writing the Hive layout under a
-            # parity config would hand the caller a different on-disk
-            # contract per entry point (round-9 review). foreachBatch +
-            # run_batch per micro-batch is the parity streaming shape.
+            # offset-named files need run_batch's batch rename pass
             raise NotImplementedError(
                 "parity_naming on the streaming path: drive run_batch from "
                 "foreachBatch; the file-sink path writes the Spark-native "
@@ -160,7 +129,6 @@ class IngestPipeline:
             df.writeStream.format("orc")
             .option("path", self.out_dir)
             .option("checkpointLocation", checkpoint)
-            # honor the count-based rotation config on this entry point too
             .option("maxRecordsPerFile", self.flush_size)
             .trigger(availableNow=True)
         )
@@ -179,9 +147,8 @@ class IngestPipeline:
                 .option("recursiveFileLookup", "false")
                 .load(self.out_dir)
             )
-        back = read_orc(spark, self.out_dir)
-        # batch=<id> is write-layout bookkeeping, not data (discovered as a
-        # partition column when enveloped batches were written)
+        back = formats.read_back(spark, self.out_dir)
+        # batch=<id> is write-layout bookkeeping, not data
         return back.drop("batch") if "batch" in back.columns else back
 
 

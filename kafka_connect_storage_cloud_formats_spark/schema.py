@@ -11,9 +11,10 @@ This module reproduces that type surface natively in Spark:
 
 - the six-type map (SURVEY.md §1.2) as ``SIX_TYPE_MAP``;
 - Avro-JSON schema → ``StructType`` with proper nullable unwrap;
-- a ``coerce_to_engine_types`` projection that casts a DataFrame onto the
-  supported surface (the reference's per-record toString-reparse coercion,
-  ``OrcRecordWriter.java:204-237``, done declaratively so Catalyst codegens it).
+- ``validate_engine_schema``, the init-time check of that surface. The cast
+  onto it (the reference's per-record toString-reparse coercion,
+  ``OrcRecordWriter.java:204-237``) is ``pipeline.coerce_stream``, one
+  declarative projection that Catalyst codegens.
 
 **Documented divergence** (SURVEY.md §1.2): the reference crashes (NPE) on
 null *values* while accepting nullable *schemas*; this engine stores nulls
@@ -24,8 +25,6 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Connect/Avro primitive name → Spark type (reference OrcRecordWriter.java:174-202;
@@ -145,19 +144,3 @@ def validate_engine_schema(schema: T.StructType) -> None:
                 f"type is not supported: field {f.name!r} has {f.dataType.simpleString()}"
             )
 
-
-def coerce_to_engine_types(df: DataFrame, target: T.StructType) -> DataFrame:
-    """Cast ``df``'s columns onto ``target`` (name-matched, order from target).
-
-    Declarative replacement for the reference's per-record
-    toString()-then-reparse coercion (``OrcRecordWriter.java:204-237``):
-    Catalyst folds these casts into whole-stage codegen, so the coercion is
-    vectorized JVM-side instead of per-row string churn.
-    """
-    validate_engine_schema(target)
-    cols = []
-    for f in target.fields:
-        if f.name not in df.columns:
-            raise KeyError(f"input is missing field {f.name!r}")
-        cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-    return df.select(*cols)

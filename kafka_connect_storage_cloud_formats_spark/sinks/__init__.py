@@ -1,7 +1,3 @@
-from kafka_connect_storage_cloud_formats_spark.sinks.orc_sink import (
-    read_orc,
-    write_orc_parity,
-    write_orc_partitioned,
-)
+from kafka_connect_storage_cloud_formats_spark.sinks.orc_sink import write_orc_parity
 
-__all__ = ["write_orc_partitioned", "write_orc_parity", "read_orc"]
+__all__ = ["write_orc_parity"]

@@ -1,4 +1,4 @@
-"""ORC sinks: Spark-native partitioned writer + reference-parity writer.
+"""The reference-parity ORC sink.
 
 The reference writes one ORC file per (topic, partition, offset-range):
 deterministic name ``{topics}_{dir}_{topic}_{partition}_{offset:010d}.orc``
@@ -8,23 +8,15 @@ records (observed offsets {0,3,6} for 7 records at flush.size=3,
 of the deterministic name (``OrcRecordWriter.java:91``, recovery scenario
 ``DataWriterOrcTest.java:102-124``).
 
-Two sinks:
-
-- ``write_orc_partitioned`` — the idiomatic Spark path: Hive-style
-  ``partition=N/`` layout (reference ``DefaultPartitioner``,
-  ``DataWriterOrcTest.java:261-264``), vectorized ORC writer, commit
-  protocol, ``maxRecordsPerFile`` for file sizing. This is the sink a 100 TB
-  pipeline should use: readers get partition pruning + stripe pushdown free.
-
-- ``write_orc_parity`` — exact reference naming/rotation semantics for
-  drop-in compatibility: records grouped by
-  ``(topic, partition, floor(offset / flush_size))``, one ORC file per group
-  with the offset-zero-padded name, written via deterministic overwrite so
-  re-processing is idempotent (same exactly-once argument as the reference).
-  Implemented as a *distributed* grouped write (one Spark write task per
-  file group via ``partitionBy`` on a computed file-group column, then a
-  driver-side rename pass over the manifest — O(#files), no data through the
-  driver).
+``write_orc_parity`` reproduces that naming and rotation: records grouped by
+``(topic, partition, floor(offset / flush_size))``, one ORC file per group
+with the offset-zero-padded name, written via deterministic overwrite so
+re-processing is idempotent. It is a *distributed* grouped write (one Spark
+write task per file group via ``partitionBy`` on a computed file-group
+column, then a driver-side rename pass over the manifest — O(#files), no
+data through the driver). The Spark-native layout (Hive-style
+``partition=N/`` dirs, ``maxRecordsPerFile``) is written through
+``sinks/formats.py`` by ``IngestPipeline``.
 
 The hard cap of 11,000 rows/file in the reference (single VectorizedRowBatch,
 ``OrcRecordWriter.java:100``, flush disabled at 77-79) is a historical
@@ -36,7 +28,7 @@ from __future__ import annotations
 import os
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_connect_storage_cloud_formats_spark.fsio import _fs_for
@@ -67,26 +59,6 @@ def file_key_to_commit(
     )
     key = f"{topics_prefix}{DIRECTORY_DELIM}{dir_prefix}{DIRECTORY_DELIM}{name}"
     return key.replace("#", "_")
-
-
-def write_orc_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: tuple[str, ...] = ("partition",),
-    max_records_per_file: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Spark-native sink: Hive-style partition dirs, vectorized ORC write.
-
-    ``max_records_per_file`` approximates the reference's count-based
-    rotation (``FLUSH_SIZE_CONFIG``) without fixing file *names*.
-    """
-    writer = df.write.mode(mode)
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.orc(path)
 
 
 def write_orc_parity(
@@ -231,8 +203,3 @@ def write_orc_parity(
     fs.delete(staged)
     return sorted(written)
 
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """Read-back operator (reference test oracle ``OrcUtils.getRecords``,
-    ``OrcUtils.java:31-95`` — minus its index bugs, SURVEY.md §2.2.4)."""
-    return spark.read.orc(path)

@@ -357,23 +357,27 @@ def test_envelope_keyless_default_is_deterministic_and_validates(spark):
 
 def test_parity_file_rows_are_in_offset_order(spark, tmp_path):
     """The reference appends records in Kafka offset order, so row order
-    INSIDE each parity-named ORC file is part of the contract — sorting by
-    the group key alone left file content in nondeterministic
-    shuffle-arrival order. Read each single file directly (one file, one
-    task → file order preserved) and assert the offset-correlated column is
-    strictly increasing."""
+    INSIDE each parity-named ORC file is part of the contract. Read each
+    single file directly (one file, one task → file order preserved) and
+    assert the offset-correlated column is strictly increasing. The input
+    is shuffled into 16 partitions and each file group spans thousands of
+    rows: at this size, a planned write (``plannedWrite``) left on drops
+    the offset sort and un-orders every file, which a dozen rows did not
+    show."""
     from kafka_connect_storage_cloud_formats_spark.sinks.orc_sink import write_orc_parity
 
     out = str(tmp_path / "out")
-    # shuffle the input rows first so arrival order ≠ offset order
-    records = make_records(spark, 12).repartition(8)
-    written = write_orc_parity(records, out, flush_size=6)
-    assert len(written) == 2
+    records = make_records(spark, 20_000, num_partitions=3).repartition(16)
+    written = write_orc_parity(records, out, flush_size=5_000)
+    assert len(written) == 6  # offsets 0..6666 per partition → starts 0, 5000
+    total = 0
     for key in written:
         rows = spark.read.orc(os.path.join(out, key)).collect()
-        longs = [r["long_col"] for r in rows]  # long_col = offset * 1_000_003
+        longs = [r["long_col"] for r in rows]  # long_col = (3·offset + p) * 1_000_003
         assert longs == sorted(longs), f"rows in {key} not in offset order"
-        assert len(longs) == 6
+        assert len(set(longs)) == len(longs) <= 5_000
+        total += len(longs)
+    assert total == 20_000
 
 
 def test_native_mode_multi_batch_accumulates_and_rerun_is_idempotent(spark, tmp_path):
@@ -652,6 +656,37 @@ def test_run_stream_rejects_parity_naming(spark, tmp_path):
     src = make_records(spark, 3)
     with pytest.raises(NotImplementedError, match="foreachBatch"):
         pipe.run_stream(src, str(tmp_path / "cp"))
+
+
+def test_run_stream_caps_files_partitions_and_writes_value_columns_only(spark, tmp_path):
+    """``run_stream``'s own promises, in one availableNow run: no ORC file
+    holds more than ``flush_size`` rows, the output is laid out in
+    ``partition=N/`` directories, and only value columns land in the
+    files — the envelope's key, topic and offset do not."""
+    import glob
+
+    import pyarrow.orc as po
+
+    from kafka_connect_storage_cloud_formats_spark.sources.kafka_envelope import (
+        file_stream_source,
+    )
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    records = make_records(spark, 30, num_partitions=3)
+    records.coalesce(1).write.parquet(src)
+    pipe = IngestPipeline(out, SIX_TYPE_SCHEMA, flush_size=4)
+    pipe.run_stream(file_stream_source(spark, src, records.schema), str(tmp_path / "cp")).awaitTermination()
+
+    files = glob.glob(os.path.join(out, "partition=*", "*.orc"))
+    sizes = [po.ORCFile(f).nrows for f in files]
+    assert sum(sizes) == 30 and max(sizes) <= 4, sizes
+    assert sorted({os.path.basename(os.path.dirname(f)) for f in files}) == [
+        "partition=0", "partition=1", "partition=2"
+    ]
+    assert all(po.ORCFile(f).schema.names == [f.name for f in SIX_TYPE_SCHEMA.fields] for f in files)
+    back = pipe.read_back(spark)
+    assert set(back.columns) == {"partition", *(f.name for f in SIX_TYPE_SCHEMA.fields)}
+    assert back.count() == 30
 
 
 def test_parity_topic_with_escaped_chars(spark, tmp_path):

@@ -1,5 +1,6 @@
-"""Structured Streaming tests: exactly-once ORC ingest, streaming windowed
-aggregation vs batch, cross-batch stateful sessionization.
+"""Structured Streaming tests: exactly-once ORC ingest through
+``IngestPipeline.run_stream``, streaming windowed aggregation vs batch,
+cross-batch stateful sessionization.
 
 Mirrors the reference's scenarios (SURVEY.md §5): recovery/idempotent
 reprocessing (DataWriterOrcTest.java:102-124) becomes checkpointed re-runs;
@@ -9,16 +10,31 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_connect_storage_cloud_formats_spark.catalog import load_table
-from kafka_connect_storage_cloud_formats_spark.streaming.engine import (
-    file_stream_source,
-    run_orc_ingest,
-    run_to_memory,
-)
+from kafka_connect_storage_cloud_formats_spark.pipeline import IngestPipeline
+from kafka_connect_storage_cloud_formats_spark.queries.pipeline_queries import EVENTS_VALUE_SCHEMA
+from kafka_connect_storage_cloud_formats_spark.sources.kafka_envelope import file_stream_source
 from kafka_connect_storage_cloud_formats_spark.streaming.stateful import sessionize_stream
 from kafka_connect_storage_cloud_formats_spark.streaming.windows import (
     events_session_30m,
     tumbling_plan,
 )
+
+
+def run_to_memory(df, name: str, output_mode: str = "complete") -> None:
+    """Run a streaming plan to completion into the in-memory table ``name``."""
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def start_ingest(stream, out: str, ckpt: str):
+    """The engine's stream → ORC sink over the events value columns."""
+    return IngestPipeline(out, EVENTS_VALUE_SCHEMA).run_stream(stream, ckpt)
 
 
 @pytest.fixture(scope="module")
@@ -49,9 +65,10 @@ def events_src(spark, sf_dir, tmp_path_factory):
 
 
 def test_exactly_once_ingest_rerun(spark, events_src, tmp_path):
-    """Re-running a checkpointed stream over committed input adds nothing;
-    new input is picked up incrementally (reference recovery scenario,
-    achieved via checkpoint + _spark_metadata instead of offset-overwrite)."""
+    """``IngestPipeline.run_stream``: re-running a checkpointed stream over
+    committed input adds nothing; new input is picked up incrementally
+    (reference recovery scenario, achieved via checkpoint + _spark_metadata
+    instead of offset-overwrite)."""
     import shutil
 
     shared_src, schema = events_src
@@ -60,17 +77,20 @@ def test_exactly_once_ingest_rerun(spark, events_src, tmp_path):
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     n_events = spark.read.parquet(src).count()
 
-    run_orc_ingest(file_stream_source(spark, src, schema), out, ckpt)
+    def ingest():
+        start_ingest(file_stream_source(spark, src, schema), out, ckpt).awaitTermination()
+
+    ingest()
     assert spark.read.orc(out).count() == n_events
 
     # idempotent re-run: no new input → no new rows
-    run_orc_ingest(file_stream_source(spark, src, schema), out, ckpt)
+    ingest()
     assert spark.read.orc(out).count() == n_events
 
     # incremental: one more file → exactly its rows appended
     extra = spark.read.parquet(src).limit(100)
     extra.coalesce(1).write.mode("append").parquet(src)
-    run_orc_ingest(file_stream_source(spark, src, schema), out, ckpt)
+    ingest()
     assert spark.read.orc(out).count() == n_events + 100
 
 
@@ -113,13 +133,8 @@ def test_mid_run_kill_and_checkpoint_restart_is_exactly_once(spark, events_src, 
         shutil.rmtree(ckpt, ignore_errors=True)
         interrupted = runs = 0
         while runs < 24 and committed_count(out) < total:
-            q = (
-                file_stream_source(spark, src, schema, max_files_per_trigger=1)
-                .writeStream.format("orc")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            q = start_ingest(
+                file_stream_source(spark, src, schema, max_files_per_trigger=1), out, ckpt
             )
             # kill as soon as the first micro-batch of THIS run commits —
             # the next batch is typically in flight, so the stop also
@@ -409,14 +424,13 @@ def test_sessionizer_late_event_does_not_rewind_session(spark):
 
 
 def test_full_envelope_pipeline_sf01_kill_restart(spark, tmp_path):
-    """Round-6 verdict ask #6: the reference's recovery scenario
-    (DataWriterOrcTest.java:102-124) exercised END-TO-END at sf0.1 — the
-    full envelope→partitioned-ORC pipeline (topic/partition/offset
-    synthesis, value-column projection, Hive-style partition layout) under
-    ``trigger(availableNow)``, killed between/within micro-batches and
-    restarted from the same checkpoint until the source drains. The
-    committed output must hold the 100k events exactly once, laid out in
-    ``partition=N/`` directories."""
+    """The reference's recovery scenario (DataWriterOrcTest.java:102-124)
+    end to end at sf0.1 through ``IngestPipeline.run_stream`` — envelope
+    synthesis (topic/partition/offset), value-column projection, Hive-style
+    partition layout — killed between/within micro-batches and restarted
+    from the same checkpoint until the source drains. The committed output
+    must hold the 100k events exactly once, laid out in ``partition=N/``
+    directories."""
     import time as _time
 
     from kafka_connect_storage_cloud_formats_spark.sources.kafka_envelope import (
@@ -444,10 +458,6 @@ def test_full_envelope_pipeline_sf01_kill_restart(spark, tmp_path):
     schema = spark.read.parquet(src).schema
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
 
-    # the pipeline projection: value columns + partition (the Kafka key is
-    # dropped — SURVEY.md §1.3; topic/offset drive placement only)
-    value_cols = [c for c in ev.columns]
-
     def committed_count(path) -> int:
         try:
             return spark.read.orc(path).count()
@@ -465,15 +475,8 @@ def test_full_envelope_pipeline_sf01_kill_restart(spark, tmp_path):
         shutil.rmtree(ckpt, ignore_errors=True)
         interrupted = runs = 0
         while runs < 24 and committed_count(out) < total:
-            q = (
-                file_stream_source(spark, src, schema, max_files_per_trigger=1)
-                .select("partition", *value_cols)
-                .writeStream.format("orc")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .partitionBy("partition")
-                .trigger(availableNow=True)
-                .start()
+            q = start_ingest(
+                file_stream_source(spark, src, schema, max_files_per_trigger=1), out, ckpt
             )
             deadline = _time.time() + 180
             while q.isActive and not q.recentProgress and _time.time() < deadline:

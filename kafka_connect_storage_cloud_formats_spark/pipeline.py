@@ -15,6 +15,7 @@ and idempotence across retries.
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,7 +23,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from kafka_connect_storage_cloud_formats_spark.schema import validate_engine_schema
+from kafka_connect_storage_cloud_formats_spark.schema import (
+    cast_exprs,
+    quote_ident,
+    validate_engine_schema,
+)
 from kafka_connect_storage_cloud_formats_spark.sinks import formats
 from kafka_connect_storage_cloud_formats_spark.sinks.orc_sink import write_orc_parity
 
@@ -61,21 +66,14 @@ class IngestPipeline:
         one metadata-scale aggregation, so ``records`` is persisted across
         that action and the write, and must be a deterministic plan.
         """
-        value_names = [f.name for f in self.value_schema.fields]
-        coerced = coerce_stream(records, self.value_schema)
         if self.parity_naming:
-            enveloped = coerced.select(
-                *[c for c in ENVELOPE_COLS if c in records.columns], *value_names
-            )
             return write_orc_parity(
-                enveloped,
+                coerce_stream(records, self.value_schema),
                 self.out_dir,
                 flush_size=self.flush_size,
                 topics_prefix=self.topics_prefix,
-                value_cols=value_names,
+                value_cols=[f.name for f in self.value_schema.fields],
             )
-        keep = [c for c in self.partition_cols if c in records.columns]
-        df = coerced.select(*keep, *value_names)
         if "offset" not in records.columns:
             # without offsets there is no batch identity: the overwrite
             # would land at out_dir and truncate every earlier batch
@@ -84,6 +82,8 @@ class IngestPipeline:
                 "— with_kafka_envelope); for a plain one-shot write use "
                 "sinks.formats.write_partitioned"
             )
+        keep = [c for c in self.partition_cols if c in records.columns]
+        df = coerce_stream(records, self.value_schema, keep=keep)
         records = records.persist()
         try:
             id_cols = [c for c in ("topic", "partition") if c in records.columns]
@@ -122,9 +122,8 @@ class IngestPipeline:
                 "foreachBatch; the file-sink path writes the Spark-native "
                 "layout only"
             )
-        value_names = [f.name for f in self.value_schema.fields]
         keep = [c for c in self.partition_cols if c in records.columns]
-        df = coerce_stream(records, self.value_schema).select(*keep, *value_names)
+        df = coerce_stream(records, self.value_schema, keep=keep)
         writer = (
             df.writeStream.format("orc")
             .option("path", self.out_dir)
@@ -191,12 +190,9 @@ class EvolvingIngest:
                 flush_size=self.flush_size,
                 parity_naming=self.parity_naming,
             )
-        # Project the batch onto the current schema via THE projector
-        # (schema_evolution.project_to_schema): envelope passes through,
-        # missing nullable value fields become NULL, and a missing
-        # NON-nullable field fails loudly — an inline copy here previously
-        # dropped that guard and would silently NULL-fill if a tracker/mode
-        # change ever let such a batch through.
+        # Project the batch onto the current schema: envelope passes
+        # through, missing nullable value fields become NULL, and a missing
+        # NON-nullable field fails loudly.
         from kafka_connect_storage_cloud_formats_spark.schema_evolution import (
             project_to_schema,
         )
@@ -218,10 +214,12 @@ class EvolvingIngest:
         return back.drop(*[c for c in ("gen", "batch") if c in back.columns])
 
 
-def coerce_stream(records: DataFrame, schema: T.StructType) -> DataFrame:
-    """Streaming-safe projection: envelope columns pass through, value
-    columns cast onto the engine schema."""
+def coerce_stream(
+    records: DataFrame, schema: T.StructType, keep: Sequence[str] | None = None
+) -> DataFrame:
+    """Streaming-safe projection, one ``selectExpr``: the columns in ``keep``
+    (default: every non-value column of ``records``) pass through, then the
+    value columns cast onto the engine schema."""
     value_names = {f.name for f in schema.fields}
-    other = [records[c] for c in records.columns if c not in value_names]
-    value = [records[f.name].cast(f.dataType).alias(f.name) for f in schema.fields]
-    return records.select(*other, *value)
+    other = [c for c in (records.columns if keep is None else keep) if c not in value_names]
+    return records.selectExpr(*map(quote_ident, other), *cast_exprs(schema))

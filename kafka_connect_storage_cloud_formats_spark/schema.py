@@ -14,7 +14,9 @@ This module reproduces that type surface natively in Spark:
 - ``validate_engine_schema``, the init-time check of that surface. The cast
   onto it (the reference's per-record toString-reparse coercion,
   ``OrcRecordWriter.java:204-237``) is ``pipeline.coerce_stream``, one
-  declarative projection that Catalyst codegens.
+  declarative projection that Catalyst codegens;
+- ``cast_exprs``, the SQL-string form of that cast, shared by the ingest
+  projections (``coerce_stream``, ``project_to_schema``).
 
 **Documented divergence** (SURVEY.md §1.2): the reference crashes (NPE) on
 null *values* while accepting nullable *schemas*; this engine stores nulls
@@ -23,6 +25,7 @@ as real ORC nulls.
 
 from __future__ import annotations
 
+from collections.abc import Mapping
 from typing import Any
 
 from pyspark.sql import types as T
@@ -144,3 +147,23 @@ def validate_engine_schema(schema: T.StructType) -> None:
                 f"type is not supported: field {f.name!r} has {f.dataType.simpleString()}"
             )
 
+
+def quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier: dots, spaces and
+    backticks in it are taken literally."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def cast_exprs(
+    schema: T.StructType, sources: Mapping[str, str | None] | None = None
+) -> list[str]:
+    """One ``CAST(<source> AS <type>) AS <name>`` SQL expression per field of
+    ``schema``, for ``selectExpr``. ``sources`` maps a field name to the input
+    column it is read from, or to None for a NULL of the field's type; by
+    default each field reads the column of its own name."""
+    out = []
+    for f in schema.fields:
+        src = f.name if sources is None else sources[f.name]
+        src_sql = "NULL" if src is None else quote_ident(src)
+        out.append(f"CAST({src_sql} AS {f.dataType.simpleString()}) AS {quote_ident(f.name)}")
+    return out

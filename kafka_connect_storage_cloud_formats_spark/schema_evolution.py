@@ -16,7 +16,7 @@ the engine's six-type surface:
 - :func:`is_compatible` — can ``reader`` read data written with ``writer``?
 - :class:`SchemaTracker` — per-(topic) current-schema state machine
   returning CONTINUE / ROTATE, or raising on incompatible change.
-- :func:`project_to_schema` — Connect's SchemaProjector as a declarative
+- :func:`project_to_schema` — Connect's SchemaProjector as one declarative
   Spark projection (missing nullable fields → NULL, extra fields dropped,
   same-name same-type enforced) — Catalyst codegens it; no row-level work.
 
@@ -30,11 +30,12 @@ from __future__ import annotations
 from enum import Enum
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_connect_storage_cloud_formats_spark.schema import (
     UnsupportedTypeError,
+    cast_exprs,
+    quote_ident,
     validate_engine_schema,
 )
 
@@ -140,18 +141,16 @@ class SchemaTracker:
 def project_to_schema(
     df: DataFrame, target: T.StructType, passthrough: tuple[str, ...] = ()
 ) -> DataFrame:
-    """Connect ``SchemaProjector.project`` as one Spark select: target field
-    order, NULL-fill for missing nullable fields, drop extras, exact types.
-    Raises on a missing non-nullable field or a type conflict.
+    """Connect ``SchemaProjector.project`` as one ``selectExpr``: target
+    field order, NULL-fill for missing nullable fields, drop extras, exact
+    types. Raises on a missing non-nullable field or a type conflict.
     ``passthrough``: extra columns (e.g. the Kafka envelope) carried through
     unchanged ahead of the value fields when present."""
     validate_engine_schema(target)
     have = {f.name: f.dataType for f in df.schema.fields}
     # Case-insensitive resolution, matching Spark's default analyzer
     # (spark.sql.caseSensitive=false): a df column 'Score' satisfies a
-    # target field 'score' — the old exact-name lookup silently NULL-
-    # filled data that df.select() would have resolved (round-9 review).
-    # Ambiguity (two columns differing only by case) fails loudly.
+    # target field 'score'. Two columns differing only by case fail loudly.
     lower_map: dict[str, str] = {}
     for name in have:
         key = name.lower()
@@ -165,27 +164,24 @@ def project_to_schema(
     # a passthrough name that is ALSO a target field would emit the column
     # twice (duplicate names break the write) — the target projection wins
     cols = [
-        F.col(c)
+        quote_ident(c)
         for c in passthrough
         if c.lower() in lower_map and c.lower() not in target_lower
     ]
+    sources: dict[str, str | None] = {}
     for f in target.fields:
         src = lower_map.get(f.name.lower())
-        if src is not None:
-            if have[src] != f.dataType:
-                # the docstring's promise, now kept: Connect's
-                # SchemaProjector raises on a type conflict — a silent
-                # cast would turn unparseable values into NULLs
-                raise UnsupportedTypeError(
-                    f"type conflict projecting {src!r}: input "
-                    f"{have[src].simpleString()} vs target "
-                    f"{f.dataType.simpleString()}"
-                )
-            cols.append(F.col(src).alias(f.name))
-        elif f.nullable:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        else:
+        if src is not None and have[src] != f.dataType:
+            # Connect's SchemaProjector raises on a type conflict: a silent
+            # cast would turn unparseable values into NULLs
+            raise UnsupportedTypeError(
+                f"type conflict projecting {src!r}: input "
+                f"{have[src].simpleString()} vs target "
+                f"{f.dataType.simpleString()}"
+            )
+        if src is None and not f.nullable:
             raise UnsupportedTypeError(
                 f"cannot project: non-nullable field {f.name!r} absent from input"
             )
-    return df.select(*cols)
+        sources[f.name] = src
+    return df.selectExpr(*cols, *cast_exprs(target, sources))

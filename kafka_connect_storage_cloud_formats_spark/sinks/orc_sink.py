@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from kafka_connect_storage_cloud_formats_spark.fsio import _fs_for
 from kafka_connect_storage_cloud_formats_spark.fsio import glob_escape as _glob_escape
+from kafka_connect_storage_cloud_formats_spark.schema import quote_ident
 
 # Reference test-framework delimiters (FileUtils.java:7-8); '#' in filenames is
 # sanitized to '_' by the writer (OrcRecordWriter.java:50) so the effective
@@ -100,14 +101,15 @@ def write_orc_parity(
 
     staged = os.path.join(out_dir, "_staged")
     group_cols = ["__topic", "__partition", "__start_offset"]
+    offset = quote_ident(offset_col)
     out = (
-        df.withColumn("__topic", F.col(topic_col))
-        .withColumn("__partition", F.col(partition_col))
-        .withColumn(
-            "__start_offset",
-            (F.floor(F.col(offset_col) / F.lit(flush_size)) * F.lit(flush_size)).cast("long"),
+        df.selectExpr(
+            f"{quote_ident(topic_col)} AS __topic",
+            f"{quote_ident(partition_col)} AS __partition",
+            f"CAST(FLOOR({offset} / {flush_size}) * {flush_size} AS BIGINT) AS __start_offset",
+            f"{offset} AS __offset",
+            *map(quote_ident, value_cols),
         )
-        .select(*group_cols, F.col(offset_col).alias("__offset"), *[F.col(c) for c in value_cols])
         # one shuffle, keyed by file group → each output file written by one task
         .repartition(*[F.col(c) for c in group_cols])
         # Sort by OFFSET within each group — the reference appends records

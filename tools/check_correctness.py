@@ -60,10 +60,20 @@ def value_hash(rows, columns) -> str:
 
 
 def main() -> int:
-    import __spark_entry__ as entry_mod
     from kafka_connect_storage_cloud_formats_spark import get_spark
 
     spark = get_spark("check_correctness")
+    try:
+        return check(spark)
+    finally:
+        # an unstopped session leaves a local-cluster's executors to be
+        # killed by the JVM shutdown and relaunched by its Master
+        spark.stop()
+
+
+def check(spark) -> int:
+    import __spark_entry__ as entry_mod
+
     con = duckdb.connect()
     # The ENGINE accepts URI-spelled corpora (file:///..., hdfs://...) —
     # that spelling goes to the Spark side verbatim so URI handling is

@@ -16,7 +16,14 @@ as an idiomatic Spark engine:
   multimodal column plumbing — designed for 100 TB scale.
 """
 
+from pyspark import SparkFiles
+
 from kafka_connect_storage_cloud_formats_spark.session import get_spark
+
+if SparkFiles._is_running_on_worker:  # a Python worker unpickling an engine UDF
+    from kafka_connect_storage_cloud_formats_spark.pyworker import install_zip_guard
+
+    install_zip_guard()
 
 __all__ = ["get_spark"]
 __version__ = "0.1.0"

@@ -56,26 +56,36 @@ def word_ngrams(text: Column | str, n: int = 3) -> Column:
     oracles render NULL for NULL input, so the NULL case must propagate,
     not collapse to []; round-4 ADVICE).
 
-    ``transform(sequence(...))`` + ``slice`` keeps the whole computation in
-    one codegen stage — no explode/re-group round trip. The short-doc case
-    MUST be a ``when`` branch, not a clamped sequence bound: for
-    ``size(w) < n`` the old ``greatest(size-(n-1), 0)`` produced
-    ``sequence(1, 0)``, which Spark runs DESCENDING (default step -1) to
-    ``[1, 0]`` — and ``slice(w, 0, n)`` is a runtime error (array indices
-    start at 1), crashing the whole job on any sub-``n``-token document
-    while the SQL oracles' ``range(1, 1)`` correctly emit nothing.
+    Linear per document: the grams are zipped from ``n`` shifted slices of
+    the token array, ``slice(w, j, m)`` for ``j = 1..n`` with ``m = size(w)
+    - (n - 1)`` grams, so each token is copied ``n`` times (a ``slice(w, i,
+    n)`` per gram inside ``transform`` re-ran the tokenizer once per gram:
+    O(tokens²)). The token array is bound once, as the lambda variable of a
+    ``transform`` over the one-element ``array(split(text))``, so the
+    tokenizer runs once per document. All in one codegen stage — no
+    explode/re-group round trip. The short-doc case MUST stay a ``when``
+    branch: for ``size(w) < n`` the length ``m`` is not positive, and
+    ``slice`` with a negative length is a runtime error that would crash
+    the whole job on any sub-``n``-token document while the SQL oracles'
+    ``range(1, 1)`` correctly emit nothing. ``concat_ws`` keeps empty
+    tokens (a double space) exactly as ``array_join`` did.
     """
     c = F.col(text) if isinstance(text, str) else text
-    w = tokens(c)  # THE tokenizer — one definition (round-9 review)
-    shingled = F.transform(
-        F.sequence(F.lit(1), F.size(w) - (n - 1)),
-        lambda i: F.array_join(F.slice(w, i, n), " "),
-    )
-    return (
-        F.when(c.isNull(), F.lit(None).cast("array<string>"))
-        .when(F.size(w) >= n, shingled)
-        .otherwise(F.array().cast("array<string>"))
-    )
+
+    def grams(w: Column) -> Column:
+        m = F.size(w) - (n - 1)
+        shingled = F.transform(
+            F.arrays_zip(*[F.slice(w, j, m) for j in range(1, n + 1)]),
+            lambda z: F.concat_ws(" ", *[z[str(j)] for j in range(n)]),
+        )
+        return (
+            F.when(w.isNull(), F.lit(None).cast("array<string>"))
+            .when(F.size(w) >= n, shingled)
+            .otherwise(F.array().cast("array<string>"))
+        )
+
+    # THE tokenizer — one definition (round-9 review)
+    return F.transform(F.array(tokens(c)), grams)[0]
 
 
 def word_shingles(text: Column | str, n: int = 3) -> Column:

@@ -83,10 +83,15 @@ def write_orc_parity(
     - only the *value* columns land in the file (the Kafka key is dropped,
       SURVEY.md §1.3); offsets/topic/partition drive placement only.
 
-    Distributed strategy: one shuffle by (topic, partition, start_offset =
-    floor(offset/flush_size)·flush_size) so each group is written by one
-    task as one offset-sorted file under ``partitionBy``, then a driver-side
-    metadata-only rename of each group's part file to the reference key.
+    Distributed strategy: one shuffle by the file group (topic, partition,
+    start_offset = floor(offset/flush_size)·flush_size) so each group is
+    written by one task as one offset-sorted file under ``partitionBy``,
+    then a driver-side metadata-only rename of each group's part file to
+    the reference key. The group is staged as ONE partition column,
+    ``__group=<partition>_<start_offset>_<topic>``: one staging directory
+    per file instead of three nested ones (without libhadoop, Hadoop's
+    local filesystem forks a ``chmod`` for every directory it makes). The
+    topic goes last, so ``split("_", 2)`` recovers it whatever it holds.
     """
     if value_cols is None:
         # Default = everything except the engine's envelope columns. NOTE
@@ -100,25 +105,24 @@ def write_orc_parity(
         ]
 
     staged = os.path.join(out_dir, "_staged")
-    group_cols = ["__topic", "__partition", "__start_offset"]
     offset = quote_ident(offset_col)
     out = (
         df.selectExpr(
-            f"{quote_ident(topic_col)} AS __topic",
-            f"{quote_ident(partition_col)} AS __partition",
-            f"CAST(FLOOR({offset} / {flush_size}) * {flush_size} AS BIGINT) AS __start_offset",
+            f"concat_ws('_', {quote_ident(partition_col)}, "
+            f"CAST(FLOOR({offset} / {flush_size}) * {flush_size} AS BIGINT), "
+            f"{quote_ident(topic_col)}) AS __group",
             f"{offset} AS __offset",
             *map(quote_ident, value_cols),
         )
         # one shuffle, keyed by file group → each output file written by one task
-        .repartition(*[F.col(c) for c in group_cols])
+        .repartition(F.col("__group"))
         # Sort by OFFSET within each group — the reference appends records
         # in Kafka offset order, so file content order is part of the parity
-        # contract (sorting by group_cols alone is a no-op inside a group
+        # contract (sorting by __group alone is a no-op inside a group
         # and leaves rows in nondeterministic shuffle-arrival order). The
         # projection dropping __offset afterwards preserves row order; only
         # the value columns land in the file.
-        .sortWithinPartitions(*group_cols, "__offset")
+        .sortWithinPartitions("__group", "__offset")
         .drop("__offset")
     )
     # Planned write (V1Writes) stacks its own Sort(partition cols) on the
@@ -138,7 +142,13 @@ def write_orc_parity(
     planned = spark_.conf.get("spark.sql.optimizer.plannedWrite.enabled", "true")
     spark_.conf.set("spark.sql.optimizer.plannedWrite.enabled", "false")
     try:
-        out.write.mode("overwrite").partitionBy(*group_cols).orc(staged)
+        # no _SUCCESS marker: the staged dir is deleted after the renames
+        (
+            out.write.mode("overwrite")
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+            .partitionBy("__group")
+            .orc(staged)
+        )
     finally:
         spark_.conf.set("spark.sql.optimizer.plannedWrite.enabled", planned)
 
@@ -150,34 +160,28 @@ def write_orc_parity(
     # glob-escaped: an out_dir like ".../run[A]/out" must not be read as a
     # pattern, which would match nothing and skip every rename.
     fs = _fs_for(staged, spark_)
-    parts = fs.glob_paths(
-        _glob_escape(staged) + "/__topic=*/__partition=*/__start_offset=*/part-*" + EXTENSION
-    )
+    parts = fs.glob_paths(_glob_escape(staged) + "/__group=*/part-*" + EXTENSION)
     if parts is None:
         raise RuntimeError(f"parity finalize could not list {staged}") from fs.last_error
     groups: dict[tuple[str, int, int], list[str]] = {}
     for part in parts:
-        topic_dir, part_dir, off_dir = part.rsplit("/", 4)[1:4]
-        key = (
-            # partition dirs carry Spark's escapePathName encoding (%XX for
-            # '#', ':', '%', ...): a topic 'a#b' is staged as __topic=a%23b
-            unquote(topic_dir.split("=", 1)[1]),
-            int(part_dir.split("=", 1)[1]),
-            int(off_dir.split("=", 1)[1]),
-        )
-        groups.setdefault(key, []).append(part)
+        # partition dirs carry Spark's escapePathName encoding (%XX for
+        # '#', ':', '%', ...): a topic 'a#b' is staged as __group=0_0_a%23b
+        group_dir = part.rsplit("/", 2)[1]
+        partition, start_offset, topic = unquote(group_dir.split("=", 1)[1]).split("_", 2)
+        groups.setdefault((topic, int(partition), int(start_offset)), []).append(part)
 
-    # An empty match against a staged dir that DOES hold topic dirs means
+    # An empty match against a staged dir that DOES hold group dirs means
     # the pattern failed, not that there is no data: the staged-dir delete
     # below would otherwise destroy the write. Checked by a plain listing,
     # not a second glob.
     if not groups:
         leftovers = [
-            rel for rel, _, _ in fs.list_files_recursive(staged) if rel.startswith("__topic=")
+            rel for rel, _, _ in fs.list_files_recursive(staged) if rel.startswith("__group=")
         ]
         if leftovers:
             raise RuntimeError(
-                f"parity finalize glob matched nothing but staged topic dirs "
+                f"parity finalize glob matched nothing but staged group dirs "
                 f"exist ({leftovers[:3]}...): refusing to delete staged data"
             )
 

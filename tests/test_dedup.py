@@ -1440,6 +1440,34 @@ def test_word_ngrams_preserves_occurrences(spark):
     assert row["dst"] == ["a b", "b a"]
 
 
+def test_word_ngrams_tokenizes_outside_lambdas(spark):
+    """word_ngrams is linear per document: no ``split`` runs inside a
+    lambda (one per gram made it O(tokens²)). NULL, short-document and
+    double-space cases keep their semantics."""
+    from kafka_connect_storage_cloud_formats_spark.functions.text_functions import word_ngrams
+
+    df = spark.createDataFrame(
+        [("a  b c",), (None,), ("a",), ("",), ("x y",), ("trail  ",), ("a b c d",)], "text string"
+    )
+    grams = df.select(word_ngrams("text", 3).alias("g"))
+    plan = grams._jdf.queryExecution().analyzed().toString()
+    lambdas = []
+    at = plan.find("lambdafunction(")
+    while at >= 0:
+        depth, end = 0, at
+        for end in range(at, len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if plan[end] == ")" and depth == 0:
+                break
+        lambdas.append(plan[at : end + 1])
+        at = plan.find("lambdafunction(", at + 1)
+    assert lambdas and "split(" in plan
+    assert not [f for f in lambdas if "split(" in f], lambdas
+    assert [r.g for r in grams.collect()] == [
+        ["a  b", " b c"], None, [], [], [], ["trail  "], ["a b c", "b c d"],
+    ]
+
+
 def test_scrub_repeated_ngrams_hand_computed(spark, tmp_path):
     """scrub_repeated_ngrams + scrub_repeated_ngrams_text (round 13 — the
     rewrite step of substring-level dedup) on the same hand-computed

@@ -702,6 +702,21 @@ def test_parity_topic_with_escaped_chars(spark, tmp_path):
     assert pipe.read_back(spark).count() == 4
 
 
+def test_parity_topic_with_underscores(spark, tmp_path):
+    """The staged group key is ``<partition>_<start_offset>_<topic>``: a
+    topic holding the delimiter itself comes back whole."""
+    out = str(tmp_path / "out")
+    records = make_records(spark, 12, num_partitions=2, topic="orders_v2_eu")
+    pipe = IngestPipeline(out, SIX_TYPE_SCHEMA, flush_size=3, parity_naming=True)
+    written = pipe.run_batch(records)
+    assert written == sorted(
+        file_key_to_commit("topics", "orders_v2_eu", "orders_v2_eu", p, off)
+        for p in range(2)
+        for off in (0, 3)
+    )
+    assert pipe.read_back(spark).count() == 12
+
+
 def test_evolving_read_back_drops_bookkeeping_cols(spark, tmp_path):
     """Non-parity EvolvingIngest read_back must not leak gen=/batch=
     write-layout partition columns into the returned schema (round-9
@@ -756,7 +771,7 @@ def test_pack_sequence_spans_capacity_edges(spark, sf_dir):
 
 
 def test_parity_finalize_refuses_to_delete_unmatched_staged_data(spark, tmp_path, monkeypatch):
-    """A finalize glob that matches nothing while staged topic dirs exist
+    """A finalize glob that matches nothing while staged group dirs exist
     must raise and leave the staged data in place."""
     from kafka_connect_storage_cloud_formats_spark import fsio
     from kafka_connect_storage_cloud_formats_spark.sinks.orc_sink import write_orc_parity
@@ -765,7 +780,7 @@ def test_parity_finalize_refuses_to_delete_unmatched_staged_data(spark, tmp_path
     out = str(tmp_path / "out")
     with pytest.raises(RuntimeError, match="refusing to delete staged data"):
         write_orc_parity(make_records(spark, 7), out, flush_size=3)
-    assert any(n.startswith("__topic=") for n in os.listdir(os.path.join(out, "_staged")))
+    assert any(n.startswith("__group=") for n in os.listdir(os.path.join(out, "_staged")))
 
 
 def test_parity_finalize_requires_one_part_per_group(spark, tmp_path, monkeypatch):

@@ -168,7 +168,8 @@ def test_bench_payload_writer_partial_and_final(tmp_path, monkeypatch):
         bench.os.path, "abspath", lambda p: str(tmp_path / "bench.py")
     )
     samples = {"q1": [0.5, 0.4, 0.6], "q2": [0.2]}
-    doc = bench._write_payload(samples, ["q1", "q2", "q3"], passes_done=1)
+    worker_cpu = {"q1": [0.2, 0.04, 0.05], "q2": [0.0]}
+    doc = bench._write_payload(samples, ["q1", "q2", "q3"], passes_done=1, worker_cpu=worker_cpu)
     on_disk = json.load(open(tmp_path / "BENCH.json"))
     assert on_disk == doc
     assert doc["passes_done"] == 1
@@ -176,6 +177,8 @@ def test_bench_payload_writer_partial_and_final(tmp_path, monkeypatch):
     assert doc["queries"]["q1"] == 0.4  # min series
     assert doc["queries_trimmed_mean"]["q1"] == 0.45  # drop-worst at n=3
     assert doc["queries_trimmed_mean"]["q2"] == 0.2  # n<3 → plain mean
+    assert doc["queries_worker_cpu_s"] == {"q1": 0.04, "q2": 0.0}  # min over trials
+    assert bench.python_worker_cpu_s(os.getpid()) >= 0.0
     # final write has no provisional marker
     final = bench._write_payload(samples, ["q1", "q2"])
     assert "passes_done" not in final

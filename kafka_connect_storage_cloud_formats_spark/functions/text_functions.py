@@ -1,39 +1,15 @@
 """Text primitives: tokenization, shingling, deterministic hashing.
 
 All built from ``pyspark.sql.functions`` (JVM-side, codegen'd) — no Python
-UDFs in these hot paths. Decision hashes default to md5 hex strings so the
-DuckDB oracle can reproduce them exactly; ``hash_family()`` (env
-``SPARK_GRAFT_HASH_FAMILY=xxhash64``) switches the minhash/split call
-sites to the production 64-bit family.
+UDFs in these hot paths. md5 hex strings are the engine's only decision
+hash: DuckDB reproduces them exactly, so every dedup decision the engine
+makes is one the oracle gate can certify.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# Decision-hash family for the dedup/split call sites (round-6 verdict ask
-# #4 — the SCALE.md "swap md5 for xxhash64 at 100 TB" promise as code, not
-# prose). "md5" (default) keeps every hash DuckDB-reproducible so the
-# driver's oracle gate stays bit-exact; "xxhash64" is the production
-# family — one JVM-native 64-bit hash per value (~5× cheaper than md5's
-# hex-string chain, 8-byte shuffle keys instead of 32-hex strings). DuckDB
-# has no xxhash64, so the oracle gate always runs under md5; the
-# families' dedup DECISIONS are pinned equal on a fixture in
-# tests/test_dedup.py.
-HASH_FAMILY_ENV = "SPARK_GRAFT_HASH_FAMILY"
-HASH_FAMILIES = ("md5", "xxhash64")
-
-
-def hash_family() -> str:
-    fam = os.environ.get(HASH_FAMILY_ENV, "md5")
-    if fam not in HASH_FAMILIES:
-        raise ValueError(
-            f"{HASH_FAMILY_ENV}={fam!r}; supported families: {HASH_FAMILIES}"
-        )
-    return fam
 
 # A tiny stopword list over the corpus vocabulary (deterministic, mirrored in
 # the oracle SQL verbatim).

@@ -24,10 +24,9 @@ The standard tiers of an LLM-data dedup pipeline, each designed for
 - **fuzzy prefix** — capped Levenshtein blocks; **near-dup clustering +
   labels** — connected components over strong LSH pairs, artifact-served.
 
-At 100 TB the md5 hex-string hashing is swapped for ``xxhash64`` via
-``SPARK_GRAFT_HASH_FAMILY`` (cheaper, JVM-codegen'd); md5 is the default
-because both engines implement it identically, making every stage
-oracle-checkable.
+md5 is the only decision hash: both engines implement it identically, so
+every stage is oracle-checkable. A cheaper 64-bit family would need a
+workload that runs it and an oracle that can certify it (SCALE.md).
 """
 
 from __future__ import annotations
@@ -39,7 +38,6 @@ from pyspark.sql import functions as F
 
 from kafka_connect_storage_cloud_formats_spark.catalog import load_table, spread
 from kafka_connect_storage_cloud_formats_spark.functions.text_functions import (
-    hash_family,
     word_ngrams,
     word_shingles,
 )
@@ -231,31 +229,17 @@ ORDER BY t.lang
 """
 
 
-def dedup_canonical(
-    spark: SparkSession, sf_dir: str, family: str | None = None
-) -> DataFrame:
+def dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonicalizing dedup tier (between exact and fuzzy): documents that
     collapse to the same canonical form — lowercased, punctuation stripped,
     whitespace squeezed — are one group. Catches trivial re-encodings
     (case, punctuation, spacing) that byte-exact hashing misses, at the
-    same map+groupBy cost as dedup_exact: the shuffle carries a hash of
-    the canonical form, never the text — 32 hex bytes under the md5
-    family (oracle-reproducible default), a PAIR of independent 64-bit
-    xxhash64 values under the production family (round-9 review: a single
-    64-bit equality key has real birthday-collision mass at 10^10+ docs —
-    a collision silently merges two distinct canonical groups; two
-    independent 64-bit hashes restore a 128-bit key at two cheap codegen
-    hashes over the ONCE-materialized canonical string, still 16 B at the
-    shuffle vs md5's 32-hex). The hash is a pure EQUALITY key here, so
-    the groups — keep_doc_id, n_docs, n_raw_variants — agree across
-    families (pinned on a fixture in tests/test_dedup.py and verified
-    equal on the real sf0.01 corpus); only the canon_hash column's
-    representation differs, which is why the oracle gate always runs
-    under md5. The variant count hashes the text (COUNT(DISTINCT
-    md5(text)), mirrored by the oracle): a bare countDistinct("text")
-    would ship every distinct document through the exchange — the exact
-    corpus-sized shuffle this tier exists to avoid (round-9 review)."""
-    family = family or hash_family()
+    same map+groupBy cost as dedup_exact: the shuffle carries the md5 of
+    the canonical form (32 hex bytes, a 128-bit equality key), never the
+    text. The variant count hashes the text (COUNT(DISTINCT md5(text)),
+    mirrored by the oracle): a bare countDistinct("text") would ship every
+    distinct document through the exchange — the exact corpus-sized
+    shuffle this tier exists to avoid."""
     docs = load_table(spark, sf_dir, "documents")
     canon = F.trim(
         F.regexp_replace(
@@ -264,17 +248,9 @@ def dedup_canonical(
     )
     # materialize the canonical string ONCE per row: codegen does not CSE
     # repeated identical calls, and the regex chain dominates this map
-    base = docs.withColumn("__canon", canon)
-    if family == "md5":
-        keyed = base.select(F.md5("__canon").alias("canon_hash"), "doc_id", "text")
-    else:
-        keyed = base.select(
-            F.concat_ws(
-                "|", F.xxhash64("__canon"), F.xxhash64("__canon", F.lit(1))
-            ).alias("canon_hash"),
-            "doc_id",
-            "text",
-        )
+    keyed = docs.withColumn("__canon", canon).select(
+        F.md5("__canon").alias("canon_hash"), "doc_id", "text"
+    )
     return (
         keyed.groupBy("canon_hash")
         .agg(
@@ -431,32 +407,10 @@ ORDER BY d1, d2
 REPEAT_NGRAM_K = 8
 
 
-def _gram_key(col, family: str):
-    """The k-gram occurrence GROUPING key under the decision-hash family
-    (round-13 verdict "What's wrong #3": this chain shuffles at OCCURRENCE
-    granularity — ≈ one row per token, the heaviest shuffle any round-13
-    operator added — and hard-coded 32-hex md5 keys; it now honors
-    ``SPARK_GRAFT_HASH_FAMILY`` exactly like the minhash/split call
-    sites). "md5" (default) keeps the DuckDB oracle bit-reproducible;
-    "xxhash64" is the production family: a STRUCT of two independent
-    64-bit hashes — 16 bytes at the shuffle vs md5's 32-hex string, and
-    the pair restores a 128-bit equality key (the same birthday-collision
-    arithmetic as dedup_canonical: gram populations at 100 TB are ~10^12+,
-    where a single 64-bit key has real silent-merge mass). The families'
-    DECISIONS — duplicated-occurrence sets and covered-position sets —
-    are pinned equal on a fixture in tests/test_dedup.py."""
-    if family == "md5":
-        return F.md5(col)
-    return F.struct(
-        F.xxhash64(col).alias("h1"), F.xxhash64(col, F.lit(1)).alias("h2")
-    )
-
-
 def dedup_repeated_ngrams(
     spark: SparkSession,
     sf_dir: str,
     k: int = REPEAT_NGRAM_K,
-    family: str | None = None,
 ) -> DataFrame:
     """Per-language repeated-k-gram mass report: (lang, n_grams,
     n_dup_grams, n_dup_keys, n_docs_with_dup, dup_mass) where a gram is
@@ -471,22 +425,19 @@ def dedup_repeated_ngrams(
 
     Spark-first shape: the gram array is built map-only inside one
     codegen stage (``transform(sequence)·slice`` — no window, no per-doc
-    shuffle), each occurrence is carried as a compact decision-hash key
-    (:func:`_gram_key` — md5 hex under the oracle-reproducible default,
-    a 128-bit xxhash64 pair under ``SPARK_GRAFT_HASH_FAMILY=xxhash64``;
-    the gram text itself never shuffles), and both aggregates are
+    shuffle), each occurrence is carried as its md5 hex key (the gram
+    text itself never shuffles), and both aggregates are
     map-side-combinable groupBys — no per-key posting list is ever held
     (the hot-gram hazard the capped-shingle artifact documents).
     Single-consumer derivation, so it runs from text by design (artifact
     doctrine: only multi-consumer corpus-scale streams are persisted)."""
-    family = family or hash_family()
     docs = load_table(spark, sf_dir, "documents")
     grams = (
         spread(docs)
         .select(
             "doc_id", "lang", F.explode(word_ngrams("text", k)).alias("gram")
         )
-        .select("doc_id", "lang", _gram_key(F.col("gram"), family).alias("g"))
+        .select("doc_id", "lang", F.md5(F.col("gram")).alias("g"))
     )
     # "occurs in ≥2 distinct documents" ⇔ min(doc_id) ≠ max(doc_id): a
     # map-side-combinable aggregate, where countDistinct would add a full
@@ -525,17 +476,14 @@ def dedup_repeated_ngrams(
 def _covered_positions(
     docs: DataFrame,
     k: int,
-    family: str | None = None,
     keep_first: bool = False,
 ) -> DataFrame:
     """(doc_id, pos) of every token position covered by a duplicated
     k-gram occurrence (0-based) — the span set the scrub removes. ONE
     definition shared by the registered stats row, the span report and
     the text rewriter. Linear shape: k covered rows exploded per
-    duplicated occurrence, distinct'd on the (doc_id, pos) pair. The
-    gram grouping key honors the decision-hash family
-    (:func:`_gram_key`); the emitted (doc_id, pos) pairs are
-    family-independent (pinned in tests).
+    duplicated occurrence, distinct'd on the (doc_id, pos) pair, grouped
+    by the md5 of each gram.
 
     ``keep_first`` (Lee et al. 2022: keep ONE copy of each duplicated
     substring; the default removes every occurrence, the boilerplate-
@@ -543,16 +491,15 @@ def _covered_positions(
     the (min doc_id, then min start position) one, so its positions stay
     uncovered unless some OTHER gram's non-canonical occurrence overlaps
     them. It costs one more window aggregate and filter, no new shuffle."""
-    family = family or hash_family()
     grams = (
         spread(docs)
         .select(
             "doc_id", F.posexplode(word_ngrams("text", k)).alias("i", "gram")
         )
-        .select("doc_id", "i", _gram_key(F.col("gram"), family).alias("g"))
+        .select("doc_id", "i", F.md5(F.col("gram")).alias("g"))
         # ONE gram exchange feeds the whole derivation: repartitioning by
         # g and computing the dup-key test as window functions below makes
-        # the posexplode + hash (this family's dominant CPU) run once.
+        # the posexplode + hash (this operator's dominant CPU) run once.
         .repartition(F.col("g"))
     )
     # min≠max over a g-partitioned window ⇔ the gram occurs in ≥2 distinct
@@ -892,70 +839,48 @@ def _minhash_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_sigs_from(load_table(spark, sf_dir, "documents"))
 
 
-def _minhash_sigs_from(docs: DataFrame, family: str | None = None) -> DataFrame:
+def _minhash_sigs_from(docs: DataFrame) -> DataFrame:
     """Signature computation over any (doc_id, text) DataFrame — split out
-    so the hash-family / chunk-indexing expressions are
-    equivalence-testable against a plain-Python reference on synthetic
-    docs (tests/test_dedup.py)."""
-    return _sigs_from_shingles(_shingle_rows(docs), family=family)
+    so the chunk-indexing expressions are equivalence-testable against a
+    plain-Python reference on synthetic docs (tests/test_dedup.py)."""
+    return _sigs_from_shingles(_shingle_rows(docs))
 
 
-# The xxhash64 family carves 2 signature components (32-bit halves) out of
-# each 64-bit hash — same chunking trick as the md5 family's 4×8-hex
-# chunks: disjoint chunks of a well-mixed hash are independent uniform
-# values, each a valid min-wise family member (MIN over unsigned longs).
-MINHASH_CHUNKS_PER_XX = 2
+# THE MinHash indexing as SQL templates, shared by the aggregate and the
+# array reduction so the two cannot drift: ``_MH_GROUP_HASH.format(g=g,
+# s=<shingle>)`` is group g's hash of a shingle; ``_MH_CHUNK[c].format(h=
+# <group hash>)`` carves chunk c out of it. Component k is chunk
+# ``k % MINHASH_CHUNKS_PER_MD5`` of group ``k // MINHASH_CHUNKS_PER_MD5``,
+# reduced by MIN over a document's distinct shingles.
+_MH_GROUP_HASH = "md5(concat('{g}:', {s}))"
+_MH_CHUNK = tuple(
+    f"substring({{h}}, {c * 8 + 1}, 8)" for c in range(MINHASH_CHUNKS_PER_MD5)
+)
 
 
-def _minhash_layout(family: str) -> tuple[int, str, tuple[str, ...]]:
-    """THE MinHash indexing of a hash family as SQL templates, shared by the
-    aggregate and the array reduction so the two cannot drift:
-    ``(chunks, group_hash, chunk)``. ``group_hash.format(g=g, s=<shingle>)``
-    is group g's hash of a shingle; ``chunk[c].format(h=<group hash>)``
-    carves chunk c out of it. Component k is chunk ``k % chunks`` of group
-    ``k // chunks``, reduced by MIN over a document's distinct shingles.
-
-    "md5" (default, oracle-reproducible) carves 8-hex-char chunks;
-    "xxhash64" (production: JVM-native, no hex-string round-trip) carves
-    the 32-bit halves as longs."""
-    if family == "xxhash64":
-        return (
-            MINHASH_CHUNKS_PER_XX,
-            "xxhash64(concat('{g}:', {s}))",
-            ("shiftrightunsigned({h}, 32)", "({h} & 4294967295)"),
-        )
-    return (
-        MINHASH_CHUNKS_PER_MD5,
-        "md5(concat('{g}:', {s}))",
-        tuple(
-            f"substring({{h}}, {c * 8 + 1}, 8)" for c in range(MINHASH_CHUNKS_PER_MD5)
-        ),
-    )
-
-
-def _sigs_from_shingles(sh: DataFrame, family: str | None = None) -> DataFrame:
+def _sigs_from_shingles(sh: DataFrame) -> DataFrame:
     """MinHash aggregation over a (doc_id, s) shingle stream — the
     corpus-scale reduction: a map-side partial MIN then one shuffle, so the
     hashing spreads over every task of the shingle stream. The artifact
     build feeds it the SHARED materialized shingle stream
     (operators/shingles.py), so one corpus scan serves both the Jaccard
     tier and the signature build."""
-    chunks, group_hash, chunk = _minhash_layout(family or hash_family())
-    groups = -(-MINHASH_K // chunks)
+    chunks = MINHASH_CHUNKS_PER_MD5
     # SQL-string expressions (one F.expr per column/aggregate): the
     # Column-operator form was ~80 py4j round-trips of driver time per plan
     # build
     hashes = [
-        F.expr(group_hash.format(g=g, s="s") + f" AS h{g}") for g in range(groups)
+        F.expr(_MH_GROUP_HASH.format(g=g, s="s") + f" AS h{g}")
+        for g in range(MINHASH_GROUPS)
     ]
     aggs = [
-        F.expr(f"min({chunk[k % chunks].format(h=f'h{k // chunks}')}) AS mh_{k:02d}")
+        F.expr(f"min({_MH_CHUNK[k % chunks].format(h=f'h{k // chunks}')}) AS mh_{k:02d}")
         for k in range(MINHASH_K)
     ]
     return sh.select("doc_id", *hashes).groupBy("doc_id").agg(*aggs)
 
 
-def _with_minhash_array(docs: DataFrame, family: str | None = None) -> DataFrame:
+def _with_minhash_array(docs: DataFrame) -> DataFrame:
     """``docs`` plus mh_00…mh_11 computed per row by the ARRAY form of the
     MinHash reduction — ``array_min(transform(word_shingles(text), …))`` per
     component: the same values as :func:`_sigs_from_shingles`, with no
@@ -965,16 +890,15 @@ def _with_minhash_array(docs: DataFrame, family: str | None = None) -> DataFrame
     rows rather than by documents. A document with no shingle (NULL text,
     fewer than SHINGLE_N tokens) gets NULL components — the aggregate
     form emits no row for it."""
-    chunks, group_hash, chunk = _minhash_layout(family or hash_family())
-    groups = -(-MINHASH_K // chunks)
+    chunks = MINHASH_CHUNKS_PER_MD5
     sh = docs.select("*", word_shingles("text", SHINGLE_N).alias("__sh"))
     # each group's hash array is its own column, so the hash runs once per
     # shingle and group rather than once per component
     hv = sh.select(
         "*",
         *[
-            F.expr(f"transform(__sh, s -> {group_hash.format(g=g, s='s')}) AS __h{g}")
-            for g in range(groups)
+            F.expr(f"transform(__sh, s -> {_MH_GROUP_HASH.format(g=g, s='s')}) AS __h{g}")
+            for g in range(MINHASH_GROUPS)
         ],
     )
     return hv.select(
@@ -982,7 +906,7 @@ def _with_minhash_array(docs: DataFrame, family: str | None = None) -> DataFrame
         *[
             F.expr(
                 f"array_min(transform(__h{k // chunks}, h -> "
-                f"{chunk[k % chunks].format(h='h')})) AS mh_{k:02d}"
+                f"{_MH_CHUNK[k % chunks].format(h='h')})) AS mh_{k:02d}"
             )
             for k in range(MINHASH_K)
         ],
@@ -998,36 +922,29 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ensure_minhash_sigs(
     spark: SparkSession,
     sf_dir: str,
-    family: str | None = None,
     split: str | None = None,
 ) -> DataFrame:
     """Published MinHash signature table (doc_id, mh_00…mh_11), about
     100 B/doc, built once per corpus content and shared by every LSH
     consumer (pairs, clustering, the incremental tiers, the training
-    pipeline). Components are hex strings (md5) or longs (xxhash64), so
-    the parquet roundtrip is exact.
+    pipeline). Components are hex strings, so the parquet roundtrip is
+    exact.
 
     ``split=None`` aggregates the shared shingle artifact (the stream the
     Jaccard tier scans, so one corpus scan serves both);
     ``split="batch"`` tokenizes the batch rows directly, under its own
-    params infix. The params token names the hash family for every
-    family but md5, because the families' column types differ."""
+    params infix."""
     from kafka_connect_storage_cloud_formats_spark.artifacts import artifact_df, artifact_path
 
-    family = family or hash_family()
-    ptag = (
-        f"k{MINHASH_K}n{SHINGLE_N}"
-        + _split_params(split)
-        + ("" if family == "md5" else f"x{family}")
-    )
+    ptag = f"k{MINHASH_K}n{SHINGLE_N}" + _split_params(split)
     path = artifact_path("minhash_sigs", sf_dir, "documents", params=ptag, spark=spark)
     if split == "batch":
         builder = lambda tmp: _minhash_sigs_from(  # noqa: E731
-            _split(load_table(spark, sf_dir, "documents"), "batch"), family=family
+            _split(load_table(spark, sf_dir, "documents"), "batch")
         ).write.parquet(tmp)
     else:
         builder = lambda tmp: _sigs_from_shingles(  # noqa: E731
-            ensure_shingle_rows(spark, sf_dir, SHINGLE_N), family=family
+            ensure_shingle_rows(spark, sf_dir, SHINGLE_N)
         ).write.parquet(tmp)
     return artifact_df(path, builder, spark)
 
@@ -1054,9 +971,7 @@ FROM hv GROUP BY doc_id)
 MINHASH_SIGNATURES_SQL = _minhash_sql_core() + "SELECT * FROM sig ORDER BY doc_id"
 
 
-def _minhash_pairs_unsorted(
-    spark: SparkSession, sf_dir: str, family: str | None = None
-) -> DataFrame:
+def _minhash_pairs_unsorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs WITHOUT the presentation sort — the form every
     downstream consumer (clustering, training pipeline) uses; a global
     sort in the middle of a chain is a pure range-shuffle tax.
@@ -1076,41 +991,34 @@ def _minhash_pairs_unsorted(
     # same parquet instead of re-running the corpus-scale shingle+md5
     # chain. (Checkpointing the exploded band rows instead was measurably
     # worse: 4 rows/doc each duplicating the signature array.)
-    family = family or hash_family()
-    sig = _ensure_minhash_sigs(spark, sf_dir, family=family)
-    return _pairs_from_sigs(sig, family=family)
+    return _pairs_from_sigs(_ensure_minhash_sigs(spark, sf_dir))
 
 
-def _band_hash(cols: list[str], family: str) -> str:
-    """THE band-hash expression over SQL columns ``cols``: xxhash64 takes
-    them directly, md5 hashes their '|'-joined strings."""
-    if family == "xxhash64":
-        return f"xxhash64({', '.join(cols)})"
+def _band_hash(cols: list[str]) -> str:
+    """THE band-hash expression over SQL columns ``cols``: the md5 of their
+    '|'-joined strings."""
     return f"md5(concat_ws('|', {', '.join(cols)}))"
 
 
-def _band_structs(family: str) -> list[str]:
-    """SQL ``struct(band_id, band_hash)`` of each MinHash band."""
-    return [
-        f"struct({b} AS band_id, "
-        f"{_band_hash(_MH_COLS[b * LSH_ROWS : (b + 1) * LSH_ROWS], family)} AS band_hash)"
-        for b in range(LSH_BANDS)
-    ]
+# SQL ``struct(band_id, band_hash)`` of each MinHash band
+_BAND_STRUCTS = [
+    f"struct({b} AS band_id, "
+    f"{_band_hash(_MH_COLS[b * LSH_ROWS : (b + 1) * LSH_ROWS])} AS band_hash)"
+    for b in range(LSH_BANDS)
+]
 
 
 _SIG_ARRAY = f"array({', '.join(_MH_COLS)}) AS sig"
 
 
-def _band_rows(sig: DataFrame, family: str | None = None) -> DataFrame:
+def _band_rows(sig: DataFrame) -> DataFrame:
     """(doc_id, sig array, band_id, band_hash) rows from a signature table —
     THE banding derivation, shared by the whole-corpus self-join pair tier
     and the incremental batch-vs-corpus tier (one definition: the band
     layout IS the candidate contract, so two copies could silently band
-    differently). Family-agnostic: the band-hash expression differs
-    (:func:`_band_hash`), everything downstream compares components by
-    equality. SQL-string expressions: a handful of F.expr calls instead of
-    ~100 py4j round-trips building the array/struct trees."""
-    structs = ", ".join(_band_structs(family or hash_family()))
+    differently). SQL-string expressions: a handful of F.expr calls instead
+    of ~100 py4j round-trips building the array/struct trees."""
+    structs = ", ".join(_BAND_STRUCTS)
     return sig.select(
         F.col("doc_id"),
         F.expr(_SIG_ARRAY),
@@ -1118,24 +1026,24 @@ def _band_rows(sig: DataFrame, family: str | None = None) -> DataFrame:
     ).select("doc_id", "sig", "bb.band_id", "bb.band_hash")
 
 
-def _exact_key(family: str) -> str:
-    """SQL ``struct(band_id, band_hash)`` of the exact tier's candidate key:
-    band −1, the band hash of ``content_hash`` (NULL for a NULL hash, so
-    NULL text never joins a corpus row)."""
-    h = _band_hash(["content_hash"], family)
-    return f"struct(-1 AS band_id, nvl2(content_hash, {h}, NULL) AS band_hash)"
+# SQL ``struct(band_id, band_hash)`` of the exact tier's candidate key: band
+# −1, the band hash of ``content_hash`` (NULL for a NULL hash, so NULL text
+# never joins a corpus row)
+_EXACT_KEY = (
+    f"struct(-1 AS band_id, nvl2(content_hash, {_band_hash(['content_hash'])}, NULL)"
+    " AS band_hash)"
+)
 
 
-def _doc_keys(docs: DataFrame, family: str | None = None) -> DataFrame:
+def _doc_keys(docs: DataFrame) -> DataFrame:
     """A per-document table (doc_id, content_hash, mh_00…mh_11, …) as
     candidate-key rows: every column of ``docs`` plus ``sig``, ``band_id``
     and ``band_hash``, from one explode per document. Every doc has the
-    exact key (:func:`_exact_key`); a doc with a signature also has the
+    exact key (``_EXACT_KEY``); a doc with a signature also has the
     MinHash bands of :func:`_band_rows`. The per-micro-batch helpers
     here take SQL strings: each Column built in Python is a handful of
     py4j calls."""
-    family = family or hash_family()
-    keys = ", ".join([_exact_key(family), *_band_structs(family)])
+    keys = ", ".join([_EXACT_KEY, *_BAND_STRUCTS])
     n = f"IF(mh_00 IS NULL, 1, {LSH_BANDS + 1})"
     return docs.selectExpr("*", _SIG_ARRAY, f"inline(slice(array({keys}), 1, {n}))")
 
@@ -1147,10 +1055,9 @@ _SIG_MATCHES = " + ".join(
 )
 
 
-def _pairs_from_sigs(sig: DataFrame, family: str | None = None) -> DataFrame:
-    """Band + self-join over any signature table (family-agnostic — see
-    :func:`_band_rows`)."""
-    bands = _band_rows(sig, family=family)
+def _pairs_from_sigs(sig: DataFrame) -> DataFrame:
+    """Band + self-join over any signature table (see :func:`_band_rows`)."""
+    bands = _band_rows(sig)
     a = bands.alias("a")
     b = bands.alias("b")
     matches = _SIG_MATCHES
@@ -1431,7 +1338,7 @@ def _judge(batch_keys: DataFrame, corpus_keys: DataFrame) -> DataFrame:
     )
 
 
-def _staged(judged: DataFrame, family: str | None = None) -> DataFrame:
+def _staged(judged: DataFrame) -> DataFrame:
     """THE chained curation rule's batch-only tail: ``judged`` (a
     :func:`_judge` output with mh_00…mh_11) with its flags replaced by
     ``stage`` ∈ CURATION_STAGES, chain order as precedence: exact_corpus
@@ -1440,7 +1347,7 @@ def _staged(judged: DataFrame, family: str | None = None) -> DataFrame:
     bands of the docs still fresh), kept."""
     flagged = judged.select("*", _exact_stage(F.col("__in_corpus")).alias("__exact"))
     fresh = flagged.filter("__exact IS NULL AND NOT __nd_corpus AND mh_00 IS NOT NULL")
-    within = _banded_within(_band_rows(fresh, family))
+    within = _banded_within(_band_rows(fresh))
     stage = (
         "coalesce(__exact, IF(__nd_corpus, 'neardup_corpus', NULL),"
         " IF(__nd_within, 'neardup_within', NULL), 'kept') AS stage"
@@ -1482,7 +1389,7 @@ def _curation_disposition(
     if corpus_sigs is None:
         corpus_sigs = _split(_ensure_minhash_sigs(spark, sf_dir), "corpus")
     exact_keys = corpus_hashes.select(
-        "content_hash", F.expr(_exact_key(hash_family())).alias("__k")
+        "content_hash", F.expr(_EXACT_KEY).alias("__k")
     ).select("__k.band_id", "__k.band_hash", "content_hash")
     corpus_keys = exact_keys.unionByName(_band_rows(corpus_sigs), allowMissingColumns=True)
     return _staged(_judge(_doc_keys(batch), corpus_keys)).select("doc_id", "lang", "stage")
@@ -1701,15 +1608,12 @@ CURATION_SECOND_DROP_REPORT_SQL = _curation_second_report_sql()
 def _accept_ptag() -> str:
     """Params fragment naming every constant of the accept decision (the
     chained disposition): the drop split, the near-dup tier's signature
-    layout and strong-match threshold, and the hash family for every
-    family but md5 (the signatures depend on it). Shared by the kept
-    artifact and every merged generation, so a retuned chain never
-    serves a stale accepted set."""
-    family = hash_family()
+    layout and strong-match threshold. Shared by the kept artifact and
+    every merged generation, so a retuned chain never serves a stale
+    accepted set."""
     return (
         f"mrg{INCREMENT_MOD}k{MINHASH_K}b{LSH_BANDS}r{LSH_ROWS}n{SHINGLE_N}"
         f"j{int(NEARDUP_INCR_MIN_EST * 100)}"
-        + ("" if family == "md5" else f"x{family}")
     )
 
 
@@ -1762,57 +1666,22 @@ def _simhash_fp_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _simhash_fp_from(load_table(spark, sf_dir, "documents"))
 
 
-def _simhash_fp_from(docs: DataFrame, family: str | None = None) -> DataFrame:
+def _simhash_fp_from(docs: DataFrame) -> DataFrame:
     """Fingerprint computation over any (doc_id, text) DataFrame — split
     out so the packed-vote/SQL-string machinery is equivalence-testable
     against a plain-Python reference on synthetic docs
-    (tests/test_dedup.py).
-
-    ``family`` picks where a token's 64 vote bits come from (round-7
-    verdict ask #5): "md5" (default) takes the first 16 hex chars of
-    md5(token) — DuckDB-reproducible, the oracle gate's basis; "xxhash64"
-    takes the two 32-bit halves of the JVM-native xxhash64(token) — one
-    codegen'd long per occurrence instead of an md5 + hex-substring +
-    base-16-conv chain. Either way v_hi/v_lo are uniform 32-bit values
-    and everything downstream (packed votes, halves, blocks, Hamming) is
-    family-blind.
-
-    Decision-equality contract (weaker here than at the equality-key
-    sites, by the mathematics of simhash): the family IS the random
-    projection, so CLEAR decisions agree — exact duplicates are Hamming 0
-    and disjoint documents are far beyond the threshold under every
-    family (pinned on a fixture in tests/test_dedup.py) — but
-    moderate-similarity pairs near the ≤3 boundary land at
-    family-dependent distances, exactly as they would under a re-seeded
-    family. Measured on the real sf0.01 corpus: the two families share
-    all true-duplicate pairs; their symmetric difference is 11 boundary
-    pairs (md5-vs-xx Hamming like 3↔4, 4↔2) out of ~125k candidate
-    pairs. The md5 default remains the oracle-gated basis. Measured A/B
-    at sf0.1 (interleaved, min-of-3): the xxhash64 derivation is 0.68×
-    the md5 chain — the md5 + hex-substring + base-16-conv tower was
-    ~1/3 of this map's time."""
-    family = family or hash_family()
+    (tests/test_dedup.py). A token's 64 vote bits are the first 16 hex
+    chars of md5(token), as two uniform 32-bit values v_hi/v_lo."""
     half_bits = SIMHASH_BITS // 2
     tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("t"))
-    if family == "xxhash64":
-        # one 64-bit hash per occurrence, shared by both halves (same
-        # withColumn-then-project sharing the md5 branch measured);
-        # logical shift keeps v_hi non-negative (arithmetic shiftright
-        # would sign-extend)
-        tok = tok.withColumn("h64", F.expr("xxhash64(t)")).select(
-            "doc_id",
-            F.expr("shiftrightunsigned(h64, 32)").alias("v_hi"),
-            F.expr("h64 & 4294967295").alias("v_lo"),
-        )
-    else:
-        # md5 computed ONCE per occurrence and shared by both halves —
-        # codegen does not common-subexpression two separate md5(t) calls
-        # (A/B-measured ~30% of the map time at sf0.1)
-        tok = tok.withColumn("h16", F.substring(F.md5(F.col("t")), 1, 16)).select(
-            "doc_id",
-            F.conv(F.substring(F.col("h16"), 1, 8), 16, 10).cast("long").alias("v_hi"),
-            F.conv(F.substring(F.col("h16"), 9, 8), 16, 10).cast("long").alias("v_lo"),
-        )
+    # md5 computed ONCE per occurrence and shared by both halves — codegen
+    # does not common-subexpression two separate md5(t) calls (A/B-measured
+    # ~30% of the map time at sf0.1)
+    tok = tok.withColumn("h16", F.substring(F.md5(F.col("t")), 1, 16)).select(
+        "doc_id",
+        F.conv(F.substring(F.col("h16"), 1, 8), 16, 10).cast("long").alias("v_hi"),
+        F.conv(F.substring(F.col("h16"), 9, 8), 16, 10).cast("long").alias("v_lo"),
+    )
     groups = [
         (h, g, list(range(g, min(g + SIMHASH_LANES_PER_AGG, half_bits))))
         for h in ("hi", "lo")
@@ -1923,27 +1792,21 @@ def _ensure_simhash_fps(
     """Published SimHash fingerprint table (doc_id, simhash_hi,
     simhash_lo), 3 longs/doc, built once per corpus content and shared by
     the near-pair self-join and the incremental tier; the parquet
-    roundtrip is exact. The params token names the bit layout, and the
-    hash family for every family but md5.
+    roundtrip is exact. The params token names the bit layout.
 
     ``split=None`` is the whole corpus; ``split="batch"`` is the per-drop
     batch table under its own params infix (:func:`_split_params`)."""
     from kafka_connect_storage_cloud_formats_spark.artifacts import artifact_df, artifact_path
 
-    family = hash_family()
     path = artifact_path(
         "simhash_fp",
         sf_dir,
         "documents",
-        params=f"b{SIMHASH_BITS}l{SIMHASH_LANE_BITS}"
-        + _split_params(split)
-        + ("" if family == "md5" else f"x{family}"),
+        params=f"b{SIMHASH_BITS}l{SIMHASH_LANE_BITS}" + _split_params(split),
     )
     docs = _split(load_table(spark, sf_dir, "documents"), split)
     return artifact_df(
-        path,
-        lambda tmp: _simhash_fp_from(docs, family=family).write.parquet(tmp),
-        spark,
+        path, lambda tmp: _simhash_fp_from(docs).write.parquet(tmp), spark
     )
 
 
@@ -2446,18 +2309,27 @@ def _labels_driver_side(
     materialize both directions), then one corpus-wide left join fills
     singletons — identical output contract to the distributed loop
     (cluster_id = min doc_id reachable through the graph). The collect is
-    gated by CC_DRIVER_MAX_EDGES, never corpus-scale."""
+    gated by CC_DRIVER_MAX_EDGES, never corpus-scale.
+
+    The labels are an Arrow-backed local relation built from a pyarrow
+    table: a plain-list createDataFrame is a Python RDD whose tasks start
+    Python workers, and so is an EMPTY pandas frame (PySpark sends only a
+    non-empty one through Arrow)."""
+    import pyarrow as pa
+
     labels_map = union_find_min_labels(
         (row["d1"], row["d2"]) for row in pairs.select("d1", "d2").collect()
     )
     labels = spark.createDataFrame(
-        list(labels_map.items()), "doc_id long, cluster_id long"
+        pa.table(
+            [pa.array(list(labels_map), pa.int64()), pa.array(list(labels_map.values()), pa.int64())],
+            names=["doc_id", "cluster_id"],
+        ),
+        schema="doc_id long, cluster_id long",
     )
-    # broadcast(labels): a parallelized RDD scan carries NO size stats, so
-    # the planner assumed it huge and planned a SortMergeJoin — shuffling
-    # the WHOLE corpus to attach a label table that just fit on the
-    # driver (r15 optimization, guide §3.1). The CC_DRIVER_MAX_EDGES gate
-    # that admitted this path IS the broadcast bound.
+    # broadcast(labels): the CC_DRIVER_MAX_EDGES gate that admitted this
+    # path IS the broadcast bound, so the corpus is never shuffled to
+    # attach a label table that fits on the driver.
     return docs.join(F.broadcast(labels), "doc_id", "left").select(
         "doc_id", F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id")
     )
@@ -2479,11 +2351,8 @@ def ensure_neardup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     The params token carries every constant the labels depend on: the
     signature chain's (K, shingle width), the LSH band LAYOUT (bands ×
     rows — the same K split 6×2 instead of 4×3 yields a different
-    candidate-pair set and therefore different cluster labels), the
-    strong-edge threshold, and the decision-hash family (the two
-    families' labels are pinned equal on the driver corpus —
-    tests/test_dedup.py — but a family is free to diverge on adversarial
-    content, so they must not share a cache path).
+    candidate-pair set and therefore different cluster labels) and the
+    strong-edge threshold.
     """
     from kafka_connect_storage_cloud_formats_spark.artifacts import artifact_df
 
@@ -2502,11 +2371,9 @@ def neardup_labels_path(spark: SparkSession, sf_dir: str) -> str:
     token gained the band layout)."""
     from kafka_connect_storage_cloud_formats_spark.artifacts import artifact_path
 
-    family = hash_family()
     ptag = (
         f"k{MINHASH_K}b{LSH_BANDS}r{LSH_ROWS}n{SHINGLE_N}"
         f"j{int(CLUSTER_MIN_EST_JACCARD * 100)}"
-        + ("" if family == "md5" else f"x{family}")
     )
     return artifact_path("neardup_labels", sf_dir, "documents", params=ptag, spark=spark)
 

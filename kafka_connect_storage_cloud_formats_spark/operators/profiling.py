@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_connect_storage_cloud_formats_spark.catalog import load_table
-from kafka_connect_storage_cloud_formats_spark.functions.text_functions import hash_family
+from kafka_connect_storage_cloud_formats_spark.functions.text_functions import md5_long
 from kafka_connect_storage_cloud_formats_spark.queries.relational import dsum
 
 PROFILE_COLS = ("o_totalprice", "o_orderstatus", "o_custkey")
@@ -274,28 +274,12 @@ FROM events GROUP BY event_type ORDER BY event_type
 SPLIT_SALT = "split-v1"
 
 
-def _hash_bucket(salt: str, family: str | None = None):
-    """THE deterministic 0-255 bucket. Single definition shared by the
-    splitter and the sampler (its SQL twin is ``_HEXVAL2``) — the
-    reproducible-split guarantee depends on every consumer computing
-    byte-identical buckets, so the expression must not exist twice to
-    drift apart.
-
-    Family (round-6 verdict ask #4): "md5" (default) = first byte of
-    md5(salt ‖ doc_id), DuckDB-reproducible (the oracle gate's form);
-    "xxhash64" = pmod(xxhash64(salt ‖ doc_id), 256), the production form
-    — same determinism/uniformity guarantees, ~5× cheaper, but a
-    DIFFERENT (equally valid) bucket assignment: a corpus must pick one
-    family at split time and keep it for the corpus's lifetime."""
-    family = family or hash_family()
-    if family == "xxhash64":
-        return F.pmod(
-            F.xxhash64(F.concat(F.lit(salt), F.col("doc_id"))), F.lit(256)
-        ).cast("int")
-    # first byte of md5 = text_functions.md5_long(col, bits=8): the shared
-    # definition, not an inline twin that could drift (round-9 review)
-    from kafka_connect_storage_cloud_formats_spark.functions.text_functions import md5_long
-
+def _hash_bucket(salt: str):
+    """THE deterministic 0-255 bucket: the first byte of md5(salt ‖ doc_id),
+    DuckDB-reproducible. Single definition shared by the splitter and the
+    sampler (its SQL twin is ``_HEXVAL2``) — the reproducible-split
+    guarantee depends on every consumer computing byte-identical buckets,
+    so the expression must not exist twice to drift apart."""
     return md5_long(F.concat(F.lit(salt), F.col("doc_id")), bits=8).cast("int")
 
 

@@ -47,9 +47,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_connect_storage_cloud_formats_spark.fsio import _fs_for, glob_escape
-from kafka_connect_storage_cloud_formats_spark.functions.text_functions import (
-    hash_family,
-)
 from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
     CURATION_STAGES,
     _MH_COLS,
@@ -60,17 +57,13 @@ from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
 )
 
 
-def _table_schema(family: str) -> str:
-    """The committed table's schema. The signature type is
-    FAMILY-DEPENDENT (md5 → hex-string components, xxhash64 → 32-bit-half
-    longs). The ANN columns are always declared, so partitions committed
-    without the ANN stage read them as NULL."""
-    t = "string" if family == "md5" else "long"
-    return (
-        "batch_id long, doc_id long, lang string, content_hash binary, "
-        + "".join(f"{c} {t}, " for c in _MH_COLS)
-        + "stage string, embedding array<float>, label long, codes array<long>"
-    )
+# The committed table's schema. The ANN columns are always declared, so
+# partitions committed without the ANN stage read them as NULL.
+_TABLE_SCHEMA = (
+    "batch_id long, doc_id long, lang string, content_hash binary, "
+    + "".join(f"{c} string, " for c in _MH_COLS)
+    + "stage string, embedding array<float>, label long, codes array<long>"
+)
 
 
 # report contract: batch id + lang + total + one count per chain stage
@@ -79,10 +72,10 @@ REPORT_COLUMNS = ("batch_id", "lang", "n_batch") + tuple(
     f"n_{s}" for s in CURATION_STAGES
 )
 
-# The one state kind, and the per-kind directories of the earlier layout,
+# The one state kind, and the directories every earlier layout sits under,
 # which a state dir must not hold (see StreamingCuration).
 _KIND = "batches"
-_OLD_KINDS = ("report", "accepted_hashes", "accepted_sigs", "ann_segments", "pq_segments")
+_OLD_LAYOUT_DIRS = ("md5", "xxhash64")
 
 # State partition names: exactly a prefix letter + 10 digits. ``b`` = one
 # micro-batch's deterministic-overwrite commit (id = batch_id); ``f`` = a
@@ -96,12 +89,8 @@ class StreamingCuration:
     """The ``foreachBatch`` callback object; pass ``process_batch`` to
     ``foreachBatch``. ``state_dir`` holds the committed tables.
 
-    The state namespace is FAMILY-KEYED (``state_dir/<family>/batches/``):
-    the near-dup decisions and the signature types are
-    hash-family-dependent, so a job resumed under a different
-    ``SPARK_GRAFT_HASH_FAMILY`` sees a fresh namespace, never a blend of
-    incompatible decisions. A namespace holding the earlier per-kind
-    layout (``report/``, ``accepted_hashes/``, …) is refused with a
+    The state is ``state_dir/batches/``. A state dir holding an earlier
+    layout (under ``md5/`` or ``xxhash64/``) is refused with a
     ``ValueError``: read as ``batches/`` it would be an empty corpus, and
     the job would re-accept every duplicate. Long-running jobs fold their
     many small per-batch partitions into one generation on the
@@ -115,14 +104,13 @@ class StreamingCuration:
         ann_sf_dir: str | None = None,
     ) -> None:
         self.spark = spark
-        self.family = hash_family()
-        self.state_dir = os.path.join(state_dir, self.family)
-        old = _fs_for(self.state_dir, spark).glob_paths(
-            f"{glob_escape(self.state_dir)}/{{{','.join(_OLD_KINDS)}}}"
+        self.state_dir = state_dir
+        old = _fs_for(state_dir, spark).glob_paths(
+            f"{glob_escape(state_dir)}/{{{','.join(_OLD_LAYOUT_DIRS)}}}"
         )
         if old:
             raise ValueError(
-                f"curation state dir {self.state_dir} holds the per-kind layout "
+                f"curation state dir {state_dir} holds an earlier layout "
                 f"({', '.join(sorted(os.path.basename(p) for p in old))}), "
                 f"which this job cannot read; use a new state dir"
             )
@@ -194,11 +182,10 @@ class StreamingCuration:
         """The committed rows of every effective partition (batch ids <
         ``before`` when given), read with the declared schema; an empty
         typed frame when none are committed."""
-        schema = _table_schema(self.family)
         parts = self._state_parts(before)
         if not parts:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*map(glob_escape, parts))
+            return self.spark.createDataFrame([], _TABLE_SCHEMA)
+        return self.spark.read.schema(_TABLE_SCHEMA).parquet(*map(glob_escape, parts))
 
     def _kept(self, before: int | None = None) -> DataFrame:
         return self._table(before).filter("stage = 'kept'")
@@ -399,16 +386,16 @@ class StreamingCuration:
                     "column on the stream (array<float>)"
                 )
             cols.append("embedding")
-        table = _with_minhash_array(batch_df.select(*cols), self.family).withColumn(
+        table = _with_minhash_array(batch_df.select(*cols)).withColumn(
             "content_hash", F.unhex(F.sha2(F.col("text"), 256))
         ).drop("text")
         # corpus view = strictly-earlier batches (replay determinism: a
         # retried batch must never see its own prior commit as corpus)
         judged = _judge(
-            _doc_keys(table, self.family),
-            _doc_keys(self._kept(before=batch_id), self.family),
+            _doc_keys(table),
+            _doc_keys(self._kept(before=batch_id)),
         ).localCheckpoint(eager=True)  # cuts the stream lineage
-        classified = _staged(judged, self.family)
+        classified = _staged(judged)
         # a dropped row keeps only what the report reads; SQL strings, as
         # each Column built in Python is a handful of py4j calls
         kept_only = "IF(stage = 'kept', {0}, NULL) AS {0}".format

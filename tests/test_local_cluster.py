@@ -52,7 +52,6 @@ def test_oracle_gate_under_local_cluster(tmp_path):
     # multi-process executors, not hit a generation published by the
     # local[N] suite earlier in this run.
     env["SPARK_GRAFT_ARTIFACT_ROOT"] = str(tmp_path / "artifacts")
-    env.pop("SPARK_GRAFT_HASH_FAMILY", None)  # oracle family
     proc = subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", "check_correctness.py"),
          "/root/testdata/sf0.001", *QUERIES],

@@ -7,7 +7,7 @@ these pin the invariants that example-based tests can miss.
 
 import re
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
@@ -332,24 +332,14 @@ _cur_word = st.sampled_from(["red", "blue", "green", "gold"])
 _cur_doc = st.lists(_cur_word, min_size=0, max_size=6).map(" ".join)
 
 
-@settings(
-    max_examples=8,
-    deadline=None,
-    # monkeypatch is function-scoped (one setenv for ALL examples — exactly
-    # the intent: the family pin is example-invariant)
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+@settings(max_examples=8, deadline=None)
 @given(st.lists(_cur_doc, min_size=6, max_size=18))
-def test_curation_chain_matches_python_model(spark, monkeypatch, docs):
+def test_curation_chain_matches_python_model(spark, docs):
     import tempfile
 
     from kafka_connect_storage_cloud_formats_spark.operators.dedup import (
         _curation_disposition,
     )
-
-    # the Python model replays the md5 family; pin the engine to it (the
-    # suite must be green under an ambient SPARK_GRAFT_HASH_FAMILY too)
-    monkeypatch.setenv("SPARK_GRAFT_HASH_FAMILY", "md5")
 
     rows = [(i, d) for i, d in enumerate(docs)]
     if not any(i % 5 == 4 for i, _ in rows):

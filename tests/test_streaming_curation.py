@@ -153,46 +153,36 @@ def test_state_dir_with_glob_metacharacters_sees_its_commits(spark, tmp_path):
 
 
 def test_state_dir_with_per_kind_layout_is_refused(spark, tmp_path):
-    """A state dir holding the earlier per-kind layout (report/,
-    accepted_hashes/, …) is refused by name: read as batches/ it would be
-    an empty corpus, and the job would re-accept every duplicate."""
+    """A state dir holding the earlier per-kind layout (md5/report/,
+    md5/accepted_hashes/, …) is refused by name: read as batches/ it would
+    be an empty corpus, and the job would re-accept every duplicate."""
     state = str(tmp_path / "state")
-    cur = StreamingCuration(spark, state)
-    cur.process_batch(spark.createDataFrame(BATCH1, DOC_SCHEMA), 0)
-    os.makedirs(os.path.join(cur.state_dir, "accepted_hashes", "b0000000000"))
-    with pytest.raises(ValueError, match=r"accepted_hashes") as err:
+    os.makedirs(os.path.join(state, "md5", "accepted_hashes", "b0000000000"))
+    with pytest.raises(ValueError, match=r"md5") as err:
         StreamingCuration(spark, state)
-    assert cur.state_dir in str(err.value)
+    assert state in str(err.value)
 
 
-def test_streaming_curation_under_xxhash64_family(spark, tmp_path, monkeypatch):
-    """The production hash family must stream, not crash (round-12 third
-    review: the sig-state schema hardcoded md5's string columns, so batch
-    2's state read threw under xxhash64): the state namespace is
-    family-keyed, the long-typed signature rows roundtrip, and the
-    family-BLIND decisions (exact tier; n_batch) match the md5 fixture —
-    near-dup counts are legitimately family-dependent on borderline pairs
-    and are not pinned here."""
-    monkeypatch.setenv("SPARK_GRAFT_HASH_FAMILY", "xxhash64")
+def test_new_job_commits_under_state_dir_batches(spark, tmp_path):
+    """The state is ``state_dir/batches``: no hash-family directory sits
+    between the state dir and its one kind."""
     state = str(tmp_path / "state")
     cur = StreamingCuration(spark, state)
-    assert cur.state_dir.endswith("xxhash64")
     cur.process_batch(spark.createDataFrame(BATCH1, DOC_SCHEMA), 0)
-    cur.process_batch(spark.createDataFrame(BATCH2, DOC_SCHEMA), 1)
-    rep = {(r["batch_id"], r["lang"]): r.asDict() for r in cur.report().collect()}
-    assert rep[(0, "en")]["n_batch"] == 4 and rep[(0, "en")]["n_exact_within"] == 1
-    assert rep[(1, "en")]["n_batch"] == 4
-    # doc 11 is an exact dup of doc 1 — but only if 1 was KEPT under this
-    # family; assert the family-blind invariant instead: stages partition
-    for r in rep.values():
-        assert r["n_batch"] == sum(
-            r[f"n_{s}"] for s in (
-                "exact_corpus", "exact_within", "neardup_corpus",
-                "neardup_within", "kept",
-            )
-        )
-    # and the long-typed signature state read back without schema errors
-    assert cur.accepted_sigs().count() > 0
+    assert cur.state_dir == state
+    assert os.listdir(state) == ["batches"]
+    assert os.listdir(os.path.join(state, "batches")) == ["b0000000000"]
+
+
+@pytest.mark.parametrize("old", ["md5", "xxhash64"])
+def test_state_dir_with_family_layout_is_refused(spark, tmp_path, old):
+    """Every earlier layout sits under ``md5/`` or ``xxhash64/``; a state
+    dir holding either (here an earlier ``<family>/batches`` commit) is
+    refused, never read as an empty corpus."""
+    state = str(tmp_path / "state")
+    os.makedirs(os.path.join(state, old, "batches", "b0000000000"))
+    with pytest.raises(ValueError, match=old):
+        StreamingCuration(spark, state)
 
 
 BATCH3 = [
@@ -471,10 +461,7 @@ def _reference_chain(drops, sigs):
     return report, accepted
 
 
-@pytest.mark.parametrize("family", ["md5", "xxhash64"])
-def test_chain_matches_python_reference_over_generated_drops(
-    spark, tmp_path, monkeypatch, family
-):
+def test_chain_matches_python_reference_over_generated_drops(spark, tmp_path):
     """Three generated drops with planted exact and near duplicates through
     the streaming job, checked against :func:`_reference_chain` computed
     from the aggregate-form signatures of the same docs: every report row
@@ -485,12 +472,11 @@ def test_chain_matches_python_reference_over_generated_drops(
         _minhash_sigs_from,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_HASH_FAMILY", family)
     drops = _generated_drops(seed=11)
     all_docs = spark.createDataFrame([r for d in drops for r in d], DOC_SCHEMA)
     sigs = {
         r["doc_id"]: tuple(r[f"mh_{k:02d}"] for k in range(MINHASH_K))
-        for r in _minhash_sigs_from(all_docs, family=family).collect()
+        for r in _minhash_sigs_from(all_docs).collect()
     }
     ref_report, ref_accepted = _reference_chain(drops, sigs)
     for counts in ref_report.values():

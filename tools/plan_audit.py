@@ -14,8 +14,11 @@ reports: join strategies, shuffle (Exchange) count, scan pushdown
   (``ArrowEvalPython`` / ``MapInPandas`` / pandas grouped ops), which is
   10-100× cheaper per row; a plain UDF sneaking in is a scale bug.
 
-Also records whole-stage-codegen span counts per plan and (with
-``--json PATH``) dumps per-query stats for round-over-round plan diffing.
+Also records per-query stats and (with ``--json PATH``) dumps them for
+plan diffing: plan-shape counts (exchanges, each join strategy, Generate,
+Window, Sort, Python nodes, codegen spans), ``driver_build_s`` (the cold
+``fn(spark, sf_dir)`` plan build, before the prepared-plan cache holds
+the row) and ``collect_s`` (the one execution of the plan).
 
 Usage: python3 tools/plan_audit.py [sf_dir] [--json PATH]  — exits 1 on
 violations.
@@ -194,6 +197,19 @@ def duplicated_arrow_kernels(plan: str) -> list[str]:
     return sorted(set(dups))
 
 
+# Plan-shape counts on the initial plan: stats only, never a verdict.
+PLAN_COUNTS = {
+    "smj": r"\bSortMergeJoin\b",
+    "bhj": r"\bBroadcastHashJoin\b",
+    "bnlj": r"\bBroadcastNestedLoopJoin\b",
+    "cartesian": r"\bCartesianProduct\b",
+    "batch_eval": r"\bBatchEvalPython\b",
+    "generate": r"\bGenerate\b",
+    "window": r"\bWindow\b",
+    "sort": r"\bSort\b",
+}
+
+
 def audit(name: str, df) -> tuple[list[str], dict]:
     plan = df._jdf.queryExecution().executedPlan().toString()
     stats = {
@@ -205,6 +221,7 @@ def audit(name: str, df) -> tuple[list[str], dict]:
         "arrow_python": len(
             re.findall(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan)
         ),
+        **{k: len(re.findall(p, plan)) for k, p in PLAN_COUNTS.items()},
     }
     problems = []
     if name not in ALLOWED_NESTED and name not in ALLOWED_SCALAR_CROSS:
@@ -236,7 +253,9 @@ def audit(name: str, df) -> tuple[list[str], dict]:
         # Execute THIS df's own plan (count() builds a separate aggregate
         # plan and would leave this QueryExecution unexecuted); result
         # sets are presentation-sized at the audit SF.
+        t0 = time.perf_counter()
         df.collect()
+        stats["collect_s"] = round(time.perf_counter() - t0, 3)
         final = df._jdf.queryExecution().executedPlan().toString()
         # simple plan strings mark codegen stages with `*(N)` prefixes —
         # count DISTINCT stage ids, not marker occurrences

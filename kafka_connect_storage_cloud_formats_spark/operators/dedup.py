@@ -2322,8 +2322,10 @@ def _labels_driver_side(
     )
     labels = spark.createDataFrame(
         pa.table(
-            [pa.array(list(labels_map), pa.int64()), pa.array(list(labels_map.values()), pa.int64())],
-            names=["doc_id", "cluster_id"],
+            {
+                "doc_id": pa.array(list(labels_map), pa.int64()),
+                "cluster_id": pa.array(list(labels_map.values()), pa.int64()),
+            }
         ),
         schema="doc_id long, cluster_id long",
     )

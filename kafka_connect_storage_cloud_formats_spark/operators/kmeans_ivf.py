@@ -44,9 +44,7 @@ Scale shape (the textbook distributed Lloyd's iteration):
   the same metadata-scale contract as the query matrix).
 
 Determinism contract (what makes this testable/cacheable):
-- init = the k vectors with the smallest vec_ids (no RNG; the measured
-  farthest-point alternative ``init="spread"`` is equally deterministic
-  but serves worse recall at low nprobe — SCALE.md round-11 A/B);
+- init = the k vectors with the smallest vec_ids (no RNG);
 - assignment tie-break = lowest cluster id (np.argmax-equivalent takes
   the first maximum; cosines are computed by one fixed vectorized
   expression);
@@ -226,125 +224,14 @@ def _update_centroids(corpus: DataFrame, assignment: DataFrame) -> DataFrame:
     )
 
 
-def _spread_seed_matrix(corpus: DataFrame, k: int):
-    """Deterministic FARTHEST-POINT init (round-10 verdict ask #3): seed 0
-    is the lowest vec_id's vector; seed j is the vector whose maximum
-    cosine to the already-selected seeds is SMALLEST — the greedy
-    max-min-spread rule of k-means++ without its RNG (tie-break: lowest
-    vec_id), so it is exactly replayable (an iterative chain of
-    left-associated cosine maxima, the same discipline as the trainer).
-
-    Scale shape: the running ``maxcos`` column is maintained by one
-    vectorized mapInPandas pass per seed against the SINGLE newest seed
-    (never recomputing cosines to the whole selected set), and each seed
-    selection is a takeOrdered(1) — k-1 corpus scans + k-bounded driver
-    round-trips. localCheckpoint truncates the iterative lineage
-    (checkpoint-inherent: loop state, same as the CC loop).
-
-    Measured A/B on the shipped corpora (tools/ab_kmeans_init.py; SCALE.md
-    round 11): spread seeding buys a slightly BETTER spherical objective
-    (0.3424 vs 0.3332 at sf0.01) but WORSE recall@10 at every serving
-    nprobe (sf0.1: 0.2375/0.3550/0.5250 vs 0.2600/0.4025/0.5600 at
-    nprobe 1/2/4) — a more evenly spread Voronoi partition splits query
-    neighborhoods across more cells, exactly what low-nprobe probing
-    pays for. The smallest-vec_ids init therefore stays the registered
-    default; this function remains the measured alternative for corpora
-    whose ingest order co-locates low ids (where the lowid seeds would
-    start degenerate)."""
-    import numpy as np
-    import pandas as pd
-
-    from kafka_connect_storage_cloud_formats_spark.functions.vectors import (
-        _seq_dot,
-        _stack64,
-    )
-
-    first = corpus.orderBy("vec_id").limit(1).collect()
-    if not first:
-        raise ValueError(f"corpus has 0 vectors < k={k}")
-    seeds = [np.asarray(first[0]["embedding"], dtype=np.float64)]
-    # Already-selected rows are EXCLUDED from every later argmin (round-11
-    # review): on a degenerate corpus where every vector has cosine ~1.0
-    # to a seed (e.g. scalar multiples of one direction), the bare argmin
-    # would silently re-select the same row k-1 times and train coincident
-    # centroids. The exclusion list is k-bounded (cheap isin); it also
-    # makes a too-small corpus fail loudly (the selection runs dry)
-    # without a separate corpus-scale count() pass.
-    seed_ids = [int(first[0]["vec_id"])]
-    state = corpus.select(
-        "vec_id", "embedding", F.lit(float("-inf")).cast("double").alias("maxcos")
-    )
-    schema = "vec_id long, embedding array<float>, maxcos double"
-    for _ in range(k - 1):
-        s = seeds[-1]
-        sn = float(np.sqrt(_seq_dot(s[None, :], s[None, :])[0]))
-        if sn <= 0.0:
-            raise ValueError(
-                "zero-norm seed vector: cosine spread is undefined — "
-                "filter or impute upstream (corpus contract)"
-            )
-        su = s / sn
-
-        def step(batches, su=su):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                E = _stack64(pdf["embedding"])
-                nrm = np.sqrt(_seq_dot(E, E))
-                if not (nrm > 0.0).all():
-                    raise ValueError(
-                        "zero-norm embedding: cosine spread is undefined — "
-                        "filter or impute upstream (corpus contract)"
-                    )
-                acc = np.zeros(E.shape[0], dtype=np.float64)
-                for d in range(E.shape[1]):  # left-associated
-                    acc += E[:, d] * su[d]
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                        "embedding": pdf["embedding"],
-                        "maxcos": np.maximum(
-                            pdf["maxcos"].to_numpy(dtype=np.float64), acc / nrm
-                        ),
-                    }
-                )
-
-        state = state.mapInPandas(step, schema).localCheckpoint(eager=True)
-        picked = (
-            state.filter(~F.col("vec_id").isin(seed_ids))
-            .orderBy(F.asc("maxcos"), F.asc("vec_id"))
-            .limit(1)
-            .collect()
-        )
-        if not picked:
-            raise ValueError(
-                f"corpus has only {len(seed_ids)} vectors < k={k}"
-            )
-        seeds.append(np.asarray(picked[0]["embedding"], dtype=np.float64))
-        seed_ids.append(int(picked[0]["vec_id"]))
-    labels = np.arange(k, dtype=np.int64)
-    return labels, np.stack(seeds)
-
-
-def kmeans_params_token(
-    k: int, iters: int, init: str = "lowid", split: str | None = None
-) -> str:
-    """THE quantizer-generation params token (round-12 review: this
-    format was hand-copied in the trainer, the index build, the upsert
-    build and a test — the exact hand-copied-token drift the round-8
-    neardup_labels_path episode recounts; one definition now).
-    "cosla" = spherical (cosine) metric + Left-Associated score
-    accumulation (round 10 — the matmul-trained "cos" artifacts an
-    earlier code version published can differ in the last ulp, so they
-    can never be served to this derivation; params-token staleness
-    contract, same as every artifact kind). A non-default init joins the
-    token (different seeds ⇒ different artifacts, never shared), as does
-    the corpus-split training arm."""
-    return (
-        f"k{k}i{iters}d{DIM}cosla"
-        + ("" if init == "lowid" else f"-{init}")
-        + ("" if split is None else f"-corp{UPSERT_MOD}")
-    )
+def kmeans_params_token(k: int, iters: int, split: str | None = None) -> str:
+    """THE quantizer-generation params token, shared by the trainer, the
+    index build, the upsert build and the tests. "cosla" = spherical
+    (cosine) metric + Left-Associated score accumulation; artifacts of
+    any other derivation never share this token (params-token staleness
+    contract, same as every artifact kind). The corpus-split training
+    arm joins the token."""
+    return f"k{k}i{iters}d{DIM}cosla" + ("" if split is None else f"-corp{UPSERT_MOD}")
 
 
 def train_kmeans_quantizer(
@@ -352,7 +239,6 @@ def train_kmeans_quantizer(
     sf_dir: str,
     k: int = KMEANS_K,
     iters: int = KMEANS_ITERS,
-    init: str = "lowid",
     split: str | None = None,
 ):
     """Train the coarse quantizer; returns (assignment DF (vec_id,
@@ -360,7 +246,7 @@ def train_kmeans_quantizer(
     the content-keyed artifact pair (one training run per corpus content
     and parameter set, shared across sessions).
 
-    ``split="corpus"`` (round 12) trains on the CORPUS side of the
+    ``split="corpus"`` trains on the CORPUS side of the
     incremental drop split only (vec_id % INCREMENT_MOD != MOD-1 — the
     same modular convention the dedup tiers use for the new-drop role):
     the quantizer a deployment PUBLISHES is trained on the corpus as of
@@ -377,22 +263,18 @@ def train_kmeans_quantizer(
 
     if k < 1 or iters < 1:
         raise ValueError(f"k and iters must be >= 1 (got k={k}, iters={iters})")
-    if init not in ("lowid", "spread"):
-        raise ValueError(f"init must be 'lowid' or 'spread', got {init!r}")
     if split not in (None, "corpus"):
         raise ValueError(f"split must be None or 'corpus', got {split!r}")
-    params = kmeans_params_token(k, iters, init=init, split=split)
-    # The assignment artifact CARRIES the embedding since round 16
-    # ((vec_id, embedding, cluster) — echoed through the final Arrow
-    # assign pass, bit-identical float32): every downstream consumer that
-    # needs vector AND cell (the index build/rebuild, the serving corpus
-    # of ivf_kmeans_topk, the cell-stats report, the centroid update)
-    # then stays MAP-ONLY instead of paying a corpus-wide vec_id
-    # equi-join back to the embeddings table — at 100 TB each such join
-    # is two corpus-wide exchanges (guide §2.1/§2.4; the r15 segment
-    # carry generalized to the training artifact). Its own params suffix:
-    # the schema change must never be served from a pre-r16 (vec_id,
-    # cluster) artifact cached at the un-suffixed path.
+    params = kmeans_params_token(k, iters, split=split)
+    # The assignment artifact CARRIES the embedding ((vec_id, embedding,
+    # cluster) — echoed through the final Arrow assign pass,
+    # bit-identical float32): every downstream consumer that needs vector
+    # AND cell (the index build/rebuild, the serving corpus of
+    # ivf_kmeans_topk, the cell-stats report, the centroid update) then
+    # stays MAP-ONLY instead of paying a corpus-wide vec_id equi-join
+    # back to the embeddings table — at 100 TB each such join is two
+    # corpus-wide exchanges. The "cen" params suffix keeps this schema
+    # apart from a (vec_id, cluster) artifact at the un-suffixed path.
     assign_path = artifact_path(
         "kmeans_assign", sf_dir, "embeddings", params=params + "cen", spark=spark
     )
@@ -406,20 +288,13 @@ def train_kmeans_quantizer(
 
     def build_both(tmp: str) -> None:
         corpus = _training_corpus()
-        if init == "spread":
-            labels, M = _spread_seed_matrix(corpus, k)
-        else:
-            # deterministic default init: the k smallest vec_ids (no RNG —
-            # seeds are banned state here; any fixed rule works and this
-            # one is cheap; the measured farthest-point alternative is
-            # _spread_seed_matrix)
-            seed_rows = corpus.orderBy("vec_id").limit(k).collect()
-            if len(seed_rows) < k:
-                raise ValueError(f"corpus has {len(seed_rows)} vectors < k={k}")
-            labels = np.arange(k, dtype=np.int64)
-            M = np.stack(
-                [np.asarray(r["embedding"], dtype=np.float64) for r in seed_rows]
-            )
+        # deterministic init: the k smallest vec_ids (no RNG — seeds are
+        # banned state here; any fixed rule works and this one is cheap)
+        seed_rows = corpus.orderBy("vec_id").limit(k).collect()
+        if len(seed_rows) < k:
+            raise ValueError(f"corpus has {len(seed_rows)} vectors < k={k}")
+        labels = np.arange(k, dtype=np.int64)
+        M = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in seed_rows])
         for _ in range(iters):
             # carry_embedding: the update consumes the assignment's own
             # echoed vector — no per-iteration corpus⋈assignment join

@@ -25,109 +25,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _is_location_exists_error(e: Exception, loc: str) -> bool:
-    """Is ``e`` the managed-table orphaned-location failure (the ONE
-    condition :func:`write_bucketed`'s heal fixes)? Three probes,
-    most-structured first (round-13 ADVICE: the bare
-    'LOCATION_ALREADY_EXISTS' message substring is a Spark 4
-    error-condition NAME — on Spark 3.x, or if the condition is renamed,
-    it never matches and the original wedge returns):
-
-    1. the exception's own error condition/class accessor
-       (``getCondition`` — pyspark 4, or the older ``getErrorClass``);
-    2. the condition name in the message (Spark 4 rendering);
-    3. the table's OWN managed location quoted in a message that says a
-       location already exists (Spark 3.x rendering: "Can not create the
-       managed table(...). The associated location('<loc>') already
-       exists."). Requiring BOTH the path and the phrase keeps unrelated
-       faults that merely mention the path (permissions, quota)
-       propagating — the heal DROPs a same-name catalog entry, so a
-       mis-trigger is destructive."""
-    cond = ""
-    for probe in ("getCondition", "getErrorClass"):
-        try:
-            cond = str(getattr(e, probe)() or "")
-            break
-        except Exception:
-            continue
-    msg = str(e)
-    loc_tail = loc.split("://", 1)[-1].lstrip("/")
-    return (
-        cond == "LOCATION_ALREADY_EXISTS"
-        or "LOCATION_ALREADY_EXISTS" in msg
-        or (loc_tail in msg and "already exists" in msg.lower())
-    )
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,
     bucket_cols: tuple[str, ...],
+    path: str,
     n_buckets: int = 16,
-    fmt: str = "parquet",
-    path: str | None = None,
 ) -> None:
-    """Persist ``df`` bucketed (and sorted) by the join key. Subsequent
-    equi-joins between tables bucketed identically execute shuffle-free.
-    With ``path`` the table is EXTERNAL (data at ``path``, catalog entry
-    is metadata only — dropping it leaves the files).
-
-    Managed arm (``path=None``) re-entrancy (round-11 verdict "What's
-    wrong #1"): a run interrupted between ``saveAsTable`` and its
-    eventual ``DROP TABLE`` leaves the managed warehouse LOCATION on disk
-    with no catalog entry (the in-memory catalog dies with the session),
-    and every subsequent fresh session then fails ``saveAsTable`` with
-    LOCATION_ALREADY_EXISTS — ``mode("overwrite")`` cannot help because
-    overwrite consults the (empty) catalog, not the filesystem. That is
-    exactly the interrupted-run-then-retry scenario the engine's
-    exactly-once doctrine exists for, so the managed arm self-heals —
-    but ONLY on the retry path of the failure the heal fixes (round-12
-    ADVICE: the previous unconditional DROP-plus-location-delete ran on
-    every call, silently destroying another driver's same-name managed
-    table under a shared Hive metastore even when no orphan existed):
-    ``saveAsTable`` is attempted FIRST, and only a
-    LOCATION_ALREADY_EXISTS failure triggers the drop of any same-name
-    catalog entry plus removal of the then-orphaned location (orphan by
-    construction at that point: the warehouse dir is catalog-managed
-    space, and post-DROP nothing owns it) before one retry. Production
-    pipelines should prefer the external-``path`` arm, whose
-    artifact-protocol wrapper (:func:`_ensure_bucketed_table`)
-    adjudicates cross-driver races atomically."""
-    spark = df.sparkSession
-    w = (
+    """Persist ``df`` as an EXTERNAL parquet table at ``path``, bucketed
+    (and sorted) by the join key; the catalog entry is metadata only, so
+    dropping it leaves the files. Equi-joins between tables bucketed
+    identically execute shuffle-free. Cross-driver races on ``path`` are
+    the caller's to adjudicate (:func:`_ensure_bucketed_table` publishes
+    through the artifact protocol)."""
+    (
         df.write.mode("overwrite")
-        .format(fmt)
+        .format("parquet")
         .bucketBy(n_buckets, *bucket_cols)
         .sortBy(*bucket_cols)
+        .option("path", path)
+        .saveAsTable(table)
     )
-    if path is not None:
-        w.option("path", path).saveAsTable(table)
-        return
-    db, _, tbl = table.rpartition(".")
-    db = db or spark.catalog.currentDatabase()
-    loc = spark.catalog.getDatabase(db).locationUri.rstrip("/") + "/" + tbl.lower()
-    try:
-        w.saveAsTable(table)
-        return
-    except Exception as e:
-        if not _is_location_exists_error(e, loc):
-            raise
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    from kafka_connect_storage_cloud_formats_spark.fsio import _fs_for
-
-    fs = _fs_for(loc, spark)
-    if fs.exists(loc) and not fs.delete(loc):
-        raise RuntimeError(
-            f"write_bucketed: orphaned managed location {loc} exists with no "
-            f"catalog entry and could not be removed"
-        ) from fs.last_error
-    w.saveAsTable(table)
-
-
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str, on: list[str]) -> DataFrame:
-    """Join two co-bucketed tables (no Exchange on either side when bucket
-    specs match; Spark may still SMJ within aligned buckets)."""
-    return spark.table(left_table).join(spark.table(right_table), on)
 
 
 _SALT_DEFAULT_WARNED = False  # one-time salt_cols=None signal (see below)
@@ -260,20 +178,15 @@ def _ensure_bucketed_table(
     (a projection of ``source`` at ``sf_dir``), bucketed+sorted on
     ``bucket_cols`` into N_BUCKETS.
 
-    Round 8 (the round-7 verdict's "What's wrong #3"): the bucketed data
-    is a corpus-keyed ARTIFACT — built once per corpus content through
-    ``ensure_artifact``'s atomic publish, shared by every session — and
-    the session catalog carries only a metadata entry (an EXTERNAL
-    bucketed table over the published location). This makes the "bucket
-    once, join shuffle-free every run" story literal ACROSS sessions: a
-    fresh session pays one CREATE TABLE statement, not the bucketing ETL
-    (measured 8.6 s cold at sf0.1 under the old per-session scheme).
-    Exactly a metastore-backed deployment's shape — the artifact path is
-    the table location, the fingerprint is the ETL's freshness check.
-    The old session-unique-name + warehouse-sweep machinery is gone: the
-    artifact protocol already provides racing-publish adjudication,
-    generation retirement, and vanished-files self-heal (a missing
-    ``_SUCCESS`` rebuilds)."""
+    The bucketed data is a corpus-keyed ARTIFACT, built once per corpus
+    content through ``ensure_artifact``'s atomic publish and shared by
+    every session; the session catalog carries only a metadata entry (an
+    EXTERNAL bucketed table over the published location). A fresh session
+    pays one CREATE TABLE statement, not the bucketing ETL: the artifact
+    path is the table location, the fingerprint is the ETL's freshness
+    check, and the artifact protocol provides racing-publish
+    adjudication, generation retirement and vanished-files self-heal (a
+    missing ``_SUCCESS`` rebuilds)."""
     from kafka_connect_storage_cloud_formats_spark.artifacts import (
         ensure_artifact,
         invalidate_session_memo,
@@ -309,8 +222,8 @@ def _ensure_bucketed_table(
 
     fs = _fs_for(path, spark)
     # The generation marker (fsio.generation: _SUCCESS mtime + a digest of
-    # the recursive part listing — the SAME marker ensure_artifact uses
-    # since round 9) doubles as the published probe (None ⇒ unpublished):
+    # the recursive part listing — the SAME marker ensure_artifact uses)
+    # doubles as the published probe (None ⇒ unpublished):
     # liveness touches refresh the directory mtime, never _SUCCESS or the
     # part files, so a changed marker under the same path means another
     # driver deleted + rebuilt the artifact (new part-file names) between
@@ -497,7 +410,8 @@ def bucketed_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bkt_customer",
     )
     return (
-        bucketed_join(spark, ot, ct, ["custkey"])
+        spark.table(ot)
+        .join(spark.table(ct), ["custkey"])
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),

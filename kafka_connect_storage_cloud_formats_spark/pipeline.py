@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Sequence
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,9 +48,7 @@ class IngestPipeline:
     out_dir: str
     value_schema: T.StructType
     flush_size: int = 10_000
-    topics_prefix: str = "topics"
     parity_naming: bool = False
-    partition_cols: tuple[str, ...] = field(default=("partition",))
 
     def __post_init__(self) -> None:
         validate_engine_schema(self.value_schema)
@@ -71,7 +69,6 @@ class IngestPipeline:
                 coerce_stream(records, self.value_schema),
                 self.out_dir,
                 flush_size=self.flush_size,
-                topics_prefix=self.topics_prefix,
                 value_cols=[f.name for f in self.value_schema.fields],
             )
         if "offset" not in records.columns:
@@ -82,7 +79,7 @@ class IngestPipeline:
                 "— with_kafka_envelope); for a plain one-shot write use "
                 "sinks.formats.write_partitioned"
             )
-        keep = [c for c in self.partition_cols if c in records.columns]
+        keep = ["partition"] if "partition" in records.columns else []
         df = coerce_stream(records, self.value_schema, keep=keep)
         records = records.persist()
         try:
@@ -113,8 +110,8 @@ class IngestPipeline:
         ``_spark_metadata`` commit log, the Spark-native form of the
         reference's deterministic-name-overwrite recovery
         (``DataWriterOrcTest.java:102-124``). Writes the native layout:
-        value columns only, ``partitionBy`` the partition columns present,
-        at most ``flush_size`` rows per file."""
+        value columns only, ``partitionBy("partition")`` when the records
+        carry that column, at most ``flush_size`` rows per file."""
         if self.parity_naming:
             # offset-named files need run_batch's batch rename pass
             raise NotImplementedError(
@@ -122,7 +119,7 @@ class IngestPipeline:
                 "foreachBatch; the file-sink path writes the Spark-native "
                 "layout only"
             )
-        keep = [c for c in self.partition_cols if c in records.columns]
+        keep = ["partition"] if "partition" in records.columns else []
         df = coerce_stream(records, self.value_schema, keep=keep)
         writer = (
             df.writeStream.format("orc")
@@ -156,25 +153,22 @@ class EvolvingIngest:
     (compatible) schemas; each schema *upgrade* rotates to a new generation
     directory, and older-shaped batches are projected onto the current
     schema (Connect's StorageSchemaCompatibility + SchemaProjector behavior
-    — see schema_evolution.py). ``read_back`` merges all generations.
+    — see schema_evolution.py), under BACKWARD compatibility. ``read_back``
+    merges all generations.
     """
 
     def __init__(
         self,
         base_dir: str,
-        mode=None,
         flush_size: int = 10_000,
         parity_naming: bool = True,
     ) -> None:
-        from kafka_connect_storage_cloud_formats_spark.schema_evolution import (
-            Compatibility,
-            SchemaTracker,
-        )
+        from kafka_connect_storage_cloud_formats_spark.schema_evolution import SchemaTracker
 
         self.base_dir = base_dir
         self.flush_size = flush_size
         self.parity_naming = parity_naming
-        self.tracker = SchemaTracker(mode or Compatibility.BACKWARD)
+        self.tracker = SchemaTracker()
         self.generation = -1
         self._pipe: IngestPipeline | None = None
 
@@ -210,7 +204,7 @@ class EvolvingIngest:
         back = reader.load(self.base_dir)
         # gen=/batch= are write-layout bookkeeping discovered as partition
         # columns on the non-parity (Hive-layout) path, not data — same
-        # contract as IngestPipeline.read_back (round-9 review)
+        # contract as IngestPipeline.read_back
         return back.drop(*[c for c in ("gen", "batch") if c in back.columns])
 
 

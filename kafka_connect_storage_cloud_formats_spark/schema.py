@@ -117,8 +117,9 @@ def avro_schema_to_spark(avro_schema: dict[str, Any]) -> T.StructType:
     return T.StructType(fields)
 
 
-def spark_schema_to_avro(schema: T.StructType, name: str = "record") -> dict[str, Any]:
-    """Inverse mapping, for parity round-trips and schema-registry payloads."""
+def spark_schema_to_avro(schema: T.StructType) -> dict[str, Any]:
+    """Inverse mapping, for parity round-trips and schema-registry payloads:
+    a record named ``record``."""
     rev = {
         T.BooleanType(): "boolean",
         T.IntegerType(): "int",
@@ -135,7 +136,7 @@ def spark_schema_to_avro(schema: T.StructType, name: str = "record") -> dict[str
         if f.nullable:
             avro_t = ["null", avro_t]
         fields.append({"name": f.name, "type": avro_t})
-    return {"type": "record", "name": name, "fields": fields}
+    return {"type": "record", "name": "record", "fields": fields}
 
 
 def validate_engine_schema(schema: T.StructType) -> None:

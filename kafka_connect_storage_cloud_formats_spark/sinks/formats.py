@@ -56,9 +56,9 @@ def write_partitioned(
     compression: str | None = None,
     partition_cols: tuple[str, ...] = ("partition",),
     max_records_per_file: int | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Partitioned write in any family format with an explicit codec."""
+    """Partitioned write in any family format with an explicit codec;
+    overwrites ``path``."""
     if fmt not in FORMAT_COMPRESSIONS:
         raise ValueError(f"unknown format {fmt!r}; known: {sorted(FORMAT_COMPRESSIONS)}")
     compression = compression or DEFAULT_COMPRESSION[fmt]
@@ -75,7 +75,7 @@ def write_partitioned(
             *partition_cols, F.base64(F.col(BYTEARRAY_VALUE_COL)).alias(BYTEARRAY_VALUE_COL)
         )
         fmt = "text"
-    writer = df.write.mode(mode).format(fmt).option("compression", compression)
+    writer = df.write.mode("overwrite").format(fmt).option("compression", compression)
     if fmt == "csv":
         writer = writer.option("header", "true")
     if max_records_per_file is not None:

@@ -44,19 +44,13 @@ EXTENSION = ".orc"
 
 
 def file_key_to_commit(
-    topics_prefix: str,
-    dir_prefix: str,
-    topic: str,
-    partition: int,
-    start_offset: int,
-    extension: str = EXTENSION,
-    zero_pad_format: str = ZERO_PAD_FORMAT,
+    topics_prefix: str, dir_prefix: str, topic: str, partition: int, start_offset: int
 ) -> str:
     """Reference file-key scheme (``FileUtils.java:17-26`` + '#'→'_' sanitation
     ``OrcRecordWriter.java:50``)."""
     name = (
         f"{topic}{DIRECTORY_DELIM}{partition}{DIRECTORY_DELIM}"
-        f"{zero_pad_format % start_offset}{extension}"
+        f"{ZERO_PAD_FORMAT % start_offset}{EXTENSION}"
     )
     key = f"{topics_prefix}{DIRECTORY_DELIM}{dir_prefix}{DIRECTORY_DELIM}{name}"
     return key.replace("#", "_")
@@ -66,22 +60,18 @@ def write_orc_parity(
     df: DataFrame,
     out_dir: str,
     flush_size: int,
-    topics_prefix: str = "topics",
-    dir_prefix: str | None = None,
-    topic_col: str = "topic",
-    partition_col: str = "partition",
-    offset_col: str = "offset",
-    value_cols: list[str] | None = None,
+    value_cols: list[str],
 ) -> list[str]:
     """Reference-parity sink. Returns the sorted list of written file keys.
 
     Semantics reproduced (SURVEY.md §2.1 #12-15):
     - one file per (topic, partition, offset-range of ``flush_size``);
-    - file named ``{topics}_{dir}_{topic}_{partition}_{start_offset:010d}.orc``;
+    - file named ``topics_{topic}_{topic}_{partition}_{start_offset:010d}.orc``;
     - deterministic overwrite → idempotent re-processing (recovery test
       ``DataWriterOrcTest.java:102-124``);
-    - only the *value* columns land in the file (the Kafka key is dropped,
-      SURVEY.md §1.3); offsets/topic/partition drive placement only.
+    - only ``value_cols`` land in the file, in that order (the Kafka key is
+      dropped, SURVEY.md §1.3); the envelope's ``topic``, ``partition``
+      and ``offset`` columns drive placement only.
 
     Distributed strategy: one shuffle by the file group (topic, partition,
     start_offset = floor(offset/flush_size)·flush_size) so each group is
@@ -89,29 +79,17 @@ def write_orc_parity(
     then a driver-side metadata-only rename of each group's part file to
     the reference key. The group is staged as ONE partition column,
     ``__group=<partition>_<start_offset>_<topic>``: one staging directory
-    per file instead of three nested ones (without libhadoop, Hadoop's
-    local filesystem forks a ``chmod`` for every directory it makes). The
-    topic goes last, so ``split("_", 2)`` recovers it whatever it holds.
+    per file (without libhadoop, Hadoop's local filesystem forks a
+    ``chmod`` for every directory it makes). The topic goes last, so
+    ``split("_", 2)`` recovers it whatever it holds.
     """
-    if value_cols is None:
-        # Default = everything except the engine's envelope columns. NOTE
-        # 'key' and 'ts' are envelope names here (the Kafka record key and
-        # kafka_stream_source's timestamp alias) — a BUSINESS column with
-        # either name is silently excluded by this default; such callers
-        # must pass value_cols explicitly (as IngestPipeline does, from
-        # its value schema).
-        value_cols = [
-            c for c in df.columns if c not in (topic_col, partition_col, offset_col, "key", "ts")
-        ]
-
     staged = os.path.join(out_dir, "_staged")
-    offset = quote_ident(offset_col)
     out = (
         df.selectExpr(
-            f"concat_ws('_', {quote_ident(partition_col)}, "
-            f"CAST(FLOOR({offset} / {flush_size}) * {flush_size} AS BIGINT), "
-            f"{quote_ident(topic_col)}) AS __group",
-            f"{offset} AS __offset",
+            "concat_ws('_', `partition`, "
+            f"CAST(FLOOR(`offset` / {flush_size}) * {flush_size} AS BIGINT), "
+            "`topic`) AS __group",
+            "`offset` AS __offset",
             *map(quote_ident, value_cols),
         )
         # one shuffle, keyed by file group → each output file written by one task
@@ -187,11 +165,8 @@ def write_orc_parity(
 
     written: list[str] = []
     made_parents: set[str] = set()
-    dir_prefix = dir_prefix if dir_prefix is not None else ""
     for (topic, partition, start_offset), group in sorted(groups.items()):
-        key = file_key_to_commit(
-            topics_prefix, dir_prefix or topic, topic, partition, start_offset
-        )
+        key = file_key_to_commit("topics", topic, topic, partition, start_offset)
         if len(group) != 1:  # merge would break one-file parity; fail loudly
             raise RuntimeError(
                 f"file group {key} produced {len(group)} part files; expected 1"

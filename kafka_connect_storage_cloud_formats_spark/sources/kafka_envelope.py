@@ -37,13 +37,11 @@ def with_kafka_envelope(
     num_partitions: int = 3,
     partition_key: str | None = None,
     order_col: str | None = None,
-    key_col: str | None = None,
     partitioner: str = "hash",
 ) -> DataFrame:
     """Wrap a batch DataFrame in the Kafka envelope: adds ``topic``,
     ``partition`` (int), ``offset`` (long, contiguous from 0 per partition),
-    ``key`` (string; null if no key column — reference drops it anyway,
-    SURVEY.md §1.3).
+    ``key`` (a NULL string — the reference drops the key, SURVEY.md §1.3).
 
     ``partition_key``: column assigning the topic-partition (default:
     round-robin on a stable ordering). ``order_col``: column ordering records
@@ -58,7 +56,7 @@ def with_kafka_envelope(
     if partitioner == "mod" and not partition_key:
         # "mod" IS key % N — without a key it would silently fall through
         # to the full-row hash and an oracle reproducing the modulo
-        # assignment would mismatch every row (round-9 review)
+        # assignment would mismatch every row
         raise ValueError("partitioner='mod' requires partition_key")
     clobbered = [c for c in ("topic", "partition", "offset", "key") if c in df.columns]
     if clobbered:
@@ -86,9 +84,7 @@ def with_kafka_envelope(
     # shuffle-arrival-dependent, so the lead column (order_col /
     # partition_key / first column) is tiebroken by every remaining SOURCE
     # column — deterministic for any input as a content→offset multiset
-    # (fully duplicate rows are interchangeable by definition). The
-    # documented DETERMINISTIC contract previously held only for unique
-    # order columns (round-9 review).
+    # (fully duplicate rows are interchangeable by definition).
     order = order_col or partition_key
     lead = [order] if order is not None else []
     tiebreak = [c for c in df.columns if c not in lead]
@@ -96,10 +92,7 @@ def with_kafka_envelope(
         *[F.col(c).asc() for c in lead + tiebreak]
     )
     out = out.withColumn("offset", (F.row_number().over(w) - F.lit(1)).cast("long"))
-    out = out.withColumn(
-        "key", F.col(key_col).cast("string") if key_col else F.lit(None).cast("string")
-    )
-    return out
+    return out.withColumn("key", F.lit(None).cast("string"))
 
 
 def avro_plan_available(spark: SparkSession) -> bool:
@@ -126,7 +119,6 @@ def decode_value(
     value_col: F.Column | str,
     value_schema: T.StructType,
     value_format: str = "json",
-    avro_schema_json: str | None = None,
 ) -> F.Column:
     """Decode a Kafka ``value`` payload column into a struct of
     ``value_schema`` fields.
@@ -138,8 +130,8 @@ def decode_value(
     ``value_schema`` via :func:`spark_schema_to_avro`. The plan *shape* is
     identical to the JSON path (one deserializer expression per row, fully
     JVM-side); availability is gated on the spark-avro package being loaded
-    — when it is not, a RuntimeError explains the gate (this container
-    ships no spark-avro jar, SURVEY.md §2 gate notes).
+    — when it is not, a RuntimeError explains the gate (SURVEY.md §2 gate
+    notes).
     """
     col = F.col(value_col) if isinstance(value_col, str) else value_col
     if value_format == "json":
@@ -151,7 +143,7 @@ def decode_value(
 
         from kafka_connect_storage_cloud_formats_spark.schema import spark_schema_to_avro
 
-        schema_json = avro_schema_json or _json.dumps(spark_schema_to_avro(value_schema))
+        schema_json = _json.dumps(spark_schema_to_avro(value_schema))
         # from_avro() constructs lazily and only fails at analysis; probe
         # availability now so callers get the documented gate error at
         # plan-construction time.
@@ -212,12 +204,11 @@ def file_stream_source(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-based streaming source (CI stand-in for Kafka; same downstream
-    pipeline). ``maxFilesPerTrigger`` simulates poll batches."""
-    reader = spark.readStream.format(fmt).schema(schema)
+    """Parquet-file streaming source (CI stand-in for Kafka; same
+    downstream pipeline). ``maxFilesPerTrigger`` simulates poll batches."""
+    reader = spark.readStream.format("parquet").schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(path)

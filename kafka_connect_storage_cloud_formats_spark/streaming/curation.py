@@ -190,13 +190,13 @@ class StreamingCuration:
     def _kept(self, before: int | None = None) -> DataFrame:
         return self._table(before).filter("stage = 'kept'")
 
-    def accepted_hashes(self, before: int | None = None) -> DataFrame:
+    def accepted_hashes(self) -> DataFrame:
         """(doc_id, lang, content_hash) of every accepted doc."""
-        return self._kept(before).select("doc_id", "lang", "content_hash")
+        return self._kept().select("doc_id", "lang", "content_hash")
 
-    def accepted_sigs(self, before: int | None = None) -> DataFrame:
+    def accepted_sigs(self) -> DataFrame:
         """(doc_id, mh_00…mh_11) of every accepted doc with a signature."""
-        return self._kept(before).filter(F.col("mh_00").isNotNull()).select(
+        return self._kept().filter(F.col("mh_00").isNotNull()).select(
             "doc_id", *_MH_COLS
         )
 
@@ -212,23 +212,23 @@ class StreamingCuration:
             F.count(F.lit(1)).alias("n_batch"), *counts
         )
 
-    def ann_segments(self, before: int | None = None) -> DataFrame:
+    def ann_segments(self) -> DataFrame:
         """The job's streaming ANN serving rows — (doc_id, embedding,
         label) of every doc accepted with the ANN stage on, labeled by the
         published quantizer at accept time. Probe-able by the standard
         machinery after the vec_id rename; between re-trainings a
         deployment unions these with the main index exactly like the batch
         segments (kmeans_ivf.kmeans_ivf_serving_view)."""
-        return self._kept(before).filter(F.col("label").isNotNull()).select(
+        return self._kept().filter(F.col("label").isNotNull()).select(
             "doc_id", "embedding", "label"
         )
 
-    def pq_segments(self, before: int | None = None) -> DataFrame:
+    def pq_segments(self) -> DataFrame:
         """The job's streaming COMPRESSED serving rows — (doc_id, codes,
         label) of every doc accepted with the ANN stage on, encoded
         against the published corpus-split PQ codebooks and labeled by the
         published corpus-split quantizer at accept time."""
-        return self._kept(before).filter(F.col("label").isNotNull()).select(
+        return self._kept().filter(F.col("label").isNotNull()).select(
             "doc_id", "codes", "label"
         )
 

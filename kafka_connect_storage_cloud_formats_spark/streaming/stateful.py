@@ -104,7 +104,7 @@ def _sessionize_group(
         yield _emit(user_id, closed)
 
 
-def sessionize_stream(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
+def sessionize_stream(events: DataFrame) -> DataFrame:
     """events(user_id, ts, value, ...) stream → closed-session stream.
 
     Sessions close two ways: a later event arrives ≥ GAP after the last
@@ -112,7 +112,7 @@ def sessionize_stream(events: DataFrame, watermark: str = WATERMARK) -> DataFram
     (timeout — the production path for users who simply stop)."""
     return (
         events.select("user_id", "ts", "value")
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             _sessionize_group,

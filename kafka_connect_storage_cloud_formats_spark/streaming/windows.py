@@ -42,25 +42,13 @@ WATERMARK = "2 hours"
 
 
 # ------------------------------------------------------------- plan builders
-def tumbling_plan(events: DataFrame) -> DataFrame:
+def window_plan(events: DataFrame, *window: str) -> DataFrame:
+    """Per-(event-time window, event_type) count and decimal-exact value
+    sum; ``window`` is ``F.window``'s duration, then its slide for a
+    sliding window (``TUMBLE`` or ``SLIDE_LEN, SLIDE_STEP``)."""
     return (
         events.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", TUMBLE).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("total_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
-def sliding_plan(events: DataFrame) -> DataFrame:
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", SLIDE_LEN, SLIDE_STEP).alias("w"), "event_type")
+        .groupBy(F.window("ts", *window).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -89,7 +77,7 @@ def session_plan(events: DataFrame) -> DataFrame:
 
 # ------------------------------------------------------- batch query surface
 def events_tumbling_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling_plan(load_table(spark, sf_dir, "events")).orderBy(
+    return window_plan(load_table(spark, sf_dir, "events"), TUMBLE).orderBy(
         "window_start", "event_type"
     )
 
@@ -106,7 +94,7 @@ ORDER BY window_start, event_type
 
 
 def events_sliding_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sliding_plan(load_table(spark, sf_dir, "events")).orderBy(
+    return window_plan(load_table(spark, sf_dir, "events"), SLIDE_LEN, SLIDE_STEP).orderBy(
         "window_start", "event_type"
     )
 

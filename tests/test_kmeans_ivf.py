@@ -428,55 +428,6 @@ def test_registered_nprobe4_recall_row(spark, sf_dir):
     assert r4["possible"] == r1["possible"]
 
 
-def test_spread_init_trains_and_is_deterministic(spark, sf_dir):
-    """The measured farthest-point init alternative (round-11 A/B,
-    SCALE.md): trains under its own params token (never shares the
-    default's artifacts), labels every vector, and two calls serve the
-    identical content-keyed training. Bad init names are refused."""
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        train_kmeans_quantizer,
-    )
-
-    a1, c1 = train_kmeans_quantizer(spark, sf_dir, k=4, iters=2, init="spread")
-    a2, _ = train_kmeans_quantizer(spark, sf_dir, k=4, iters=2, init="spread")
-    rows1 = sorted((r["vec_id"], r["cluster"]) for r in a1.collect())
-    assert rows1 == sorted((r["vec_id"], r["cluster"]) for r in a2.collect())
-    n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
-    assert len(rows1) == n  # every vector labeled exactly once
-    assert len({c for _, c in rows1}) <= 4
-    default, _ = train_kmeans_quantizer(spark, sf_dir, k=4, iters=2)
-    # different seeds → (on this corpus) a genuinely different training
-    assert sorted((r["vec_id"], r["cluster"]) for r in default.collect()) != rows1
-
-    import pytest
-
-    with pytest.raises(ValueError, match="init"):
-        train_kmeans_quantizer(spark, sf_dir, k=4, iters=2, init="rng")
-
-
-def test_spread_init_degenerate_corpus_selects_distinct_seeds(spark, tmp_path):
-    """Round-11 review: on a corpus where every vector has cosine ~1.0 to
-    every other (scalar multiples of one direction), the spread argmin
-    must still select k DISTINCT rows (already-selected ids are excluded)
-    instead of silently duplicating seed 0; and a corpus smaller than k
-    runs the selection dry with a loud error instead of duplicating."""
-    import pytest
-
-    from kafka_connect_storage_cloud_formats_spark.operators.kmeans_ivf import (
-        _spread_seed_matrix,
-    )
-
-    rows = [(i, [float(i + 1)] * 64) for i in range(6)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    labels, M = _spread_seed_matrix(emb, 3)
-    assert len(labels) == 3 and M.shape == (3, 64)
-    # distinct rows were picked: the scalar multiples differ in magnitude
-    assert len({tuple(r) for r in M.tolist()}) == 3
-
-    with pytest.raises(ValueError, match="< k"):
-        _spread_seed_matrix(emb, 7)
-
-
 def test_assign_clusters_carry_embedding_bit_identical(spark, sf_dir):
     """carry_embedding=True (the map-only segment-writer path, r15
     optimization) must change NOTHING but the column set: identical

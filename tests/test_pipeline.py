@@ -33,6 +33,7 @@ SIX_TYPE_SCHEMA = T.StructType(
         T.StructField("string_col", T.StringType(), False),
     ]
 )
+SIX_TYPE_COLS = [f.name for f in SIX_TYPE_SCHEMA.fields]
 
 
 def make_records(spark, n, num_partitions=1, topic="test-topic"):
@@ -91,7 +92,7 @@ def test_parity_finalize_scheme_agnostic(spark, tmp_path):
     from kafka_connect_storage_cloud_formats_spark.sinks.orc_sink import write_orc_parity
 
     out_uri = f"file://{tmp_path}/out"
-    written = write_orc_parity(make_records(spark, 7), out_uri, flush_size=3)
+    written = write_orc_parity(make_records(spark, 7), out_uri, flush_size=3, value_cols=SIX_TYPE_COLS)
     expected = [
         file_key_to_commit("topics", "test-topic", "test-topic", 0, off) for off in (0, 3, 6)
     ]
@@ -368,7 +369,7 @@ def test_parity_file_rows_are_in_offset_order(spark, tmp_path):
 
     out = str(tmp_path / "out")
     records = make_records(spark, 20_000, num_partitions=3).repartition(16)
-    written = write_orc_parity(records, out, flush_size=5_000)
+    written = write_orc_parity(records, out, flush_size=5_000, value_cols=SIX_TYPE_COLS)
     assert len(written) == 6  # offsets 0..6666 per partition → starts 0, 5000
     total = 0
     for key in written:
@@ -418,7 +419,7 @@ def test_parity_sink_handles_glob_metachar_out_dir(spark, sf_dir, tmp_path):
         ev, "t", num_partitions=2, partition_key="user_id",
         order_col="event_id", partitioner="mod",
     )
-    written = write_orc_parity(env, out, flush_size=50)
+    written = write_orc_parity(env, out, flush_size=50, value_cols=ev.columns)
     assert written, "metachar out_dir must still produce files"
     for k in written:  # files physically exist at the literal path
         assert os.path.exists(os.path.join(out, k)), k
@@ -449,7 +450,7 @@ def test_parity_sink_many_file_groups(spark, sf_dir, tmp_path):
         order_col="event_id", partitioner="mod",
     )
     flush = 25  # sf0.001: 1000 events / 4 partitions / 25 → ~40 groups
-    written = write_orc_parity(env, out, flush_size=flush)
+    written = write_orc_parity(env, out, flush_size=flush, value_cols=ev.columns)
     per_part = {
         r["partition"]: r["c"]
         for r in env.groupBy("partition").count().withColumnRenamed("count", "c").collect()
@@ -779,7 +780,7 @@ def test_parity_finalize_refuses_to_delete_unmatched_staged_data(spark, tmp_path
     monkeypatch.setattr(fsio._HadoopFS, "glob_paths", lambda self, pattern: [])
     out = str(tmp_path / "out")
     with pytest.raises(RuntimeError, match="refusing to delete staged data"):
-        write_orc_parity(make_records(spark, 7), out, flush_size=3)
+        write_orc_parity(make_records(spark, 7), out, flush_size=3, value_cols=SIX_TYPE_COLS)
     assert any(n.startswith("__group=") for n in os.listdir(os.path.join(out, "_staged")))
 
 
@@ -792,7 +793,9 @@ def test_parity_finalize_requires_one_part_per_group(spark, tmp_path, monkeypatc
     real = fsio._HadoopFS.glob_paths
     monkeypatch.setattr(fsio._HadoopFS, "glob_paths", lambda self, p: 2 * real(self, p))
     with pytest.raises(RuntimeError, match="produced 2 part files; expected 1"):
-        write_orc_parity(make_records(spark, 7), str(tmp_path / "out"), flush_size=3)
+        write_orc_parity(
+            make_records(spark, 7), str(tmp_path / "out"), flush_size=3, value_cols=SIX_TYPE_COLS
+        )
 
 
 def test_parity_finalize_rename_failure_chains_the_cause(spark, tmp_path, monkeypatch):
@@ -808,7 +811,9 @@ def test_parity_finalize_rename_failure_chains_the_cause(spark, tmp_path, monkey
 
     monkeypatch.setattr(fsio._HadoopFS, "rename", failing_rename)
     with pytest.raises(RuntimeError, match="rename failed") as err:
-        write_orc_parity(make_records(spark, 7), str(tmp_path / "out"), flush_size=3)
+        write_orc_parity(
+            make_records(spark, 7), str(tmp_path / "out"), flush_size=3, value_cols=SIX_TYPE_COLS
+        )
     assert err.value.__cause__ is cause
 
 
@@ -918,3 +923,32 @@ def test_value_columns_needing_quotes_roundtrip(spark, tmp_path):
         file_stream_source(spark, src, envelope), str(tmp_path / "cp")
     ).awaitTermination()
     check(stream)
+
+
+def test_parity_writes_value_fields_named_key_and_ts(spark, tmp_path):
+    """A value schema may name its fields ``key`` and ``ts``, the names of
+    the Kafka record key and of the source's timestamp alias: the parity
+    pipeline writes both into its ORC files, with the record values."""
+    import pyarrow.orc as po
+
+    schema = T.StructType(
+        [
+            T.StructField("key", T.StringType()),
+            T.StructField("ts", T.LongType()),
+            T.StructField("v", T.IntegerType()),
+        ]
+    )
+    rows = [(f"k{i}", 1_700_000_000 + i, i) for i in range(5)]
+    records = spark.createDataFrame(
+        [("t", 0, i, *r) for i, r in enumerate(rows)],
+        "topic string, partition int, offset long, key string, ts long, v int",
+    )
+    pipe = IngestPipeline(str(tmp_path / "out"), schema, flush_size=3, parity_naming=True)
+    written = pipe.run_batch(records)
+    assert written == [file_key_to_commit("topics", "t", "t", 0, off) for off in (0, 3)]
+    got = []
+    for key in written:
+        table = po.ORCFile(os.path.join(pipe.out_dir, key)).read()
+        assert table.column_names == ["key", "ts", "v"]
+        got += [tuple(r.values()) for r in table.to_pylist()]
+    assert got == rows

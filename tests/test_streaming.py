@@ -15,8 +15,9 @@ from kafka_connect_storage_cloud_formats_spark.queries.pipeline_queries import E
 from kafka_connect_storage_cloud_formats_spark.sources.kafka_envelope import file_stream_source
 from kafka_connect_storage_cloud_formats_spark.streaming.stateful import sessionize_stream
 from kafka_connect_storage_cloud_formats_spark.streaming.windows import (
+    TUMBLE,
     events_session_30m,
-    tumbling_plan,
+    window_plan,
 )
 
 
@@ -165,14 +166,14 @@ def test_streaming_tumbling_equals_batch(spark, events_src):
     must produce the batch answer."""
     src, schema = events_src
     stream_result_name = "tumbling_test"
-    run_to_memory(tumbling_plan(file_stream_source(spark, src, schema)), stream_result_name)
+    run_to_memory(window_plan(file_stream_source(spark, src, schema), TUMBLE), stream_result_name)
     got = {
         (r["window_start"], r["event_type"]): (r["n"], r["total_value"])
         for r in spark.table(stream_result_name).collect()
     }
     want = {
         (r["window_start"], r["event_type"]): (r["n"], r["total_value"])
-        for r in tumbling_plan(spark.read.parquet(src)).collect()
+        for r in window_plan(spark.read.parquet(src), TUMBLE).collect()
     }
     assert got == want
 
@@ -213,8 +214,6 @@ def test_watermark_drops_late_data(spark, tmp_path):
     hour-1 window must not change or reappear."""
     import time as _time
 
-    from kafka_connect_storage_cloud_formats_spark.streaming.windows import tumbling_plan
-
     src, out, ckpt = str(tmp_path / "src"), str(tmp_path / "out"), str(tmp_path / "ckpt")
 
     def mk_events(rows):
@@ -229,7 +228,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
 
     def run_once():
         q = (
-            tumbling_plan(spark.readStream.schema(schema).parquet(src))
+            window_plan(spark.readStream.schema(schema).parquet(src), TUMBLE)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)

@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Dump the plans of named registered queries to files.
 
-Usage: python3 tools/dump_plans.py <out_dir> <suffix> q1 [q2 ...]
+Usage: python3 tools/dump_plans.py <out_dir> <suffix> [q1 q2 ...]
+
+With no query names it dumps every registered query, in registry order.
 
 Writes, per query, ``<out_dir>/<query>_<suffix>.txt`` (``explain('formatted')``),
 ``<out_dir>/<query>_<suffix>.opt.txt`` (the optimized logical plan with
@@ -35,7 +37,7 @@ def main() -> int:
     spark = get_spark("dump_plans")
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    for name in names:
+    for name in names or list(queries):
         if name not in queries:
             print(f"!! unknown query {name}", file=sys.stderr)
             return 1
